@@ -30,7 +30,8 @@ from __future__ import annotations
 import threading
 from collections.abc import Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 # Serializes checkpoint ATTRIBUTION windows (the getPersistentRDDs
 # before/after diff) across threads (ADVICE r14, medium): concurrent
@@ -75,6 +76,15 @@ def release_rdds(
             jrdd.unpersist(blocking)
 
 
+def _materialize(out: DataFrame) -> int:
+    """Run the one job that fills a lazy localCheckpoint's blocks and
+    return its row count. Counts the checkpointed RDD through the
+    frame's internal row RDD: one scan job, where ``DataFrame.count()``
+    would plan an aggregate and run two (a partial-count map stage
+    plus the final one) on every checkpoint."""
+    return int(out._jdf.queryExecution().toRdd().count())
+
+
 def attributed_local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     """Raw (untracked) localCheckpoint that cannot pollute a concurrent
     janitor attribution window: the persistent-RDD registration happens
@@ -85,7 +95,7 @@ def attributed_local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     with _ATTRIBUTION_LOCK:
         out = df.localCheckpoint(eager=False)
     if eager:
-        out.count()
+        _materialize(out)
     return out
 
 
@@ -179,7 +189,13 @@ class CheckpointJanitor:
         self._spark = spark
 
     def checkpoint(
-        self, df: DataFrame, eager: bool = True
+        self,
+        df: DataFrame,
+        eager: bool = True,
+        *,
+        storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK_DESER,
+        _observe: dict[str, Column] | None = None,
+        _seen: dict | None = None,
     ) -> tuple[DataFrame, frozenset[int]]:
         # Attribution under the module lock, materialization outside it
         # (see _ATTRIBUTION_LOCK): the lazy localCheckpoint registers
@@ -192,14 +208,51 @@ class CheckpointJanitor:
         # across consumers without a serial driver barrier — the right
         # trade for small frames consumed by concurrent union arms.
         # CAUTION for loops: a lazy generation must be materialized
-        # before its inputs are released.
+        # before its inputs are released. ``storage_level`` goes to
+        # localCheckpoint; the default is Spark's own (deserialized).
+        #
+        # ``_observe``/``_seen`` are `counted`'s per-call channel (the
+        # aggregates to observe in; the row count and observed values
+        # out), so every materialization stays one ``checkpoint`` call
+        # and no result state lives on the janitor — concurrent callers
+        # share one janitor (the HGN init pool).
         with _ATTRIBUTION_LOCK:
             before = persistent_rdd_ids(self._spark)
-            out = df.localCheckpoint(eager=False)
+            out = df.localCheckpoint(eager=False, storageLevel=storage_level)
             ids = frozenset(persistent_rdd_ids(self._spark) - before)
         if eager:
-            out.count()
+            if _observe:
+                # The observation sits on the CHECKPOINTED frame, the
+                # one this job counts. Observed on ``df`` instead (the
+                # plan that feeds localCheckpoint) it never fires: the
+                # checkpoint job computes the RDD, not that query, and
+                # every value reads back as 0.
+                obs = Observation()
+                n = out.observe(
+                    obs, *[c.alias(k) for k, c in _observe.items()]
+                ).count()
+                if _seen is not None:
+                    _seen.update(obs.get)
+            else:
+                n = _materialize(out)
+            if _seen is not None:
+                _seen["n"] = n
         return out, ids
+
+    def counted(
+        self, df: DataFrame, **observe: Column
+    ) -> tuple[DataFrame, frozenset[int], int, dict[str, object]]:
+        """Eager ``checkpoint`` that also hands back what its
+        materializing job saw: ``(df, ids, n, observed)`` where ``n``
+        is the row count the eager ``count()`` computes anyway and
+        ``observed`` maps each keyword to its aggregate over the same
+        rows (``DataFrame.observe`` on that one job — no second
+        action). Loops read their control numbers from here instead of
+        paying a separate ``count()``/``collect()`` barrier."""
+        seen: dict = {}
+        out, ids = self.checkpoint(df, _observe=observe, _seen=seen)
+        n = seen.pop("n")
+        return out, ids, n, seen
 
     def release(self, ids: Iterable[int]) -> None:
         release_rdds(self._spark, ids)

@@ -113,19 +113,20 @@ def connected_components(
 
     prev_sig: tuple[int, int] | None = None
     for _ in range(max_iter):
-        b, new_ids = jan.checkpoint(_small_star(_large_star(b)))
+        # The round signature (row count, bit_xor of row hashes) comes
+        # out of the checkpoint's own materializing job — no separate
+        # collect() per round. bit_xor is order-insensitive and cannot
+        # overflow (sum of xxhash64 trips ANSI long-overflow checks);
+        # it is null on an empty round, read as 0.
+        b, new_ids, n, seen = jan.counted(
+            _small_star(_large_star(b)), h=F.expr("bit_xor(xxhash64(src, dst))")
+        )
         # Round N is materialized; round N-1's blocks can never be read
         # again — free them now instead of waiting for async GC cleanup
         # (bounded memory across the O(log n) rounds).
         jan.release(live)
         live = new_ids
-        # bit_xor is order-insensitive and cannot overflow (sum of
-        # xxhash64 trips ANSI long-overflow checks).
-        sig_row = b.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0)).alias("h"),
-        ).collect()[0]
-        sig = (sig_row["n"], sig_row["h"])
+        sig = (n, seen["h"] or 0)
         if sig == prev_sig:
             break
         prev_sig = sig

@@ -24,7 +24,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hgn_spark.checkpoint import CheckpointJanitor, park_loose_blocks
@@ -32,7 +33,9 @@ from hgn_spark.graph.betweenness import edge_betweenness
 from hgn_spark.graph.components import connected_components
 from hgn_spark.graph.core import canonicalize, drop_isolated_vertices, symmetrize
 from hgn_spark.graph.rmetrics import (
-    candidate_common_members,
+    _common_member_rows,
+    _endpoints,
+    _tagged_pairs2,
     r_metrics_edges,
     r_metrics_edges_pairs,
 )
@@ -41,6 +44,42 @@ from hgn_spark.graph.weights import (
     hybrid_edge_weights_members,
     one_hot_cosine_similarities,
 )
+
+
+# Size of a step's shared 2-hop pair table, measured (4-core machine,
+# 6 GB local driver) on the derived graph at sf0.1 and its 10x/100x
+# slices (2,824 / 28,240 / 282,400 edges): 11.99 pair rows per edge at
+# every size, 92 B per row in the block store deserialized, 10.5 B
+# serialized.
+_PAIR_ROWS_PER_EDGE = 12
+_PAIR_ROW_BYTES_DESER = 92
+
+
+def _pair_table_storage(spark: SparkSession, n_edges: int) -> StorageLevel:
+    """Storage level for a step's pair table on an ``n_edges`` graph.
+
+    Deserialized (Spark's default) unless its estimated size exceeds
+    the storage share of the block managers' memory that execution
+    cannot evict (``spark.memory.storageFraction`` of the unified
+    pool); then serialized, which spills instead. Serialized costs
+    every scan a deserialization: +7% median task CPU on a 9,000-edge
+    graph (~5 scans per step); on the 282,400-edge 100x slice two
+    alternating runs of each did not separate the two. A held
+    deserialized table is memory the step's joins lose: at the 1000x
+    slice (~3.1 GB estimated, 85% of a 6 GB driver's 3.7 GB pool) the
+    ``pairs_incremental`` run went out of heap. Local mode has one
+    block manager, the driver's; on a cluster the driver's share is
+    counted too, though it holds no partitions."""
+    est = _PAIR_ROWS_PER_EDGE * _PAIR_ROW_BYTES_DESER * n_edges
+    pool = spark.sparkContext._jsc.sc().getExecutorMemoryStatus().values()
+    it = pool.iterator()
+    pool_bytes = 0
+    while it.hasNext():
+        pool_bytes += int(it.next()._1())
+    frac = float(spark.conf.get("spark.memory.storageFraction", "0.5"))
+    if est <= frac * pool_bytes:
+        return StorageLevel.MEMORY_AND_DISK_DESER
+    return StorageLevel.MEMORY_AND_DISK
 
 
 @dataclass
@@ -99,9 +138,10 @@ def hgn_communities(
     wall-clock attribution per phase — init_sims / init_betweenness /
     loop_delete_rule / loop_anti_join (the loop keys accumulate across
     iterations; n_steps records how many ran) and final_cc. Every
-    phase boundary is an EAGER checkpoint (or the isEmpty action), so
-    the numbers are true materialization costs, not lazy-plan noise;
-    instrumentation costs two time.perf_counter() calls per phase and
+    phase boundary is an EAGER checkpoint (whose own job also yields
+    the loop's row counts), so the numbers are true materialization
+    costs, not lazy-plan noise; instrumentation costs two
+    time.perf_counter() calls per phase and
     nothing when the dict is omitted. The 1000x-class probe
     (scripts/scale_probe_hgn_phases.py) uses this to attribute the
     row's 13.7x growth instead of guessing which phase is superlinear.
@@ -122,7 +162,10 @@ def hgn_communities(
     # ``edges_canonical``: caller guarantees src < dst distinct rows
     # (e.g. derived_edges), so canonicalize's dedup exchange is a no-op
     # and the init checkpoint materializes the input directly.
-    e, e_ids = jan.checkpoint(
+    # Every edge generation's row count comes from its own checkpoint
+    # job (CheckpointJanitor.counted) — the loop's gates never pay a
+    # separate count() barrier.
+    e, e_ids, n_edges, _ = jan.counted(
         edges.select("src", "dst") if edges_canonical else canonicalize(edges)
     )
     _mark("init_canonicalize", t0)
@@ -182,13 +225,6 @@ def hgn_communities(
     # --- main loop ------------------------------------------------------
     aff_v = None  # pairs_incremental: vertices whose neighborhoods changed
     aff_ids = None
-    # Edge count carried across generations (VERDICT r13 what's-wrong
-    # #4): counted once on the first generation, then maintained by
-    # arithmetic — |e ⟕anti d| = |e| - |d| because to_delete is unique
-    # per canonical edge and a subset of e (it joins e's scored edges
-    # inner against canonical betweenness). The candidate-fraction
-    # gate then costs ONE action per step (cand.count()), not two.
-    n_edges: int | None = None
     prev_n_del: int | None = None  # pairs_incremental pre-gate input
     for _step in range(1, p.max_steps + 1):
         if t is not None:
@@ -216,6 +252,7 @@ def hgn_communities(
             # recompute (pinned by test).
             scope = None
             scope_ids = None
+            n_scope = None
             if (
                 p.delete_rule_impl == "pairs_incremental"
                 and aff_v is not None
@@ -231,9 +268,9 @@ def hgn_communities(
                 # score full and pay zero scope overhead. Free: both
                 # counts are already known.
                 and prev_n_del is not None
-                and 50 * prev_n_del < max(n_edges or 0, 1)
+                and 50 * prev_n_del < max(n_edges, 1)
             ):
-                scope, scope_ids = jan.checkpoint(
+                scope, scope_ids, n_scope, _ = jan.counted(
                     e.join(
                         aff_v.withColumnRenamed("id", "src"), "src", "left_semi"
                     )
@@ -246,9 +283,6 @@ def hgn_communities(
                     )
                     .distinct()
                 )
-            if n_edges is None:
-                n_edges = e.count()
-            if scope is not None:
                 # Scope-fraction gate (r14, measured in
                 # PROBE_hgn_cascade_r14 before the gate existed): at
                 # 1000x the scoped step costs ~0.65x of full scoring
@@ -258,61 +292,69 @@ def hgn_communities(
                 # Score full when the affected fraction is >= 1/3;
                 # results are identical either way (an unscoped edge's
                 # metrics are unchanged, so full scoring re-accepts it
-                # exactly as skipping it would). One count() on a
-                # materialized checkpoint per incremental step.
-                n_scope = scope.count()
-                if t is not None:
-                    t.setdefault("n_scope_per_step", []).append(n_scope)
+                # exactly as skipping it would).
                 if 3 * n_scope >= n_edges:
                     jan.release(scope_ids)
                     scope, scope_ids = None, None
-            else:
-                n_scope = None
-                if (
-                    t is not None
-                    and p.delete_rule_impl == "pairs_incremental"
-                    and aff_v is not None
-                ):
-                    # Pre-gate chose full scoring — keep the per-step
-                    # arrays aligned (None = scope not built).
-                    t.setdefault("n_scope_per_step", []).append(None)
+            if (
+                t is not None
+                and p.delete_rule_impl == "pairs_incremental"
+                and aff_v is not None
+            ):
+                # None = the pre-gate chose full scoring (scope not
+                # built), keeping the per-step arrays aligned.
+                t.setdefault("n_scope_per_step", []).append(n_scope)
             if t is not None:
                 # |edges actually scored| this step — the quantity the
                 # incremental rule's step cost should scale with.
                 t.setdefault("n_scored_per_step", []).append(
                     n_scope if scope is not None else n_edges
                 )
+            # The step's ONE 2-hop expansion: the tagged level-2 pair
+            # table (source-restricted to the scope's endpoints when
+            # scoped), materialized once and read by BOTH consumers —
+            # the r-metric scoring and the candidates' common-member
+            # expansion for the hybrid weights — so the 2-hop self-join
+            # runs once per step, not once per consumer. It is held
+            # until the step's deletion set is materialized and is the
+            # loop's largest generation (~12x |e| rows on the derived
+            # graph); one too large for the block store is stored
+            # serialized (see _pair_table_storage).
             # e is canonical by construction (canonicalize at init;
             # anti-join deletion preserves it) — every symmetrize in the
             # scoring path may skip its dedup exchange (r15, guide §2.4).
+            pt, pt_ids = jan.checkpoint(
+                _tagged_pairs2(
+                    e,
+                    sources=_endpoints(scope) if scope is not None else None,
+                    edges_canonical=True,
+                ),
+                storage_level=_pair_table_storage(e.sparkSession, n_edges),
+            )
             scored, _members_all = r_metrics_edges_pairs(
-                e, p.r_lvl1_thres, p.r_lvl2_thres, scope=scope, edges_canonical=True
+                e,
+                p.r_lvl1_thres,
+                p.r_lvl2_thres,
+                scope=scope,
+                edges_canonical=True,
+                pairs=pt,
             )
             cand, cand_ids = jan.checkpoint(
                 scored.filter(~F.col("keepit")).select("src", "dst")
             )
-            # Source-restricting the member expansion pays only when
-            # candidates are a small fraction (the r13 A/B: +12% at
-            # sf0.1 where most edges are candidates, bounded-by-|cand|
-            # at scale where they are not). cand is materialized, so
-            # its count is metadata-cheap; the edge count is carried
-            # across generations (see n_edges above).
-            restrict = 4 * cand.count() < max(n_edges, 1)
             weights = hybrid_edge_weights_members(
-                candidate_common_members(
-                    e, cand, restrict_sources=restrict, edges_canonical=True
-                ),
-                sims,
-                p.feature_min_avg,
+                _common_member_rows(cand, pt), sims, p.feature_min_avg
             )
         else:
+            pt_ids = None
             cand_ids = None
             scope_ids = None
             edges_r = r_metrics_edges(e, p.r_lvl1_thres, p.r_lvl2_thres)
             weights = hybrid_edge_weights(edges_r, sims, p.feature_min_avg)
         # Canonical edges → single equi-join against canonical betweenness
-        # (the reference probes both orientations, main.py:130-134).
-        to_delete, td_ids = jan.checkpoint(
+        # (the reference probes both orientations, main.py:130-134). Its
+        # row count — the loop control — comes from the checkpoint job.
+        to_delete, td_ids, n_del, _ = jan.counted(
             weights.join(betw, ["src", "dst"], "inner")
             .filter(
                 (F.col("edge_weight") < p.max_edge_weight)
@@ -323,12 +365,7 @@ def hgn_communities(
             )
             .select("src", "dst")
         )
-        # count() instead of isEmpty(): same loop-control action class
-        # on a materialized checkpoint, and the count maintains n_edges
-        # for the next step's gate without re-counting e.
-        n_del = to_delete.count()
         prev_n_del = n_del
-        empty = n_del == 0
         dt = _mark("loop_delete_rule", t0)
         if t is not None:
             # Per-step breakdown (r14, VERDICT r13 #1): the cascade
@@ -338,12 +375,12 @@ def hgn_communities(
             # the cascade shape alongside.
             t.setdefault("loop_delete_rule_per_step", []).append(round(dt, 3))
             t.setdefault("n_deleted_per_step", []).append(n_del)
-        # The candidate list fed to_delete, now materialized — free it.
-        if cand_ids is not None:
-            jan.release(cand_ids)
-        if scope_ids is not None:
-            jan.release(scope_ids)
-        if empty:
+        # The pair table and candidate list fed to_delete, now
+        # materialized — free them.
+        for ids in (pt_ids, cand_ids, scope_ids):
+            if ids is not None:
+                jan.release(ids)
+        if n_del == 0:
             jan.release(td_ids)
             break
         if p.delete_rule_impl == "pairs_incremental":
@@ -368,12 +405,10 @@ def hgn_communities(
                 jan.release(aff_ids)
             aff_v, aff_ids = new_aff, new_aff_ids
         t0 = _time.perf_counter()
-        new_e, new_e_ids = jan.checkpoint(
+        new_e, new_e_ids, n_edges, _ = jan.counted(
             e.join(to_delete, ["src", "dst"], "left_anti")
         )
         _mark("loop_anti_join", t0)
-        if n_edges is not None:
-            n_edges -= n_del
         # Iteration N's edge set is materialized: its inputs — the
         # previous generation and this round's deletion set — can never
         # be read again. Free them now so the loop carries ONE edge

@@ -67,7 +67,9 @@ def core_numbers(
     """
     spark = edges.sparkSession
     jan = CheckpointJanitor(spark)
-    sym, sym_ids = jan.checkpoint(symmetrize(edges, assume_canonical=edges_canonical))
+    sym, sym_ids, n_sym, _ = jan.counted(
+        symmetrize(edges, assume_canonical=edges_canonical)
+    )
 
     # label_0 = degree. The edge list has no isolated vertices, so
     # every vertex appears on the src side of the symmetrized frame.
@@ -79,9 +81,8 @@ def core_numbers(
     if max_iter is None:
         # Proven runaway bound (docstring): ≤ 2m decreasing probe
         # intervals + the final no-change one, each `interval` rounds.
-        # sym is checkpointed, so counting its rows (= 2m) is a cheap
-        # scan of materialized blocks.
-        max_iter = (sym.count() + 1) * checkpoint_interval
+        # sym's row count (= 2m) comes from its own checkpoint job.
+        max_iter = (n_sym + 1) * checkpoint_interval
 
     # h-index of the sorted-desc neighbor-label array: positions where
     # label >= position form a prefix (the array is sorted), so the

@@ -100,9 +100,9 @@ def pagerank(
         links, links_ids = build_links(edges, jan)
     # One distinct over the links table, materialized once: it feeds
     # both the vertex count and the uniform initial ranks (computing it
-    # twice would run the edge-set-sized shuffle twice at startup).
-    verts, vert_ids = jan.checkpoint(links.select("src").distinct())
-    n = verts.count()
+    # twice would run the edge-set-sized shuffle twice at startup). Its
+    # row count comes from the checkpoint's own materializing job.
+    verts, vert_ids, n, _ = jan.counted(links.select("src").distinct())
     if n == 0:
         jan.release(vert_ids)
         if own_links:

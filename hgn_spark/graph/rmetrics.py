@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from hgn_spark.graph.core import neighbor_pairs, neighbors, symmetrize
+from hgn_spark.graph.core import neighbors, symmetrize
 
 
 def _common_count(nb_src: Column, nb_dst: Column, src: Column, dst: Column) -> Column:
@@ -104,25 +104,47 @@ def r_metrics_edges(
 
 
 def _common_member_rows(
-    e: DataFrame, pairs: DataFrame, level_tag: str
+    e: DataFrame, pt: DataFrame, both_l1: bool = False
 ) -> DataFrame:
-    """(src, dst, member) rows: member ∈ N_L(src) ∩ N_L(dst), member ∉
-    {src, dst} — the PAIR-FORM of the common-neighbor set. Two
-    equi-joins against the (id, nb) pair table and no arrays anywhere:
-    this is byte-for-byte the formulation the graph_rmetrics DuckDB
-    oracle already uses (cn1/cn2 CTEs), now on the Spark side too.
-    Rows are distinct because ``pairs`` is distinct per (id, nb)."""
-    s = pairs.select(
-        F.col("src").alias(f"{level_tag}_sid"), F.col("dst").alias("member")
+    """(src, dst, member) rows: member ∈ N2(src) ∩ N2(dst), member ∉
+    {src, dst} — the PAIR-FORM of the level-2 common-neighbor set,
+    read off a `_tagged_pairs2` table ``pt`` whose sources cover every
+    endpoint of ``e``. Two equi-joins against the pair table and no
+    arrays anywhere: byte-for-byte the formulation the graph_rmetrics
+    DuckDB oracle uses (cn1/cn2 CTEs). Rows are distinct because
+    ``pt`` is distinct per (src, dst).
+
+    ``both_l1`` adds a column true iff the member is ALSO a level-1
+    common neighbor (adjacent to both endpoints): p1 ⊆ p2, so one
+    expansion serves both levels."""
+    s = pt.select(
+        F.col("src").alias("m_sid"),
+        F.col("dst").alias("member"),
+        F.col("is_l1").alias("s_l1"),
     )
-    d = pairs.select(
-        F.col("src").alias(f"{level_tag}_did"), F.col("dst").alias("member")
+    d = pt.select(
+        F.col("src").alias("m_did"),
+        F.col("dst").alias("member"),
+        F.col("is_l1").alias("d_l1"),
     )
+    cols = ["src", "dst", s["member"].alias("member")]
+    if both_l1:
+        cols.append((s["s_l1"] & d["d_l1"]).alias("both_l1"))
     return (
-        e.join(s, e["src"] == s[f"{level_tag}_sid"])
+        e.join(s, e["src"] == s["m_sid"])
         .filter((F.col("member") != F.col("src")) & (F.col("member") != F.col("dst")))
-        .join(d, (e["dst"] == d[f"{level_tag}_did"]) & (s["member"] == d["member"]))
-        .select("src", "dst", s["member"].alias("member"))
+        .join(d, (e["dst"] == d["m_did"]) & (s["member"] == d["member"]))
+        .select(*cols)
+    )
+
+
+def _endpoints(e: DataFrame) -> DataFrame:
+    """(id) — the distinct endpoints of an (src, dst) edge subset, the
+    ``sources`` that restrict a `_tagged_pairs2` expansion to it."""
+    return (
+        e.select(F.col("src").alias("id"))
+        .unionByName(e.select(F.col("dst").alias("id")))
+        .distinct()
     )
 
 
@@ -169,6 +191,7 @@ def r_metrics_edges_pairs(
     r_lvl2_thres: float,
     scope: DataFrame | None = None,
     edges_canonical: bool = False,
+    pairs: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """`r_metrics_edges` in PAIR FORM (VERDICT r12 #3 — the delete-rule
     mitigation dial, now executable): returns
@@ -195,12 +218,19 @@ def r_metrics_edges_pairs(
     the common-member expansion is the delete-rule phase's dominant
     term (49M rows / ~37 s per evaluation at 1000×), and Catalyst
     shares no subplans — a consumer that reads the returned
-    ``members2`` AND ``scored`` pays the expansion twice. Loop callers
-    should instead checkpoint the (small) candidate edge list and
-    call `candidate_common_members` — members are only ever consumed
+    ``members2`` AND ``scored`` pays the expansion twice, and one
+    that expands members separately pays the 2-hop build twice. Loop
+    callers should instead materialize the step's tagged pair table
+    once (``_tagged_pairs2(edges, sources=<scope endpoints or
+    None>)``), pass it as ``pairs`` here, checkpoint the (small)
+    candidate edge list and read the candidates' members off the same
+    table with ``_common_member_rows`` — members are only ever consumed
     for keepit=False edges (the array form has the same asymmetry: it
-    explodes only candidate rows), so the expansion then runs once,
-    restricted to the candidate fraction.
+    explodes only candidate rows). The HGN loop does exactly that.
+
+    ``pairs``: a prebuilt ``_tagged_pairs2`` table of ``edges`` whose
+    sources cover every scored edge's endpoints (all vertices, or the
+    scope's endpoints). The caller owns its blocks.
     """
     # ``scope`` (r13, the incremental lever — see HGNParams
     # .delete_rule_impl='pairs_incremental'): an (src, dst) edge
@@ -211,13 +241,6 @@ def r_metrics_edges_pairs(
     # aggregations, the cc joins — is source-restricted to the
     # scope's endpoints, so step cost scales with |scope|, not |E|.
     e = (scope if scope is not None else edges).select("src", "dst")
-    srcs = None
-    if scope is not None:
-        srcs = (
-            e.select(F.col("src").alias("id"))
-            .unionByName(e.select(F.col("dst").alias("id")))
-            .distinct()
-        )
     # One tagged level-2 pair frame instead of separate p1/p2 subtrees
     # (r15, guide §2.3/§2.4 — the per-step barrier-fusion VERDICT r14
     # #1 asks for): counts for BOTH levels come out of ONE aggregation
@@ -226,32 +249,20 @@ def r_metrics_edges_pairs(
     # level 2 — p1 ⊆ p2 — so it appears once, with both side tags
     # true). Values are the same integer counts as the unfused form,
     # hence bit-identical ratios (pinned against r_metrics_edges).
-    pt = _tagged_pairs2(edges, sources=srcs, edges_canonical=edges_canonical)
+    pt = (
+        pairs
+        if pairs is not None
+        else _tagged_pairs2(
+            edges,
+            sources=_endpoints(e) if scope is not None else None,
+            edges_canonical=edges_canonical,
+        )
+    )
     cnt = pt.groupBy(F.col("src").alias("id")).agg(
         F.count("dst").alias("cnt_l2"),
         F.count(F.when(F.col("is_l1"), 1)).alias("cnt_l1"),
     )
-    s = pt.select(
-        F.col("src").alias("m_sid"),
-        F.col("dst").alias("member"),
-        F.col("is_l1").alias("s_l1"),
-    )
-    d = pt.select(
-        F.col("src").alias("m_did"),
-        F.col("dst").alias("member"),
-        F.col("is_l1").alias("d_l1"),
-    )
-    mm = (
-        e.join(s, e["src"] == s["m_sid"])
-        .filter((F.col("member") != F.col("src")) & (F.col("member") != F.col("dst")))
-        .join(d, (e["dst"] == d["m_did"]) & (s["member"] == d["member"]))
-        .select(
-            "src",
-            "dst",
-            s["member"].alias("member"),
-            (s["s_l1"] & d["d_l1"]).alias("both_l1"),
-        )
-    )
+    mm = _common_member_rows(e, pt, both_l1=True)
     cc = mm.groupBy("src", "dst").agg(
         F.count("*").alias("cc2"),
         F.count(F.when(F.col("both_l1"), 1)).alias("cc1"),
@@ -298,35 +309,18 @@ def r_metrics_edges_pairs(
 def candidate_common_members(
     edges: DataFrame,
     cand: DataFrame,
-    restrict_sources: bool = True,
     edges_canonical: bool = False,
 ) -> DataFrame:
-    """Level-2 common-member rows for a (preferably materialized)
-    candidate edge subset — the loop-shaped consumer of the pair form
-    (see the scale note on r_metrics_edges_pairs): the expansion runs
-    once, over the candidate fraction only.
-
-    ``restrict_sources`` additionally source-restricts the 2-hop
-    self-join to the candidates' endpoints. That bounds the expansion
-    by the candidate set — the 100 TB shape when candidates are a
-    small fraction — but ADDS a semi-join that measured ~12% overhead
-    at sf0.1 where most edges are candidates (r13 A/B, 13.1 vs
-    11.7 s row min), so loop callers gate it on the measured candidate
-    fraction (hgn.py) instead of always paying it."""
+    """Level-2 common-member rows for a candidate edge subset, with the
+    2-hop expansion source-restricted to the candidates' endpoints —
+    the stand-alone form. A caller that also scores the edges (the HGN
+    loop) materializes one `_tagged_pairs2` table for both and reads
+    the members off it with `_common_member_rows` instead (see the
+    scale note on r_metrics_edges_pairs)."""
     base = cand.select("src", "dst")
-    if not restrict_sources:
-        return _common_member_rows(
-            base,
-            neighbor_pairs(edges, level=2, edges_canonical=edges_canonical),
-            "l2",
-        )
-    srcs = (
-        cand.select(F.col("src").alias("id"))
-        .unionByName(cand.select(F.col("dst").alias("id")))
-        .distinct()
-    )
     return _common_member_rows(
         base,
-        neighbor_pairs(edges, level=2, sources=srcs, edges_canonical=edges_canonical),
-        "l2",
+        _tagged_pairs2(
+            edges, sources=_endpoints(base), edges_canonical=edges_canonical
+        ),
     )

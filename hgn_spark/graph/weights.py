@@ -191,8 +191,9 @@ def hybrid_edge_weights_members(
     feature_min_avg: float,
 ) -> DataFrame:
     """Weights from pre-restricted candidate member rows (src, dst,
-    member) — the loop-shaped entry point (see candidate_common_members):
-    no keepit filter and no semi-join, because the caller already
+    member) — the loop-shaped entry point (the HGN loop reads them off
+    its step's shared pair table, rmetrics._common_member_rows): no
+    keepit filter and no semi-join, because the caller already
     generated members for exactly the candidate edges."""
     cn = cand_members.select(
         F.col("src").alias("nb_src"),

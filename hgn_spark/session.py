@@ -55,6 +55,18 @@ _DEFAULTS = {
     "spark.executor.extraJavaOptions": (
         "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing"
     ),
+    # The Janino side of the same problem: Spark caches compiled
+    # codegen classes by source, 100 entries by default, and recompiles
+    # an evicted class the next time its plan runs. Distinct classes
+    # counted as compilations under an unbounded cache (4-core machine,
+    # one session): one cold HGN cascade job on a 2,000-vertex graph
+    # 152-167, the graph/curation/similarity operator mix 433-481, one
+    # pass of the 51 registered rows at sf0.01 1,530. At the default
+    # the cache thrashes: a warm re-run of the HGN job recompiled
+    # 137-162 classes and took 14.3-15.1 s; with room for every class
+    # it recompiled 0-2 and took 9.9-10.9 s. 2,048 holds a full pass
+    # of the registered rows with headroom.
+    "spark.sql.codegen.cache.maxEntries": "2048",
 }
 
 if os.environ.get("SPARK_GRAFT_STATESTORE", "").lower() == "rocksdb":

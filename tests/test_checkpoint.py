@@ -98,3 +98,55 @@ def test_attributed_local_checkpoint_during_janitor_window(spark):
         jan.release(ids)
     for k, df in enumerate(raw_frames):
         assert df.count() == 5000
+
+
+def test_counted_returns_each_callers_own_count(spark):
+    """CheckpointJanitor.counted hands each call its OWN row count and
+    observed aggregates — no "last count" state on the janitor, which
+    the HGN init pool shares across two threads. Two threads hammer
+    one janitor with different-sized frames; every result must match
+    the frame it checkpointed."""
+    from pyspark.sql import functions as F
+
+    jan = CheckpointJanitor(spark)
+
+    def chain(tag: int):
+        out = []
+        for i in range(4):
+            n_rows = 3000 * (tag + 1) + i
+            df = spark.range(n_rows).selectExpr("id", f"id % {5 + tag} AS k")
+            out.append((n_rows, tag) + jan.counted(df, mx=F.max("k")))
+        return out
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futs = [pool.submit(chain, tag) for tag in range(2)]
+        results = [r for f in futs for r in f.result()]
+
+    for n_rows, tag, df, ids, n, seen in results:
+        assert n == n_rows
+        assert seen == {"mx": 4 + tag}
+        # the checkpointed frame is materialized and readable
+        assert df.count() == n_rows
+        jan.release(ids)
+
+
+def test_counted_observes_the_checkpointed_rows(spark):
+    """The observation rides on the checkpointed frame's own counting
+    job: its aggregate equals a separate aggregate over the same rows,
+    and an empty frame yields n=0 with a null aggregate."""
+    from pyspark.sql import functions as F
+
+    jan = CheckpointJanitor(spark)
+    df = spark.range(500).selectExpr("id AS src", "id * 7 % 13 AS dst").distinct()
+    out, ids, n, seen = jan.counted(df, h=F.expr("bit_xor(xxhash64(src, dst))"))
+    want = df.agg(
+        F.count(F.lit(1)).alias("n"), F.expr("bit_xor(xxhash64(src, dst))").alias("h")
+    ).collect()[0]
+    assert (n, seen["h"]) == (want["n"], want["h"])
+    jan.release(ids)
+
+    out, ids, n, seen = jan.counted(
+        df.filter("src < 0"), h=F.expr("bit_xor(xxhash64(src, dst))")
+    )
+    assert n == 0 and seen == {"h": None}
+    jan.release(ids)

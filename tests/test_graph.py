@@ -719,13 +719,13 @@ def test_pagerank_fused_round_plan_shape(spark, monkeypatch):
     captured = []
     orig = DataFrame.localCheckpoint
 
-    def patched(self, eager=True):
+    def patched(self, eager=True, **kw):
         captured.append(
             spark._jvm.PythonSQLUtils.explainString(
                 self._jdf.queryExecution(), "formatted"
             )
         )
-        return orig(self, eager)
+        return orig(self, eager, **kw)
 
     monkeypatch.setattr(DataFrame, "localCheckpoint", patched)
     e = derived_edges(spark, SF_SMOKE)
@@ -1052,3 +1052,209 @@ def test_betweenness_auto_approx_dispatch(edges):
         "betweenness",
     )
     assert exact == sigma
+
+
+def _cc_collect_signature(edges):
+    """The large-star/small-star loop with its round signature read by
+    a separate collect() per round — the formulation
+    connected_components used before the signature moved into the
+    checkpoint job. Returns ({id: component} over edge endpoints,
+    rounds)."""
+    from hgn_spark.graph.components import _large_star, _small_star
+
+    b = symmetrize(edges).localCheckpoint()
+    prev, rounds = None, 0
+    for _ in range(30):
+        b = _small_star(_large_star(b)).localCheckpoint()
+        rounds += 1
+        row = b.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.coalesce(F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0)).alias("h"),
+        ).collect()[0]
+        if (row["n"], row["h"]) == prev:
+            break
+        prev = (row["n"], row["h"])
+    mapping = {r["src"]: r["dst"] for r in b.collect()}
+    ids = {v for r in edges.collect() for v in (r["src"], r["dst"])}
+    return {v: mapping.get(v, v) for v in ids}, rounds
+
+
+@pytest.mark.parametrize("graph", ["path", "barbell", "derived"])
+def test_connected_components_checkpoint_signature_matches_collect(
+    spark, monkeypatch, graph
+):
+    """connected_components reads its round signature (n, bit_xor of
+    row hashes) from the checkpoint's own job. It must stop after the
+    SAME number of rounds and return the SAME partition as the
+    collect()-per-round signature it replaced — an observation placed
+    on the wrong frame reads back constant and stops the loop early."""
+    from hgn_spark.checkpoint import CheckpointJanitor
+
+    if graph == "derived":
+        from hgn_spark.graph.queries import derived_edges
+        from tests.conftest import SF_SMOKE
+
+        e = derived_edges(spark, SF_SMOKE)
+    else:
+        # the k-core test's fixtures: a 60-vertex path, and two K5s
+        # joined through it
+        path = [(i, i + 1) for i in range(1, 60)]
+        k5a = [(100 + i, 100 + j) for i in range(5) for j in range(i + 1, 5)]
+        k5b = [(200 + i, 200 + j) for i in range(5) for j in range(i + 1, 5)]
+        barbell = k5a + k5b + [(100, 1), (60, 200)] + path
+        e = spark.createDataFrame(
+            path if graph == "path" else barbell, "src long, dst long"
+        )
+    want, want_rounds = _cc_collect_signature(e)
+
+    rounds = []
+    orig = CheckpointJanitor.counted
+
+    def counting(self, df, **observe):
+        rounds.append(1)
+        return orig(self, df, **observe)
+
+    monkeypatch.setattr(CheckpointJanitor, "counted", counting)
+    got = _as_dict(connected_components(e), "id", "component")
+    assert got == want
+    assert len(rounds) == want_rounds
+    if graph == "path":
+        # a 60-vertex path needs several rounds, so an early stop shows
+        assert want_rounds > 2 and set(got.values()) == {1}
+
+
+@pytest.mark.parametrize("impl", ["pairs", "pairs_incremental"])
+def test_hgn_actions_are_checkpoint_materializations(
+    edges, vertices, monkeypatch, impl
+):
+    """Every count/collect/isEmpty issued while hgn_communities runs
+    comes from a checkpoint's own materializing job (issued from
+    hgn_spark/checkpoint.py): the loop's gates and connected
+    components' round signature read their numbers off those jobs, not
+    off separate driver actions. The fixture runs two steps (the
+    bridge is deleted, then nothing), so the per-step gates run."""
+    import os
+    import sys
+
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDF
+
+    callers: list[tuple[str, str]] = []
+    for name in ("count", "collect", "isEmpty"):
+        orig = getattr(ClassicDF, name)
+
+        def wrapped(self, *a, _orig=orig, _name=name, **k):
+            callers.append((_name, sys._getframe(1).f_code.co_filename))
+            return _orig(self, *a, **k)
+
+        monkeypatch.setattr(ClassicDF, name, wrapped)
+    t: dict = {}
+    out = hgn_communities(
+        vertices,
+        edges,
+        ["attr"],
+        HGNParams(
+            r_lvl1_thres=0.25,
+            r_lvl2_thres=0.9,
+            max_edge_weight=0.9,
+            betweenness_thres=5.0,
+            feature_min_avg=0.6,
+            max_steps=5,
+            delete_rule_impl=impl,
+        ),
+        phase_timings=t,
+    )
+    monkeypatch.undo()
+    assert t["n_deleted_per_step"] == [1, 0]
+    ckpt = os.path.join("hgn_spark", "checkpoint.py")
+    stray = [c for c in callers if not c[1].endswith(ckpt)]
+    assert not stray, stray
+    # the wrapper is live: CC's observed round counts pass through it
+    assert any(n == "count" for n, _ in callers)
+    assert _as_dict(out, "id", "component") == {
+        1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 4
+    }
+
+
+@pytest.mark.parametrize("impl", ["pairs", "pairs_incremental"])
+def test_hgn_serialized_pair_table_same_communities(
+    edges, vertices, monkeypatch, impl
+):
+    """A pair table too large for the block store is checkpointed
+    serialized; the fixture forced onto that path (an estimated row
+    size no memory pool holds) lands on the same deletions and
+    communities."""
+    from hgn_spark.graph import hgn as hgn_mod
+
+    monkeypatch.setattr(hgn_mod, "_PAIR_ROW_BYTES_DESER", 10**15)
+    t: dict = {}
+    out = hgn_communities(
+        vertices,
+        edges,
+        ["attr"],
+        HGNParams(
+            r_lvl1_thres=0.25,
+            r_lvl2_thres=0.9,
+            max_edge_weight=0.9,
+            betweenness_thres=5.0,
+            feature_min_avg=0.6,
+            max_steps=5,
+            delete_rule_impl=impl,
+        ),
+        phase_timings=t,
+    )
+    assert t["n_deleted_per_step"] == [1, 0]
+    assert _as_dict(out, "id", "component") == {
+        1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 4
+    }
+
+
+def test_pair_table_storage_follows_block_store_memory(spark):
+    """The pair table stays deserialized while its estimated size fits
+    the protected storage share of the block managers' memory, and is
+    serialized beyond it (1e9 edges: ~1.1 TB estimated)."""
+    from pyspark import StorageLevel
+
+    from hgn_spark.graph.hgn import _pair_table_storage
+
+    assert _pair_table_storage(spark, 9_000) == StorageLevel.MEMORY_AND_DISK_DESER
+    assert _pair_table_storage(spark, 10**9) == StorageLevel.MEMORY_AND_DISK
+
+
+def test_shared_pair_table_members_match_full_expansion(spark):
+    """One tagged level-2 pair table serves both HGN consumers: scoring
+    through r_metrics_edges_pairs(pairs=...) equals the self-built
+    call, and the candidates' member rows read off the same table
+    (_common_member_rows) equal the full member expansion filtered to
+    the candidates — for the full table and for a scope-restricted
+    one. Also pins the stand-alone candidate_common_members to them."""
+    from hgn_spark.graph.queries import R1_THRES, R2_THRES, derived_edges
+    from hgn_spark.graph.rmetrics import (
+        _common_member_rows,
+        _endpoints,
+        _tagged_pairs2,
+        candidate_common_members,
+        r_metrics_edges_pairs,
+    )
+    from tests.conftest import SF_SMOKE
+
+    e = derived_edges(spark, SF_SMOKE)
+
+    def rows(df, cols):
+        return {tuple(r[c] for c in cols) for r in df.collect()}
+
+    score_cols = ["src", "dst", "r11", "r12", "r21", "r22", "keepit"]
+    member_cols = ["src", "dst", "member"]
+    full_scored, full_members = r_metrics_edges_pairs(e, R1_THRES, R2_THRES)
+    scope = e.filter((F.col("src") + F.col("dst")) % 3 == 0)
+    for sc in (None, scope):
+        pt = _tagged_pairs2(
+            e, sources=_endpoints(sc) if sc is not None else None
+        ).localCheckpoint()
+        scored, _ = r_metrics_edges_pairs(e, R1_THRES, R2_THRES, scope=sc, pairs=pt)
+        self_built, _ = r_metrics_edges_pairs(e, R1_THRES, R2_THRES, scope=sc)
+        assert rows(scored, score_cols) == rows(self_built, score_cols)
+        cand = scored.filter(~F.col("keepit")).select("src", "dst")
+        assert cand.count() > 0
+        want = rows(full_members.join(cand, ["src", "dst"], "left_semi"), member_cols)
+        assert rows(_common_member_rows(cand, pt), member_cols) == want
+        assert rows(candidate_common_members(e, cand), member_cols) == want

@@ -66,13 +66,13 @@ def checkpoint_plans(monkeypatch, spark):
     captured: list[str] = []
     orig = DataFrame.localCheckpoint
 
-    def patched(self, eager=True):
+    def patched(self, eager=True, **kw):
         captured.append(
             spark._jvm.PythonSQLUtils.explainString(
                 self._jdf.queryExecution(), "formatted"
             )
         )
-        return orig(self, eager)
+        return orig(self, eager, **kw)
 
     monkeypatch.setattr(DataFrame, "localCheckpoint", patched)
     return captured
