@@ -1,12 +1,12 @@
-"""Deterministic release of superseded localCheckpoint generations.
+"""Checkpoint generations with an owner.
 
-``localCheckpoint(eager=True)`` is the engine's lineage-truncation
-primitive for iterative algorithms (the reference used a parquet
-write+read per stage, spark_manager/spark_manager.py:215-231). Spark
-frees the materialized blocks only when the JVM garbage-collects the
-RDD reference and the asynchronous ContextCleaner then processes it —
-so a loop that checkpoints every iteration accumulates every dead
-generation until some future GC. Two real costs:
+``localCheckpoint`` is the engine's lineage-truncation primitive for
+iterative algorithms (the reference used a parquet write+read per
+stage, spark_manager/spark_manager.py:215-231). Spark frees its blocks
+only when the JVM garbage-collects the RDD reference and the
+asynchronous ContextCleaner processes it, so a loop that checkpoints
+every iteration would carry every dead generation until some later GC.
+Two real costs:
 
 - **Scale**: on a 1000-executor cluster the per-iteration state
   (edge sets, BFS frontiers) is executor-memory-scale; carrying
@@ -18,11 +18,17 @@ generation until some future GC. Two real costs:
   cleaner pauses billed to whichever query runs next (measured: an
   18.7s run of a 2.8s query right after the HGN loop).
 
-``CheckpointJanitor`` tracks the persistent-RDD ids each checkpoint
-creates (via ``SparkContext.getPersistentRDDs`` before/after — the
-``DataFrame`` API does not expose the RDD backing a localCheckpoint)
-and unpersists superseded generations eagerly. Loops keep exactly the
-generations their final result still references.
+``CheckpointJanitor`` owns the generations it checkpoints. Used as a
+context manager, it hands out checkpointed frames, frees the ones a
+loop names as superseded (``release``), hands the result generation
+that outlives the loop to the registered loose store (``keep``), and
+frees everything else it still holds when the block exits, normally or
+by an exception. A loop never sees an RDD id. Every generation is
+materialized before ``checkpoint`` returns, so nothing a later round
+reads can depend on a released generation's blocks. The persistent-RDD
+ids behind a frame are found by diffing ``SparkContext.getPersistentRDDs``
+around the call (the ``DataFrame`` API does not expose the RDD backing
+a localCheckpoint).
 """
 
 from __future__ import annotations
@@ -85,6 +91,20 @@ def _materialize(out: DataFrame) -> int:
     return int(out._jdf.queryExecution().toRdd().count())
 
 
+def _attributed(
+    df: DataFrame, storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK_DESER
+) -> tuple[DataFrame, frozenset[int]]:
+    """Lazy localCheckpoint of ``df`` and the persistent-RDD ids it
+    created, diffed under the module attribution lock (the lazy call
+    registers its RDD synchronously, so the diff is exact per thread).
+    The one attribution primitive behind every tracked checkpoint."""
+    spark = df.sparkSession
+    with _ATTRIBUTION_LOCK:
+        before = persistent_rdd_ids(spark)
+        out = df.localCheckpoint(eager=False, storageLevel=storage_level)
+        return out, frozenset(persistent_rdd_ids(spark) - before)
+
+
 def attributed_local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     """Raw (untracked) localCheckpoint that cannot pollute a concurrent
     janitor attribution window: the persistent-RDD registration happens
@@ -104,7 +124,9 @@ def tracked_local_checkpoint(df: DataFrame) -> tuple[DataFrame, frozenset[int]]:
     the persistent-RDD ids backing it, so whoever caches the handle can
     release the blocks when the cache is dropped (see
     ``registry.clear_session_caches``)."""
-    return CheckpointJanitor(df.sparkSession).checkpoint(df)
+    jan = CheckpointJanitor(df.sparkSession)
+    out = jan.checkpoint(df)
+    return out, jan._detach(out)
 
 
 # Blocks behind RESULT/intermediate frames that no module-level cache
@@ -120,16 +142,7 @@ def tracked_local_checkpoint(df: DataFrame) -> tuple[DataFrame, frozenset[int]]:
 _LOOSE_BLOCK_IDS: dict[str, set[int]] = {}
 
 
-def _park(spark: SparkSession | None, ids: Iterable[int]) -> None:
-    if spark is None:
-        # No session HANDLE — which does not prove the owning context
-        # stopped (getActiveSession is thread-local; a non-owner thread
-        # sees None while the context lives on). Without an
-        # applicationId the ids can never be safely matched to a future
-        # release, so they are dropped untracked; callers avoid this
-        # path by passing their in-scope session (see
-        # park_loose_blocks).
-        return
+def _park(spark: SparkSession, ids: Iterable[int]) -> None:
     app = spark.sparkContext.applicationId
     # setdefault: clear_session_caches clears the whole dict, so the
     # key must be recreatable after every clear.
@@ -141,27 +154,20 @@ def loose_local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     are parked in the registered loose store and released by
     ``registry.clear_session_caches`` (benchmarks call it between
     passes; long-lived sessions call it on corpus switch).
-    ``eager=False`` defers materialization to the first consumer (see
-    CheckpointJanitor.checkpoint) — subtree sharing without a driver
-    barrier."""
-    out, ids = CheckpointJanitor(df.sparkSession).checkpoint(df, eager=eager)
+
+    ``eager=False`` leaves materialization to the first consumer (block
+    locks dedupe concurrent computation), which shares a subtree across
+    consumers without a serial driver barrier — the right trade for
+    small frames read by concurrent union arms. It is the only lazy
+    tracked checkpoint: nothing releases a loose frame before
+    ``clear_session_caches``, so no release can overtake its
+    materialization."""
+    if eager:
+        with CheckpointJanitor(df.sparkSession) as jan:
+            return jan.keep(jan.checkpoint(df))
+    out, ids = _attributed(df)
     _park(df.sparkSession, ids)
     return out
-
-
-def park_loose_blocks(ids: Iterable[int], spark: SparkSession | None = None) -> None:
-    """Hand already-tracked checkpoint ids to the loose store (e.g. a
-    loop's FINAL generation, which outlives the loop as the caller's
-    result and has no owning cache).
-
-    Pass the owning session explicitly: the active-session fallback is
-    thread-local, so a call from a non-owner thread (e.g. a results
-    consumer draining a queue) would see None and silently skip parking
-    even though the owning context is alive — leaking the blocks until
-    context shutdown (ADVICE r8). Every loop operator in hgn_spark
-    passes its in-scope session; the fallback exists only for external
-    callers that genuinely run on the session's own thread."""
-    _park(spark or SparkSession.getActiveSession(), ids)
 
 
 def _register_loose_store() -> None:
@@ -176,83 +182,114 @@ _register_loose_store()
 
 
 class CheckpointJanitor:
-    """Tracked ``localCheckpoint`` for iterative loops.
+    """Owner of a loop's checkpoint generations; use it as a context
+    manager.
 
-    ``checkpoint(df)`` returns ``(checkpointed_df, ids)`` where ``ids``
-    are the persistent-RDD ids the checkpoint created; ``release(ids)``
-    frees a superseded generation. Callers release generation N-1 right
-    after generation N's eager checkpoint returns (N is materialized by
-    then, so N-1 can never be read again).
+    ``checkpoint(df)`` returns the materialized checkpoint of ``df``
+    and holds its blocks; ``release(*frames)`` frees superseded
+    generations (callers release generation N-1 right after generation
+    N's checkpoint returns); ``keep(frame)`` hands a result generation
+    that outlives the block to the loose store. Leaving the block frees
+    whatever is still held. One janitor may serve several threads (the
+    HGN init pool): the map of held frames is updated under a lock and
+    every call returns its own results.
     """
 
     def __init__(self, spark: SparkSession) -> None:
         self._spark = spark
+        self._lock = threading.Lock()
+        # id(frame) -> (frame, its persistent-RDD ids); the frame is
+        # stored so its id cannot be reused while it is held.
+        self._held: dict[int, tuple[DataFrame, frozenset[int]]] = {}
+
+    def __enter__(self) -> CheckpointJanitor:
+        return self
+
+    def __exit__(self, *exc: object) -> None:
+        with self._lock:
+            held, self._held = self._held, {}
+        for _, ids in held.values():
+            release_rdds(self._spark, ids)
 
     def checkpoint(
         self,
         df: DataFrame,
-        eager: bool = True,
         *,
         storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK_DESER,
         _observe: dict[str, Column] | None = None,
         _seen: dict | None = None,
-    ) -> tuple[DataFrame, frozenset[int]]:
+    ) -> DataFrame:
         # Attribution under the module lock, materialization outside it
-        # (see _ATTRIBUTION_LOCK): the lazy localCheckpoint registers
-        # its RDD with the persistent map synchronously, so the id diff
-        # is exact per thread, while the expensive job — the count that
+        # (see _ATTRIBUTION_LOCK), so the expensive job — the count that
         # materializes every partition into blocks — still overlaps
-        # with other threads' chains. ``eager=False`` skips the count
-        # entirely: the FIRST consumer materializes the blocks (block
-        # locks dedupe concurrent computation), which shares a subtree
-        # across consumers without a serial driver barrier — the right
-        # trade for small frames consumed by concurrent union arms.
-        # CAUTION for loops: a lazy generation must be materialized
-        # before its inputs are released. ``storage_level`` goes to
-        # localCheckpoint; the default is Spark's own (deserialized).
+        # with other threads' chains. The frame is held before that
+        # job runs: if it fails, leaving the block frees the blocks.
+        # ``storage_level`` goes to localCheckpoint; the default is
+        # Spark's own (deserialized).
         #
         # ``_observe``/``_seen`` are `counted`'s per-call channel (the
         # aggregates to observe in; the row count and observed values
         # out), so every materialization stays one ``checkpoint`` call
-        # and no result state lives on the janitor — concurrent callers
-        # share one janitor (the HGN init pool).
-        with _ATTRIBUTION_LOCK:
-            before = persistent_rdd_ids(self._spark)
-            out = df.localCheckpoint(eager=False, storageLevel=storage_level)
-            ids = frozenset(persistent_rdd_ids(self._spark) - before)
-        if eager:
-            if _observe:
-                # The observation sits on the CHECKPOINTED frame, the
-                # one this job counts. Observed on ``df`` instead (the
-                # plan that feeds localCheckpoint) it never fires: the
-                # checkpoint job computes the RDD, not that query, and
-                # every value reads back as 0.
-                obs = Observation()
-                n = out.observe(
-                    obs, *[c.alias(k) for k, c in _observe.items()]
-                ).count()
-                if _seen is not None:
-                    _seen.update(obs.get)
-            else:
-                n = _materialize(out)
+        # and no result state lives on the janitor.
+        out, ids = _attributed(df, storage_level)
+        with self._lock:
+            self._held[id(out)] = (out, ids)
+        if _observe:
+            # The observation sits on the CHECKPOINTED frame, the
+            # one this job counts. Observed on ``df`` instead (the
+            # plan that feeds localCheckpoint) it never fires: the
+            # checkpoint job computes the RDD, not that query, and
+            # every value reads back as 0.
+            obs = Observation()
+            n = out.observe(obs, *[c.alias(k) for k, c in _observe.items()]).count()
             if _seen is not None:
-                _seen["n"] = n
-        return out, ids
+                _seen.update(obs.get)
+        else:
+            n = _materialize(out)
+        if _seen is not None:
+            _seen["n"] = n
+        return out
 
     def counted(
         self, df: DataFrame, **observe: Column
-    ) -> tuple[DataFrame, frozenset[int], int, dict[str, object]]:
-        """Eager ``checkpoint`` that also hands back what its
-        materializing job saw: ``(df, ids, n, observed)`` where ``n``
-        is the row count the eager ``count()`` computes anyway and
-        ``observed`` maps each keyword to its aggregate over the same
-        rows (``DataFrame.observe`` on that one job — no second
-        action). Loops read their control numbers from here instead of
-        paying a separate ``count()``/``collect()`` barrier."""
+    ) -> tuple[DataFrame, int, dict[str, object]]:
+        """``checkpoint`` that also hands back what its materializing
+        job saw: ``(df, n, observed)`` where ``n`` is the row count the
+        materialization computes anyway and ``observed`` maps each
+        keyword to its aggregate over the same rows
+        (``DataFrame.observe`` on that one job — no second action).
+        Loops read their control numbers from here instead of paying a
+        separate ``count()``/``collect()`` barrier."""
         seen: dict = {}
-        out, ids = self.checkpoint(df, _observe=observe, _seen=seen)
+        out = self.checkpoint(df, _observe=observe, _seen=seen)
         n = seen.pop("n")
-        return out, ids, n, seen
+        return out, n, seen
 
-    def release(self, ids: Iterable[int]) -> None:
-        release_rdds(self._spark, ids)
+    def _detach(self, frame: DataFrame) -> frozenset[int]:
+        """Stop holding ``frame`` and return its ids; raises if this
+        janitor does not hold it (released or kept already, or
+        checkpointed elsewhere)."""
+        with self._lock:
+            entry = self._held.pop(id(frame), None)
+        if entry is None:
+            raise ValueError(
+                "CheckpointJanitor: the frame is not held by this janitor "
+                "(already released or kept, or checkpointed elsewhere)"
+            )
+        return entry[1]
+
+    def release(self, *frames: DataFrame | None) -> None:
+        """Free the blocks of the given held frames now; ``None`` is
+        skipped. Only release a generation whose readers are all
+        materialized: a localCheckpoint has no lineage to recompute
+        from."""
+        for frame in frames:
+            if frame is not None:
+                release_rdds(self._spark, self._detach(frame))
+
+    def keep(self, frame: DataFrame) -> DataFrame:
+        """Hand ``frame`` — a result generation the caller's plan still
+        reads after the block exits — to the registered loose store
+        (released by ``registry.clear_session_caches``) and return it."""
+        _park(self._spark, self._detach(frame))
+        return frame

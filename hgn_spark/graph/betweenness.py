@@ -53,35 +53,37 @@ def shortest_path_lengths(edges: DataFrame, max_len: int = 2) -> DataFrame:
     without the landmark collect.
     """
     sym = symmetrize(edges)
-    jan = CheckpointJanitor(edges.sparkSession)
     known = sym.withColumn("distance", F.lit(1))
-    live: frozenset[int] = frozenset()
     frontier = sym
-    for d in range(2, max_len + 1):
-        a = frontier.alias("a")
-        b = sym.alias("b")
-        nxt = (
-            a.join(b, F.col("a.dst") == F.col("b.src"))
-            .select(F.col("a.src").alias("src"), F.col("b.dst").alias("dst"))
-            .filter(F.col("src") != F.col("dst"))
-            .distinct()
-            .join(known.select("src", "dst"), ["src", "dst"], "left_anti")
-            .withColumn("distance", F.lit(d))
-        )
-        # Level d's checkpoint copies the whole known set forward, so
-        # level d-1's blocks are superseded — free them eagerly. The
-        # next frontier must be RE-DERIVED from the new checkpoint, not
-        # kept as the lazy `nxt` plan: `nxt`'s anti-join references the
-        # previous `known` generation, whose blocks are released below —
-        # re-evaluating it next round would read truncated-lineage
-        # checkpoint blocks and crash (observed at max_len >= 4; the
-        # shipped k=2/3 depths never re-evaluate a released generation,
-        # which is how the bug stayed latent).
-        known, new_ids = jan.checkpoint(known.unionByName(nxt))
-        frontier = known.filter(F.col("distance") == d).drop("distance")
-        jan.release(live)
-        live = new_ids
-    return known
+    with CheckpointJanitor(edges.sparkSession) as jan:
+        for d in range(2, max_len + 1):
+            a = frontier.alias("a")
+            b = sym.alias("b")
+            nxt = (
+                a.join(b, F.col("a.dst") == F.col("b.src"))
+                .select(F.col("a.src").alias("src"), F.col("b.dst").alias("dst"))
+                .filter(F.col("src") != F.col("dst"))
+                .distinct()
+                .join(known.select("src", "dst"), ["src", "dst"], "left_anti")
+                .withColumn("distance", F.lit(d))
+            )
+            # Level d's checkpoint copies the whole known set forward,
+            # so level d-1's blocks are superseded — free them eagerly.
+            # The next frontier must be RE-DERIVED from the new
+            # checkpoint, not kept as the lazy `nxt` plan: `nxt`'s
+            # anti-join references the previous `known` generation,
+            # whose blocks are released below — re-evaluating it next
+            # round would read truncated-lineage checkpoint blocks and
+            # crash (observed at max_len >= 4; the shipped k=2/3 depths
+            # never re-evaluate a released generation, which is how the
+            # bug stayed latent).
+            prev, known = known, jan.checkpoint(known.unionByName(nxt))
+            frontier = known.filter(F.col("distance") == d).drop("distance")
+            if d > 2:
+                jan.release(prev)
+        # The last level is the caller's result (level 1 is the lazy
+        # symmetrized input, never checkpointed).
+        return jan.keep(known) if max_len >= 2 else known
 
 
 def shortest_paths(

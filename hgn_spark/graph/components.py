@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from hgn_spark.checkpoint import CheckpointJanitor, park_loose_blocks
+from hgn_spark.checkpoint import CheckpointJanitor
 from hgn_spark.graph.core import symmetrize
 
 
@@ -106,37 +106,42 @@ def connected_components(
 
     Isolated vertices (present in ``vertices`` but no edge) map to
     themselves, matching GraphFrames semantics when the vertex table is
-    supplied.
+    supplied. Raises ``RuntimeError`` when ``max_iter`` rounds pass
+    without the round signature repeating.
     """
-    jan = CheckpointJanitor(edges.sparkSession)
-    b, live = jan.checkpoint(symmetrize(edges, assume_canonical=edges_canonical))
-
-    prev_sig: tuple[int, int] | None = None
-    for _ in range(max_iter):
-        # The round signature (row count, bit_xor of row hashes) comes
-        # out of the checkpoint's own materializing job — no separate
-        # collect() per round. bit_xor is order-insensitive and cannot
-        # overflow (sum of xxhash64 trips ANSI long-overflow checks);
-        # it is null on an empty round, read as 0.
-        b, new_ids, n, seen = jan.counted(
-            _small_star(_large_star(b)), h=F.expr("bit_xor(xxhash64(src, dst))")
-        )
-        # Round N is materialized; round N-1's blocks can never be read
-        # again — free them now instead of waiting for async GC cleanup
-        # (bounded memory across the O(log n) rounds).
-        jan.release(live)
-        live = new_ids
-        sig = (n, seen["h"] or 0)
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-
-    # At the fixpoint b is a star forest: (member, root) rows for every
-    # non-root member. The returned plan references it LAZILY, so its
-    # blocks must outlive the loop — park them in the loose store
-    # (released by registry.clear_session_caches once the caller is
-    # done, same discipline as k-core's final labels).
-    park_loose_blocks(live, edges.sparkSession)
+    with CheckpointJanitor(edges.sparkSession) as jan:
+        b = jan.checkpoint(symmetrize(edges, assume_canonical=edges_canonical))
+        prev_sig: tuple[int, int] | None = None
+        for _ in range(max_iter):
+            # The round signature (row count, bit_xor of row hashes)
+            # comes out of the checkpoint's own materializing job — no
+            # separate collect() per round. bit_xor is order-insensitive
+            # and cannot overflow (sum of xxhash64 trips ANSI
+            # long-overflow checks); it is null on an empty round, read
+            # as 0.
+            nxt, n, seen = jan.counted(
+                _small_star(_large_star(b)), h=F.expr("bit_xor(xxhash64(src, dst))")
+            )
+            # Round N is materialized; round N-1's blocks can never be
+            # read again — free them now instead of waiting for async GC
+            # cleanup (bounded memory across the O(log n) rounds).
+            jan.release(b)
+            b = nxt
+            sig = (n, seen["h"] or 0)
+            if sig == prev_sig:
+                break
+            prev_sig = sig
+        else:
+            # Same contract as core_numbers: a partition that is not the
+            # fixpoint would be silently wrong.
+            raise RuntimeError(
+                f"connected_components: no fixpoint after max_iter={max_iter} "
+                "rounds; re-run with a larger max_iter"
+            )
+        # At the fixpoint b is a star forest: (member, root) rows for
+        # every non-root member. The returned plan references it
+        # LAZILY, so it outlives the block as the caller's result.
+        jan.keep(b)
     mapping = b.select(F.col("src").alias("id"), F.col("dst").alias("component"))
     if vertices is not None:
         base = vertices.select("id")

@@ -28,7 +28,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hgn_spark.checkpoint import CheckpointJanitor, park_loose_blocks
+from hgn_spark.checkpoint import CheckpointJanitor
 from hgn_spark.graph.betweenness import edge_betweenness
 from hgn_spark.graph.components import connected_components
 from hgn_spark.graph.core import canonicalize, drop_isolated_vertices, symmetrize
@@ -157,282 +157,269 @@ def hgn_communities(
             t[key] = round(t.get(key, 0.0) + dt, 3)
         return dt
 
-    jan = CheckpointJanitor(edges.sparkSession)
-    t0 = _time.perf_counter()
-    # ``edges_canonical``: caller guarantees src < dst distinct rows
-    # (e.g. derived_edges), so canonicalize's dedup exchange is a no-op
-    # and the init checkpoint materializes the input directly.
-    # Every edge generation's row count comes from its own checkpoint
-    # job (CheckpointJanitor.counted) — the loop's gates never pay a
-    # separate count() barrier.
-    e, e_ids, n_edges, _ = jan.counted(
-        edges.select("src", "dst") if edges_canonical else canonicalize(edges)
-    )
-    _mark("init_canonicalize", t0)
-
-    # --- init step (computed once, like main.py:243-258) ---------------
-    # r14 (guide §2.6): the similarity and betweenness init frames both
-    # read the materialized `e` and nothing of each other — run their
-    # eager checkpoints concurrently. Their id sets are released at the
-    # same point after the loop, so concurrent id-diff attribution
-    # between the two checkpoints cannot mis-release a block. Phase
-    # timings record each chain's own wall clock (they overlap).
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _init_sims():
+    with CheckpointJanitor(edges.sparkSession) as jan:
         t0 = _time.perf_counter()
-        s = one_hot_cosine_similarities(e, vertices, feature_cols)
-        # Symmetrize similarities so common-neighbor membership checks
-        # see both orientations; the hybrid ratio is invariant to the
-        # doubling (numerator and denominator scale together).
-        out = jan.checkpoint(
-            s.union(
-                s.select(
-                    F.col("dst").alias("src"), F.col("src").alias("dst"), "similarity"
+        # ``edges_canonical``: caller guarantees src < dst distinct rows
+        # (e.g. derived_edges), so canonicalize's dedup exchange is a no-op
+        # and the init checkpoint materializes the input directly.
+        # Every edge generation's row count comes from its own checkpoint
+        # job (CheckpointJanitor.counted) — the loop's gates never pay a
+        # separate count() barrier.
+        e, n_edges, _ = jan.counted(
+            edges.select("src", "dst") if edges_canonical else canonicalize(edges)
+        )
+        _mark("init_canonicalize", t0)
+
+        # --- init step (computed once, like main.py:243-258) ---------------
+        # r14 (guide §2.6): the similarity and betweenness init frames both
+        # read the materialized `e` and nothing of each other — run their
+        # eager checkpoints concurrently on the one janitor (its held
+        # map is locked; attribution is per call). Both are released
+        # when the block exits. Phase timings record each chain's own
+        # wall clock (they overlap).
+        from concurrent.futures import ThreadPoolExecutor
+
+        def _init_sims():
+            t0 = _time.perf_counter()
+            s = one_hot_cosine_similarities(e, vertices, feature_cols)
+            # Symmetrize similarities so common-neighbor membership checks
+            # see both orientations; the hybrid ratio is invariant to the
+            # doubling (numerator and denominator scale together).
+            out = jan.checkpoint(
+                s.union(
+                    s.select(
+                        F.col("dst").alias("src"),
+                        F.col("src").alias("dst"),
+                        "similarity",
+                    )
                 )
             )
-        )
-        _mark("init_sims", t0)
-        return out
+            _mark("init_sims", t0)
+            return out
 
-    def _init_betw():
-        t0 = _time.perf_counter()
-        # INVARIANT (ADVICE r13 #4): betweenness is computed ONCE here,
-        # on the initial edge set, and never refreshed inside the loop —
-        # the reference does the same (main.py:243-258).
-        # pairs_incremental's soundness DEPENDS on this: with init-once
-        # betweenness (and init-once sims), an untouched edge's delete
-        # condition is time-invariant, so steps 2+ may re-score only
-        # edges whose endpoint neighborhoods the previous deletions
-        # changed. If a future change recomputes betweenness per step,
-        # every survivor's condition can flip and the incremental scope
-        # becomes unsound — such a change MUST either drop to full
-        # per-step scoring or reject delete_rule_impl="pairs_incremental".
-        out = jan.checkpoint(
-            edge_betweenness(
-                e, max_sp_length=p.max_sp_length, edges_canonical=True
+        def _init_betw():
+            t0 = _time.perf_counter()
+            # INVARIANT (ADVICE r13 #4): betweenness is computed ONCE here,
+            # on the initial edge set, and never refreshed inside the loop —
+            # the reference does the same (main.py:243-258).
+            # pairs_incremental's soundness DEPENDS on this: with init-once
+            # betweenness (and init-once sims), an untouched edge's delete
+            # condition is time-invariant, so steps 2+ may re-score only
+            # edges whose endpoint neighborhoods the previous deletions
+            # changed. If a future change recomputes betweenness per step,
+            # every survivor's condition can flip and the incremental scope
+            # becomes unsound — such a change MUST either drop to full
+            # per-step scoring or reject delete_rule_impl="pairs_incremental".
+            out = jan.checkpoint(
+                edge_betweenness(
+                    e, max_sp_length=p.max_sp_length, edges_canonical=True
+                )
             )
-        )
-        _mark("init_betweenness", t0)
-        return out
+            _mark("init_betweenness", t0)
+            return out
 
-    with ThreadPoolExecutor(max_workers=2) as _pool:
-        _f_sims = _pool.submit(_init_sims)
-        _f_betw = _pool.submit(_init_betw)
-        sims, sims_ids = _f_sims.result()
-        betw, betw_ids = _f_betw.result()
+        with ThreadPoolExecutor(max_workers=2) as _pool:
+            _f_sims = _pool.submit(_init_sims)
+            _f_betw = _pool.submit(_init_betw)
+            sims = _f_sims.result()
+            betw = _f_betw.result()
 
-    # --- main loop ------------------------------------------------------
-    aff_v = None  # pairs_incremental: vertices whose neighborhoods changed
-    aff_ids = None
-    prev_n_del: int | None = None  # pairs_incremental pre-gate input
-    for _step in range(1, p.max_steps + 1):
-        if t is not None:
-            t["n_steps"] = _step
-        t0 = _time.perf_counter()
-        if p.delete_rule_impl in ("pairs", "pairs_incremental"):
-            # Pair form, loop-shaped (PROBE_hgn_subphase_r13): score
-            # once, CHECKPOINT the small candidate list, then expand
-            # common members for the candidates only — the full-edge
-            # member expansion is the phase's dominant term (49M rows
-            # at 1000x) and Catalyst would re-run the scored plan per
-            # consumer without the materialization barrier.
-            #
-            # pairs_incremental (r13, the next named mitigation from
-            # the sub-phase attribution): steps 2+ score only edges
-            # with an endpoint within distance 1 of a PREVIOUS
-            # deletion's endpoints (`aff_v`, captured on the
-            # pre-deletion graph below). Sound because an edge's
-            # metrics depend only on its endpoints' level-1/2
-            # neighborhoods, which deleting (a, b) changes exactly for
-            # vertices within distance 1 of {a, b} — every other
-            # survivor kept the scores that already passed the rule
-            # last step, so step N's deletions are a subset of the
-            # scoped set. Communities are identical to the full
-            # recompute (pinned by test).
-            scope = None
-            scope_ids = None
-            n_scope = None
-            if (
-                p.delete_rule_impl == "pairs_incremental"
-                and aff_v is not None
-                # Deletion-fraction PRE-gate (r14, PROBE_hgn_cascade_r14):
-                # building the scope (two semi-joins + distinct +
-                # checkpoint over e) costs real time at 1000x, so only
-                # build it when it can pay. The measured mapping from
-                # last step's deletion fraction to this step's scope
-                # fraction on the 1000x cascade: 1.6% deleted -> 30%
-                # scoped (scoped scoring wins ~1.4x), 2.7% -> 49%
-                # (parity), 9% -> 84% (loses). Gate at 2% — below it
-                # the scope is likely small enough to win; above it
-                # score full and pay zero scope overhead. Free: both
-                # counts are already known.
-                and prev_n_del is not None
-                and 50 * prev_n_del < max(n_edges, 1)
-            ):
-                scope, scope_ids, n_scope, _ = jan.counted(
-                    e.join(
-                        aff_v.withColumnRenamed("id", "src"), "src", "left_semi"
-                    )
-                    .unionByName(
+        # --- main loop ------------------------------------------------------
+        aff_v = None  # pairs_incremental: vertices whose neighborhoods changed
+        prev_n_del: int | None = None  # pairs_incremental pre-gate input
+        for _step in range(1, p.max_steps + 1):
+            if t is not None:
+                t["n_steps"] = _step
+            t0 = _time.perf_counter()
+            scope = pt = cand = None
+            if p.delete_rule_impl in ("pairs", "pairs_incremental"):
+                # Pair form, loop-shaped (PROBE_hgn_subphase_r13): score
+                # once, CHECKPOINT the small candidate list, then expand
+                # common members for the candidates only — the full-edge
+                # member expansion is the phase's dominant term (49M rows
+                # at 1000x) and Catalyst would re-run the scored plan per
+                # consumer without the materialization barrier.
+                #
+                # pairs_incremental (r13, the next named mitigation from
+                # the sub-phase attribution): steps 2+ score only edges
+                # with an endpoint within distance 1 of a PREVIOUS
+                # deletion's endpoints (`aff_v`, captured on the
+                # pre-deletion graph below). Sound because an edge's
+                # metrics depend only on its endpoints' level-1/2
+                # neighborhoods, which deleting (a, b) changes exactly for
+                # vertices within distance 1 of {a, b} — every other
+                # survivor kept the scores that already passed the rule
+                # last step, so step N's deletions are a subset of the
+                # scoped set. Communities are identical to the full
+                # recompute (pinned by test).
+                n_scope = None
+                if (
+                    p.delete_rule_impl == "pairs_incremental"
+                    and aff_v is not None
+                    # Deletion-fraction PRE-gate (r14, PROBE_hgn_cascade_r14):
+                    # building the scope (two semi-joins + distinct +
+                    # checkpoint over e) costs real time at 1000x, so only
+                    # build it when it can pay. The measured mapping from
+                    # last step's deletion fraction to this step's scope
+                    # fraction on the 1000x cascade: 1.6% deleted -> 30%
+                    # scoped (scoped scoring wins ~1.4x), 2.7% -> 49%
+                    # (parity), 9% -> 84% (loses). Gate at 2% — below it
+                    # the scope is likely small enough to win; above it
+                    # score full and pay zero scope overhead. Free: both
+                    # counts are already known.
+                    and prev_n_del is not None
+                    and 50 * prev_n_del < max(n_edges, 1)
+                ):
+                    scope, n_scope, _ = jan.counted(
                         e.join(
-                            aff_v.withColumnRenamed("id", "dst"),
-                            "dst",
-                            "left_semi",
+                            aff_v.withColumnRenamed("id", "src"), "src", "left_semi"
                         )
+                        .unionByName(
+                            e.join(
+                                aff_v.withColumnRenamed("id", "dst"),
+                                "dst",
+                                "left_semi",
+                            )
+                        )
+                        .distinct()
                     )
+                    # Scope-fraction gate (r14, measured in
+                    # PROBE_hgn_cascade_r14 before the gate existed): at
+                    # 1000x the scoped step costs ~0.65x of full scoring
+                    # at 30% scope and ~0.39x at 3.6%, but is at PARITY OR
+                    # WORSE at scope fractions >= ~50% — the scope
+                    # semi-joins plus scoped scoring cost what they save.
+                    # Score full when the affected fraction is >= 1/3;
+                    # results are identical either way (an unscoped edge's
+                    # metrics are unchanged, so full scoring re-accepts it
+                    # exactly as skipping it would).
+                    if 3 * n_scope >= n_edges:
+                        jan.release(scope)
+                        scope = None
+                if (
+                    t is not None
+                    and p.delete_rule_impl == "pairs_incremental"
+                    and aff_v is not None
+                ):
+                    # None = the pre-gate chose full scoring (scope not
+                    # built), keeping the per-step arrays aligned.
+                    t.setdefault("n_scope_per_step", []).append(n_scope)
+                if t is not None:
+                    # |edges actually scored| this step — the quantity the
+                    # incremental rule's step cost should scale with.
+                    t.setdefault("n_scored_per_step", []).append(
+                        n_scope if scope is not None else n_edges
+                    )
+                # The step's ONE 2-hop expansion: the tagged level-2 pair
+                # table (source-restricted to the scope's endpoints when
+                # scoped), materialized once and read by BOTH consumers —
+                # the r-metric scoring and the candidates' common-member
+                # expansion for the hybrid weights — so the 2-hop self-join
+                # runs once per step, not once per consumer. It is held
+                # until the step's deletion set is materialized and is the
+                # loop's largest generation (~12x |e| rows on the derived
+                # graph); one too large for the block store is stored
+                # serialized (see _pair_table_storage).
+                # e is canonical by construction (canonicalize at init;
+                # anti-join deletion preserves it) — every symmetrize in the
+                # scoring path may skip its dedup exchange (r15, guide §2.4).
+                pt = jan.checkpoint(
+                    _tagged_pairs2(
+                        e,
+                        sources=_endpoints(scope) if scope is not None else None,
+                        edges_canonical=True,
+                    ),
+                    storage_level=_pair_table_storage(e.sparkSession, n_edges),
+                )
+                scored, _members_all = r_metrics_edges_pairs(
+                    e,
+                    p.r_lvl1_thres,
+                    p.r_lvl2_thres,
+                    scope=scope,
+                    edges_canonical=True,
+                    pairs=pt,
+                )
+                cand = jan.checkpoint(
+                    scored.filter(~F.col("keepit")).select("src", "dst")
+                )
+                weights = hybrid_edge_weights_members(
+                    _common_member_rows(cand, pt), sims, p.feature_min_avg
+                )
+            else:
+                edges_r = r_metrics_edges(e, p.r_lvl1_thres, p.r_lvl2_thres)
+                weights = hybrid_edge_weights(edges_r, sims, p.feature_min_avg)
+            # Canonical edges → single equi-join against canonical betweenness
+            # (the reference probes both orientations, main.py:130-134). Its
+            # row count — the loop control — comes from the checkpoint job.
+            to_delete, n_del, _ = jan.counted(
+                weights.join(betw, ["src", "dst"], "inner")
+                .filter(
+                    (F.col("edge_weight") < p.max_edge_weight)
+                    | (
+                        (F.col("edge_weight") >= p.max_edge_weight)
+                        & (F.col("betweenness") > p.betweenness_thres)
+                    )
+                )
+                .select("src", "dst")
+            )
+            prev_n_del = n_del
+            dt = _mark("loop_delete_rule", t0)
+            if t is not None:
+                # Per-step breakdown (r14, VERDICT r13 #1): the cascade
+                # probe needs step-2+ cost separately from the accumulated
+                # total to show the incremental rule's step cost scaling
+                # with |affected| instead of |E|. n_deleted_per_step gives
+                # the cascade shape alongside.
+                t.setdefault("loop_delete_rule_per_step", []).append(round(dt, 3))
+                t.setdefault("n_deleted_per_step", []).append(n_del)
+            # The pair table and candidate list fed to_delete, now
+            # materialized — free them.
+            jan.release(pt, cand, scope)
+            if n_del == 0:
+                jan.release(to_delete)
+                break
+            if p.delete_rule_impl == "pairs_incremental":
+                # Next step's scope seed: the deleted endpoints plus their
+                # neighbors in THIS (pre-deletion) generation — exactly
+                # the vertices whose level-1/2 neighborhoods the deletion
+                # changes. Captured before e is replaced.
+                dv = (
+                    to_delete.select(F.col("src").alias("id"))
+                    .unionByName(to_delete.select(F.col("dst").alias("id")))
                     .distinct()
                 )
-                # Scope-fraction gate (r14, measured in
-                # PROBE_hgn_cascade_r14 before the gate existed): at
-                # 1000x the scoped step costs ~0.65x of full scoring
-                # at 30% scope and ~0.39x at 3.6%, but is at PARITY OR
-                # WORSE at scope fractions >= ~50% — the scope
-                # semi-joins plus scoped scoring cost what they save.
-                # Score full when the affected fraction is >= 1/3;
-                # results are identical either way (an unscoped edge's
-                # metrics are unchanged, so full scoring re-accepts it
-                # exactly as skipping it would).
-                if 3 * n_scope >= n_edges:
-                    jan.release(scope_ids)
-                    scope, scope_ids = None, None
-            if (
-                t is not None
-                and p.delete_rule_impl == "pairs_incremental"
-                and aff_v is not None
-            ):
-                # None = the pre-gate chose full scoring (scope not
-                # built), keeping the per-step arrays aligned.
-                t.setdefault("n_scope_per_step", []).append(n_scope)
-            if t is not None:
-                # |edges actually scored| this step — the quantity the
-                # incremental rule's step cost should scale with.
-                t.setdefault("n_scored_per_step", []).append(
-                    n_scope if scope is not None else n_edges
+                nb = (
+                    symmetrize(e, assume_canonical=True)
+                    .join(dv.withColumnRenamed("id", "src"), "src", "left_semi")
+                    .select(F.col("dst").alias("id"))
                 )
-            # The step's ONE 2-hop expansion: the tagged level-2 pair
-            # table (source-restricted to the scope's endpoints when
-            # scoped), materialized once and read by BOTH consumers —
-            # the r-metric scoring and the candidates' common-member
-            # expansion for the hybrid weights — so the 2-hop self-join
-            # runs once per step, not once per consumer. It is held
-            # until the step's deletion set is materialized and is the
-            # loop's largest generation (~12x |e| rows on the derived
-            # graph); one too large for the block store is stored
-            # serialized (see _pair_table_storage).
-            # e is canonical by construction (canonicalize at init;
-            # anti-join deletion preserves it) — every symmetrize in the
-            # scoring path may skip its dedup exchange (r15, guide §2.4).
-            pt, pt_ids = jan.checkpoint(
-                _tagged_pairs2(
-                    e,
-                    sources=_endpoints(scope) if scope is not None else None,
-                    edges_canonical=True,
-                ),
-                storage_level=_pair_table_storage(e.sparkSession, n_edges),
+                new_aff = jan.checkpoint(dv.unionByName(nb).distinct())
+                jan.release(aff_v)
+                aff_v = new_aff
+            t0 = _time.perf_counter()
+            new_e, n_edges, _ = jan.counted(
+                e.join(to_delete, ["src", "dst"], "left_anti")
             )
-            scored, _members_all = r_metrics_edges_pairs(
-                e,
-                p.r_lvl1_thres,
-                p.r_lvl2_thres,
-                scope=scope,
-                edges_canonical=True,
-                pairs=pt,
-            )
-            cand, cand_ids = jan.checkpoint(
-                scored.filter(~F.col("keepit")).select("src", "dst")
-            )
-            weights = hybrid_edge_weights_members(
-                _common_member_rows(cand, pt), sims, p.feature_min_avg
-            )
-        else:
-            pt_ids = None
-            cand_ids = None
-            scope_ids = None
-            edges_r = r_metrics_edges(e, p.r_lvl1_thres, p.r_lvl2_thres)
-            weights = hybrid_edge_weights(edges_r, sims, p.feature_min_avg)
-        # Canonical edges → single equi-join against canonical betweenness
-        # (the reference probes both orientations, main.py:130-134). Its
-        # row count — the loop control — comes from the checkpoint job.
-        to_delete, td_ids, n_del, _ = jan.counted(
-            weights.join(betw, ["src", "dst"], "inner")
-            .filter(
-                (F.col("edge_weight") < p.max_edge_weight)
-                | (
-                    (F.col("edge_weight") >= p.max_edge_weight)
-                    & (F.col("betweenness") > p.betweenness_thres)
-                )
-            )
-            .select("src", "dst")
-        )
-        prev_n_del = n_del
-        dt = _mark("loop_delete_rule", t0)
-        if t is not None:
-            # Per-step breakdown (r14, VERDICT r13 #1): the cascade
-            # probe needs step-2+ cost separately from the accumulated
-            # total to show the incremental rule's step cost scaling
-            # with |affected| instead of |E|. n_deleted_per_step gives
-            # the cascade shape alongside.
-            t.setdefault("loop_delete_rule_per_step", []).append(round(dt, 3))
-            t.setdefault("n_deleted_per_step", []).append(n_del)
-        # The pair table and candidate list fed to_delete, now
-        # materialized — free them.
-        for ids in (pt_ids, cand_ids, scope_ids):
-            if ids is not None:
-                jan.release(ids)
-        if n_del == 0:
-            jan.release(td_ids)
-            break
-        if p.delete_rule_impl == "pairs_incremental":
-            # Next step's scope seed: the deleted endpoints plus their
-            # neighbors in THIS (pre-deletion) generation — exactly
-            # the vertices whose level-1/2 neighborhoods the deletion
-            # changes. Captured before e is replaced.
-            dv = (
-                to_delete.select(F.col("src").alias("id"))
-                .unionByName(to_delete.select(F.col("dst").alias("id")))
-                .distinct()
-            )
-            nb = (
-                symmetrize(e, assume_canonical=True)
-                .join(dv.withColumnRenamed("id", "src"), "src", "left_semi")
-                .select(F.col("dst").alias("id"))
-            )
-            new_aff, new_aff_ids = jan.checkpoint(
-                dv.unionByName(nb).distinct()
-            )
-            if aff_ids is not None:
-                jan.release(aff_ids)
-            aff_v, aff_ids = new_aff, new_aff_ids
-        t0 = _time.perf_counter()
-        new_e, new_e_ids, n_edges, _ = jan.counted(
-            e.join(to_delete, ["src", "dst"], "left_anti")
-        )
-        _mark("loop_anti_join", t0)
-        # Iteration N's edge set is materialized: its inputs — the
-        # previous generation and this round's deletion set — can never
-        # be read again. Free them now so the loop carries ONE edge
-        # generation instead of O(max_steps) (bounded memory at scale;
-        # locally this kept multi-second cleanup pauses out of whatever
-        # query runs after the loop).
-        e = new_e
-        jan.release(e_ids)
-        jan.release(td_ids)
-        e_ids = new_e_ids
+            _mark("loop_anti_join", t0)
+            # Iteration N's edge set is materialized: its inputs — the
+            # previous generation and this round's deletion set — can never
+            # be read again. Free them now so the loop carries ONE edge
+            # generation instead of O(max_steps) (bounded memory at scale;
+            # locally this kept multi-second cleanup pauses out of whatever
+            # query runs after the loop).
+            jan.release(e, to_delete)
+            e = new_e
 
-    t0 = _time.perf_counter()
-    survivors = drop_isolated_vertices(vertices.select("id"), e, edges_canonical=True)
-    out = connected_components(e, survivors, edges_canonical=True)
-    _mark("final_cc", t0)
-    # The returned plan references only the final edge generation (via
-    # the survivors join) and CC's fixpoint mapping — the init-step
-    # similarity and betweenness checkpoints are dead weight from here.
-    jan.release(sims_ids)
-    jan.release(betw_ids)
-    if aff_ids is not None:
-        jan.release(aff_ids)
-    # The final edge generation stays lazily referenced by the returned
-    # plan (survivors join + CC mapping) — park it for clear-time
-    # release instead of leaving it to async GC.
-    park_loose_blocks(e_ids, edges.sparkSession)
-    return out
+        t0 = _time.perf_counter()
+        survivors = drop_isolated_vertices(
+            vertices.select("id"), e, edges_canonical=True
+        )
+        out = connected_components(e, survivors, edges_canonical=True)
+        _mark("final_cc", t0)
+        # The returned plan references the final edge generation lazily
+        # (survivors join + CC mapping): it is the caller's result. The
+        # init-step similarity and betweenness checkpoints (and the
+        # last scope seed) are dead weight from here; the block's exit
+        # frees them.
+        jan.keep(e)
+        return out

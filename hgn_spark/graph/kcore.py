@@ -65,76 +65,63 @@ def core_numbers(
     smaller ``max_iter`` only as an explicit wall-clock budget,
     knowing it raises loudly on deep/path-like graphs.
     """
-    spark = edges.sparkSession
-    jan = CheckpointJanitor(spark)
-    sym, sym_ids, n_sym, _ = jan.counted(
-        symmetrize(edges, assume_canonical=edges_canonical)
-    )
-
-    # label_0 = degree. The edge list has no isolated vertices, so
-    # every vertex appears on the src side of the symmetrized frame.
-    lab, lab_ids = jan.checkpoint(
-        sym.groupBy(F.col("src").alias("id")).agg(
-            F.count(F.lit(1)).cast("int").alias("core")
+    with CheckpointJanitor(edges.sparkSession) as jan:
+        sym, n_sym, _ = jan.counted(symmetrize(edges, assume_canonical=edges_canonical))
+        # label_0 = degree. The edge list has no isolated vertices, so
+        # every vertex appears on the src side of the symmetrized frame.
+        lab = jan.checkpoint(
+            sym.groupBy(F.col("src").alias("id")).agg(
+                F.count(F.lit(1)).cast("int").alias("core")
+            )
         )
-    )
-    if max_iter is None:
-        # Proven runaway bound (docstring): ≤ 2m decreasing probe
-        # intervals + the final no-change one, each `interval` rounds.
-        # sym's row count (= 2m) comes from its own checkpoint job.
-        max_iter = (n_sym + 1) * checkpoint_interval
+        if max_iter is None:
+            # Proven runaway bound (docstring): ≤ 2m decreasing probe
+            # intervals + the final no-change one, each `interval`
+            # rounds. sym's row count (= 2m) comes from its own
+            # checkpoint job.
+            max_iter = (n_sym + 1) * checkpoint_interval
 
-    # h-index of the sorted-desc neighbor-label array: positions where
-    # label >= position form a prefix (the array is sorted), so the
-    # count of such positions is the h-index.
-    h_expr = F.expr(
-        "CAST(size(filter(transform(sort_array(ls, false), "
-        "(x, i) -> x >= i + 1), b -> b)) AS INT)"
-    ).alias("core")
+        # h-index of the sorted-desc neighbor-label array: positions
+        # where label >= position form a prefix (the array is sorted),
+        # so the count of such positions is the h-index.
+        h_expr = F.expr(
+            "CAST(size(filter(transform(sort_array(ls, false), "
+            "(x, i) -> x >= i + 1), b -> b)) AS INT)"
+        ).alias("core")
 
-    # Convergence is probed only on checkpoint rounds: the h-operator
-    # is IDEMPOTENT at its fixpoint, so overshooting by up to
-    # interval-1 rounds changes nothing — and batching the rounds
-    # between probes into one lazily-evaluated chain cuts the
-    # driver-side actions ~3x (one checkpoint + one isEmpty per
-    # interval instead of an isEmpty per round). `prev` is the label
-    # generation at the LAST probe; comparing across the whole batch
-    # stays sound because labels are monotonically non-increasing: a
-    # batch that changes nothing overall changed nothing in any of its
-    # rounds.
-    prev, prev_ids = lab, lab_ids
-    for it in range(max_iter):
-        lab = (
-            sym.join(lab, sym["dst"] == lab["id"])
-            .select(F.col("src"), F.col("core").alias("l"))
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.collect_list("l").alias("ls"))
-            .select("id", h_expr)
-        )
-        if it % checkpoint_interval != checkpoint_interval - 1:
-            continue
-        lab, lab_ids = jan.checkpoint(lab)
-        changed = (
-            lab.alias("n")
-            .join(prev.alias("o"), "id")
-            .filter(F.col("n.core") != F.col("o.core"))
-        )
-        done = changed.isEmpty()
-        jan.release(prev_ids)
-        prev, prev_ids = lab, lab_ids
-        if done:
-            jan.release(sym_ids)
-            # The final label generation is the result; its blocks stay
-            # persisted for the caller and are parked in the registered
-            # loose store so clear_session_caches actually releases
-            # them (an unparked generation would linger until async GC
-            # — one orphan per bench pass).
-            from hgn_spark.checkpoint import park_loose_blocks
-
-            park_loose_blocks(prev_ids, spark)
-            return lab
-    jan.release(sym_ids)
-    jan.release(prev_ids)
+        # Convergence is probed only on checkpoint rounds: the
+        # h-operator is IDEMPOTENT at its fixpoint, so overshooting by
+        # up to interval-1 rounds changes nothing — and batching the
+        # rounds between probes into one lazily-evaluated chain cuts
+        # the driver-side actions ~3x (one checkpoint + one isEmpty per
+        # interval instead of an isEmpty per round). `prev` is the
+        # label generation at the LAST probe; comparing across the
+        # whole batch stays sound because labels are monotonically
+        # non-increasing: a batch that changes nothing overall changed
+        # nothing in any of its rounds.
+        prev = lab
+        for it in range(max_iter):
+            lab = (
+                sym.join(lab, sym["dst"] == lab["id"])
+                .select(F.col("src"), F.col("core").alias("l"))
+                .groupBy(F.col("src").alias("id"))
+                .agg(F.collect_list("l").alias("ls"))
+                .select("id", h_expr)
+            )
+            if it % checkpoint_interval != checkpoint_interval - 1:
+                continue
+            lab = jan.checkpoint(lab)
+            done = (
+                lab.alias("n")
+                .join(prev.alias("o"), "id")
+                .filter(F.col("n.core") != F.col("o.core"))
+                .isEmpty()
+            )
+            jan.release(prev)
+            prev = lab
+            if done:
+                # The final label generation is the caller's result.
+                return jan.keep(lab)
     raise RuntimeError(
         f"core_numbers: no fixpoint after max_iter={max_iter} rounds — "
         "an explicit max_iter below the default was exhausted "

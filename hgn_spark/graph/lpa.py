@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hgn_spark.checkpoint import CheckpointJanitor, park_loose_blocks
+from hgn_spark.checkpoint import CheckpointJanitor
 from hgn_spark.graph.core import symmetrize
 
 
@@ -39,33 +39,31 @@ def label_propagation(
 ) -> DataFrame:
     """→ ``(id, label)`` after ``n_iter`` synchronous rounds; labels
     start as vertex ids, so a label is always some member's id."""
-    jan = CheckpointJanitor(edges.sparkSession)
-    sym, sym_ids = jan.checkpoint(symmetrize(edges, assume_canonical=edges_canonical))
-    labels = sym.select(F.col("src").alias("id")).distinct().select(
-        "id", F.col("id").alias("label")
-    )
-    labels, lab_ids = jan.checkpoint(labels)
-    for it in range(1, n_iter + 1):
-        neigh = sym.join(
-            labels.withColumnRenamed("id", "src"), "src"
-        ).select(F.col("dst").alias("id"), "label")
-        counted = neigh.groupBy("id", "label").agg(
-            F.count(F.lit(1)).alias("c")
+    with CheckpointJanitor(edges.sparkSession) as jan:
+        sym = jan.checkpoint(symmetrize(edges, assume_canonical=edges_canonical))
+        labels = jan.checkpoint(
+            sym.select(F.col("src").alias("id")).distinct().select(
+                "id", F.col("id").alias("label")
+            )
         )
-        # argmax by (count desc, label asc): struct-max over
-        # (c, -label) — maximizing the negated label minimizes the
-        # label, for any sign. No window, no sort: one map-side-
-        # combinable max per vertex.
-        labels = counted.groupBy("id").agg(
-            F.max(F.struct(F.col("c"), (-F.col("label")).alias("nl"))).alias("m")
-        ).select("id", (-F.col("m.nl")).alias("label"))
-        if it % checkpoint_interval == 0 or it == n_iter:
-            labels, new_ids = jan.checkpoint(labels)
-            jan.release(lab_ids)
-            lab_ids = new_ids
-    jan.release(sym_ids)
-    # The final label generation outlives the loop as the caller's
-    # result — park its ids in the registered loose store (released by
-    # registry.clear_session_caches, same discipline as k-core).
-    park_loose_blocks(lab_ids, edges.sparkSession)
-    return labels
+        gen = labels
+        for it in range(1, n_iter + 1):
+            neigh = sym.join(
+                labels.withColumnRenamed("id", "src"), "src"
+            ).select(F.col("dst").alias("id"), "label")
+            counted = neigh.groupBy("id", "label").agg(
+                F.count(F.lit(1)).alias("c")
+            )
+            # argmax by (count desc, label asc): struct-max over
+            # (c, -label) — maximizing the negated label minimizes the
+            # label, for any sign. No window, no sort: one map-side-
+            # combinable max per vertex.
+            labels = counted.groupBy("id").agg(
+                F.max(F.struct(F.col("c"), (-F.col("label")).alias("nl"))).alias("m")
+            ).select("id", (-F.col("m.nl")).alias("label"))
+            if it % checkpoint_interval == 0 or it == n_iter:
+                labels = jan.checkpoint(labels)
+                jan.release(gen)
+                gen = labels
+        # The final label generation is the caller's result.
+        return jan.keep(labels)

@@ -40,30 +40,141 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hgn_spark.checkpoint import CheckpointJanitor, park_loose_blocks
+from hgn_spark.checkpoint import CheckpointJanitor
 from hgn_spark.graph.core import symmetrize
 
 
 def build_links(
     edges: DataFrame, jan: CheckpointJanitor, edges_canonical: bool = False
-) -> tuple[DataFrame, frozenset[int]]:
-    """The per-iteration join table both recurrences share:
+) -> DataFrame:
+    """The per-iteration join table every recurrence shares:
     (src, dst, out_deg(src)) over the symmetrized graph, materialized
     once (constant across iterations, so every round's join hits a
-    checkpointed table, not the degree aggregation). Callers running
-    BOTH the uniform and the personalized recurrence (the merged
-    graph_pagerank driver row) build this once and pass it to each —
-    the graph build is the startup cost, and doubling it was the
-    only overhead of the r8 branch merge."""
-    sym, sym_ids = jan.checkpoint(symmetrize(edges, assume_canonical=edges_canonical))
+    checkpointed table, not the degree aggregation) and held by
+    ``jan``. Callers running BOTH the uniform and the personalized
+    recurrence (the merged graph_pagerank driver row) build this once
+    and pass it to each — the graph build is the startup cost, and
+    doubling it was the only overhead of the r8 branch merge."""
+    sym = jan.checkpoint(symmetrize(edges, assume_canonical=edges_canonical))
     out_deg = sym.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).alias("out_deg")
     )
-    links, links_ids = jan.checkpoint(
-        sym.join(out_deg.withColumnRenamed("id", "src"), "src")
-    )
-    jan.release(sym_ids)
-    return links, links_ids
+    links = jan.checkpoint(sym.join(out_deg.withColumnRenamed("id", "src"), "src"))
+    jan.release(sym)
+    return links
+
+
+def _power_iteration(
+    edges: DataFrame,
+    seeds: DataFrame | None,
+    uniform: bool,
+    damping: float,
+    n_iter: int,
+    checkpoint_interval: int,
+    links: DataFrame | None,
+) -> DataFrame:
+    """The one power iteration behind the public entry points →
+    ``(id, pu?, pp?)``: one rank column per teleport vector, ``pu``
+    (uniform, t(v) = 1/N) when ``uniform`` and ``pp`` (personalized,
+    t(v) = [v ∈ S]/|S|) when ``seeds`` is given, each started from its
+    own teleport distribution:
+
+        pr'(v) = (1-d)·t(v) + d·Σ_{u→v} pr(u)/outdeg(u)
+
+    Each round is EXACTLY one equi-join + one map-side-combinable
+    aggregation whatever the column count (the standard multi-source
+    batching: the per-round shuffle moves one state row per vertex,
+    columns just get wider). The seed flag is folded into the
+    materialized link table once as a dst-side column: the
+    symmetrized graph gives every vertex inbound edges, so the
+    per-round aggregation already covers the full vertex set and the
+    seeded base term rides the grouped flag instead of a per-round
+    vertex-table outer join (constant per group, so max() under the
+    same groupBy is free map-side). No driver-side seed list.
+
+    ``links``: a prebuilt `build_links` table to share the graph build
+    across calls; the caller's janitor owns its blocks.
+    """
+    spark = edges.sparkSession
+    with CheckpointJanitor(spark) as jan:
+        own_links = links is None
+        if own_links:
+            links = build_links(edges, jan)
+        if seeds is None:
+            # One distinct over the links table, materialized once: it
+            # feeds both the vertex count and the initial ranks. Its row
+            # count comes from the checkpoint's own job.
+            verts, n, _ = jan.counted(links.select(F.col("src").alias("id")).distinct())
+        else:
+            # (src, dst, out_deg, dst_seed): the per-round join table
+            # with the teleport-target flag on the DESTINATION side.
+            seed_flag = seeds.select(F.col("id").alias("dst")).distinct().withColumn(
+                "dst_seed", F.lit(1)
+            )
+            slinks = jan.checkpoint(
+                links.join(seed_flag, "dst", "left").select(
+                    "src",
+                    "dst",
+                    "out_deg",
+                    F.coalesce("dst_seed", F.lit(0)).alias("dst_seed"),
+                )
+            )
+            if own_links:
+                jan.release(links)
+            links = slinks
+            # src-side flags via one distinct over the dst-keyed flags
+            # (src and dst ranges are identical on the symmetrized
+            # graph); the seed count rides the same job.
+            verts, n, seen = jan.counted(
+                links.select(
+                    F.col("dst").alias("id"), F.col("dst_seed").alias("is_seed")
+                ).distinct(),
+                ns=F.sum("is_seed"),
+            )
+            n_seeds = seen["ns"] or 0
+        if uniform and n == 0:
+            return spark.createDataFrame(
+                [], "id long, pu double" + (", pp double" if seeds is not None else "")
+            )
+        if seeds is not None and n_seeds == 0:
+            raise ValueError("pagerank: no seed id appears in the graph")
+        # column -> (start, teleport term)
+        terms = {}
+        if uniform:
+            terms["pu"] = (F.lit(1.0 / n), F.lit((1.0 - damping) / n))
+        if seeds is not None:
+            terms["pp"] = (
+                F.col("is_seed") / F.lit(float(n_seeds)),
+                F.col("is_seed") * F.lit((1.0 - damping) / n_seeds),
+            )
+        pr = jan.checkpoint(
+            verts.select("id", *[s.alias(c) for c, (s, _) in terms.items()])
+        )
+        jan.release(verts)
+        gen = pr
+        for it in range(1, n_iter + 1):
+            sums = [F.sum(F.col(c) / F.col("out_deg")).alias("s_" + c) for c in terms]
+            if seeds is not None:
+                sums.append(F.max("dst_seed").alias("is_seed"))
+            pr = (
+                links.join(pr.withColumnRenamed("id", "src"), "src")
+                .groupBy(F.col("dst").alias("id"))
+                .agg(*sums)
+                .select(
+                    "id",
+                    *[
+                        (t + F.lit(damping) * F.col("s_" + c)).alias(c)
+                        for c, (_, t) in terms.items()
+                    ],
+                )
+            )
+            if it % checkpoint_interval == 0 or it == n_iter:
+                pr = jan.checkpoint(pr)
+                jan.release(gen)
+                gen = pr
+        # The final generation is checkpointed (no lineage into links)
+        # and outlives the block as the caller's result.
+        return jan.keep(pr)
 
 
 def pagerank(
@@ -92,50 +203,10 @@ def pagerank(
     ``links``: a prebuilt `build_links` table to share the graph build
     with another recurrence; the caller owns (and releases) its blocks.
     """
-    spark = edges.sparkSession
-    jan = CheckpointJanitor(spark)
-    own_links = links is None
-    links_ids: frozenset[int] = frozenset()
-    if own_links:
-        links, links_ids = build_links(edges, jan)
-    # One distinct over the links table, materialized once: it feeds
-    # both the vertex count and the uniform initial ranks (computing it
-    # twice would run the edge-set-sized shuffle twice at startup). Its
-    # row count comes from the checkpoint's own materializing job.
-    verts, vert_ids, n, _ = jan.counted(links.select("src").distinct())
-    if n == 0:
-        jan.release(vert_ids)
-        if own_links:
-            jan.release(links_ids)
-        return spark.createDataFrame([], "id long, pagerank double")
-
-    pr = verts.select(F.col("src").alias("id"), F.lit(1.0 / n).alias("pr"))
-    pr, pr_ids = jan.checkpoint(pr)
-    jan.release(vert_ids)
-    base = (1.0 - damping) / n
-    for it in range(1, n_iter + 1):
-        contrib = (
-            links.join(pr.withColumnRenamed("id", "src"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum(F.col("pr") / F.col("out_deg")).alias("in_sum"))
-        )
-        pr = contrib.select(
-            "id", (F.lit(base) + F.lit(damping) * F.col("in_sum")).alias("pr")
-        )
-        if it % checkpoint_interval == 0 or it == n_iter:
-            pr, new_ids = jan.checkpoint(pr)
-            jan.release(pr_ids)
-            pr_ids = new_ids
-    out = pr.select("id", F.col("pr").alias("pagerank"))
-    # The final frame is checkpointed (no lineage into links) — the
-    # link table's blocks are dead weight from here. The final
-    # generation itself outlives the loop as the caller's result, so
-    # its ids go to the registered loose store (released by
-    # registry.clear_session_caches, same as k-core's final labels).
-    if own_links:
-        jan.release(links_ids)
-    park_loose_blocks(pr_ids, spark)
-    return out
+    pr = _power_iteration(
+        edges, None, True, damping, n_iter, checkpoint_interval, links
+    )
+    return pr.select("id", F.col("pu").alias("pagerank"))
 
 
 def personalized_pagerank(
@@ -164,86 +235,14 @@ def personalized_pagerank(
     iterates to a convergence tolerance, so at small fixed iteration
     counts the two differ by O(damping^n_iter). Non-seed vertices
     unreachable from any seed converge to 0 and still appear (one row
-    per non-isolated vertex).
-
-    Same scale shape as `pagerank` — EXACTLY one equi-join + one
-    map-side-combinable aggregation per round: the seed flag is folded
-    into the materialized link table once as a dst-side column (the
-    symmetrized graph gives every vertex inbound edges, so the
-    per-round aggregation already covers the full vertex set and the
-    base term rides the grouped flag instead of a per-round
-    vertex-table outer join; constant per group, so max() under the
-    same groupBy is free map-side). No driver-side seed list.
-    ``links``: see `pagerank` (sharing the graph build across
-    recurrences).
+    per non-isolated vertex). Same scale shape as `pagerank`; raises
+    ``ValueError`` when no seed is in the graph. ``links``: see
+    `pagerank` (sharing the graph build across recurrences).
     """
-    spark = edges.sparkSession
-    jan = CheckpointJanitor(spark)
-    own_links = links is None
-    links_ids: frozenset[int] = frozenset()
-    if own_links:
-        links, links_ids = build_links(edges, jan)
-    # (src, dst, out_deg, dst_seed): the per-round join table with the
-    # teleport-target flag attached to the DESTINATION side.
-    seed_flag = seeds.select(F.col("id").alias("dst")).distinct().withColumn(
-        "dst_seed", F.lit(1)
+    pr = _power_iteration(
+        edges, seeds, False, damping, n_iter, checkpoint_interval, links
     )
-    slinks, slinks_ids = jan.checkpoint(
-        links.join(seed_flag, "dst", "left").select(
-            "src",
-            "dst",
-            "out_deg",
-            F.coalesce("dst_seed", F.lit(0)).alias("dst_seed"),
-        )
-    )
-    if own_links:
-        jan.release(links_ids)
-    # Seed count: one aggregation over the materialized table (each
-    # dst appears out_deg-many times; count distinct seeded dsts).
-    n_seeds = (
-        slinks.filter(F.col("dst_seed") == 1).select("dst").distinct().count()
-    )
-    if n_seeds == 0:
-        jan.release(slinks_ids)
-        raise ValueError(
-            "personalized_pagerank: no seed id appears in the graph"
-        )
-    base_c = (1.0 - damping) / n_seeds
-    # Start from the teleport distribution itself. src-side flag via
-    # one distinct over the dst-keyed flags (src and dst ranges are
-    # identical on the symmetrized graph).
-    pr = (
-        slinks.select(
-            F.col("dst").alias("id"), F.col("dst_seed").alias("is_seed")
-        )
-        .distinct()
-        .select("id", (F.col("is_seed") / F.lit(float(n_seeds))).alias("pr"))
-    )
-    pr, pr_ids = jan.checkpoint(pr)
-    for it in range(1, n_iter + 1):
-        pr = (
-            slinks.join(pr.select(F.col("id").alias("src"), "pr"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(
-                F.sum(F.col("pr") / F.col("out_deg")).alias("in_sum"),
-                F.max("dst_seed").alias("is_seed"),
-            )
-            .select(
-                "id",
-                (
-                    F.col("is_seed") * F.lit(base_c)
-                    + F.lit(damping) * F.col("in_sum")
-                ).alias("pr"),
-            )
-        )
-        if it % checkpoint_interval == 0 or it == n_iter:
-            pr, new_ids = jan.checkpoint(pr)
-            jan.release(pr_ids)
-            pr_ids = new_ids
-    out = pr.select("id", F.col("pr").alias("pagerank"))
-    jan.release(slinks_ids)
-    park_loose_blocks(pr_ids, spark)
-    return out
+    return pr.select("id", F.col("pp").alias("pagerank"))
 
 
 def pagerank_fused(
@@ -257,92 +256,19 @@ def pagerank_fused(
     """BOTH recurrences in one loop → ``(id, pr_uniform, pr_ppr)``:
     the state frame carries one rank column per teleport vector, so
     each round is still exactly ONE equi-join + ONE map-side-combinable
-    aggregation — 20 shuffles for the pair instead of 40 (the standard
-    multi-source batching: at any vector count the per-round shuffle
-    moves one state row per vertex, columns just get wider).
+    aggregation — 20 shuffles for the pair instead of 40.
 
     Uniform PageRank IS personalized PageRank with the seed set = V
     (teleport 1/N everywhere), so both columns follow the same
-    recurrence with different teleport vectors:
-
-        pr'(v) = (1-d)·t(v) + d·Σ_{u→v} pr(u)/outdeg(u)
-
-    with t_uniform = 1/N and t_ppr = [v ∈ S]/|S|, each started from
-    its own teleport distribution. Column-for-column equal (modulo
-    float summation order — identical after the registered row's
-    6-decimal rounding, pinned at 1e-9 in tests/test_graph.py) to
-    `pagerank` and `personalized_pagerank` run separately; those
-    remain the single-vector API.
+    recurrence with different teleport vectors (`_power_iteration`).
+    Column-for-column equal (modulo float summation order — identical
+    after the registered row's 6-decimal rounding, pinned at 1e-9 in
+    tests/test_graph.py) to `pagerank` and `personalized_pagerank` run
+    separately; those remain the single-vector API.
     """
-    spark = edges.sparkSession
-    jan = CheckpointJanitor(spark)
-    own_links = links is None
-    links_ids: frozenset[int] = frozenset()
-    if own_links:
-        links, links_ids = build_links(edges, jan)
-    seed_flag = seeds.select(F.col("id").alias("dst")).distinct().withColumn(
-        "dst_seed", F.lit(1)
+    pr = _power_iteration(
+        edges, seeds, True, damping, n_iter, checkpoint_interval, links
     )
-    slinks, slinks_ids = jan.checkpoint(
-        links.join(seed_flag, "dst", "left").select(
-            "src",
-            "dst",
-            "out_deg",
-            F.coalesce("dst_seed", F.lit(0)).alias("dst_seed"),
-        )
-    )
-    if own_links:
-        jan.release(links_ids)
-    verts = slinks.select(
-        F.col("dst").alias("id"), F.col("dst_seed").alias("is_seed")
-    ).distinct()
-    counts = verts.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("is_seed").alias("ns")
-    ).first()
-    n, n_seeds = counts["n"], counts["ns"] or 0
-    if n == 0:
-        jan.release(slinks_ids)
-        return spark.createDataFrame(
-            [], "id long, pr_uniform double, pr_ppr double"
-        )
-    if n_seeds == 0:
-        jan.release(slinks_ids)
-        raise ValueError("pagerank_fused: no seed id appears in the graph")
-    base_u = (1.0 - damping) / n
-    base_p = (1.0 - damping) / n_seeds
-    pr = verts.select(
-        "id",
-        F.lit(1.0 / n).alias("pu"),
-        (F.col("is_seed") / F.lit(float(n_seeds))).alias("pp"),
-    )
-    pr, pr_ids = jan.checkpoint(pr)
-    for it in range(1, n_iter + 1):
-        pr = (
-            slinks.join(
-                pr.select(F.col("id").alias("src"), "pu", "pp"), "src"
-            )
-            .groupBy(F.col("dst").alias("id"))
-            .agg(
-                F.sum(F.col("pu") / F.col("out_deg")).alias("su"),
-                F.sum(F.col("pp") / F.col("out_deg")).alias("sp"),
-                F.max("dst_seed").alias("is_seed"),
-            )
-            .select(
-                "id",
-                (F.lit(base_u) + F.lit(damping) * F.col("su")).alias("pu"),
-                (
-                    F.col("is_seed") * F.lit(base_p)
-                    + F.lit(damping) * F.col("sp")
-                ).alias("pp"),
-            )
-        )
-        if it % checkpoint_interval == 0 or it == n_iter:
-            pr, new_ids = jan.checkpoint(pr)
-            jan.release(pr_ids)
-            pr_ids = new_ids
-    out = pr.select(
+    return pr.select(
         "id", F.col("pu").alias("pr_uniform"), F.col("pp").alias("pr_ppr")
     )
-    jan.release(slinks_ids)
-    park_loose_blocks(pr_ids, spark)
-    return out

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from hgn_spark.catalog import load_table
-from hgn_spark.checkpoint import tracked_local_checkpoint
+from hgn_spark.checkpoint import loose_local_checkpoint
 from hgn_spark.graph.betweenness import edge_betweenness
 from hgn_spark.graph.components import connected_components
 from hgn_spark.graph.core import degrees, neighbors
@@ -61,14 +61,13 @@ assert _GRAPH_CTE_MAT.count("MATERIALIZED") == 2
 # from the same lineitem self-join, and its output is tiny relative to
 # the scan (2.8k edges at sf0.1) — materialize once per session, the
 # same engine-caching discipline as the dedup family's shingle sets.
+# Its blocks sit in the loose checkpoint store, which
+# registry.clear_session_caches releases when it drops this cache.
 _EDGES_CACHE: dict[tuple[str, str], DataFrame] = {}
-# Persistent-RDD ids behind the cached checkpoint (released by
-# registry.clear_session_caches).
-_CACHE_BLOCK_IDS: dict[tuple[str, str], set[int]] = {}
 
 from hgn_spark.registry import register_cache as _register_cache  # noqa: E402
 
-_register_cache("graph_edges", _EDGES_CACHE, block_ids=_CACHE_BLOCK_IDS)
+_register_cache("graph_edges", _EDGES_CACHE)
 
 
 def derived_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -95,9 +94,8 @@ def derived_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    out, ids = tracked_local_checkpoint(out)
+    out = loose_local_checkpoint(out)
     _EDGES_CACHE[key] = out
-    _CACHE_BLOCK_IDS.setdefault(key, set()).update(ids)
     return out
 
 
@@ -515,15 +513,17 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The single-vector `pagerank`/`personalized_pagerank` remain the
     # public API; fused==separate parity is pinned in
     # tests/test_graph.py.
-    jan = CheckpointJanitor(spark)
-    links, links_ids = build_links(e, jan, edges_canonical=True)
-    seeds = (
-        links.select(F.col("src").alias("id")).distinct().orderBy("id").limit(PPR_N_SEEDS)
-    )
-    both = pagerank_fused(
-        e, seeds, damping=PR_DAMPING, n_iter=PR_ITER, links=links
-    )
-    jan.release(links_ids)
+    with CheckpointJanitor(spark) as jan:
+        links = build_links(e, jan, edges_canonical=True)
+        seeds = (
+            links.select(F.col("src").alias("id"))
+            .distinct()
+            .orderBy("id")
+            .limit(PPR_N_SEEDS)
+        )
+        both = pagerank_fused(
+            e, seeds, damping=PR_DAMPING, n_iter=PR_ITER, links=links
+        )
     uni = both.select(
         F.lit("uniform").alias("method"),
         "id",

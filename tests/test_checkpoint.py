@@ -1,13 +1,17 @@
-"""CheckpointJanitor attribution under concurrency (ADVICE r14,
-medium): the getPersistentRDDs before/after diff is exercised from
-thread pools (HGN init, simsearch chains); attribution must be exact
-per thread so releasing one thread's generation can never unpersist
-another thread's live localCheckpoint (which has no lineage and cannot
-be recomputed)."""
+"""CheckpointJanitor ownership and attribution under concurrency
+(ADVICE r14, medium): the getPersistentRDDs before/after diff is
+exercised from thread pools (HGN init, simsearch chains); attribution
+must be exact per thread so releasing one thread's generation can never
+unpersist another thread's live localCheckpoint (which has no lineage
+and cannot be recomputed). The janitor owns what it checkpoints:
+releasing a frame it does not hold fails loudly, and leaving its block
+frees everything still held."""
 
 from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
+
+import pytest
 
 from hgn_spark.checkpoint import (
     CheckpointJanitor,
@@ -51,23 +55,22 @@ def test_concurrent_janitor_attribution_is_disjoint_and_safe(spark):
         futs = [pool.submit(chain, i) for i in range(4)]
         results = [f.result() for f in futs]
 
-    id_sets = [ids for _, ids in results]
+    # The ids each frame's checkpoint attributed (the janitor's own
+    # held map — loops never see them).
+    id_sets = [jan._held[id(df)][1] for df in results]
     for i in range(len(id_sets)):
+        assert id_sets[i], i
         for j in range(i + 1, len(id_sets)):
             assert id_sets[i].isdisjoint(id_sets[j]), (i, j, id_sets)
 
-    # Release every other set; the survivors must still be readable
+    # Release every other frame; the survivors must still be readable
     # (a localCheckpoint has no lineage — a cross-attributed release
     # would have destroyed live blocks).
-    for k, (_, ids) in enumerate(results):
-        if k % 2 == 0:
-            jan.release(ids)
-    for k, (df, _) in enumerate(results):
+    jan.release(*results[0::2])
+    for k, df in enumerate(results):
         if k % 2 == 1:
             assert df.count() == 7 + k
-    for k, (_, ids) in enumerate(results):
-        if k % 2 == 1:
-            jan.release(ids)
+    jan.release(*results[1::2])
 
 
 def test_attributed_local_checkpoint_during_janitor_window(spark):
@@ -93,9 +96,8 @@ def test_attributed_local_checkpoint_during_janitor_window(spark):
         f1.result()
         f2.result()
 
-    # Releasing every janitor set must leave every raw frame readable.
-    for _, ids in jan_results:
-        jan.release(ids)
+    # Releasing every janitor frame must leave every raw frame readable.
+    jan.release(*jan_results)
     for k, df in enumerate(raw_frames):
         assert df.count() == 5000
 
@@ -122,12 +124,12 @@ def test_counted_returns_each_callers_own_count(spark):
         futs = [pool.submit(chain, tag) for tag in range(2)]
         results = [r for f in futs for r in f.result()]
 
-    for n_rows, tag, df, ids, n, seen in results:
+    for n_rows, tag, df, n, seen in results:
         assert n == n_rows
         assert seen == {"mx": 4 + tag}
         # the checkpointed frame is materialized and readable
         assert df.count() == n_rows
-        jan.release(ids)
+        jan.release(df)
 
 
 def test_counted_observes_the_checkpointed_rows(spark):
@@ -138,15 +140,95 @@ def test_counted_observes_the_checkpointed_rows(spark):
 
     jan = CheckpointJanitor(spark)
     df = spark.range(500).selectExpr("id AS src", "id * 7 % 13 AS dst").distinct()
-    out, ids, n, seen = jan.counted(df, h=F.expr("bit_xor(xxhash64(src, dst))"))
+    out, n, seen = jan.counted(df, h=F.expr("bit_xor(xxhash64(src, dst))"))
     want = df.agg(
         F.count(F.lit(1)).alias("n"), F.expr("bit_xor(xxhash64(src, dst))").alias("h")
     ).collect()[0]
     assert (n, seen["h"]) == (want["n"], want["h"])
-    jan.release(ids)
+    jan.release(out)
 
-    out, ids, n, seen = jan.counted(
+    out, n, seen = jan.counted(
         df.filter("src < 0"), h=F.expr("bit_xor(xxhash64(src, dst))")
     )
     assert n == 0 and seen == {"h": None}
-    jan.release(ids)
+    jan.release(out)
+
+
+def test_release_of_a_frame_not_held_raises(spark):
+    """A second release of the same generation, a release after keep,
+    and a release of a frame the janitor never checkpointed all fail
+    loudly instead of unpersisting whatever the ids now name; None is
+    skipped."""
+    from hgn_spark.registry import clear_session_caches
+
+    jan = CheckpointJanitor(spark)
+    a = jan.checkpoint(spark.range(10))
+    b = jan.checkpoint(spark.range(20))
+    jan.release(a, None)
+    with pytest.raises(ValueError, match="not held"):
+        jan.release(a)
+    assert jan.keep(b) is b
+    with pytest.raises(ValueError, match="not held"):
+        jan.release(b)
+    with pytest.raises(ValueError, match="not held"):
+        jan.release(spark.range(5))
+    assert b.count() == 20  # kept: still readable
+    clear_session_caches(blocking=True)
+
+
+def test_scope_exit_frees_held_frames_even_on_error(spark):
+    """Leaving the janitor's block frees every frame it still holds,
+    on an exception as well as normally; a kept frame survives until
+    clear_session_caches."""
+    from hgn_spark.registry import clear_session_caches
+
+    clear_session_caches(blocking=True)
+    before = persistent_rdd_ids(spark)
+    with pytest.raises(RuntimeError, match="mid-loop"):
+        with CheckpointJanitor(spark) as jan:
+            jan.checkpoint(spark.range(10))
+            jan.counted(spark.range(30))
+            raise RuntimeError("mid-loop")
+    assert persistent_rdd_ids(spark) - before == set()
+
+    with CheckpointJanitor(spark) as jan:
+        jan.checkpoint(spark.range(10))
+        kept = jan.keep(jan.checkpoint(spark.range(40)))
+    assert persistent_rdd_ids(spark) - before
+    assert kept.count() == 40
+    clear_session_caches(blocking=True)
+    assert persistent_rdd_ids(spark) - before == set()
+
+
+def test_held_map_survives_concurrent_updates(spark):
+    """Eight threads (more than the cores) checkpoint and release on
+    one janitor with a shortened switch interval: every frame a thread
+    still holds is in the held map (a lost update would drop one and
+    leak its blocks past the block's exit), and the exit frees all."""
+    import sys
+
+    from hgn_spark.registry import clear_session_caches
+
+    clear_session_caches(blocking=True)
+    before = persistent_rdd_ids(spark)
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with CheckpointJanitor(spark) as jan:
+
+            def chain(tag: int):
+                frames = [
+                    jan.checkpoint(spark.range(10 + tag + 8 * i)) for i in range(3)
+                ]
+                jan.release(frames[0])
+                return frames[1:]
+
+            with ThreadPoolExecutor(max_workers=8) as pool:
+                futs = [pool.submit(chain, tag) for tag in range(8)]
+                kept = [df for f in futs for df in f.result(timeout=300)]
+            assert {id(df) for df in kept} == set(jan._held)
+            assert all(df.count() >= 10 for df in kept)
+    finally:
+        sys.setswitchinterval(old)
+    assert not jan._held
+    assert persistent_rdd_ids(spark) - before == set()

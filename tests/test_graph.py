@@ -701,16 +701,20 @@ def test_pagerank_fused_matches_separate_loops(spark):
         assert abs(p - ppr[k]) < 1e-9, (k, p, ppr[k])
 
 
-def test_pagerank_fused_round_plan_shape(spark, monkeypatch):
-    """The fused round's physical plan carries BOTH rank sums through
-    one aggregation with a map-side partial (partial_sum) — the
-    one-shuffle-per-round-for-the-pair claim — and no cartesian/BNLJ.
-    Captured at localCheckpoint time (the round frames are
-    materialized eagerly, so the final plan alone would start at a
-    checkpoint scan)."""
+@pytest.mark.parametrize(
+    "entry", ["pagerank", "personalized_pagerank", "pagerank_fused"]
+)
+def test_pagerank_fused_round_plan_shape(spark, monkeypatch, entry):
+    """Every entry point's round runs the one shared power iteration:
+    its physical plan carries each rank sum through ONE aggregation
+    with a map-side partial (partial_sum per rank column — for the
+    fused pair, the one-shuffle-per-round-for-the-pair claim), one
+    equi-join, and no cartesian/BNLJ. Captured at localCheckpoint time
+    (the round frames are materialized eagerly, so the final plan alone
+    would start at a checkpoint scan)."""
     from pyspark.sql import functions as F
 
-    from hgn_spark.graph.pagerank import pagerank_fused
+    from hgn_spark.graph import pagerank as pr_mod
     from hgn_spark.graph.queries import derived_edges
     from tests.conftest import SF_SMOKE
     from tests.test_plan_guard import _checkpoint_patch_target
@@ -732,18 +736,20 @@ def test_pagerank_fused_round_plan_shape(spark, monkeypatch):
     seeds = (
         e.select(F.col("src").alias("id")).distinct().orderBy("id").limit(2)
     )
-    pagerank_fused(e, seeds, n_iter=1, checkpoint_interval=1)
+    fn = getattr(pr_mod, entry)
+    args = (e,) if entry == "pagerank" else (e, seeds)
+    fn(*args, n_iter=1, checkpoint_interval=1)
     rounds = [p for p in captured if "partial_sum" in p]
     assert rounds, "no round plan captured (map-side partial missing?)"
     p = rounds[-1]
     assert "CartesianProduct" not in p and "BroadcastNestedLoop" not in p
-    # Both sums ride ONE aggregation: two partial_sum calls, not two
-    # aggregation subtrees (HashAggregate appears once per side of the
-    # final/partial pair).
-    assert p.count("partial_sum") >= 2
-    # THE fusion invariant: exactly one aggregation subtree for the
-    # pair (one partial + one final HashAggregate), each computing
-    # both sums — a regression to per-branch plans would double these.
+    # Every rank sum rides ONE aggregation: a partial_sum call per rank
+    # column, not an aggregation subtree per column (HashAggregate
+    # appears once per side of the final/partial pair).
+    assert p.count("partial_sum") >= (2 if entry == "pagerank_fused" else 1)
+    # THE fusion invariant: exactly one aggregation subtree (one
+    # partial + one final HashAggregate), computing every sum — a
+    # regression to per-column plans would double these.
     # (Count node-detail headers — the formatted plan names each node
     # twice: once in the tree, once in its detail block.)
     import re
@@ -961,6 +967,74 @@ def test_loop_final_generations_parked(spark):
     )
     assert parked, "connected_components must park its star-forest blocks"
     clear_session_caches()
+
+
+PATH60 = [(i, i + 1) for i in range(1, 60)]
+
+
+def test_connected_components_raises_on_guard_before_fixpoint(spark):
+    """A max_iter that runs out before the round signature repeats
+    fails loudly instead of returning a partition that is not the
+    fixpoint (same contract as core_numbers); the default budget
+    finishes the 60-vertex path."""
+    path = spark.createDataFrame(PATH60, "src long, dst long")
+    with pytest.raises(RuntimeError, match="max_iter=2"):
+        connected_components(path, max_iter=2)
+    got = _as_dict(connected_components(path), "id", "component")
+    assert len(got) == 60 and set(got.values()) == {1}
+
+
+def test_shortest_path_lengths_result_released_on_clear(spark, edges):
+    """shortest_path_lengths hands its final level to the loose store:
+    once the caller is done, clear_session_caches frees it, leaving no
+    persistent RDD behind."""
+    from hgn_spark.checkpoint import persistent_rdd_ids
+    from hgn_spark.registry import clear_session_caches
+
+    clear_session_caches(blocking=True)
+    before = persistent_rdd_ids(spark)
+    assert shortest_path_lengths(edges, 3).collect()
+    clear_session_caches(blocking=True)
+    assert persistent_rdd_ids(spark) - before == set()
+
+
+def test_loops_release_every_generation_on_error(spark, monkeypatch, edges):
+    """A loop that fails part-way leaves no checkpoint generation
+    behind: connected_components with its third round raising,
+    personalized_pagerank with no seed in the graph, and core_numbers
+    stopped by its guard. (Checked as "nothing new persisted": the
+    async cleaner may still drop older, unrelated RDDs meanwhile.)"""
+    from hgn_spark.checkpoint import persistent_rdd_ids
+    from hgn_spark.graph import components as cc_mod
+    from hgn_spark.graph.kcore import core_numbers
+    from hgn_spark.graph.pagerank import personalized_pagerank
+    from hgn_spark.registry import clear_session_caches
+
+    clear_session_caches(blocking=True)
+    path = spark.createDataFrame(PATH60, "src long, dst long")
+    rounds = []
+    orig = cc_mod._small_star
+
+    def failing(b):
+        rounds.append(1)
+        if len(rounds) == 3:
+            raise RuntimeError("round 3 failed")
+        return orig(b)
+
+    before = persistent_rdd_ids(spark)
+    monkeypatch.setattr(cc_mod, "_small_star", failing)
+    with pytest.raises(RuntimeError, match="round 3"):
+        connected_components(path)
+    monkeypatch.undo()
+    assert persistent_rdd_ids(spark) - before == set()
+
+    with pytest.raises(ValueError, match="no seed"):
+        personalized_pagerank(edges, spark.createDataFrame([(999,)], "id long"))
+    assert persistent_rdd_ids(spark) - before == set()
+
+    with pytest.raises(RuntimeError, match="max_iter"):
+        core_numbers(edges, max_iter=1)
+    assert persistent_rdd_ids(spark) - before == set()
 
 
 def test_rmetrics_scoped_equals_full_filtered(spark):
