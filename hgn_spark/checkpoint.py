@@ -21,7 +21,7 @@ Two real costs:
 ``CheckpointJanitor`` owns the generations it checkpoints. Used as a
 context manager, it hands out checkpointed frames, frees the ones a
 loop names as superseded (``release``), hands the result generation
-that outlives the loop to the registered loose store (``keep``), and
+that outlives the loop to the loose store (``keep``), and
 frees everything else it still holds when the block exits, normally or
 by an exception. A loop never sees an RDD id. Every generation is
 materialized before ``checkpoint`` returns, so nothing a later round
@@ -29,12 +29,18 @@ reads can depend on a released generation's blocks. The persistent-RDD
 ids behind a frame are found by diffing ``SparkContext.getPersistentRDDs``
 around the call (the ``DataFrame`` API does not expose the RDD backing
 a localCheckpoint).
+
+Blocks that live for the session (kept results, loose checkpoints and
+``SessionMemo``'s one materialization per ``(session, sf_dir)``) all
+sit in one loose store, which ``clear_session`` releases: what lives
+for a session and when its blocks are freed is decided here only.
 """
 
 from __future__ import annotations
 
+import functools
 import threading
-from collections.abc import Iterable
+from collections.abc import Callable, Iterable
 
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
@@ -109,9 +115,10 @@ def attributed_local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     """Raw (untracked) localCheckpoint that cannot pollute a concurrent
     janitor attribution window: the persistent-RDD registration happens
     under the module attribution lock, the materialization (if eager)
-    outside it. Use this instead of DataFrame.localCheckpoint in any
-    code that can run on a pool thread next to a CheckpointJanitor
-    (e.g. betweenness layers inside the HGN init pool)."""
+    outside it. Nothing releases its blocks but async GC, so package
+    code checkpoints through a janitor, ``loose_local_checkpoint`` or a
+    ``SessionMemo`` instead; this stays only as a layer target that
+    ``perfbench/trace.py`` names."""
     with _ATTRIBUTION_LOCK:
         out = df.localCheckpoint(eager=False)
     if eager:
@@ -119,39 +126,28 @@ def attributed_local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     return out
 
 
-def tracked_local_checkpoint(df: DataFrame) -> tuple[DataFrame, frozenset[int]]:
-    """One-off tracked checkpoint: returns the checkpointed frame plus
-    the persistent-RDD ids backing it, so whoever caches the handle can
-    release the blocks when the cache is dropped (see
-    ``registry.clear_session_caches``)."""
-    jan = CheckpointJanitor(df.sparkSession)
-    out = jan.checkpoint(df)
-    return out, jan._detach(out)
-
-
-# Blocks behind RESULT/intermediate frames that no module-level cache
-# owns (a query materializes a reused sub-frame, hands the result to
-# the caller, and has nowhere to park the ids). Registered with the
-# session-cache registry so clear_session_caches releases them —
-# without this, every bench pass leaves another orphan generation that
-# only async GC reclaims (the measurement cost in the module
-# docstring). Keyed by applicationId per the registry's block-id-store
-# contract (ADVICE r7): a stopped-and-recreated SparkContext restarts
-# RDD ids at 0, so ids parked under an old context must be dropped,
-# never released against the new one where they alias live blocks.
+# Blocks that outlive the call that checkpointed them: result
+# generations a janitor ``keep``s, ``loose_local_checkpoint`` frames
+# and every ``SessionMemo`` materialization. ``clear_session`` releases
+# them (benchmarks call it between passes) — without this, every pass
+# leaves another orphan generation that only async GC reclaims (the
+# measurement cost in the module docstring). Keyed by applicationId: a
+# stopped-and-recreated SparkContext restarts RDD ids at 0, so ids
+# parked under an old context must be dropped, never released against
+# the new one where they alias live blocks (ADVICE r7).
 _LOOSE_BLOCK_IDS: dict[str, set[int]] = {}
 
 
 def _park(spark: SparkSession, ids: Iterable[int]) -> None:
     app = spark.sparkContext.applicationId
-    # setdefault: clear_session_caches clears the whole dict, so the
-    # key must be recreatable after every clear.
+    # setdefault: clear_session clears the whole dict, so the key must
+    # be recreatable after every clear.
     _LOOSE_BLOCK_IDS.setdefault(app, set()).update(ids)
 
 
 def loose_local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     """Checkpoint a frame whose blocks have no owning cache; the ids
-    are parked in the registered loose store and released by
+    are parked in the loose store and released by
     ``registry.clear_session_caches`` (benchmarks call it between
     passes; long-lived sessions call it on corpus switch).
 
@@ -168,17 +164,6 @@ def loose_local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     out, ids = _attributed(df)
     _park(df.sparkSession, ids)
     return out
-
-
-def _register_loose_store() -> None:
-    # Deferred import: registry imports nothing from here at module
-    # scope, but keep the direction acyclic at import time anyway.
-    from hgn_spark.registry import register_cache
-
-    register_cache("loose_checkpoints", block_ids=_LOOSE_BLOCK_IDS)
-
-
-_register_loose_store()
 
 
 class CheckpointJanitor:
@@ -289,7 +274,63 @@ class CheckpointJanitor:
 
     def keep(self, frame: DataFrame) -> DataFrame:
         """Hand ``frame`` — a result generation the caller's plan still
-        reads after the block exits — to the registered loose store
+        reads after the block exits — to the loose store
         (released by ``registry.clear_session_caches``) and return it."""
         _park(self._spark, self._detach(frame))
         return frame
+
+
+class SessionMemo:
+    """One materialization per ``(applicationId, sf_dir)`` of a
+    ``build(spark, sf_dir) -> DataFrame``; decorate the builder and
+    call it under its own name.
+
+    The first call in a session runs ``build`` and one counted eager
+    checkpoint of its frame (``CheckpointJanitor.counted`` + ``keep``,
+    so the blocks sit in the loose store); later calls return that
+    frame. ``counted`` also returns the row count the checkpoint job
+    computed, so a caller that needs the size pays no second job.
+    Builds run under a lock per memo: concurrent callers (simsearch's
+    chains) wait for the one build instead of racing a second
+    checkpoint, and a builder may call another memo (the jaccard pairs
+    build reads the shingle sets) without deadlock. ``clear_session``
+    empties every memo."""
+
+    def __init__(self, build: Callable[[SparkSession, str], DataFrame]) -> None:
+        functools.update_wrapper(self, build)
+        self._build = build
+        self._lock = threading.Lock()
+        self._frames: dict[tuple[str, str], tuple[DataFrame, int]] = {}
+        _MEMOS.append(self)
+
+    def __call__(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        return self.counted(spark, sf_dir)[0]
+
+    def counted(self, spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
+        key = (spark.sparkContext.applicationId, sf_dir)
+        hit = self._frames.get(key)
+        if hit is None:
+            with self._lock:
+                hit = self._frames.get(key)
+                if hit is None:
+                    with CheckpointJanitor(spark) as jan:
+                        out, n, _ = jan.counted(self._build(spark, sf_dir))
+                        hit = self._frames[key] = (jan.keep(out), n)
+        return hit
+
+
+_MEMOS: list[SessionMemo] = []
+
+
+def clear_session(spark: SparkSession | None, blocking: bool = False) -> None:
+    """Drop every memo and the loose store: ids parked under ``spark``'s
+    application are released, ids parked under any other application
+    are dropped unreleased (they alias live blocks of the current
+    context; see the loose store). With no session only the drop
+    happens."""
+    for memo in _MEMOS:
+        memo._frames.clear()
+    if spark is not None:
+        ids = _LOOSE_BLOCK_IDS.get(spark.sparkContext.applicationId, ())
+        release_rdds(spark, ids, blocking=blocking)
+    _LOOSE_BLOCK_IDS.clear()

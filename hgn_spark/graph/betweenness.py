@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from hgn_spark.checkpoint import CheckpointJanitor, attributed_local_checkpoint
+from hgn_spark.checkpoint import CheckpointJanitor, loose_local_checkpoint
 from hgn_spark.graph.core import symmetrize
 
 
@@ -136,7 +136,7 @@ def shortest_paths(
             .join(known, ["src", "dst"], "left_anti")
         )
         if max_len > 2:
-            ext = attributed_local_checkpoint(ext)
+            ext = loose_local_checkpoint(ext)
         out = out.unionByName(ext)
         known = known.union(ext.select("src", "dst").distinct())
         frontier = ext
@@ -189,7 +189,7 @@ def edge_betweenness_brandes(
         layer0 = layer0.join(
             sources.select(F.col("id").alias("s")), "s", "left_semi"
         )
-    layers: list[DataFrame] = [attributed_local_checkpoint(layer0)]
+    layers: list[DataFrame] = [loose_local_checkpoint(layer0)]
     known = layers[0].select("s", "v")
     for _d in range(2, max_sp_length + 1):
         a = layers[-1].alias("a")
@@ -206,7 +206,7 @@ def edge_betweenness_brandes(
             .groupBy("s", "v")
             .agg(F.sum("sig").alias("sig"))
         )
-        nxt = attributed_local_checkpoint(nxt)
+        nxt = loose_local_checkpoint(nxt)
         layers.append(nxt)
         known = known.union(nxt.select("s", "v"))
 
@@ -238,7 +238,7 @@ def edge_betweenness_brandes(
                     "c",
                 )
             )
-            delta = attributed_local_checkpoint(
+            delta = loose_local_checkpoint(
                 cred.groupBy("s", "u")
                 .agg(F.sum("c").alias("delta"))
                 .select("s", F.col("u").alias("v"), "delta")
@@ -292,13 +292,14 @@ def edge_betweenness_sampled(
     if source_fraction >= 1.0:
         return edge_betweenness_brandes(edges, max_sp_length)
     thr = format(min(int(source_fraction * 2**32), 2**32 - 1), "08x")
-    sampled = attributed_local_checkpoint(
-        sym_src.filter(
-            F.substring(F.md5(F.col("id").cast("string")), 1, 8) < thr
+    with CheckpointJanitor(edges.sparkSession) as jan:
+        sampled, k, _ = jan.counted(
+            sym_src.filter(
+                F.substring(F.md5(F.col("id").cast("string")), 1, 8) < thr
+            )
         )
-    )
+        jan.keep(sampled)
     n = sym_src.count()
-    k = sampled.count()
     if k == 0:
         raise ValueError(
             f"edge_betweenness_sampled: source_fraction={source_fraction} "

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from hgn_spark.catalog import load_table
-from hgn_spark.checkpoint import loose_local_checkpoint
+from hgn_spark.checkpoint import SessionMemo
 from hgn_spark.graph.betweenness import edge_betweenness
 from hgn_spark.graph.components import connected_components
 from hgn_spark.graph.core import degrees, neighbors
@@ -57,25 +57,13 @@ _GRAPH_CTE_MAT = GRAPH_CTE.replace(" AS (", " AS MATERIALIZED (")
 assert _GRAPH_CTE_MAT.count("MATERIALIZED") == 2
 
 
-# Derived edge list per (session, sf_dir): every graph query starts
-# from the same lineitem self-join, and its output is tiny relative to
-# the scan (2.8k edges at sf0.1) — materialize once per session, the
-# same engine-caching discipline as the dedup family's shingle sets.
-# Its blocks sit in the loose checkpoint store, which
-# registry.clear_session_caches releases when it drops this cache.
-_EDGES_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-from hgn_spark.registry import register_cache as _register_cache  # noqa: E402
-
-_register_cache("graph_edges", _EDGES_CACHE)
-
-
+# Derived edge list, memoized per (session, sf_dir): every graph query
+# starts from the same lineitem self-join, and its output is tiny
+# relative to the scan (2.8k edges at sf0.1) — materialize once per
+# session, the same discipline as the dedup family's shingle sets.
+@SessionMemo
 def derived_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The same graph in Spark: one lineitem self-join on the part key."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _EDGES_CACHE.get(key)
-    if cached is not None:
-        return cached
     li = (
         load_table(spark, sf_dir, "lineitem")
         .filter(F.col("l_quantity") >= 49)
@@ -83,7 +71,7 @@ def derived_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = li.alias("a")
     b = li.alias("b")
-    out = (
+    return (
         a.join(b, F.col("a.l_partkey") == F.col("b.l_partkey"))
         .filter(
             (F.col("a.l_suppkey") < F.col("b.l_suppkey"))
@@ -94,9 +82,6 @@ def derived_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    out = loose_local_checkpoint(out)
-    _EDGES_CACHE[key] = out
-    return out
 
 
 @register(

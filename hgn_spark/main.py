@@ -16,6 +16,7 @@ from __future__ import annotations
 import argparse
 import os
 
+from hgn_spark.checkpoint import loose_local_checkpoint
 from hgn_spark.config import load_config
 from hgn_spark.graph.components import component_sizes
 from hgn_spark.graph.hgn import HGNParams, hgn_communities
@@ -73,7 +74,7 @@ def run(config_path: str, out_dir: str) -> dict[str, int]:
         # and the filter would be a silent no-op on connected inputs.
         big = component_sizes(communities, min_size=params.min_comp_size)
         communities = communities.join(big.select("component"), "component", "left_semi")
-    communities = communities.localCheckpoint(eager=True)
+    communities = loose_local_checkpoint(communities)
 
     write_parquet(communities, os.path.join(out_dir, "communities.parquet"))
     write_communities_csv(communities, nodes, os.path.join(out_dir, "communities_csv"))

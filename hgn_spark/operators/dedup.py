@@ -39,7 +39,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from hgn_spark.catalog import load_table
-from hgn_spark.checkpoint import tracked_local_checkpoint
+from hgn_spark.checkpoint import SessionMemo, loose_local_checkpoint
 from hgn_spark.operators.text import DUCK_SHINGLES, DUCK_TOKENS, shingles, tokens
 from hgn_spark.registry import register
 
@@ -283,26 +283,9 @@ def _shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 # One materialized shingle-set table per (session, sf_dir): the dedup
 # family (jaccard, capped, minhash, simhash) all start from the same
 # tokenize→shingle→hash pass, so a driver/bench session running several
-# of them pays for it once. localCheckpoint keeps the lineage cut and
-# the data executor-local; the dict only holds DataFrame handles.
-_DOC_SETS_CACHE: dict[tuple[str, str], DataFrame] = {}
-# Verified near-dup pairs per (session, sf_dir): the jaccard query's
-# output is both a driver query and canonical-groups' edge input.
-_NGRAM_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-# Persistent-RDD ids behind the cached checkpoints, so
-# registry.clear_session_caches can free the blocks deterministically
-# instead of leaving them to async GC cleanup.
-_CACHE_BLOCK_IDS: dict[tuple[str, str], set[int]] = {}
-
-# Structural registration (instead of registry reaching into private
-# module state): clear_session_caches drops whatever is registered.
-from hgn_spark.registry import register_cache as _register_cache  # noqa: E402
-
-_register_cache(
-    "dedup", _DOC_SETS_CACHE, _NGRAM_PAIRS_CACHE, block_ids=_CACHE_BLOCK_IDS
-)
-
-
+# of them pays for it once. The memo's checkpoint keeps the lineage cut
+# and the data executor-local.
+@SessionMemo
 def _doc_shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, hs: sorted array<long>, sz) — one row per document,
     hs = the engine-portable 48-bit md5 hash (`_h48`) of each distinct
@@ -316,10 +299,6 @@ def _doc_shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the exact-verify step, and the md5 derivation is what lets the
     DuckDB oracles replay every sketch bit-for-bit.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _DOC_SETS_CACHE.get(key)
-    if cached is not None:
-        return cached
     docs = load_table(spark, sf_dir, "documents")
     # The documents table arrives as one parquet file = one partition;
     # spread the rows first so shingling uses every core (10s → 1s at
@@ -352,16 +331,12 @@ def _doc_shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     hs = F.when(
         F.size(tok) >= 3, F.sort_array(F.array_distinct(hashed))
     ).otherwise(F.array().cast("array<long>"))
-    sets_ = (
+    return (
         docs.repartition(n)
         .withColumn("_l", tokens("text"))
         .select("doc_id", hs.alias("hs"))
         .select("doc_id", "hs", F.size("hs").cast("long").alias("sz"))
     )
-    out, ids = tracked_local_checkpoint(sets_)
-    _DOC_SETS_CACHE[key] = out
-    _CACHE_BLOCK_IDS.setdefault(key, set()).update(ids)
-    return out
 
 
 def _hashed_shingle_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -492,8 +467,6 @@ def dedup_exact_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sides of the semi AND anti joins) each re-ran the scan + tokenize
     # + fingerprint — the expensive text pass, executed 5x in the r14
     # plan. Materialize the (doc_id, fp, is_batch) frame once.
-    from hgn_spark.checkpoint import loose_local_checkpoint
-
     fp = loose_local_checkpoint(fp, eager=False)
     null_b = F.lit(None).cast("long")
     grp = (
@@ -700,6 +673,10 @@ _NGRAM_PAIR_CTES = f"""tok AS (SELECT doc_id, {DUCK_TOKENS} AS l FROM documents)
       WHERE jaccard >= {JACCARD_THRES})"""
 
 
+# The verified pair list is tiny (near-dup pairs, not candidates) and
+# is both a driver query and canonical-groups' edge input in the same
+# session — memoized once per (session, sf_dir).
+@SessionMemo
 def dedup_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate pairs by exact 3-gram jaccard, candidates from the
     shared-shingle inverted index (pairs only form inside a shingle
@@ -708,10 +685,6 @@ def dedup_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     splitting handles the bucket join; for corpora with mega-buckets
     use `ngram_jaccard_pairs_capped` (df-capped candidates, exact
     verify)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _NGRAM_PAIRS_CACHE.get(key)
-    if cached is not None:
-        return cached
     sets_ = _doc_shingle_sets(spark, sf_dir)
     sizes = sets_.select("doc_id", "sz")
     sh = _hashed_shingle_index(spark, sf_dir)
@@ -724,7 +697,7 @@ def dedup_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("d1", "d2")
         .agg(F.count(F.lit(1)).alias("common"))
     )
-    out = (
+    return (
         common.join(
             sizes.withColumnRenamed("doc_id", "d1").withColumnRenamed("sz", "sz1"), "d1"
         )
@@ -741,12 +714,6 @@ def dedup_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("jaccard") >= JACCARD_THRES)
         .select("d1", "d2", "jaccard")
     )
-    # The verified pair list is tiny (near-dup pairs, not candidates) and
-    # feeds dedup_canonical_groups in the same session — materialize once.
-    out, ids = tracked_local_checkpoint(out)
-    _NGRAM_PAIRS_CACHE[key] = out
-    _CACHE_BLOCK_IDS.setdefault(key, set()).update(ids)
-    return out
 
 
 @register(
@@ -1261,126 +1228,6 @@ def _simhash_oracle(bucket_cap: int | None = None) -> str:
     """
 
 
-def _simhash_pairs_multi(
-    spark: SparkSession,
-    sf_dir: str,
-    specs: list[tuple[str, str, int | None]],
-) -> DataFrame:
-    """Run several simhash configurations — ``(label, scheme,
-    bucket_cap)`` with scheme in {'chunk', 'combo'} — as ONE fused
-    pipeline, per-label results identical to standalone
-    `dedup_simhash_pairs` calls (pinned in tests/test_llm_ops.py; the
-    `_srp_pairs_multi` contract, simhash edition).
-
-    What the configs share: the 48-lane signature fold runs once and
-    is localCheckpoint'ed (it is the expensive scan-side step — 48
-    popcount filters over each doc's hash array — and the frame is
-    tiny: one BIGINT per doc); bucket rows carry a config label so
-    buckets never mix across configs; the self-join, distinct and
-    bit_count verify run once over the union of all arms. The chunk
-    and combo schemes read the SAME signatures, so fusing changes
-    physical cost only, never a pair set."""
-    sets_ = _doc_shingle_sets(spark, sf_dir)
-    chunk_bits = SIMHASH_BITS // SIMHASH_CHUNKS
-    mask = (1 << chunk_bits) - 1
-    sig = sets_.filter(F.col("sz") > 0).select(
-        "doc_id",
-        F.expr(
-            f"aggregate(sequence(0, {SIMHASH_BITS - 1}), CAST(0 AS BIGINT), "
-            "(acc, i) -> acc + "
-            "IF(2 * size(filter(hs, h -> (shiftright(h, i) & 1) = 1)) > sz, "
-            "shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT)))"
-        ).alias("sig"),
-    )
-    if len(specs) > 1:
-        # Materialize the fold once for all arms (lazy: first arm pays).
-        sig = sig.localCheckpoint(eager=False)
-
-    chunk_explode = sig.select(
-        "doc_id",
-        "sig",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {SIMHASH_CHUNKS - 1}), "
-                f"i -> shiftright(sig, i * {chunk_bits}) & {mask})"
-            )
-        ).alias("chunk_idx", "chunk"),
-    )
-
-    def _combo_explode():
-        from itertools import combinations
-
-        cb = SIMHASH_BITS // SIMHASH_COMBO_CHUNKS
-        cmask = (1 << cb) - 1
-        key_exprs = [
-            F.expr(
-                " | ".join(
-                    f"shiftleft(shiftright(sig, {c * cb}) & {cmask}, "
-                    f"{pos * cb})"
-                    for pos, c in enumerate(combo)
-                )
-            )
-            for combo in combinations(
-                range(SIMHASH_COMBO_CHUNKS), SIMHASH_COMBO_PICK
-            )
-        ]
-        return sig.select(
-            "doc_id",
-            "sig",
-            F.posexplode(F.array(*key_exprs)).alias("chunk_idx", "chunk"),
-        )
-
-    arms = []
-    for label, scheme, bucket_cap in specs:
-        chunks = _combo_explode() if scheme == "combo" else chunk_explode
-        if bucket_cap is not None:
-            # Drop mega-buckets BEFORE the pair join: one tiny
-            # aggregation (one row per (chunk_idx, chunk) bucket)
-            # broadcast back, so the bound applies to candidate
-            # GENERATION (the SRP bucket_cap shape).
-            sizes = chunks.groupBy("chunk_idx", "chunk").agg(
-                F.count(F.lit(1)).alias("bsz")
-            )
-            chunks = chunks.join(
-                F.broadcast(sizes.filter(F.col("bsz") <= bucket_cap)),
-                ["chunk_idx", "chunk"],
-            ).drop("bsz")
-        arms.append(chunks.select(F.lit(label).alias("label"), "*"))
-    banded = arms[0]
-    for a in arms[1:]:
-        banded = banded.unionByName(a)
-    left = banded.select(
-        "label",
-        F.col("doc_id").alias("d1"),
-        F.col("sig").alias("sig1"),
-        "chunk_idx",
-        "chunk",
-    )
-    right = banded.select(
-        F.col("label").alias("label2"),
-        F.col("doc_id").alias("d2"),
-        F.col("sig").alias("sig2"),
-        F.col("chunk_idx").alias("ci2"),
-        F.col("chunk").alias("c2"),
-    )
-    return (
-        left.join(
-            right,
-            (F.col("label") == F.col("label2"))
-            & (F.col("chunk_idx") == F.col("ci2"))
-            & (F.col("chunk") == F.col("c2"))
-            & (F.col("d1") < F.col("d2")),
-        )
-        .select("label", "d1", "d2", "sig1", "sig2")
-        .distinct()
-        .withColumn(
-            "hamming", F.bit_count(F.col("sig1").bitwiseXOR(F.col("sig2")))
-        )
-        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
-        .select("label", "d1", "d2", "hamming")
-    )
-
-
 def dedup_simhash_pairs(
     spark: SparkSession,
     sf_dir: str,
@@ -1425,14 +1272,81 @@ def dedup_simhash_pairs(
       for 5x the key rows, so occupancy (and with it the quadratic
       candidate term) is deferred 4096x; measured growth in
       PROBE_100x_mitigations_r11."""
-    # One-spec delegation to the fused pipeline: the multi variant IS
-    # the implementation (signature fold, scheme keying, cap gate,
-    # join, verify live there once); a single spec skips the shared
-    # localCheckpoint and adds only a constant label column, so this
-    # wrapper is plan-identical to the pre-fusion standalone form.
-    return _simhash_pairs_multi(
-        spark, sf_dir, [("_solo", scheme, bucket_cap)]
-    ).select("d1", "d2", "hamming")
+    sets_ = _doc_shingle_sets(spark, sf_dir)
+    chunk_bits = SIMHASH_BITS // SIMHASH_CHUNKS
+    mask = (1 << chunk_bits) - 1
+    sig = sets_.filter(F.col("sz") > 0).select(
+        "doc_id",
+        F.expr(
+            f"aggregate(sequence(0, {SIMHASH_BITS - 1}), CAST(0 AS BIGINT), "
+            "(acc, i) -> acc + "
+            "IF(2 * size(filter(hs, h -> (shiftright(h, i) & 1) = 1)) > sz, "
+            "shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT)))"
+        ).alias("sig"),
+    )
+    if scheme == "combo":
+        from itertools import combinations
+
+        cb = SIMHASH_BITS // SIMHASH_COMBO_CHUNKS
+        cmask = (1 << cb) - 1
+        keys = F.array(
+            *[
+                F.expr(
+                    " | ".join(
+                        f"shiftleft(shiftright(sig, {c * cb}) & {cmask}, "
+                        f"{pos * cb})"
+                        for pos, c in enumerate(combo)
+                    )
+                )
+                for combo in combinations(
+                    range(SIMHASH_COMBO_CHUNKS), SIMHASH_COMBO_PICK
+                )
+            ]
+        )
+    else:
+        keys = F.expr(
+            f"transform(sequence(0, {SIMHASH_CHUNKS - 1}), "
+            f"i -> shiftright(sig, i * {chunk_bits}) & {mask})"
+        )
+    chunks = sig.select(
+        "doc_id", "sig", F.posexplode(keys).alias("chunk_idx", "chunk")
+    )
+    if bucket_cap is not None:
+        # Drop mega-buckets BEFORE the pair join: one tiny aggregation
+        # (one row per (chunk_idx, chunk) bucket) broadcast back, so the
+        # bound applies to candidate GENERATION (the SRP bucket_cap
+        # shape).
+        sizes = chunks.groupBy("chunk_idx", "chunk").agg(
+            F.count(F.lit(1)).alias("bsz")
+        )
+        chunks = chunks.join(
+            F.broadcast(sizes.filter(F.col("bsz") <= bucket_cap)),
+            ["chunk_idx", "chunk"],
+        ).drop("bsz")
+    left = chunks.select(
+        F.col("doc_id").alias("d1"), F.col("sig").alias("sig1"), "chunk_idx", "chunk"
+    )
+    right = chunks.select(
+        F.col("doc_id").alias("d2"),
+        F.col("sig").alias("sig2"),
+        F.col("chunk_idx").alias("ci2"),
+        F.col("chunk").alias("c2"),
+    )
+    return (
+        left.join(
+            right,
+            (F.col("chunk_idx") == F.col("ci2"))
+            & (F.col("chunk") == F.col("c2"))
+            & (F.col("d1") < F.col("d2")),
+        )
+        .select("d1", "d2", "sig1", "sig2")
+        .distinct()
+        .withColumn(
+            "hamming", F.bit_count(F.col("sig1").bitwiseXOR(F.col("sig2")))
+        )
+        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
+        .select("d1", "d2", "hamming")
+    )
 
 
 def _srp_planes(bits: int, dim: int) -> list[list[float]]:
@@ -1845,8 +1759,6 @@ def dedup_embedding_neardup_pairs(
         # interpreted-HOF projections (same rationale as the fused
         # pass). Narrow configs keep their historical single-pass plan
         # — the projections are cheaper than the checkpoint.
-        from hgn_spark.checkpoint import loose_local_checkpoint
-
         sig = loose_local_checkpoint(sig)
     banded = sig.select(
         "vec_id", F.posexplode(F.array(*band_cols)).alias("band", "bh")
@@ -1977,8 +1889,6 @@ def _srp_pairs_multi(
         # 38.5-50 s vs 7.7 s — the scan ran 3x inside the union alone).
         # The frame is n rows of small ints; the band sums derived from
         # it are cheap codegen'd arithmetic.
-        from hgn_spark.checkpoint import loose_local_checkpoint
-
         sig = loose_local_checkpoint(sig)
     # One banded frame for all configs: (label, band, bh) keys a
     # config-scoped bucket, so the single self-join below can never
@@ -2167,14 +2077,12 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # demoted to evidence by PROBE_recall_r11's 0.0-by-10x recall) and
     # 'simhash_manku' (r11 production combination keying,
     # result-identical to 'simhash' by pigeonhole). A fused
-    # single-join variant exists (`_simhash_pairs_multi`, parity
-    # pinned in tests) and wins in a warm dedicated session (6.8 s vs
-    # 7.1 s row floor), but MEASURED UNDER THE BENCH SUITE it loses
-    # (5-pass spread min 9.26 s vs 7.10 s): the three small
-    # per-config joins broadcast and pipeline, while the fused
-    # 28n-row union join + checkpoint barrier serializes — so the
-    # registered row keeps the standalone plans and the fusion stays
-    # the measured-and-rejected alternative, not the shipped one.
+    # single-join variant (one checkpointed signature fold, one labeled
+    # union join) won in a warm dedicated session (6.8 s vs 7.1 s row
+    # floor) but lost MEASURED UNDER THE BENCH SUITE (5-pass spread min
+    # 9.26 s vs 7.10 s): the three small per-config joins broadcast and
+    # pipeline, while the fused 28n-row union join + checkpoint barrier
+    # serializes — so it was removed.
     sh_parts = []
     for label, scheme, cap in (
         ("simhash", "chunk", None),
@@ -2340,8 +2248,6 @@ def dedup_semantic_clusters(
     assign = _assign_topm(emb, seeds, multi_assign)
     # Referenced three times below (both self-join sides + the final
     # projection); materialize the argmax once.
-    from hgn_spark.checkpoint import loose_local_checkpoint
-
     assign = loose_local_checkpoint(assign)
     a = assign.select(
         "cent_id",

@@ -32,13 +32,11 @@ aggregate over double), never per-row Python.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from hgn_spark.catalog import load_table
-from hgn_spark.checkpoint import loose_local_checkpoint
+from hgn_spark.checkpoint import SessionMemo, loose_local_checkpoint
 from hgn_spark.registry import register
 
 QUERY_STRIDE = 50     # vec_id % 50 == 0 → the standing query set
@@ -68,66 +66,28 @@ def ivf_adaptive_stride(n: int) -> int:
 # (session, sf_dir) — the similarity/dedup/semantic families all start
 # from the same scan → repartition → norm pass, and a bench/driver
 # session runs ~10 consumers of it per pass (r14 profile: the repeated
-# scan+exchange+fold showed up in every embedding row's plan). Same
-# session-cache discipline as dedup._DOC_SETS_CACHE: localCheckpoint
-# cuts the lineage, registry.clear_session_caches drops the blocks
-# between bench passes so pass 2 re-pays the real build.
-_EMB_CACHE: dict[tuple[str, str], DataFrame] = {}
-# Build lock for the cache (ADVICE r14): the check-then-set is called
-# from simsearch's concurrent chains; see load_embeddings.
-_EMB_BUILD_LOCK = threading.Lock()
-# Corpus count per (session, sf_dir): every adaptive sizing
-# (ivf_adaptive_stride, lsh/srp widths, calibration sampling) needs n;
-# counting the materialized checkpoint once replaces one count() JOB
-# per consuming row.
-_EMB_COUNT: dict[tuple[str, str], int] = {}
-_EMB_BLOCK_IDS: dict[tuple[str, str], set[int]] = {}
-
-from hgn_spark.registry import register_cache as _register_cache  # noqa: E402
-
-_register_cache("embeddings", _EMB_CACHE, _EMB_COUNT, block_ids=_EMB_BLOCK_IDS)
-
-
+# scan+exchange+fold showed up in every embedding row's plan). The memo
+# cuts the lineage; registry.clear_session_caches drops it between
+# bench passes so pass 2 re-pays the real build.
+@SessionMemo
 def load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """embeddings spread across cores with a precomputed L2 norm,
-    materialized once per (session, sf_dir) — see _EMB_CACHE above.
+    materialized once per (session, sf_dir).
 
     Repartition: the table arrives as one parquet file = one partition,
     which would serialize every per-vector cosine onto a single task.
     The `nrm` column feeds cosine_prenormed."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _EMB_CACHE.get(key)
-    if cached is not None:
-        return cached
-    # Double-checked build under a module lock (ADVICE r14): the
-    # simsearch chains call this from a thread pool; two racing threads
-    # would each build AND checkpoint the frame, the loser's blocks
-    # staying persisted until clear_session_caches.
-    with _EMB_BUILD_LOCK:
-        cached = _EMB_CACHE.get(key)
-        if cached is not None:
-            return cached
-        emb = load_table(spark, sf_dir, "embeddings")
-        emb = emb.repartition(max(spark.sparkContext.defaultParallelism, 8))
-        emb = emb.withColumn("nrm", norm(as_double(F.col("embedding"))))
-        from hgn_spark.checkpoint import tracked_local_checkpoint
-
-        out, ids = tracked_local_checkpoint(emb)
-        _EMB_CACHE[key] = out
-        _EMB_BLOCK_IDS.setdefault(key, set()).update(ids)
-        return out
+    emb = load_table(spark, sf_dir, "embeddings")
+    emb = emb.repartition(max(spark.sparkContext.defaultParallelism, 8))
+    return emb.withColumn("nrm", norm(as_double(F.col("embedding"))))
 
 
 def emb_count(spark: SparkSession, sf_dir: str) -> int:
-    """Corpus size, counted once per (session, sf_dir) on the
-    materialized embeddings checkpoint (the count is metadata-cheap
-    there) and cached alongside it."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    n = _EMB_COUNT.get(key)
-    if n is None:
-        n = load_embeddings(spark, sf_dir).count()
-        _EMB_COUNT[key] = n
-    return n
+    """Corpus size, for every adaptive sizing (ivf_adaptive_stride,
+    lsh/srp widths, calibration sampling): the row count the
+    embeddings checkpoint job computed, so it costs no job of its
+    own."""
+    return load_embeddings.counted(spark, sf_dir)[1]
 
 
 def as_double(vec: Column) -> Column:

@@ -93,51 +93,11 @@ def load_all() -> dict[str, QuerySpec]:
     return {s.name: s for s in ordered}
 
 
-# Session-scoped caches registered by the modules that own them:
-# (name, frame_caches, block_id_store). `frame_caches` are dicts of
-# cached DataFrames; `block_id_store` maps keys to the RDD ids of the
-# localCheckpoint blocks behind those frames (or None when a cache
-# holds no checkpointed state). Block-id store keys MUST embed the
-# owning SparkContext's applicationId — the key itself, or element 0
-# of a tuple key — because RDD ids restart at 0 in a new context:
-# ids parked under one application must never be unpersisted against
-# another, where they alias live, lineage-truncated blocks
-# (ADVICE r7). Registration makes the clearing invariant STRUCTURAL
-# (VERDICT r6 #7): a module adds a cache by calling register_cache at
-# import time, instead of this module hand-enumerating private
-# attributes — a new cache that skips registration has no way to be
-# cleared, which the ownership test in tests/test_llm_ops.py
-# (test_register_cache_structural_clearing and the module-attribute
-# diff beside it) asserts against.
-_SESSION_CACHES: list[tuple[str, tuple[dict, ...], dict | None]] = []
-
-
-def _block_key_app(key) -> str | None:
-    """The applicationId a block-id store key belongs to: tuple keys
-    carry it in element 0, plain keys ARE it (module comment above)."""
-    if isinstance(key, tuple):
-        return key[0] if key else None
-    return key
-
-
-def register_cache(
-    name: str, *frame_caches: dict, block_ids: dict | None = None
-) -> None:
-    """Register session-scoped cache dicts (and the RDD-id store backing
-    their localCheckpoint blocks) for `clear_session_caches`. Idempotent
-    per name so module re-imports don't double-register. `block_ids`
-    keys must embed the owning applicationId (see the module comment) —
-    entries from a no-longer-current context are dropped WITHOUT
-    release."""
-    global _SESSION_CACHES
-    _SESSION_CACHES = [c for c in _SESSION_CACHES if c[0] != name]
-    _SESSION_CACHES.append((name, frame_caches, block_ids))
-
-
 def clear_session_caches(blocking: bool = False) -> None:
-    """Drop every REGISTERED session-scoped materialization cache
-    (shingle sets, verified near-dup pairs, the derived graph edge
-    list, ...) AND release the checkpoint blocks behind them.
+    """Drop every session memo (shingle sets, verified near-dup pairs,
+    the derived graph edge list, the embeddings) AND release the
+    checkpoint blocks of the session's loose store
+    (``checkpoint.clear_session``).
     Benchmarks call this between suite passes so a repeated pass
     re-measures the real build cost instead of reading checkpoints
     back; the explicit block release keeps the dropped state from
@@ -153,29 +113,10 @@ def clear_session_caches(blocking: bool = False) -> None:
     callers keep the cheap async default."""
     from pyspark.sql import SparkSession
 
-    from hgn_spark.checkpoint import release_rdds
-
-    # Cache-owning modules register at import time; import them so a
-    # caller who never touched dedup/graph still clears everything.
-    load_all()
+    from hgn_spark.checkpoint import clear_session
 
     spark = SparkSession.getActiveSession()
-    app = spark.sparkContext.applicationId if spark is not None else None
-    for _name, frame_caches, block_ids in _SESSION_CACHES:
-        # The id stores are cleared even when no session is active
-        # (stopped context / non-owner thread), and only entries whose
-        # key matches the CURRENT applicationId are released: a NEW
-        # SparkContext restarts RDD ids at 0, so ids parked under a
-        # previous context would alias live, unrelated checkpoint
-        # blocks — whose lineage is truncated and unrecoverable.
-        if block_ids is not None:
-            if spark is not None:
-                for key, ids in block_ids.items():
-                    if _block_key_app(key) == app:
-                        release_rdds(spark, ids, blocking=blocking)
-            block_ids.clear()
-        for cache in frame_caches:
-            cache.clear()
+    clear_session(spark, blocking=blocking)
 
     # Unload every loaded streaming StateStoreProvider (r10): the JVM
     # keeps providers — and their HEAP-resident HDFS-backed state maps

@@ -232,3 +232,73 @@ def test_held_map_survives_concurrent_updates(spark):
         sys.setswitchinterval(old)
     assert not jan._held
     assert persistent_rdd_ids(spark) - before == set()
+
+
+def test_session_memo_builds_once_under_concurrent_callers(spark):
+    """Eight threads (more than the cores) asking one SessionMemo for
+    the same session and sf_dir at once get one build, one
+    checkpoint and the same frame; a lost check-then-set would build
+    and checkpoint twice."""
+    import sys
+
+    from hgn_spark import checkpoint as cp
+    from hgn_spark.checkpoint import SessionMemo
+    from hgn_spark.registry import clear_session_caches
+
+    builds = []
+
+    @SessionMemo
+    def frame(spark, sf_dir):
+        builds.append(sf_dir)
+        return spark.range(1000)
+
+    clear_session_caches(blocking=True)
+    before = persistent_rdd_ids(spark)
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            futs = [pool.submit(frame.counted, spark, "k") for _ in range(8)]
+            got = [f.result(timeout=300) for f in futs]
+        assert builds == ["k"]
+        assert len({id(df) for df, _ in got}) == 1
+        assert {n for _, n in got} == {1000}
+        assert len(persistent_rdd_ids(spark) - before) == 1
+    finally:
+        sys.setswitchinterval(old)
+        cp._MEMOS.remove(frame)
+        clear_session_caches(blocking=True)
+
+
+def test_local_checkpoint_calls_have_an_owner():
+    """Every ``.localCheckpoint(`` call in the package goes through
+    ``checkpoint.py``, where each block gets an owner (a janitor, the
+    loose store or a session memo). The one exception is
+    ``sources/sinks.checkpoint_df``: its contract is the S5 raw lineage
+    cut, which the caller owns."""
+    import ast
+    from pathlib import Path
+
+    import hgn_spark
+
+    root = Path(hgn_spark.__file__).parent
+    allowed = {("checkpoint.py", None), ("sources/sinks.py", "checkpoint_df")}
+    stray = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        tree = ast.parse(path.read_text())
+        owner = {}
+        for fn in ast.walk(tree):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                for node in ast.walk(fn):
+                    owner.setdefault(id(node), fn.name)
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "localCheckpoint"
+                and (rel, None) not in allowed
+                and (rel, owner.get(id(node))) not in allowed
+            ):
+                stray.append(f"{rel}:{node.lineno}")
+    assert stray == [], f"localCheckpoint outside checkpoint.py: {stray}"

@@ -947,7 +947,7 @@ def test_core_numbers_path_graph_default_guard(spark):
 
 def test_loop_final_generations_parked(spark):
     """Loop operators park their FINAL checkpoint generation in the
-    registered loose store (r8: previously only k-core did — the other
+    loose store (r8: previously only k-core did — the other
     loops' finals lingered until async GC, the measurement cost the
     checkpoint module documents). CC is the cheap representative; its
     returned plan lazily references the parked star forest, so the
@@ -994,6 +994,30 @@ def test_shortest_path_lengths_result_released_on_clear(spark, edges):
     clear_session_caches(blocking=True)
     before = persistent_rdd_ids(spark)
     assert shortest_path_lengths(edges, 3).collect()
+    clear_session_caches(blocking=True)
+    assert persistent_rdd_ids(spark) - before == set()
+
+
+@pytest.mark.parametrize(
+    "call",
+    [
+        lambda e: edge_betweenness(e, 3),
+        lambda e: shortest_paths(e, 3),
+        lambda e: edge_betweenness(e, 4, allow_approx=True),
+    ],
+    ids=["sigma_k3", "shortest_paths_k3", "sampled_k4"],
+)
+def test_betweenness_checkpoints_released_on_clear(spark, edges, call):
+    """The σ/δ layers, the k >= 3 path levels and the sampled source
+    set are loose checkpoints: clear_session_caches frees every one of
+    them, leaving no persistent RDD beyond the set from before the
+    call."""
+    from hgn_spark.checkpoint import persistent_rdd_ids
+    from hgn_spark.registry import clear_session_caches
+
+    clear_session_caches(blocking=True)
+    before = persistent_rdd_ids(spark)
+    assert call(edges).collect()
     clear_session_caches(blocking=True)
     assert persistent_rdd_ids(spark) - before == set()
 

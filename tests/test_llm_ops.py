@@ -670,7 +670,7 @@ def test_mixture_thresholds_frame_matches_dict_planner(spark):
 
 
 def test_clear_session_caches_drops_and_rebuilds(spark):
-    """clear_session_caches empties every session cache and the next
+    """clear_session_caches empties every session memo and the next
     call rebuilds an equivalent materialization (bench relies on this
     between suite passes)."""
     from hgn_spark.graph import queries as gq
@@ -679,58 +679,75 @@ def test_clear_session_caches_drops_and_rebuilds(spark):
 
     before = dedup._doc_shingle_sets(spark, SF_SMOKE).count()
     gq.derived_edges(spark, SF_SMOKE).count()
-    assert dedup._DOC_SETS_CACHE and gq._EDGES_CACHE
+    assert dedup._doc_shingle_sets._frames and gq.derived_edges._frames
     clear_session_caches()
-    assert not dedup._DOC_SETS_CACHE
-    assert not dedup._NGRAM_PAIRS_CACHE
-    assert not gq._EDGES_CACHE
+    assert not dedup._doc_shingle_sets._frames
+    assert not dedup.dedup_ngram_jaccard_pairs._frames
+    assert not gq.derived_edges._frames
     assert dedup._doc_shingle_sets(spark, SF_SMOKE).count() == before
 
 
-def test_register_cache_structural_clearing(spark):
-    """A cache registered through registry.register_cache — with no
-    hand-enumeration inside clear_session_caches — is cleared and its
-    checkpoint blocks released (VERDICT r6 #3: the invariant is now
-    structural; a third module registers instead of being grepped for).
-    Also pins that re-registration under the same name replaces rather
-    than duplicates."""
-    from hgn_spark.checkpoint import (
-        persistent_rdd_ids,
-        tracked_local_checkpoint,
-    )
-    from hgn_spark import registry
+def test_session_memo_structural_clearing(spark):
+    """A SessionMemo defined anywhere — with no hand-enumeration inside
+    clear_session_caches — is cleared and its checkpoint blocks
+    released: the invariant is structural, a new memoized builder is
+    covered by being a memo. Also pins that a second call in the same
+    session returns the memoized frame with the count its checkpoint
+    job computed."""
+    import time
 
-    frames: dict = {}
-    blocks: dict = {}
-    registry.register_cache("test_module", frames, block_ids=blocks)
-    registry.register_cache("test_module", frames, block_ids=blocks)
-    assert sum(1 for c in registry._SESSION_CACHES if c[0] == "test_module") == 1
+    from hgn_spark import checkpoint as cp
+    from hgn_spark.checkpoint import SessionMemo, persistent_rdd_ids
+    from hgn_spark.registry import clear_session_caches
+
+    builds = []
+
+    @SessionMemo
+    def frame(spark, sf_dir):
+        builds.append(sf_dir)
+        return spark.range(100).selectExpr("id", "id * 2 AS v")
+
     try:
-        df, ids = tracked_local_checkpoint(
-            spark.range(100).selectExpr("id", "id * 2 AS v")
-        )
-        # Block-id keys embed the owning applicationId (tuple element
-        # 0) — the registry releases only current-context entries
-        # (ADVICE r7).
-        key = (spark.sparkContext.applicationId, "k")
-        frames[key] = df
-        blocks[key] = set(ids)
-        assert ids and ids <= persistent_rdd_ids(spark)
-        registry.clear_session_caches()
-        assert not frames and not blocks
+        clear_session_caches(blocking=True)
+        before = persistent_rdd_ids(spark)
+        df, n = frame.counted(spark, "k")
+        assert n == 100 and frame(spark, "k") is df and builds == ["k"]
+        ids = persistent_rdd_ids(spark) - before
+        assert ids, "the memo's checkpoint must persist its blocks"
+        clear_session_caches()
+        assert not frame._frames
         # blocking=False unpersist is async-completing but the ids must
         # leave the persistent map promptly; poll briefly.
-        import time
-
         for _ in range(50):
             if not (ids & persistent_rdd_ids(spark)):
                 break
             time.sleep(0.1)
         assert not (ids & persistent_rdd_ids(spark))
+        assert frame(spark, "k").count() == 100 and builds == ["k", "k"]
     finally:
-        registry._SESSION_CACHES[:] = [
-            c for c in registry._SESSION_CACHES if c[0] != "test_module"
-        ]
+        cp._MEMOS.remove(frame)
+        clear_session_caches(blocking=True)
+
+
+def test_emb_count_rides_on_the_embeddings_checkpoint(spark):
+    """emb_count reads the row count the embeddings checkpoint job
+    already computed: once load_embeddings has run in a cleared
+    session, the count submits no Spark job (counted by job group, not
+    by diffing global job ids)."""
+    from hgn_spark.operators.similarity import emb_count, load_embeddings
+    from hgn_spark.registry import clear_session_caches
+
+    clear_session_caches(blocking=True)
+    emb = load_embeddings(spark, SF_SMOKE)
+    sc = spark.sparkContext
+    group = "test_emb_count_rides_on_the_embeddings_checkpoint"
+    sc.setJobGroup(group, "emb_count after load_embeddings")
+    try:
+        n = emb_count(spark, SF_SMOKE)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert n == emb.count() > 0
 
 
 def test_mixture_rates_drops_unweighted_groups(spark):
@@ -1453,7 +1470,7 @@ def test_chunk_documents_plans_zero_exchange(spark):
 def test_loose_checkpoints_released_on_clear(spark):
     """Result/intermediate frames with no owning cache (k-core's final
     labels, the argmax assignments, modularity's canonical edges) park
-    their checkpoint block ids in the registered loose store, and
+    their checkpoint block ids in the loose store, and
     clear_session_caches releases them — without this every bench pass
     leaks one orphan generation per such query (r7 review #2)."""
     from hgn_spark.checkpoint import _LOOSE_BLOCK_IDS, persistent_rdd_ids
@@ -1483,15 +1500,19 @@ def test_stale_context_block_ids_dropped_without_release(spark):
 
     from hgn_spark import checkpoint as cp
     from hgn_spark.checkpoint import (
+        CheckpointJanitor,
         persistent_rdd_ids,
         release_rdds,
-        tracked_local_checkpoint,
     )
     from hgn_spark.registry import clear_session_caches
 
     clear_session_caches()
-    df, ids = tracked_local_checkpoint(spark.range(64).selectExpr("id"))
-    assert ids <= persistent_rdd_ids(spark)
+    # A live block no store owns: checkpointed by a janitor and taken
+    # out of its hands, so only the finally below releases it.
+    jan = CheckpointJanitor(spark)
+    df = jan.checkpoint(spark.range(64).selectExpr("id"))
+    ids = jan._detach(df)
+    assert ids and ids <= persistent_rdd_ids(spark)
     cp._LOOSE_BLOCK_IDS["application_from_a_previous_context"] = set(ids)
     try:
         clear_session_caches()
@@ -1677,43 +1698,6 @@ def test_simhash_combo_scheme_identical_to_chunk(spark):
     }
     assert combo == chunk
     assert len(combo) > 0
-
-
-def test_simhash_fused_multi_matches_standalone(spark):
-    """The registered row's fused three-config simhash pass must
-    reproduce the standalone per-config pipelines exactly — a physical
-    optimization (shared signature fold / labeled bucket join / shared
-    verify), never a semantic change (the `_srp_pairs_multi` contract,
-    simhash edition)."""
-    from hgn_spark.operators.dedup import (
-        SIMHASH_CAP,
-        _simhash_pairs_multi,
-        dedup_simhash_pairs,
-    )
-
-    fused = _simhash_pairs_multi(
-        spark,
-        SF_SMOKE,
-        [
-            ("simhash", "chunk", None),
-            ("simhash_cap", "chunk", SIMHASH_CAP),
-            ("simhash_manku", "combo", None),
-        ],
-    ).collect()
-    by_label = {}
-    for r in fused:
-        by_label.setdefault(r["label"], {})[(r["d1"], r["d2"])] = r["hamming"]
-    for label, kwargs in (
-        ("simhash", {}),
-        ("simhash_cap", {"bucket_cap": SIMHASH_CAP}),
-        ("simhash_manku", {"scheme": "combo"}),
-    ):
-        solo = {
-            (r["d1"], r["d2"]): r["hamming"]
-            for r in dedup_simhash_pairs(spark, SF_SMOKE, **kwargs).collect()
-        }
-        assert by_label.get(label, {}) == solo, label
-    assert len(by_label["simhash"]) > 0
 
 
 def test_lsh_topk_fused_multi_matches_standalone(spark):

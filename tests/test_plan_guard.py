@@ -57,7 +57,7 @@ def checkpoint_plans(monkeypatch, spark):
     """Capture the physical plan of EVERY frame that goes through
     localCheckpoint while a query builds. Without this the guard is
     blind to the iterative algorithms: spec.fn() materializes loop
-    bodies eagerly (CheckpointJanitor / tracked_local_checkpoint), so
+    bodies eagerly (CheckpointJanitor / SessionMemo), so
     the final explained plan starts at a truncated checkpoint scan and
     a CartesianProduct INSIDE the loop would never reach the
     assertion."""
