@@ -36,11 +36,9 @@ from hgn_spark.graph.rmetrics import (
     _common_member_rows,
     _endpoints,
     _tagged_pairs2,
-    r_metrics_edges,
     r_metrics_edges_pairs,
 )
 from hgn_spark.graph.weights import (
-    hybrid_edge_weights,
     hybrid_edge_weights_members,
     one_hot_cosine_similarities,
 )
@@ -53,6 +51,18 @@ from hgn_spark.graph.weights import (
 # serialized.
 _PAIR_ROWS_PER_EDGE = 12
 _PAIR_ROW_BYTES_DESER = 92
+
+# Gates of the scoped delete rule, measured on the 1000x cascade
+# (ARCHITECTURE "Incremental delete rule at 1000×"). A step scores only
+# the edges near the previous step's deletions when that step deleted
+# under 2% of the edges: 1.6% deleted put 30% of the edges in scope and
+# scored ~1.4x faster than all edges, 2.7% put 49% in scope (parity),
+# 9% put 84% (slower). A built scope of 1/3 of the edges or more is
+# released and the step scores all edges: from ~50% scope the scoped
+# step costs as much as full scoring or more. The deletions are the
+# same either way.
+_SCOPE_MAX_DELETED_FRACTION = 0.02
+_SCOPE_MAX_EDGE_FRACTION = 1 / 3
 
 
 def _pair_table_storage(spark: SparkSession, n_edges: int) -> StorageLevel:
@@ -67,7 +77,7 @@ def _pair_table_storage(spark: SparkSession, n_edges: int) -> StorageLevel:
     alternating runs of each did not separate the two. A held
     deserialized table is memory the step's joins lose: at the 1000x
     slice (~3.1 GB estimated, 85% of a 6 GB driver's 3.7 GB pool) the
-    ``pairs_incremental`` run went out of heap. Local mode has one
+    cascade probe's scoped run went out of heap. Local mode has one
     block manager, the driver's; on a cluster the driver's share is
     counted too, though it holds no partitions."""
     est = _PAIR_ROWS_PER_EDGE * _PAIR_ROW_BYTES_DESER * n_edges
@@ -95,31 +105,6 @@ class HGNParams:
     max_steps: int = 10
     max_sp_length: int = 2
     min_comp_size: int = 1
-    # r13 (VERDICT r12 #3): delete-rule formulation. "arrays" is the
-    # r12 shape (per-vertex neighbor ARRAYS + interpreted
-    # array_intersect per edge); "pairs" computes the identical
-    # r-metrics/weights VALUES via flat (id, nb) equi-joins inside
-    # codegen (r_metrics_edges_pairs — the shape the DuckDB oracle
-    # always used); "pairs_incremental" additionally scores steps 2+
-    # only on edges whose endpoint neighborhoods the previous
-    # deletions changed — the delta-maintenance scale path (step cost
-    # ~ |affected|, not |E|). All three land on identical communities
-    # (pinned by test); PROBE_hgn_phases_r13 measures the forms at
-    # sf0.1 and 1000x.
-    delete_rule_impl: str = "pairs"
-
-    def __post_init__(self) -> None:
-        # ADVICE r13 #1: an unrecognized impl (e.g. the typo
-        # 'pair_incremental') used to fall through to the legacy
-        # arrays path silently — the caller believed the incremental
-        # form was on while running the slow full recompute. Fail at
-        # construction instead.
-        allowed = ("arrays", "pairs", "pairs_incremental")
-        if self.delete_rule_impl not in allowed:
-            raise ValueError(
-                f"HGNParams.delete_rule_impl={self.delete_rule_impl!r} "
-                f"is not one of {allowed}"
-            )
 
 
 def hgn_communities(
@@ -142,9 +127,11 @@ def hgn_communities(
     the loop's row counts), so the numbers are true materialization
     costs, not lazy-plan noise; instrumentation costs two
     time.perf_counter() calls per phase and
-    nothing when the dict is omitted. The 1000x-class probe
-    (scripts/scale_probe_hgn_phases.py) uses this to attribute the
-    row's 13.7x growth instead of guessing which phase is superlinear.
+    nothing when the dict is omitted. Per step it also records
+    loop_delete_rule_per_step, n_deleted_per_step, n_scored_per_step
+    and, from step 2, n_scope_per_step (None where the scope was not
+    built); the cascade probe (scripts/scale_probe_hgn_cascade.py)
+    reads them.
     """
     import time as _time
 
@@ -202,14 +189,14 @@ def hgn_communities(
             # INVARIANT (ADVICE r13 #4): betweenness is computed ONCE here,
             # on the initial edge set, and never refreshed inside the loop —
             # the reference does the same (main.py:243-258).
-            # pairs_incremental's soundness DEPENDS on this: with init-once
-            # betweenness (and init-once sims), an untouched edge's delete
-            # condition is time-invariant, so steps 2+ may re-score only
-            # edges whose endpoint neighborhoods the previous deletions
-            # changed. If a future change recomputes betweenness per step,
-            # every survivor's condition can flip and the incremental scope
-            # becomes unsound — such a change MUST either drop to full
-            # per-step scoring or reject delete_rule_impl="pairs_incremental".
+            # The scoped delete rule's soundness DEPENDS on this: with
+            # init-once betweenness (and init-once sims), an untouched
+            # edge's delete condition is time-invariant, so a step may
+            # re-score only edges whose endpoint neighborhoods the
+            # previous deletions changed. If a future change recomputes
+            # betweenness per step, every survivor's condition can flip
+            # and the scope becomes unsound — a per-step betweenness
+            # refresh must shut the scope gates.
             out = jan.checkpoint(
                 edge_betweenness(
                     e, max_sp_length=p.max_sp_length, edges_canonical=True
@@ -225,129 +212,85 @@ def hgn_communities(
             betw = _f_betw.result()
 
         # --- main loop ------------------------------------------------------
-        aff_v = None  # pairs_incremental: vertices whose neighborhoods changed
-        prev_n_del: int | None = None  # pairs_incremental pre-gate input
+        # One delete rule, scored in pair form (PROBE_hgn_subphase_r13):
+        # score once, CHECKPOINT the small candidate list, then expand
+        # common members for the candidates only — the full-edge member
+        # expansion is the phase's dominant term (49M rows at 1000x) and
+        # Catalyst would re-run the scored plan per consumer without the
+        # materialization barrier.
+        #
+        # A step may score only the edges with an endpoint within
+        # distance 1 of the previous step's deleted endpoints (`scope`,
+        # seeded by `aff_v`). Sound because an edge's metrics depend only
+        # on its endpoints' level-1/2 neighborhoods, which deleting
+        # (a, b) changes exactly for vertices within distance 1 of
+        # {a, b}: every other survivor keeps the scores that already
+        # passed the rule last step, so the step's deletions are a
+        # subset of the scope. The two gates (_SCOPE_MAX_*) decide when
+        # the scope is built and kept; communities are identical either
+        # way (pinned by test).
+        aff_v = None  # scope seed, built only for a step that reads it
         for _step in range(1, p.max_steps + 1):
             if t is not None:
                 t["n_steps"] = _step
             t0 = _time.perf_counter()
-            scope = pt = cand = None
-            if p.delete_rule_impl in ("pairs", "pairs_incremental"):
-                # Pair form, loop-shaped (PROBE_hgn_subphase_r13): score
-                # once, CHECKPOINT the small candidate list, then expand
-                # common members for the candidates only — the full-edge
-                # member expansion is the phase's dominant term (49M rows
-                # at 1000x) and Catalyst would re-run the scored plan per
-                # consumer without the materialization barrier.
-                #
-                # pairs_incremental (r13, the next named mitigation from
-                # the sub-phase attribution): steps 2+ score only edges
-                # with an endpoint within distance 1 of a PREVIOUS
-                # deletion's endpoints (`aff_v`, captured on the
-                # pre-deletion graph below). Sound because an edge's
-                # metrics depend only on its endpoints' level-1/2
-                # neighborhoods, which deleting (a, b) changes exactly for
-                # vertices within distance 1 of {a, b} — every other
-                # survivor kept the scores that already passed the rule
-                # last step, so step N's deletions are a subset of the
-                # scoped set. Communities are identical to the full
-                # recompute (pinned by test).
-                n_scope = None
-                if (
-                    p.delete_rule_impl == "pairs_incremental"
-                    and aff_v is not None
-                    # Deletion-fraction PRE-gate (r14, PROBE_hgn_cascade_r14):
-                    # building the scope (two semi-joins + distinct +
-                    # checkpoint over e) costs real time at 1000x, so only
-                    # build it when it can pay. The measured mapping from
-                    # last step's deletion fraction to this step's scope
-                    # fraction on the 1000x cascade: 1.6% deleted -> 30%
-                    # scoped (scoped scoring wins ~1.4x), 2.7% -> 49%
-                    # (parity), 9% -> 84% (loses). Gate at 2% — below it
-                    # the scope is likely small enough to win; above it
-                    # score full and pay zero scope overhead. Free: both
-                    # counts are already known.
-                    and prev_n_del is not None
-                    and 50 * prev_n_del < max(n_edges, 1)
-                ):
-                    scope, n_scope, _ = jan.counted(
+            scope = n_scope = None
+            if aff_v is not None:
+                scope, n_scope, _ = jan.counted(
+                    e.join(aff_v.withColumnRenamed("id", "src"), "src", "left_semi")
+                    .unionByName(
                         e.join(
-                            aff_v.withColumnRenamed("id", "src"), "src", "left_semi"
+                            aff_v.withColumnRenamed("id", "dst"), "dst", "left_semi"
                         )
-                        .unionByName(
-                            e.join(
-                                aff_v.withColumnRenamed("id", "dst"),
-                                "dst",
-                                "left_semi",
-                            )
-                        )
-                        .distinct()
                     )
-                    # Scope-fraction gate (r14, measured in
-                    # PROBE_hgn_cascade_r14 before the gate existed): at
-                    # 1000x the scoped step costs ~0.65x of full scoring
-                    # at 30% scope and ~0.39x at 3.6%, but is at PARITY OR
-                    # WORSE at scope fractions >= ~50% — the scope
-                    # semi-joins plus scoped scoring cost what they save.
-                    # Score full when the affected fraction is >= 1/3;
-                    # results are identical either way (an unscoped edge's
-                    # metrics are unchanged, so full scoring re-accepts it
-                    # exactly as skipping it would).
-                    if 3 * n_scope >= n_edges:
-                        jan.release(scope)
-                        scope = None
-                if (
-                    t is not None
-                    and p.delete_rule_impl == "pairs_incremental"
-                    and aff_v is not None
-                ):
-                    # None = the pre-gate chose full scoring (scope not
-                    # built), keeping the per-step arrays aligned.
+                    .distinct()
+                )
+                jan.release(aff_v)
+                aff_v = None
+                if n_scope >= _SCOPE_MAX_EDGE_FRACTION * n_edges:
+                    jan.release(scope)
+                    scope = None
+            if t is not None:
+                if _step > 1:
                     t.setdefault("n_scope_per_step", []).append(n_scope)
-                if t is not None:
-                    # |edges actually scored| this step — the quantity the
-                    # incremental rule's step cost should scale with.
-                    t.setdefault("n_scored_per_step", []).append(
-                        n_scope if scope is not None else n_edges
-                    )
-                # The step's ONE 2-hop expansion: the tagged level-2 pair
-                # table (source-restricted to the scope's endpoints when
-                # scoped), materialized once and read by BOTH consumers —
-                # the r-metric scoring and the candidates' common-member
-                # expansion for the hybrid weights — so the 2-hop self-join
-                # runs once per step, not once per consumer. It is held
-                # until the step's deletion set is materialized and is the
-                # loop's largest generation (~12x |e| rows on the derived
-                # graph); one too large for the block store is stored
-                # serialized (see _pair_table_storage).
-                # e is canonical by construction (canonicalize at init;
-                # anti-join deletion preserves it) — every symmetrize in the
-                # scoring path may skip its dedup exchange (r15, guide §2.4).
-                pt = jan.checkpoint(
-                    _tagged_pairs2(
-                        e,
-                        sources=_endpoints(scope) if scope is not None else None,
-                        edges_canonical=True,
-                    ),
-                    storage_level=_pair_table_storage(e.sparkSession, n_edges),
+                # |edges actually scored| this step — what the step's
+                # delete-rule cost scales with.
+                t.setdefault("n_scored_per_step", []).append(
+                    n_scope if scope is not None else n_edges
                 )
-                scored, _members_all = r_metrics_edges_pairs(
+            # The step's ONE 2-hop expansion: the tagged level-2 pair
+            # table (source-restricted to the scope's endpoints when
+            # scoped), materialized once and read by BOTH consumers —
+            # the r-metric scoring and the candidates' common-member
+            # expansion for the hybrid weights — so the 2-hop self-join
+            # runs once per step, not once per consumer. It is held
+            # until the step's deletion set is materialized and is the
+            # loop's largest generation (~12x |e| rows on the derived
+            # graph); one too large for the block store is stored
+            # serialized (see _pair_table_storage).
+            # e is canonical by construction (canonicalize at init;
+            # anti-join deletion preserves it) — every symmetrize in the
+            # scoring path may skip its dedup exchange.
+            pt = jan.checkpoint(
+                _tagged_pairs2(
                     e,
-                    p.r_lvl1_thres,
-                    p.r_lvl2_thres,
-                    scope=scope,
+                    sources=_endpoints(scope) if scope is not None else None,
                     edges_canonical=True,
-                    pairs=pt,
-                )
-                cand = jan.checkpoint(
-                    scored.filter(~F.col("keepit")).select("src", "dst")
-                )
-                weights = hybrid_edge_weights_members(
-                    _common_member_rows(cand, pt), sims, p.feature_min_avg
-                )
-            else:
-                edges_r = r_metrics_edges(e, p.r_lvl1_thres, p.r_lvl2_thres)
-                weights = hybrid_edge_weights(edges_r, sims, p.feature_min_avg)
+                ),
+                storage_level=_pair_table_storage(e.sparkSession, n_edges),
+            )
+            scored, _members_all = r_metrics_edges_pairs(
+                e,
+                p.r_lvl1_thres,
+                p.r_lvl2_thres,
+                scope=scope,
+                edges_canonical=True,
+                pairs=pt,
+            )
+            cand = jan.checkpoint(scored.filter(~F.col("keepit")).select("src", "dst"))
+            weights = hybrid_edge_weights_members(
+                _common_member_rows(cand, pt), sims, p.feature_min_avg
+            )
             # Canonical edges → single equi-join against canonical betweenness
             # (the reference probes both orientations, main.py:130-134). Its
             # row count — the loop control — comes from the checkpoint job.
@@ -362,14 +305,13 @@ def hgn_communities(
                 )
                 .select("src", "dst")
             )
-            prev_n_del = n_del
             dt = _mark("loop_delete_rule", t0)
             if t is not None:
                 # Per-step breakdown (r14, VERDICT r13 #1): the cascade
                 # probe needs step-2+ cost separately from the accumulated
-                # total to show the incremental rule's step cost scaling
-                # with |affected| instead of |E|. n_deleted_per_step gives
-                # the cascade shape alongside.
+                # total to show the scoped step's cost scaling with
+                # |scope| instead of |E|. n_deleted_per_step gives the
+                # cascade shape alongside.
                 t.setdefault("loop_delete_rule_per_step", []).append(round(dt, 3))
                 t.setdefault("n_deleted_per_step", []).append(n_del)
             # The pair table and candidate list fed to_delete, now
@@ -378,11 +320,17 @@ def hgn_communities(
             if n_del == 0:
                 jan.release(to_delete)
                 break
-            if p.delete_rule_impl == "pairs_incremental":
-                # Next step's scope seed: the deleted endpoints plus their
-                # neighbors in THIS (pre-deletion) generation — exactly
+            t0 = _time.perf_counter()
+            new_e, n_edges, _ = jan.counted(
+                e.join(to_delete, ["src", "dst"], "left_anti")
+            )
+            _mark("loop_anti_join", t0)
+            if _step < p.max_steps and n_del < _SCOPE_MAX_DELETED_FRACTION * n_edges:
+                # The next step's pre-gate is open (n_edges is the count it
+                # reads): seed its scope with the deleted endpoints plus
+                # their neighbors in the pre-deletion generation — exactly
                 # the vertices whose level-1/2 neighborhoods the deletion
-                # changes. Captured before e is replaced.
+                # changes.
                 dv = (
                     to_delete.select(F.col("src").alias("id"))
                     .unionByName(to_delete.select(F.col("dst").alias("id")))
@@ -393,14 +341,7 @@ def hgn_communities(
                     .join(dv.withColumnRenamed("id", "src"), "src", "left_semi")
                     .select(F.col("dst").alias("id"))
                 )
-                new_aff = jan.checkpoint(dv.unionByName(nb).distinct())
-                jan.release(aff_v)
-                aff_v = new_aff
-            t0 = _time.perf_counter()
-            new_e, n_edges, _ = jan.counted(
-                e.join(to_delete, ["src", "dst"], "left_anti")
-            )
-            _mark("loop_anti_join", t0)
+                aff_v = jan.checkpoint(dv.unionByName(nb).distinct())
             # Iteration N's edge set is materialized: its inputs — the
             # previous generation and this round's deletion set — can never
             # be read again. Free them now so the loop carries ONE edge
@@ -418,8 +359,7 @@ def hgn_communities(
         _mark("final_cc", t0)
         # The returned plan references the final edge generation lazily
         # (survivors join + CC mapping): it is the caller's result. The
-        # init-step similarity and betweenness checkpoints (and the
-        # last scope seed) are dead weight from here; the block's exit
-        # frees them.
+        # init-step similarity and betweenness checkpoints are dead
+        # weight from here; the block's exit frees them.
         jan.keep(e)
         return out

@@ -199,8 +199,8 @@ def r_metrics_edges_pairs(
     (src, dst, r11, r12, r21, r22, keepit) VALUES as the array form
     (integer counts divided by integer counts — bit-identical doubles;
     asserted equal in tests) and ``common_members2`` is the level-2
-    common-neighbor set as (src, dst, member) rows for the weights
-    pipeline, which explodes the array form's set anyway.
+    common-neighbor set as (src, dst, member) rows, the input of
+    weights.hybrid_edge_weights_members.
 
     Why this is the at-scale shape (`neighbors`' own scale note):
     the array form materializes per-vertex level-2 neighbor ARRAYS
@@ -232,8 +232,8 @@ def r_metrics_edges_pairs(
     sources cover every scored edge's endpoints (all vertices, or the
     scope's endpoints). The caller owns its blocks.
     """
-    # ``scope`` (r13, the incremental lever — see HGNParams
-    # .delete_rule_impl='pairs_incremental'): an (src, dst) edge
+    # ``scope`` (r13, the incremental lever — hgn_communities builds
+    # one when its scope gates open): an (src, dst) edge
     # subset to score INSTEAD of the full edge list. Neighborhood
     # counts and common members still come from the full graph
     # (values for a scoped edge equal the full call's, pinned by

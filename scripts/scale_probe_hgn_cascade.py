@@ -1,20 +1,19 @@
-"""HGN incremental delete-rule CASCADE probe (VERDICT r13 #1 — the
-round's highest-leverage ask): `pairs_incremental` is the named fix
-for the delete-rule floor (66% of HGN's 1000x wall,
-PROBE_hgn_subphase_r13), but until r14 its only evidence was 174-edge
-Quakers equality. This probe measures step-2+ delete-rule cost on a
-REAL multi-step deletion cascade at sf0.1 and the 1000x-class graph
-tier, for both the full per-step scoring ("pairs") and the
-delta-maintenance form ("pairs_incremental"), using the r14 per-step
-instrumentation in hgn_communities:
+"""HGN delete-rule CASCADE probe: step-2+ delete-rule cost on a REAL
+multi-step deletion cascade at sf0.1 and the 1000x-class graph tier.
+hgn_communities scores a step on only the edges near the previous
+step's deletions when its two scope gates open (hgn._SCOPE_MAX_*);
+each scale runs the loop as shipped and once more with both gates
+patched shut (every step scores all edges) as the equality reference,
+reading the loop's per-step instrumentation:
 
   loop_delete_rule_per_step  — wall clock of each scoring+delete step
   n_scored_per_step          — |edges scored| (full |E| vs |scoped|)
+  n_scope_per_step           — |scope| from step 2, None where unbuilt
   n_deleted_per_step         — the cascade shape itself
 
 The claim under test: step-2+ cost scales with |affected| (the scoped
 edge count), not |E|. The equality pin is re-asserted ON THE PROBE
-SHAPE: both impls must land on identical communities at every scale
+SHAPE: both runs must land on identical communities at every scale
 (row count + per-row hash-sum fingerprint compared Spark-to-Spark).
 
 The registered driver row's config converges in 2 steps (one deletion
@@ -35,10 +34,12 @@ Usage:
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import sys
 import time
+from unittest import mock
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -72,7 +73,7 @@ def _inputs(spark, sf_dir):
     return vertices, edges
 
 
-def _params(impl: str, cfg: dict):
+def _params(cfg: dict):
     from hgn_spark.graph.hgn import HGNParams
 
     return HGNParams(
@@ -83,30 +84,34 @@ def _params(impl: str, cfg: dict):
         feature_min_avg=0.5,
         max_steps=cfg["max_steps"],
         max_sp_length=2,
-        delete_rule_impl=impl,
     )
 
 
-def _run_once(spark, sf_dir: str, impl: str, cfg: dict):
-    """One full hgn_communities run → (timings, fingerprint)."""
+def _run_once(spark, sf_dir: str, cfg: dict, gates_shut: bool = False):
+    """One full hgn_communities run → (timings, fingerprint);
+    ``gates_shut`` patches both scope gates shut for the run."""
     from pyspark.sql import functions as F
 
-    from hgn_spark.graph.hgn import hgn_communities
+    from hgn_spark.graph import hgn as hgn_mod
     from hgn_spark.registry import clear_session_caches
 
     clear_session_caches(blocking=True)
     spark.sparkContext._jvm.System.gc()
     vertices, edges = _inputs(spark, sf_dir)
     timings: dict = {}
-    t0 = time.perf_counter()
-    res = hgn_communities(
-        vertices, edges, ["nationkey"], _params(impl, cfg), phase_timings=timings
+    shut = mock.patch.multiple(
+        hgn_mod, _SCOPE_MAX_DELETED_FRACTION=0.0, _SCOPE_MAX_EDGE_FRACTION=0.0
     )
+    t0 = time.perf_counter()
+    with shut if gates_shut else contextlib.nullcontext():
+        res = hgn_mod.hgn_communities(
+            vertices, edges, ["nationkey"], _params(cfg), phase_timings=timings
+        )
     # Fingerprint instead of noop drain: one aggregate action both
     # materializes the result and yields the equality evidence
     # (Spark-to-Spark comparison, so Spark's internal Murmur3 hash is
     # a valid fingerprint; component ids are xxhash-min labels from
-    # connected_components, deterministic across impls).
+    # connected_components, deterministic across runs).
     t1 = time.perf_counter()
     fp_row = res.agg(
         F.count(F.lit(1)).alias("n"),
@@ -129,7 +134,7 @@ def sweep(sf_dir: str) -> None:
                 cfg = dict(
                     r_thres=r, max_edge_weight=mw, betweenness_thres=bt, max_steps=6
                 )
-                t, fp = _run_once(spark, sf_dir, "pairs", cfg)
+                t, fp = _run_once(spark, sf_dir, cfg)
                 print(
                     f"r={r} mw={mw} bt={bt}: steps={t.get('n_steps')} "
                     f"deleted={t.get('n_deleted_per_step')} "
@@ -152,32 +157,32 @@ def run(scales, out_path: str | None) -> None:
         if not os.path.isdir(sf_dir):
             print(f"# skip {label}: missing", file=sys.stderr)
             continue
-        per_impl: dict = {}
+        per_leg: dict = {}
         fps: dict = {}
-        for impl in ("pairs", "pairs_incremental"):
-            timings, fp = _run_once(spark, sf_dir, impl, CASCADE)
-            per_impl[impl] = timings
-            fps[impl] = fp
-            print(f"# {label}/{impl}: {json.dumps(timings)} fp={fp}",
+        for leg in ("default", "gates_shut"):
+            timings, fp = _run_once(spark, sf_dir, CASCADE, leg == "gates_shut")
+            per_leg[leg] = timings
+            fps[leg] = fp
+            print(f"# {label}/{leg}: {json.dumps(timings)} fp={fp}",
                   file=sys.stderr, flush=True)
         # The equality pin, re-asserted on the probe shape (cascade
         # config, probe scales — not just Quakers).
-        per_impl["communities_equal"] = fps["pairs"] == fps["pairs_incremental"]
-        per_impl["fingerprint"] = fps["pairs"]
-        if not per_impl["communities_equal"]:
-            per_impl["fingerprints"] = fps
+        per_leg["communities_equal"] = fps["default"] == fps["gates_shut"]
+        per_leg["fingerprint"] = fps["default"]
+        if not per_leg["communities_equal"]:
+            per_leg["fingerprints"] = fps
             print(f"# {label}: EQUALITY PIN FAILED {fps}", file=sys.stderr)
-        # Headline: step-2+ delete-rule cost ratio (incremental/full)
-        # next to the scored-edge ratio that should explain it.
-        a = per_impl["pairs"]
-        b = per_impl["pairs_incremental"]
+        # Headline: step-2+ delete-rule cost ratio (scoped/full) next to
+        # the scored-edge ratio that should explain it.
+        a = per_leg["gates_shut"]
+        b = per_leg["default"]
         tail = slice(1, None)
         ta = a.get("loop_delete_rule_per_step", [])[tail]
         tb = b.get("loop_delete_rule_per_step", [])[tail]
         sa = a.get("n_scored_per_step", [])[tail]
         sb = b.get("n_scored_per_step", [])[tail]
         if ta and tb:
-            per_impl["step2plus"] = {
+            per_leg["step2plus"] = {
                 "secs_full": round(sum(ta), 3),
                 "secs_incremental": round(sum(tb), 3),
                 "speedup": round(sum(ta) / max(sum(tb), 1e-9), 2),
@@ -185,7 +190,7 @@ def run(scales, out_path: str | None) -> None:
                 "scored_incremental": sum(sb),
                 "scored_fraction": round(sum(sb) / max(sum(sa), 1), 4),
             }
-        out["scales"][label] = per_impl
+        out["scales"][label] = per_leg
     js = json.dumps(out)
     print(js)
     if out_path:

@@ -12,6 +12,21 @@ if str(REPO) not in sys.path:
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = os.environ.get("HGN_TEST_SF_DIR", "/root/testdata/sf0.001")
+SF_BENCH = str(Path(SF_SMOKE).parent / "sf0.1")
+
+
+def set_scope_gates(monkeypatch, gates: str) -> None:
+    """Set hgn_communities' two scope gates: "gates_default" keeps the
+    shipped constants; "gates_forced_open" makes every step after a
+    deletion build and keep a scope; "gates_shut" makes every step
+    score all edges."""
+    from hgn_spark.graph import hgn as hgn_mod
+
+    if gates == "gates_default":
+        return
+    value = {"gates_forced_open": float("inf"), "gates_shut": 0.0}[gates]
+    for name in ("_SCOPE_MAX_DELETED_FRACTION", "_SCOPE_MAX_EDGE_FRACTION"):
+        monkeypatch.setattr(hgn_mod, name, value)
 
 
 @pytest.fixture(scope="session")

@@ -8,6 +8,8 @@ size — the SURVEY §5 test plan.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -25,7 +27,11 @@ from hgn_spark.graph.components import (
 from hgn_spark.graph.core import degrees, drop_isolated_vertices, neighbors, symmetrize
 from hgn_spark.graph.hgn import HGNParams, hgn_communities
 from hgn_spark.graph.rmetrics import r_metrics_edges
-from hgn_spark.graph.weights import hybrid_edge_weights, one_hot_cosine_similarities
+from hgn_spark.graph.weights import (
+    hybrid_edge_weights_members,
+    one_hot_cosine_similarities,
+)
+from tests.conftest import SF_BENCH, set_scope_gates
 
 EDGES = [(1, 2), (2, 3), (1, 3), (4, 5), (5, 6), (4, 6), (3, 4)]
 
@@ -401,13 +407,20 @@ def test_ml_pipeline_cosine_equals_closed_form(spark):
     assert ml[(1, 2)] == 1.0 and ml[(3, 4)] == 0.5 and ml[(1, 4)] == 0.0
 
 
-def test_hybrid_edge_weights(edges, vertices):
-    scored = r_metrics_edges(edges, r_lvl1_thres=0.25, r_lvl2_thres=0.9)
+def test_hybrid_edge_weights_members(edges, vertices):
+    from hgn_spark.graph.rmetrics import r_metrics_edges_pairs
+
+    scored, members = r_metrics_edges_pairs(edges, 0.25, 0.9)
+    cand_members = members.join(
+        scored.filter(~F.col("keepit")).select("src", "dst"),
+        ["src", "dst"],
+        "left_semi",
+    )
     sims = one_hot_cosine_similarities(edges, vertices, ["attr"])
     sims = sims.union(
         sims.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "similarity")
     )
-    w = hybrid_edge_weights(scored, sims, feature_min_avg=0.6).collect()
+    w = hybrid_edge_weights_members(cand_members, sims, feature_min_avg=0.6).collect()
     # Only candidate is the bridge (3,4); CN={1,2,5,6}; sim edges fully
     # inside: (1,2) sim 1.0 and (5,6) sim 1.0 → weight 2/2 = 1.0.
     assert len(w) == 1
@@ -490,63 +503,6 @@ def test_candidate_common_members_matches_full(edges):
     }
     assert got == want
     assert got == {(3, 4, m) for m in (1, 2, 5, 6)}
-
-
-def test_hgn_pairs_impl_equals_arrays_impl(edges, vertices):
-    """The full HGN loop under both delete-rule formulations lands on
-    identical communities (the registered row runs 'pairs' since r13;
-    'arrays' stays the evidence twin)."""
-    params_base = dict(
-        r_lvl1_thres=0.25,
-        r_lvl2_thres=0.9,
-        max_edge_weight=0.9,
-        betweenness_thres=5.0,
-        feature_min_avg=0.6,
-        max_steps=5,
-    )
-    got_pairs = _as_dict(
-        hgn_communities(
-            vertices, edges, ["attr"], HGNParams(**params_base)
-        ),
-        "id",
-        "component",
-    )
-    got_arrays = _as_dict(
-        hgn_communities(
-            vertices,
-            edges,
-            ["attr"],
-            HGNParams(delete_rule_impl="arrays", **params_base),
-        ),
-        "id",
-        "component",
-    )
-    assert got_pairs == got_arrays == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 4}
-
-
-def test_hgn_incremental_impl_equals_full(edges, vertices):
-    """pairs_incremental — steps 2+ score only the affected edge set —
-    must land on identical communities to the full per-step recompute
-    (the soundness argument lives on HGNParams.delete_rule_impl)."""
-    base = dict(
-        r_lvl1_thres=0.25,
-        r_lvl2_thres=0.9,
-        max_edge_weight=0.9,
-        betweenness_thres=5.0,
-        feature_min_avg=0.6,
-        max_steps=5,
-    )
-    inc = _as_dict(
-        hgn_communities(
-            vertices,
-            edges,
-            ["attr"],
-            HGNParams(delete_rule_impl="pairs_incremental", **base),
-        ),
-        "id",
-        "component",
-    )
-    assert inc == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 4}
 
 
 def test_triangles_and_clustering(edges):
@@ -1105,16 +1061,6 @@ def test_rmetrics_scoped_equals_full_filtered(spark):
     assert got_m == want_m
 
 
-def test_hgn_params_rejects_unknown_impl():
-    """ADVICE r13 #1: a typo'd delete_rule_impl must fail at
-    construction, not silently fall through to the legacy arrays
-    path."""
-    with pytest.raises(ValueError, match="pair_incremental"):
-        HGNParams(delete_rule_impl="pair_incremental")
-    for ok in ("arrays", "pairs", "pairs_incremental"):
-        assert HGNParams(delete_rule_impl=ok).delete_rule_impl == ok
-
-
 def test_betweenness_auto_approx_dispatch(edges):
     """VERDICT r13 #3 wiring: method='auto' + allow_approx at k>=4
     returns exactly what the sampled estimator returns (same fraction,
@@ -1221,21 +1167,35 @@ def test_connected_components_checkpoint_signature_matches_collect(
         assert want_rounds > 2 and set(got.values()) == {1}
 
 
-@pytest.mark.parametrize("impl", ["pairs", "pairs_incremental"])
+_GATES_CASES = ["gates_default", "gates_forced_open"]
+
+
+def _assert_scope_gates(t: dict, gates: str) -> None:
+    """On the fixture, step 2 builds and keeps a scope (all 6 surviving
+    edges) only with the gates forced open; the shipped pre-gate stays
+    shut after 1 of 7 edges is deleted."""
+    want = [6] if gates == "gates_forced_open" else [None]
+    assert t["n_scope_per_step"] == want
+    assert t["n_scored_per_step"] == [7, 6]
+
+
+@pytest.mark.parametrize("gates", _GATES_CASES)
 def test_hgn_actions_are_checkpoint_materializations(
-    edges, vertices, monkeypatch, impl
+    edges, vertices, monkeypatch, gates
 ):
     """Every count/collect/isEmpty issued while hgn_communities runs
     comes from a checkpoint's own materializing job (issued from
     hgn_spark/checkpoint.py): the loop's gates and connected
     components' round signature read their numbers off those jobs, not
     off separate driver actions. The fixture runs two steps (the
-    bridge is deleted, then nothing), so the per-step gates run."""
+    bridge is deleted, then nothing), so the per-step gates run; with
+    the scope gates forced open, step 2 scores a scope."""
     import os
     import sys
 
     from pyspark.sql.classic.dataframe import DataFrame as ClassicDF
 
+    set_scope_gates(monkeypatch, gates)
     callers: list[tuple[str, str]] = []
     for name in ("count", "collect", "isEmpty"):
         orig = getattr(ClassicDF, name)
@@ -1257,12 +1217,12 @@ def test_hgn_actions_are_checkpoint_materializations(
             betweenness_thres=5.0,
             feature_min_avg=0.6,
             max_steps=5,
-            delete_rule_impl=impl,
         ),
         phase_timings=t,
     )
     monkeypatch.undo()
     assert t["n_deleted_per_step"] == [1, 0]
+    _assert_scope_gates(t, gates)
     ckpt = os.path.join("hgn_spark", "checkpoint.py")
     stray = [c for c in callers if not c[1].endswith(ckpt)]
     assert not stray, stray
@@ -1273,17 +1233,18 @@ def test_hgn_actions_are_checkpoint_materializations(
     }
 
 
-@pytest.mark.parametrize("impl", ["pairs", "pairs_incremental"])
+@pytest.mark.parametrize("gates", _GATES_CASES)
 def test_hgn_serialized_pair_table_same_communities(
-    edges, vertices, monkeypatch, impl
+    edges, vertices, monkeypatch, gates
 ):
     """A pair table too large for the block store is checkpointed
     serialized; the fixture forced onto that path (an estimated row
     size no memory pool holds) lands on the same deletions and
-    communities."""
+    communities, scoped or not."""
     from hgn_spark.graph import hgn as hgn_mod
 
     monkeypatch.setattr(hgn_mod, "_PAIR_ROW_BYTES_DESER", 10**15)
+    set_scope_gates(monkeypatch, gates)
     t: dict = {}
     out = hgn_communities(
         vertices,
@@ -1296,14 +1257,73 @@ def test_hgn_serialized_pair_table_same_communities(
             betweenness_thres=5.0,
             feature_min_avg=0.6,
             max_steps=5,
-            delete_rule_impl=impl,
         ),
         phase_timings=t,
     )
     assert t["n_deleted_per_step"] == [1, 0]
+    _assert_scope_gates(t, gates)
     assert _as_dict(out, "id", "component") == {
         1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 4
     }
+
+
+@pytest.mark.skipif(not os.path.isdir(SF_BENCH), reason="sf0.1 data absent")
+def test_hgn_scoped_steps_match_full_scoring(spark, monkeypatch):
+    """The scoped delete rule on a real deletion cascade: the derived
+    graph at sf0.1 under the cascade config of
+    scripts/scale_probe_hgn_cascade.py. The shipped gates open for
+    steps 5 and 6 (the steps before deleted 21 and 2 edges, under 2% of
+    the 1,277 and 1,275 left) and keep scopes under 1/3 of the edges;
+    with both gates shut
+    every step scores all edges. Both runs delete the same edges per
+    step, the counts of the pure-Python replay, and land on the same
+    communities."""
+    from hgn_spark.catalog import load_table
+    from hgn_spark.graph.queries import derived_edges
+
+    edges = derived_edges(spark, SF_BENCH)
+    verts = load_table(spark, SF_BENCH, "supplier").select(
+        F.col("s_suppkey").alias("id"), F.col("s_nationkey").alias("nationkey")
+    )
+    params = HGNParams(
+        r_lvl1_thres=0.5,
+        r_lvl2_thres=0.5,
+        max_edge_weight=0.4,
+        betweenness_thres=3.0,
+        feature_min_avg=0.5,
+        max_steps=6,
+    )
+
+    def run(gates):
+        set_scope_gates(monkeypatch, gates)
+        t: dict = {}
+        comps = sorted(
+            (r["id"], r["component"])
+            for r in hgn_communities(
+                verts, edges, ["nationkey"], params, phase_timings=t,
+                edges_canonical=True,
+            ).collect()
+        )
+        return t, comps
+
+    t_def, comps_def = run("gates_default")
+    t_shut, comps_shut = run("gates_shut")
+    full = t_shut["n_scored_per_step"]
+    assert full == [2824, 1465, 1334, 1298, 1277, 1275]
+    assert t_shut["n_scope_per_step"] == [None] * 5
+    scoped = [
+        (n_scope, n_edges)
+        for n_scope, n_edges in zip(t_def["n_scope_per_step"], full[1:])
+        if n_scope is not None
+    ]
+    assert scoped and all(3 * n_scope < n_edges for n_scope, n_edges in scoped)
+    assert t_def["n_scored_per_step"] == [2824, 1465, 1334, 1298, 389, 46]
+    assert (
+        t_def["n_deleted_per_step"]
+        == t_shut["n_deleted_per_step"]
+        == [1359, 131, 36, 21, 2, 0]
+    )
+    assert comps_def == comps_shut
 
 
 def test_pair_table_storage_follows_block_store_memory(spark):
