@@ -169,11 +169,6 @@ COMPOSITE_SCALE_UNSAFE = {
 }
 
 
-def roles_for(row: str) -> dict[str, str] | None:
-    entry = BRANCH_ROLES.get(row)
-    return entry[1] if entry else None
-
-
 def render_table() -> str:
     """Markdown table for ARCHITECTURE.md."""
     lines = [

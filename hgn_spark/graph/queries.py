@@ -152,17 +152,6 @@ def graph_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lab(deg, "derived").unionByName(lab(csv_deg, "edge_csv")).join(nb, "id")
 
 
-def graph_neighbors_lvl2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Level-2 neighborhoods alone — the pre-merge driver row, kept
-    callable for tests and API compatibility."""
-    nb = neighbors(derived_edges(spark, sf_dir), level=2)
-    return nb.select(
-        "id",
-        "count",
-        F.array_join(F.sort_array("neighbors"), ",").alias("neighbors"),
-    )
-
-
 @register(
     "graph_rmetrics",
     oracle=f"""

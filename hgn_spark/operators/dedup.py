@@ -24,7 +24,9 @@ scale-up (VERDICT r1 demanded it explicitly).
 
 The three sketch generators (minhash / simhash / SRP) share one
 labeled driver row, `dedup_minhash_lsh_pairs`; each remains a
-standalone callable.
+callable. Each sketch family has one pipeline body: `minhash_lsh_pairs`
+and `dedup_embedding_neardup_pairs` are one-config calls of the fused
+pipelines the row runs (`minhash_lsh_pairs_nested`, `_srp_pairs_multi`).
 
 The testdata plants near-duplicate documents at jaccard ≥ 0.889
 (measured), so JACCARD_THRES = 0.8 separates planted pairs from the
@@ -171,8 +173,6 @@ def _minhash_consts(n: int = NUM_PERM) -> list[tuple[int, int]]:
         out.append((a, b))
     return out
 
-
-_PERM_CONSTS = _minhash_consts()
 
 # Permutation budget for minhash_recall_perms — the analogue of
 # SRP_MAX_BANDS: an explicit signature-cost ceiling (num_perm array
@@ -957,23 +957,28 @@ def canonical_groups(pairs: DataFrame) -> DataFrame:
     )
 
 
-def _perm_min(p: int, consts: list[tuple[int, int]] | None = None):
-    """min over hs of the p-th permutation hash — the universal-family
-    mix ((h mod p)*a + b) mod p over GF(2^31-1) with md5-derived
-    full-range (a, b) (see _MINHASH_P for why the field shrank in
+def _minhash_signature(consts: list[tuple[int, int]]) -> Column:
+    """All permutation minima of ``hs`` as ONE ``array<bigint>``
+    column, element p = min over hs of the universal-family mix
+    ((h mod P)*a + b) mod P for the p-th md5-derived full-range
+    (a, b) over GF(2^31-1) (see _MINHASH_P for why the field shrank in
     r14: the old small-multiplier 2^61-1 mix correlated minima across
-    bands), exact in signed 64-bit in Spark AND DuckDB (product
-    < 2^62). A named closure, not an inline `lambda h, p=p: ...` —
-    PySpark infers higher-order-function arity from the lambda
-    signature, so a default arg turns the lambda binary and binds `p`
-    to the ARRAY INDEX instead of the permutation."""
-    a, b = (consts if consts is not None else _PERM_CONSTS)[p]
-    return F.array_min(
-        F.transform(
-            "hs",
-            lambda h: ((h % F.lit(_MINHASH_P)) * F.lit(a) + F.lit(b))
-            % F.lit(_MINHASH_P),
-        )
+    bands) — exact in signed 64-bit in Spark AND DuckDB (product
+    < 2^62).
+
+    One array expression iterating an (a, b) consts literal (r14, the
+    `_srp_bits_array` treatment): one parse and a tiny analyzed
+    expression instead of one Column tree per permutation. It folds
+    the MATERIALIZED per-doc hash array, so the signature build
+    shuffles nothing (a groupBy(min) over the exploded index was the
+    form it replaced; reading the raw text pipeline instead let
+    CollapseProject inline tokenization into every permutation —
+    measured 6x slower). NB Spark's bracket indexing c[0] is 0-based,
+    unlike element_at."""
+    consts_sql = "array(" + ",".join(f"array({a}L,{b}L)" for a, b in consts) + ")"
+    return F.expr(
+        f"transform({consts_sql}, c -> array_min(transform(hs, "
+        f"h -> ((h % {_MINHASH_P}) * c[0] + c[1]) % {_MINHASH_P})))"
     )
 
 
@@ -1027,8 +1032,11 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """MinHash-LSH near-dup pairs: ``num_perm`` permutation minima per
     doc over the portable 48-bit shingle hashes, banded into ``bands``
-    bands; only docs sharing a (band, band-key) bucket become
-    candidates; exact jaccard verify at JACCARD_THRES (0.8).
+    bands of num_perm // bands rows; only docs sharing a (band,
+    band-key) bucket become candidates; exact jaccard verify at
+    JACCARD_THRES (0.8). The one-config call of
+    `minhash_lsh_pairs_nested` (inner = outer), so the signature,
+    banding, bucket join and verify are written once.
 
     Defaults are the pinned 16-perm/4-band sketch (the driver row's
     `minhash` branch — at jaccard 0.89 it catches a pair with
@@ -1039,65 +1047,10 @@ def minhash_lsh_pairs(
     which replays the exact sketch (recall/candidate-count properties
     additionally asserted in tests/test_llm_ops.py).
     """
-    consts = _minhash_consts(num_perm) if num_perm != NUM_PERM else _PERM_CONSTS
-    sets_ = _doc_shingle_sets(spark, sf_dir)
-    # Per-permutation min as an array fold over the MATERIALIZED per-doc
-    # hash array: zero shuffles for the signature build. (When the 16
-    # branches read the raw text pipeline instead, CollapseProject
-    # inlines tokenization into every branch — measured 6× slower than
-    # a groupBy(min); reading the checkpointed `hs` removes the hazard,
-    # and beats the groupBy because nothing shuffles at all.)
-    #
-    # r14: all minima in ONE array expression iterating a (a, b)
-    # consts literal — the same `_srp_bits_array` treatment (one parse
-    # + tiny analysis instead of one Column tree per permutation); the
-    # per-permutation mix inside the lambda is the identical
-    # ((h % p) * a + b) % p fold `_perm_min` evaluates, so every
-    # minimum and band key is unchanged. (NB Spark's bracket indexing
-    # c[0] is 0-based, unlike element_at.)
-    consts_sql = "array(" + ",".join(
-        f"array({a}L,{b}L)" for a, b in consts[:num_perm]
-    ) + ")"
-    mh_col = F.expr(
-        f"transform({consts_sql}, c -> array_min(transform(hs, "
-        f"h -> ((h % {_MINHASH_P}) * c[0] + c[1]) % {_MINHASH_P})))"
+    cfg = (num_perm, bands)
+    return minhash_lsh_pairs_nested(spark, sf_dir, inner=cfg, outer=cfg).select(
+        "d1", "d2", "jaccard"
     )
-    sig = sets_.filter(F.col("sz") > 0).select("doc_id", mh_col.alias("mh"))
-    rows_per_band = num_perm // bands
-    # Band key = the minima tuple itself (joined as a string — the same
-    # key the oracle builds); hashing the tuple again would just add an
-    # engine-specific hash for zero bucketing benefit. array_join over
-    # CAST(x AS STRING) elements == the historical concat_ws over the
-    # bigint columns (concat_ws string-casts its args; no nulls here —
-    # hs is non-empty after the sz > 0 filter).
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.expr(
-                f"array_join(transform(slice(mh, {b * rows_per_band + 1}, "
-                f"{rows_per_band}), x -> CAST(x AS STRING)), ':')"
-            ).alias("bh"),
-        )
-        for b in range(bands)
-    ]
-    banded = sig.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("bb")
-    ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
-    left = banded.select(F.col("doc_id").alias("d1"), "band", "bh")
-    right = banded.select(
-        F.col("doc_id").alias("d2"), F.col("band").alias("band2"), F.col("bh").alias("bh2")
-    )
-    cands = (
-        left.join(
-            right,
-            (F.col("band") == F.col("band2"))
-            & (F.col("bh") == F.col("bh2"))
-            & (F.col("d1") < F.col("d2")),
-        )
-        .select("d1", "d2")
-        .distinct()
-    )
-    return _verified_jaccard(cands, sets_).filter(F.col("jaccard") >= JACCARD_THRES)
 
 
 def minhash_lsh_pairs_nested(
@@ -1116,7 +1069,7 @@ def minhash_lsh_pairs_nested(
     verify (was two) — with the inner membership carried as a
     ``bool_or(band < inner_bands)`` flag through the one aggregation
     that replaced ``distinct()`` (same exchange, one extra 1-bit
-    column). Returns (d1, d2, jaccard, in_inner) where rows are
+    column). Returns (d1, d2, in_inner, jaccard) where rows are
     exactly `minhash_lsh_pairs(outer)`'s and ``in_inner`` marks
     exactly `minhash_lsh_pairs(inner)`'s (pinned by test).
 
@@ -1141,17 +1094,15 @@ def minhash_lsh_pairs_nested(
             f"minhash_lsh_pairs_nested: inner {inner} is not a band-prefix "
             f"of outer {outer} (rows-per-band must match, inner ⊆ outer)"
         )
-    consts = _minhash_consts(out_np)
     sets_ = _doc_shingle_sets(spark, sf_dir)
-    consts_sql = "array(" + ",".join(
-        f"array({a}L,{b}L)" for a, b in consts
-    ) + ")"
-    mh_col = F.expr(
-        f"transform({consts_sql}, c -> array_min(transform(hs, "
-        f"h -> ((h % {_MINHASH_P}) * c[0] + c[1]) % {_MINHASH_P})))"
+    sig = sets_.filter(F.col("sz") > 0).select(
+        "doc_id", _minhash_signature(_minhash_consts(out_np)).alias("mh")
     )
-    sig = sets_.filter(F.col("sz") > 0).select("doc_id", mh_col.alias("mh"))
     rows_per_band = out_np // out_b
+    # Band key = the minima tuple itself (joined as a string — the same
+    # key the oracle builds); hashing the tuple again would just add an
+    # engine-specific hash for zero bucketing benefit. No nulls: hs is
+    # non-empty after the sz > 0 filter.
     band_structs = [
         F.struct(
             F.lit(b).alias("band"),
@@ -1228,6 +1179,35 @@ def _simhash_oracle(bucket_cap: int | None = None) -> str:
     """
 
 
+def _simhash_signature() -> Column:
+    """The 48-bit SimHash of ``hs`` as one BIGINT column: bit i is set
+    iff more than half of the doc's distinct shingle hashes have bit i
+    set (the sign of the per-bit ±1 sum). One lane fold over the
+    materialized hash array — no posexplode, no shuffle."""
+    return F.expr(
+        f"aggregate(sequence(0, {SIMHASH_BITS - 1}), CAST(0 AS BIGINT), "
+        "(acc, i) -> acc + "
+        "IF(2 * size(filter(hs, h -> (shiftright(h, i) & 1) = 1)) > sz, "
+        "shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT)))"
+    )
+
+
+def _cap_buckets(rows: DataFrame, keys: list[str], cap: int | None) -> DataFrame:
+    """Sketch mega-bucket guard, single definition: keep only the
+    ``rows`` whose ``keys`` bucket holds at most ``cap`` rows (all of
+    them when ``cap`` is None). One tiny aggregation — one row per
+    bucket — broadcast back BEFORE the pair join, so the bound applies
+    to candidate GENERATION, not post-hoc; the verify still scores
+    every surviving pair exactly. Recall caveat: a true pair whose
+    every shared bucket is over the cap is missed."""
+    if cap is None:
+        return rows
+    sizes = rows.groupBy(*keys).agg(F.count(F.lit(1)).alias("bsz"))
+    return rows.join(
+        F.broadcast(sizes.filter(F.col("bsz") <= cap)), keys
+    ).drop("bsz")
+
+
 def dedup_simhash_pairs(
     spark: SparkSession,
     sf_dir: str,
@@ -1276,13 +1256,7 @@ def dedup_simhash_pairs(
     chunk_bits = SIMHASH_BITS // SIMHASH_CHUNKS
     mask = (1 << chunk_bits) - 1
     sig = sets_.filter(F.col("sz") > 0).select(
-        "doc_id",
-        F.expr(
-            f"aggregate(sequence(0, {SIMHASH_BITS - 1}), CAST(0 AS BIGINT), "
-            "(acc, i) -> acc + "
-            "IF(2 * size(filter(hs, h -> (shiftright(h, i) & 1) = 1)) > sz, "
-            "shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT)))"
-        ).alias("sig"),
+        "doc_id", _simhash_signature().alias("sig")
     )
     if scheme == "combo":
         from itertools import combinations
@@ -1311,18 +1285,7 @@ def dedup_simhash_pairs(
     chunks = sig.select(
         "doc_id", "sig", F.posexplode(keys).alias("chunk_idx", "chunk")
     )
-    if bucket_cap is not None:
-        # Drop mega-buckets BEFORE the pair join: one tiny aggregation
-        # (one row per (chunk_idx, chunk) bucket) broadcast back, so the
-        # bound applies to candidate GENERATION (the SRP bucket_cap
-        # shape).
-        sizes = chunks.groupBy("chunk_idx", "chunk").agg(
-            F.count(F.lit(1)).alias("bsz")
-        )
-        chunks = chunks.join(
-            F.broadcast(sizes.filter(F.col("bsz") <= bucket_cap)),
-            ["chunk_idx", "chunk"],
-        ).drop("bsz")
+    chunks = _cap_buckets(chunks, ["chunk_idx", "chunk"], bucket_cap)
     left = chunks.select(
         F.col("doc_id").alias("d1"), F.col("sig").alias("sig1"), "chunk_idx", "chunk"
     )
@@ -1361,8 +1324,14 @@ def _srp_planes(bits: int, dim: int) -> list[list[float]]:
     return planes
 
 
-def _srp_bits_array(planes: list[list[float]], vec_col: str = "embedding"):
-    """All sign bits as ONE ``array<int>`` column.
+def _srp_bits_array(n_bits: int, vec_col: str = "embedding") -> Column:
+    """The sign bits of ``vec_col`` against the first ``n_bits``
+    md5-derived hyperplanes (`_srp_planes` over EMB_DIM) as ONE
+    ``array<int>`` column — the single Spark form of the SRP sign
+    kernel: the dedup sketch, the LSH ANN search and the linear IVF
+    build's bucket assign all read their bits here. round(dot, 6)
+    before the sign test (mirrored in every oracle): the fold's
+    last-ulp noise must not flip a near-zero projection's bit.
 
     History of this expression's SHAPE (its VALUES never changed): the
     original form composed `aggregate(zip_with(transform(vec, double),
@@ -1386,7 +1355,7 @@ def _srp_bits_array(planes: list[list[float]], vec_col: str = "embedding"):
     pair and recorded hash — is unchanged."""
     planes_sql = "array(" + ",".join(
         "array(" + ",".join("1.0D" if v > 0 else "-1.0D" for v in row) + ")"
-        for row in planes
+        for row in _srp_planes(n_bits, EMB_DIM)
     ) + ")"
     return F.expr(
         f"transform({planes_sql}, p -> CASE WHEN round(aggregate(zip_with("
@@ -1396,14 +1365,13 @@ def _srp_bits_array(planes: list[list[float]], vec_col: str = "embedding"):
     )
 
 
-def _band_from_bits(lo_j: int, hi_j: int, bits_col: str = "bits"):
-    """Band key from the bits array: ``sum(bits[j] << (j - lo_j))`` over
-    ``[lo_j, hi_j)`` — the identical integer band sum the per-column form used,
-    computed as a fold over a slice. Always BIGINT: the historical
-    Python ``sum(col * (1 << k))`` promoted to long exactly when a
-    power crossed 2^31, and the band key never reaches an output row
-    (it only keys the bucket self-join, both sides built by this same
-    helper), so one fixed type is safe at every width."""
+def _band_from_bits(lo_j: int, hi_j: int, bits_col: str = "bits") -> Column:
+    """Bucket id from a `_srp_bits_array` column:
+    ``sum(bits[j] << (j - lo_j))`` over ``[lo_j, hi_j)``, a fold over
+    a slice — every SRP band key, LSH bucket and IVF assign bucket is
+    built here. Always BIGINT: a bucket id never reaches an output row
+    (it only keys a join whose sides are both built by this helper),
+    so one fixed type is safe at every width."""
     w = hi_j - lo_j
     powers = ",".join(f"{1 << k}L" for k in range(w))
     return F.expr(
@@ -1705,10 +1673,11 @@ def dedup_embedding_neardup_pairs(
 ) -> DataFrame:
     """Embedding near-dup pairs via signed-random-projection LSH:
     16-bit sign signature, candidates share one of two 8-bit bands,
-    exact cosine verify. Hash-checked: the md5-derived planes inline
-    into the DuckDB oracle, which replays the exact pipeline (signs of
-    64-dim double dot products are stable across engines; the verify
-    cosine is rounded to 6 decimals like every similarity ranking).
+    exact cosine verify — the one-config call of `_srp_pairs_multi`.
+    Hash-checked: the md5-derived planes inline into the DuckDB
+    oracle, which replays the exact pipeline (signs of 64-dim double
+    dot products are stable across engines; the verify cosine is
+    rounded to 6 decimals like every similarity ranking).
 
     Scale ceiling, measured: the band space is FIXED (2 x 8-bit = 256
     buckets per band), so expected bucket occupancy grows with n and
@@ -1725,97 +1694,9 @@ def dedup_embedding_neardup_pairs(
     stated recall loss (a true near-dup pair hiding ONLY in capped
     buckets is missed; at near-dup cosine the pair almost surely also
     shares the other band)."""
-    from hgn_spark.operators.similarity import load_embeddings
-
-    emb = load_embeddings(spark, sf_dir)
-    planes = _srp_planes(n_bits, EMB_DIM)
-    # round(…, 6) before the sign test (mirrored in the oracle): the
-    # sum's last-ulp noise must not flip a near-zero projection's bit.
-    # One-expression bits array — bit-identical per plane to the
-    # historical interpreted fold (see _srp_bits_array).
-    sig = emb.select("vec_id", _srp_bits_array(planes).alias("bits"))
-    # Bands carry vec_id ONLY: shipping the 64-float arrays through the
-    # 2x band explode and both sides of the bucket join would multiply
-    # the shuffled bytes for nothing — candidates rejoin the embedding
-    # table (with its precomputed norm) at the pair level instead, and
-    # the verify uses cosine_prenormed (bit-identical to cosine; the
-    # per-pair norm folds were 2/3 of every pairwise cosine).
-    # Band layout: ``n_bands`` contiguous segments of n_bits//n_bands
-    # bits (the last band absorbs any remainder — for the default
-    # n_bands=2 this is exactly the historical lo/hi halves, so the
-    # driver oracle is untouched). Band WIDTH is the recall dial the
-    # r11 recall probe measures: recall per band ≈ p^width (p = sign
-    # agreement at the target cosine), total 1-(1-p^w)^b — more,
-    # narrower bands buy recall with linearly more candidate volume.
-    w_band = n_bits // n_bands
-    band_cols = []
-    for bi in range(n_bands):
-        lo_j = bi * w_band
-        hi_j = (bi + 1) * w_band if bi < n_bands - 1 else n_bits
-        band_cols.append(_band_from_bits(lo_j, hi_j))
-    if n_bits > 32:
-        # Wide (recall-targeted) configs: materialize the sign bits so
-        # the self-join's two sides don't each recompute hundreds of
-        # interpreted-HOF projections (same rationale as the fused
-        # pass). Narrow configs keep their historical single-pass plan
-        # — the projections are cheaper than the checkpoint.
-        sig = loose_local_checkpoint(sig)
-    banded = sig.select(
-        "vec_id", F.posexplode(F.array(*band_cols)).alias("band", "bh")
-    )
-    if bucket_cap is not None:
-        # Drop mega-buckets BEFORE the pair join: one aggregation over
-        # the banded rows (tiny — one row per (band, bh) bucket,
-        # broadcast back), so the bound applies to candidate
-        # GENERATION, not post-hoc.
-        sizes = banded.groupBy("band", "bh").agg(F.count(F.lit(1)).alias("bsz"))
-        banded = banded.join(
-            F.broadcast(sizes.filter(F.col("bsz") <= bucket_cap)),
-            ["band", "bh"],
-        ).drop("bsz")
-    left = banded.select(F.col("vec_id").alias("v1"), "band", "bh")
-    right = banded.select(
-        F.col("vec_id").alias("v2"),
-        F.col("band").alias("band2"),
-        F.col("bh").alias("bh2"),
-    )
-    cands = (
-        left.join(
-            right,
-            (F.col("band") == F.col("band2"))
-            & (F.col("bh") == F.col("bh2"))
-            & (F.col("v1") < F.col("v2")),
-        )
-        .select("v1", "v2")
-        .distinct()
-    )
-    e1 = emb.select(
-        F.col("vec_id").alias("v1"),
-        F.col("embedding").alias("e1"),
-        F.col("nrm").alias("n1"),
-    )
-    e2 = emb.select(
-        F.col("vec_id").alias("v2"),
-        F.col("embedding").alias("e2"),
-        F.col("nrm").alias("n2"),
-    )
-    from hgn_spark.operators.similarity import cosine_prenormed
-
-    return (
-        cands.join(e1, "v1")
-        .join(e2, "v2")
-        .withColumn(
-            "cosine",
-            F.round(
-                cosine_prenormed(
-                    F.col("e1"), F.col("e2"), F.col("n1"), F.col("n2")
-                ),
-                6,
-            ),
-        )
-        .filter(F.col("cosine") >= EMB_COS_THRES)
-        .select("v1", "v2", "cosine")
-    )
+    return _srp_pairs_multi(
+        spark, sf_dir, [("srp", n_bits, n_bands)], bucket_cap=bucket_cap
+    ).select("v1", "v2", "cosine")
 
 
 def dedup_embedding_neardup_pairs_adaptive(
@@ -1846,39 +1727,40 @@ def dedup_embedding_neardup_pairs_adaptive(
 
 
 def _srp_pairs_multi(
-    spark: SparkSession, sf_dir: str, configs: list[tuple]
+    spark: SparkSession,
+    sf_dir: str,
+    configs: list[tuple],
+    bucket_cap: int | None = None,
 ) -> DataFrame:
-    """Several SRP signature widths in ONE shared pass → labeled
-    ``(label, v1, v2, cosine)`` rows, per-label identical to running
-    `dedup_embedding_neardup_pairs(n_bits=...)` per config (pinned in
+    """SRP near-dup pairs for one or several signature widths in ONE
+    shared pass → labeled ``(label, v1, v2, cosine)`` rows, per-label
+    identical to running the pass once per config (pinned in
     tests/test_llm_ops.py). A config is ``(label, n_bits)`` (two
     contiguous half-width bands — the historical layout) or
     ``(label, n_bits, n_bands)`` (r12 — the recall-targeted multi-band
-    sizing joins the fused pass with its own band count; contiguous
-    segments of n_bits // n_bands, matching
-    `dedup_embedding_neardup_pairs`'s layout exactly).
+    sizing): ``n_bands`` contiguous segments of n_bits // n_bands bits,
+    the last band absorbing any remainder. Band WIDTH is the recall
+    dial the r11 recall probe measures: recall per band ≈ p^width
+    (p = sign agreement at the target cosine), total 1-(1-p^w)^b —
+    more, narrower bands buy recall with linearly more candidate
+    volume. ``bucket_cap`` drops (label, band, bh) buckets holding
+    more than the cap from candidate generation (`_cap_buckets`) —
+    counted per config, so a wide config's rows never crowd a narrow
+    config's bucket.
 
-    Running the pinned and adaptive widths separately costs two
-    signature scans, two bucket joins and two verify joins; fused they
-    share everything the widths have in common — the plane
-    projections are computed once up to max(bits) (plane j is the
-    same md5 derivation at every width, so a narrow config just reads
-    a prefix), band rows carry a config label so buckets never mix
-    across configs (one self-join instead of one per config), and
-    exact-cosine verify runs once over the UNION of candidate pairs
-    (a pair surfaced by both configs verifies once and rejoins both
-    labels). Measured on the registered row: the srp+srp_adaptive
-    pair dropped from two full pipelines to one superset pipeline."""
+    Fused, the widths share everything they have in common — the
+    plane projections are computed once up to max(bits) (plane j is
+    the same md5 derivation at every width, so a narrow config just
+    reads a prefix), band rows carry a config label so buckets never
+    mix across configs (one self-join instead of one per config), and
+    exact-cosine verify runs once over the labeled candidate pairs.
+    Measured on the registered row: the srp+srp_adaptive pair dropped
+    from two full pipelines to one superset pipeline."""
     from hgn_spark.operators.similarity import cosine_prenormed, load_embeddings
 
     emb = load_embeddings(spark, sf_dir)
     max_bits = max(c[1] for c in configs)
-    planes = _srp_planes(max_bits, EMB_DIM)
-    # One-expression bits array (see _srp_bits_array): bit-identical
-    # per plane to the interpreted fold the function shipped with,
-    # without the per-plane parse/analyze/codegen overhead that
-    # dominated the wide recall-targeted signature's build.
-    sig = emb.select("vec_id", _srp_bits_array(planes).alias("bits"))
+    sig = emb.select("vec_id", _srp_bits_array(max_bits).alias("bits"))
     if max_bits > 32:
         # Materialize the sign bits ONCE: Catalyst shares no subplans,
         # so every per-config union arm below — and both sides of the
@@ -1890,9 +1772,10 @@ def _srp_pairs_multi(
         # The frame is n rows of small ints; the band sums derived from
         # it are cheap codegen'd arithmetic.
         sig = loose_local_checkpoint(sig)
-    # One banded frame for all configs: (label, band, bh) keys a
-    # config-scoped bucket, so the single self-join below can never
-    # pair vectors across configs or bands.
+    # Bands carry vec_id ONLY: shipping the 64-float arrays through the
+    # band explode and both sides of the bucket join would multiply the
+    # shuffled bytes for nothing — candidates rejoin the embedding
+    # table (with its precomputed norm) at the pair level instead.
     arms = []
     for cfg in configs:
         label, n_bits = cfg[0], cfg[1]
@@ -1913,6 +1796,7 @@ def _srp_pairs_multi(
     banded = arms[0]
     for a in arms[1:]:
         banded = banded.unionByName(a)
+    banded = _cap_buckets(banded, ["label", "band", "bh"], bucket_cap)
     left = banded.select("label", F.col("vec_id").alias("v1"), "band", "bh")
     right = banded.select(
         F.col("label").alias("label2"),
@@ -1950,8 +1834,9 @@ def _srp_pairs_multi(
     # per additional label on a verified pair (cheap, pair volume is
     # post-LSH) and runs candidate generation once — the better trade
     # at sf0.1 (measured) and at scale, where the bucket join, not the
-    # verify, is the dominant term. Output rows are identical: the
-    # same (label, v1, v2) set with the same rounded cosine.
+    # verify, is the dominant term. cosine_prenormed is bit-identical
+    # to cosine (the per-pair norm folds were 2/3 of every pairwise
+    # cosine).
     return (
         cands.join(e1, "v1")
         .join(e2, "v2")
@@ -2102,10 +1987,10 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh_all = sh_parts[0]
     for p in sh_parts[1:]:
         sh_all = sh_all.unionByName(p)
-    # Both SRP widths run FUSED in one shared pass (one signature
+    # The three SRP configs run FUSED in one shared pass (one signature
     # scan up to max(bits), one labeled bucket join, one verify of the
-    # union'd pairs) — per-label results identical to the standalone
-    # functions, pinned in tests/test_llm_ops.py.
+    # labeled pairs) — per-label results identical to one-config runs,
+    # pinned in tests/test_llm_ops.py.
     from hgn_spark.operators.similarity import emb_count
 
     n = emb_count(spark, sf_dir)

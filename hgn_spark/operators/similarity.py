@@ -14,11 +14,11 @@ the r10 scale mitigations ivf_adaptive / lsh_adaptive):
   parallelizes perfectly and the per-query state is a k-row heap
   (here a window top-k). Hash-checked against DuckDB computing the
   identical left-fold double cosine.
-- 'seed'/'kmeans' (`simsearch_ivf_topk`): the scale path — IVF-style
-  bucketing. Vectors
-  are assigned to their nearest centroid once (inverted lists); a query
-  probes only the nearest `nprobe` lists and re-ranks exactly. Probed
-  fraction ≈ nprobe/n_centroids of the corpus instead of all of it.
+- 'seed'/'kmeans' (branches of `simsearch_topk_cosine`): the scale
+  path — IVF-style bucketing. Vectors are assigned to their nearest
+  centroid once (inverted lists); a query probes only the nearest
+  `nprobe` lists and re-ranks exactly. Probed fraction ≈
+  nprobe/n_centroids of the corpus instead of all of it.
   Centroids are k-means-refined: deterministic stride-sampled seeds
   (vec_id % stride == 0) followed by one Lloyd iteration (assign to
   nearest seed → per-dimension mean), all in DataFrames. A production
@@ -573,7 +573,7 @@ def ivf_build_linear(
     corpus and make the sampled-Lloyd arm vacuous; the driver branch
     pins it to 256 so the md5 sample provably fires at sf0.01/sf0.001
     while production keeps the 4096 floor."""
-    from hgn_spark.operators.dedup import EMB_DIM, _srp_planes
+    from hgn_spark.operators.dedup import _band_from_bits, _srp_bits_array
 
     emb = load_embeddings(spark, sf_dir)
     if n is None:
@@ -609,22 +609,16 @@ def ivf_build_linear(
     cents = loose_local_checkpoint(cents)
     # SRP planes sized so a bucket holds ~IVF_ASSIGN_BUCKET centroids.
     bits = max(1, (max(nlist, 2) - 1).bit_length() - IVF_ASSIGN_BUCKET.bit_length() + 1)
-    planes = _srp_planes(bits, EMB_DIM)
 
-    def _bucket(vec: Column) -> Column:
-        b = F.lit(0)
-        for j in range(bits):
-            plane = F.array(*[F.lit(v) for v in planes[j]])
-            proj = F.aggregate(
-                F.zip_with(as_double(vec), plane, lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-            b = b + F.when(F.round(proj, 6) > 0, F.lit(1 << j)).otherwise(F.lit(0))
-        return b
+    def _bucket(df: DataFrame, vec_col: str, name: str) -> DataFrame:
+        return (
+            df.withColumn("_bits", _srp_bits_array(bits, vec_col))
+            .withColumn(name, _band_from_bits(0, bits, "_bits"))
+            .drop("_bits")
+        )
 
-    cent_b = cents.withColumn("bucket", _bucket(F.col("cent_e")))
-    point_b = emb.withColumn("bucket0", _bucket(F.col("embedding")))
+    cent_b = _bucket(cents, "cent_e", "bucket")
+    point_b = _bucket(emb, "embedding", "bucket0")
     # Multiprobe: own bucket + every 1-bit flip. The centroid side is
     # tiny (sqrt n rows) and broadcast; the point side never shuffles.
     probes = point_b.select(
@@ -1008,11 +1002,12 @@ def _lsh_topk_multi(
     k: int = TOP_K,
     multiprobe: int = LSH_MULTIPROBE,
 ) -> DataFrame:
-    """Several SRP-LSH ANN widths in ONE shared pass → labeled
-    ``(label, q_id, vec_id, score, rank)`` rows, per-label identical
-    to `simsearch_lsh_topk(n_bits=...)` per config (pinned in
+    """SRP-LSH ANN top-k for one or several widths in ONE shared pass
+    → labeled ``(label, q_id, vec_id, score, rank)`` rows, per-label
+    identical to running the pass once per config (pinned in
     tests/test_llm_ops.py) — the ANN twin of the dedup row's
-    `_srp_pairs_multi` fusion.
+    `_srp_pairs_multi` fusion; `simsearch_lsh_topk` is its one-config
+    call.
 
     What the widths share: the sign projections, computed ONCE up to
     max(bits) (plane j is the same md5 derivation at every width, so
@@ -1021,35 +1016,21 @@ def _lsh_topk_multi(
     integer folds over the shared bits; bucket rows carry a config
     label so the single probe join never mixes widths; candidates
     re-rank once through one window keyed by (label, q_id)."""
-    from hgn_spark.operators.dedup import EMB_DIM, _srp_planes
+    import itertools
+
+    from hgn_spark.operators.dedup import _band_from_bits, _srp_bits_array
 
     emb = load_embeddings(spark, sf_dir)
     max_bits = max(b for _, b in configs)
-    planes = _srp_planes(max_bits, EMB_DIM)
-
-    def _proj(j: int):
-        vec_d = as_double(F.col("embedding"))
-        plane = F.array(*[F.lit(v) for v in planes[j]])
-        return F.aggregate(
-            F.zip_with(vec_d, plane, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    bit_cols = [
-        F.when(F.round(_proj(j), 6) > 0, 1).otherwise(0).alias(f"b{j}")
-        for j in range(max_bits)
-    ]
     # Buckets carry vec_id ONLY (the dedup fusion's shuffle
     # discipline); embeddings rejoin at the candidate level.
-    sig = emb.select("vec_id", *bit_cols)
-    import itertools
-
+    sig = emb.select("vec_id", _srp_bits_array(max_bits).alias("bits"))
     bucket_arms, probe_arms = [], []
     for label, n_bits in configs:
-        bucket = sum(F.col(f"b{j}") * (1 << j) for j in range(n_bits))
         arm = sig.select(
-            F.lit(label).alias("label"), "vec_id", bucket.alias("bucket")
+            F.lit(label).alias("label"),
+            "vec_id",
+            _band_from_bits(0, n_bits).alias("bucket"),
         )
         bucket_arms.append(arm)
         flip_masks = [0] + [
@@ -1617,32 +1598,6 @@ def simsearch_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def simsearch_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Both IVF variants (seed + kmeans) without the exact baseline —
-    the pre-merge `simsearch_ivf_topk` driver row, kept callable for
-    tests and API compatibility."""
-    emb, seeds, seed_assign = _ivf_seed_frames(spark, sf_dir)
-    seed_assign = loose_local_checkpoint(seed_assign)
-    frames = (emb, seeds, seed_assign)
-    seed = _ivf_query(spark, sf_dir, refine=False, frames=frames).select(
-        F.lit("seed").alias("variant"), "*"
-    )
-    km = _ivf_query(spark, sf_dir, refine=True, frames=frames).select(
-        F.lit("kmeans").alias("variant"), "*"
-    )
-    return seed.unionByName(km)
-
-
-def simsearch_ivf_seed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF top-k with stride-sampled centroids (the 'seed' variant)."""
-    return _ivf_query(spark, sf_dir, refine=False)
-
-
-def simsearch_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF top-k with k-means-trained centroids (the 'kmeans' variant)."""
-    return _ivf_query(spark, sf_dir, refine=True)
-
-
 def simsearch_ivf_calibrated_topk(
     spark: SparkSession,
     sf_dir: str,
@@ -1750,7 +1705,7 @@ def simsearch_lsh_topk(
     neighbors land across the plane), and probed candidates re-rank by
     exact cosine. Probed fraction ≈ Σ_{r<=multiprobe} C(n_bits, r)
     / 2^n_bits of the corpus (≈ (1 + n_bits) / 2^n_bits at the default
-    1-bit multiprobe).
+    1-bit multiprobe). The one-config call of `_lsh_topk_multi`.
 
     Same plan skeleton as IVF: equi-join on the bucket id (no
     all-pairs), window top-k per query; at cluster scale the corpus
@@ -1767,62 +1722,6 @@ def simsearch_lsh_topk(
     the SRP near-dup sketch already operates) or when a training pass
     is impossible; use IVF when you can afford to learn centroids.
     """
-    from hgn_spark.operators.dedup import EMB_DIM, _srp_planes
-
-    emb = load_embeddings(spark, sf_dir)
-    planes = _srp_planes(n_bits, EMB_DIM)
-
-    def _proj(j: int):
-        vec_d = as_double(F.col("embedding"))
-        plane = F.array(*[F.lit(v) for v in planes[j]])
-        return F.aggregate(
-            F.zip_with(vec_d, plane, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    # round before the sign test: last-ulp fold noise must not flip a
-    # near-zero projection (same rule as the SRP dedup sketch).
-    bucket = sum(
-        F.when(F.round(_proj(j), 6) > 0, 1 << j).otherwise(0)
-        for j in range(n_bits)
-    )
-    base = emb.select("vec_id", "embedding", "nrm", bucket.alias("bucket"))
-    queries = base.filter(F.col("vec_id") % QUERY_STRIDE == 0).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-        F.col("bucket").alias("q_bucket"),
-    )
-    import itertools
-
-    flip_masks = [0] + [
-        sum(1 << j for j in combo)
-        for r in range(1, multiprobe + 1)
-        for combo in itertools.combinations(range(n_bits), r)
-    ]
-    probes = queries.select(
-        "q_id",
-        "q_emb",
-        "q_nrm",
-        F.explode(
-            F.array(
-                *[F.col("q_bucket").bitwiseXOR(F.lit(m)) for m in flip_masks]
-            )
-        ).alias("bucket"),
-    )
-    cand = probes.join(base, "bucket").filter(F.col("vec_id") != F.col("q_id"))
-    scored = cand.withColumn(
-        "score",
-        F.round(
-            dot(as_double(F.col("q_emb")), as_double(F.col("embedding")))
-            / (F.col("q_nrm") * F.col("nrm")),
-            6,
-        ),
-    )
-    w = W.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "vec_id", "score", "rank")
-    )
+    return _lsh_topk_multi(
+        spark, sf_dir, [("lsh", n_bits)], k=k, multiprobe=multiprobe
+    ).select("q_id", "vec_id", "score", "rank")

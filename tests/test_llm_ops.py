@@ -88,20 +88,19 @@ def test_minhash_candidates_much_smaller_than_n_squared(spark):
 
 
 def test_minhash_signature_matches_aggregate_form(spark):
-    """The scan-side array-fold signature must equal the groupBy(min)
-    formulation it replaced (same permutation hashes, same minima)."""
+    """The scan-side array-fold signature the MinHash pipeline runs
+    must equal the groupBy(min) formulation it replaced (same
+    permutation hashes, same minima)."""
     from pyspark.sql import functions as F
 
     from hgn_spark.operators import dedup
 
+    consts = dedup._minhash_consts()
     sets_ = dedup._doc_shingle_sets(spark, SF_SMOKE)
     new = {
-        r["doc_id"]: tuple(r[f"mh{p}"] for p in range(dedup.NUM_PERM))
+        r["doc_id"]: tuple(r["mh"])
         for r in sets_.filter(F.col("sz") > 0)
-        .select(
-            "doc_id",
-            *[dedup._perm_min(p).alias(f"mh{p}") for p in range(dedup.NUM_PERM)],
-        )
+        .select("doc_id", dedup._minhash_signature(consts).alias("mh"))
         .collect()
     }
     sh = dedup._hashed_shingle_index(spark, SF_SMOKE)
@@ -114,7 +113,7 @@ def test_minhash_signature_matches_aggregate_form(spark):
                     ((F.col("h") % F.lit(dedup._MINHASH_P)) * F.lit(a) + F.lit(b))
                     % F.lit(dedup._MINHASH_P)
                 ).alias(f"mh{p}")
-                for p, (a, b) in enumerate(dedup._PERM_CONSTS)
+                for p, (a, b) in enumerate(consts)
             ]
         )
         .collect()
@@ -123,8 +122,9 @@ def test_minhash_signature_matches_aggregate_form(spark):
 
 
 def test_simhash_signature_matches_posexplode_form(spark):
-    """The bit-packed lane-fold signature must equal the posexplode +
-    two-shuffle formulation it replaced, bit for bit."""
+    """The bit-packed lane-fold signature the SimHash pipeline runs
+    must equal the posexplode + two-shuffle formulation it replaced,
+    bit for bit."""
     from pyspark.sql import functions as F
 
     from hgn_spark.operators import dedup
@@ -134,14 +134,7 @@ def test_simhash_signature_matches_posexplode_form(spark):
     new = {
         r["doc_id"]: r["sig"]
         for r in sets_.filter(F.col("sz") > 0)
-        .select(
-            "doc_id",
-            F.expr(
-                f"aggregate(sequence(0, {hi}), CAST(0 AS BIGINT), (acc, i) -> acc + "
-                "IF(2 * size(filter(hs, h -> (shiftright(h, i) & 1) = 1)) > sz, "
-                "shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT)))"
-            ).alias("sig"),
-        )
+        .select("doc_id", dedup._simhash_signature().alias("sig"))
         .collect()
     }
     h = dedup._hashed_shingle_index(spark, SF_SMOKE)
@@ -261,7 +254,7 @@ def test_ivf_kmeans_recall_vs_bruteforce(spark):
     """The Lloyd-trained variant keeps the recall floor. On this
     isotropic corpus it measures 0.92 (vs 0.96 for stride seeds at the
     same probed candidate count) — the expected no-cluster-structure
-    outcome, see simsearch_ivf_kmeans_topk's docstring."""
+    outcome, see simsearch_topk_cosine's docstring."""
     rows = SPECS["simsearch_topk_cosine"].fn(spark, SF_SMOKE).collect()
     bf = {(r["q_id"], r["vec_id"]) for r in rows if r["variant"] == "exact"}
     ivf = {(r["q_id"], r["vec_id"]) for r in rows if r["variant"] == "kmeans"}
@@ -1450,6 +1443,34 @@ def test_srp_bucket_cap_bounds_candidates(spark):
         ).collect()
     }
     assert mid <= base
+
+
+def test_srp_fused_bucket_cap_counts_per_config(spark):
+    """The fused SRP pass counts bucket_cap per (label, band, bh): with
+    a cap that binds on the narrow config only, each label's rows equal
+    that config's one-config capped run. At this cap a count pooled
+    across labels drops one more narrow pair (the wide config's rows
+    crowd the narrow config's buckets), so the equality fails unless
+    the count is scoped to its config."""
+    from hgn_spark.operators.dedup import _srp_pairs_multi, dedup_embedding_neardup_pairs
+
+    cap, configs = 4, (("narrow", 16), ("wide", 22))
+
+    def one(n_bits, bucket_cap):
+        return {
+            tuple(r)
+            for r in dedup_embedding_neardup_pairs(
+                spark, SF_SMOKE, bucket_cap=bucket_cap, n_bits=n_bits
+            ).collect()
+        }
+
+    capped = {n_bits: one(n_bits, cap) for _, n_bits in configs}
+    fused = _srp_pairs_multi(spark, SF_SMOKE, list(configs), bucket_cap=cap).collect()
+    for label, n_bits in configs:
+        got = {(r["v1"], r["v2"], r["cosine"]) for r in fused if r["label"] == label}
+        assert got == capped[n_bits], label
+    assert 0 < len(capped[16]) < len(one(16, None))
+    assert capped[22] == one(22, None)
 
 
 def test_chunk_documents_plans_zero_exchange(spark):
