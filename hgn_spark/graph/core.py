@@ -62,7 +62,6 @@ def degrees(edges: DataFrame, edges_canonical: bool = False) -> DataFrame:
 def neighbor_pairs(
     edges: DataFrame,
     level: int = 1,
-    sources: DataFrame | None = None,
     edges_canonical: bool = False,
 ) -> DataFrame:
     """Ordered (src, dst) pairs with dst in the level-``level`` neighborhood.
@@ -75,30 +74,18 @@ def neighbor_pairs(
     table, not the motif API: at scale the join shuffles once on the
     midpoint key and AQE handles skewed hubs; a motif engine would
     build the same join chain with less control.
-
-    ``sources`` (r13, the incremental delete rule's lever): an (id)
-    frame restricting the OUTPUT to pairs whose src is in the set —
-    applied to the src side BEFORE the 2-hop self-join, so the
-    expansion itself scales with |sources|, not |V|. Rows for a
-    retained source are identical to the unrestricted call's (the
-    restriction only drops other sources' rows).
     """
     if level not in (1, 2):
         raise ValueError(f"neighbor_pairs supports level 1 or 2, got {level}")
     sym = symmetrize(edges, assume_canonical=edges_canonical)
-    base = (
-        sym.join(sources.select(F.col("id").alias("src")), "src", "left_semi")
-        if sources is not None
-        else sym
-    )
     if level == 1:
-        return base
-    a = base.alias("a")
+        return sym
+    a = sym.alias("a")
     b = sym.alias("b")
     two = a.join(b, F.col("a.dst") == F.col("b.src")).select(
         F.col("a.src").alias("src"), F.col("b.dst").alias("dst")
     )
-    return base.unionByName(two).filter(F.col("src") != F.col("dst")).distinct()
+    return sym.unionByName(two).filter(F.col("src") != F.col("dst")).distinct()
 
 
 def neighbors(

@@ -685,8 +685,8 @@ def _hgn_iteration_ctes(i: int, ein: str) -> str:
     """One unrolled HGN iteration as CTE text: r-metrics on edge set
     ``ein`` → candidate common-neighbor members → hybrid weights over
     the init-step similarity edges → deletion rule against init-step
-    betweenness → surviving edge set ``e{i+1}``. Mirrors the loop body
-    in hgn.py:82-113 block for block."""
+    betweenness → surviving edge set ``e{i+1}``. Mirrors the step loop
+    of `hgn.hgn_communities` block for block."""
     eout = f"e{i + 1}"
     # AS MATERIALIZED: every CTE here is referenced several times and
     # sits on top of a chain back to the lineitem self-join; DuckDB

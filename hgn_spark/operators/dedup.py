@@ -2101,26 +2101,20 @@ def dedup_semantic_clusters(
 
     Deterministic end to end (6-decimal rounded cosines, id
     tie-breaks) — hash-checked against the DuckDB replay."""
-    import math
-
     from hgn_spark.operators.similarity import (
         _assign_topm,
+        _stride_sample,
         cosine_prenormed,
+        emb_count,
+        ivf_adaptive_stride,
         load_embeddings,
     )
 
     emb = load_embeddings(spark, sf_dir)
-    # One 1-row count action to fix the stride (loop-control-style
-    # scalar, same discipline as the mixture planner); the oracle's
-    # scalar subquery computes the identical value.
-    from hgn_spark.operators.similarity import emb_count
-
-    stride = math.ceil(math.sqrt(emb_count(spark, sf_dir)))
-    seeds = emb.filter(F.col("vec_id") % stride == 0).select(
-        F.col("vec_id").alias("cent_id"),
-        F.col("embedding").alias("cent_e"),
-        F.col("nrm").alias("cent_n"),
-    )
+    # The corpus count (cached on the embeddings checkpoint) fixes the
+    # ceil(sqrt(n)) stride; the oracle's scalar subquery computes the
+    # identical value.
+    seeds = _stride_sample(emb, ivf_adaptive_stride(emb_count(spark, sf_dir)))
     # multi_assign (r14, PROBE_semantic_dedup_r14): with m = 1 the
     # cross-cluster blind spot measured recall 0.74/0.60 at 2k/24k
     # against exact truth at cos>=0.9 — the sqrt(n) cell partition

@@ -3,10 +3,11 @@
 Engine extension family (no reference counterpart — the reference's
 similarity is per-edge cosine on one-hot attributes, SURVEY §2.9 G9):
 
-One driver row, `simsearch_topk_cosine`, carries all six strategies
+One driver row, `simsearch_topk_cosine`, carries all seven strategies
 as labeled `variant` branches (exact / seed / kmeans — the r7 window
-consolidation — plus srp-lsh multiprobe, the r8 evidence upgrade, plus
-the r10 scale mitigations ivf_adaptive / lsh_adaptive):
+consolidation — plus srp-lsh multiprobe, the r8 evidence upgrade, the
+r10 scale mitigations ivf_adaptive / lsh_adaptive, and the r12
+linear-time index build ivf_linear):
 
 - 'exact' (`simsearch_exact_topk`): brute-force top-k — each query
   scans the corpus once. This is the correctness baseline and the
@@ -27,7 +28,12 @@ the r10 scale mitigations ivf_adaptive / lsh_adaptive):
   exact re-rank) is the production shape already.
 
 Cosines are computed with native higher-order functions (zip_with +
-aggregate over double), never per-row Python.
+aggregate over double), never per-row Python. Every ranking — query
+top-k, centroid assignment, probe selection, calibration truth — goes
+through one kernel, `_top_by_cosine`: the 6-decimal-rounded cosine,
+ranked per key by (score desc, id asc), which is the rule every DuckDB
+replay in this module writes as `row_number() OVER (... ORDER BY
+round(cos, 6) DESC, id)`.
 """
 
 from __future__ import annotations
@@ -51,9 +57,9 @@ def ivf_adaptive_stride(n: int) -> int:
     measured WHY the fixed stride cannot ship at scale: with
     CENTROID_STRIDE pinned, nlist grows linearly with the corpus and
     the assign step is n x nlist ~ n^2 — 846.9x growth at 100x data
-    (1490 s). sqrt-n centroids bound the index BUILD at O(n^1.5) (the
-    same contract as semantic dedup's ceil(sqrt n) clusters) and the
-    recurring per-query cost at nprobe x sqrt(n) candidates (nprobe
+    (1490 s). sqrt-n centroids bound the index BUILD at O(n^1.5)
+    (semantic dedup clusters on this same stride) and the recurring
+    per-query cost at nprobe x sqrt(n) candidates (nprobe
     recall-calibrated per index since r13, ivf_calibrate_nprobe). IEEE
     sqrt/ceil are correctly rounded, so Python here and
     ceil(sqrt(count(*))) oracle-side cannot disagree."""
@@ -123,6 +129,53 @@ def cosine_prenormed(a: Column, b: Column, na: Column, nb: Column) -> Column:
     return dot(as_double(a), as_double(b)) / (na * nb)
 
 
+def _top_by_cosine(
+    pairs: DataFrame,
+    keys: list[str],
+    other_id: str,
+    a: tuple[str, str],
+    b: tuple[str, str],
+    m: int | None,
+    score: str = "cosine",
+    rank: str = "rnk",
+) -> DataFrame:
+    """The family's one ranking rule: ``pairs`` gains ``score`` =
+    round(cosine_prenormed, 6) of the (vector, norm) column pairs ``a``
+    and ``b``, and ``rank`` = row_number per ``keys`` ordered by
+    (score desc, ``other_id`` asc); rows with rank <= ``m`` are kept
+    (all of them when ``m`` is None). Rounding BEFORE the ranking makes
+    every order reproducible across engines — ties at 6 decimals break
+    on the id, exactly as the oracle SQL does. Callers own the join
+    that builds ``pairs``, so each keeps its join strategy."""
+    w = W.partitionBy(*keys).orderBy(F.col(score).desc(), F.col(other_id))
+    ranked = pairs.withColumn(
+        score,
+        F.round(
+            cosine_prenormed(F.col(a[0]), F.col(b[0]), F.col(a[1]), F.col(b[1])), 6
+        ),
+    ).withColumn(rank, F.row_number().over(w))
+    return ranked if m is None else ranked.filter(F.col(rank) <= m)
+
+
+_QUERY_COLS = ("q_id", "qe", "qn")  # standing queries: (id, vector, norm)
+_CENT = ("cent_e", "cent_n")  # a centroid's (vector, norm) columns
+
+
+def _stride_sample(
+    emb: DataFrame,
+    stride: int,
+    names: tuple[str, str, str] = ("cent_id", "cent_e", "cent_n"),
+) -> DataFrame:
+    """The deterministic stride sample (vec_id % stride == 0) of a
+    normed embeddings frame as (id, vector, norm) columns named
+    ``names`` — IVF seed centroids by default, standing queries with
+    ``_QUERY_COLS``."""
+    i, v, nr = names
+    return emb.filter(F.col("vec_id") % stride == 0).select(
+        F.col("vec_id").alias(i), F.col("embedding").alias(v), F.col("nrm").alias(nr)
+    )
+
+
 _SQL_EXACT = f"""
     WITH base AS (
       SELECT vec_id, embedding,
@@ -154,53 +207,26 @@ def simsearch_exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine_prenormed); deterministic tie-break on (rounded cosine desc,
     vec_id)."""
     emb = load_embeddings(spark, sf_dir)
-    q = emb.filter(F.col("vec_id") % QUERY_STRIDE == 0).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("qe"),
-        F.col("nrm").alias("qn"),
-    )
-    pairs = (
-        emb.select("vec_id", F.col("embedding").alias("ce"), F.col("nrm").alias("cn"))
-        .join(F.broadcast(q), F.col("vec_id") != F.col("q_id"))
-        .withColumn(
-            "cosine",
-            F.round(
-                cosine_prenormed(F.col("qe"), F.col("ce"), F.col("qn"), F.col("cn")), 6
-            ),
-        )
-    )
-    w = W.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("q_id", "vec_id", "cosine", "rnk")
-    )
+    q = _stride_sample(emb, QUERY_STRIDE, _QUERY_COLS)
+    pairs = emb.select(
+        "vec_id", F.col("embedding").alias("ce"), F.col("nrm").alias("cn")
+    ).join(F.broadcast(q), F.col("vec_id") != F.col("q_id"))
+    return _top_by_cosine(
+        pairs, ["q_id"], "vec_id", ("qe", "qn"), ("ce", "cn"), TOP_K
+    ).select("q_id", "vec_id", "cosine", "rnk")
 
 
 def _assign_topm(emb: DataFrame, cents: DataFrame, m: int) -> DataFrame:
     """(vec_id, cent_id, rn, embedding, nrm): the ``m`` nearest
     centroids per vector (rn = 1 is the primary cell) via one
-    broadcast join + per-vector rank window. cos_c is rounded to 6
-    decimals BEFORE the ranking so the assignment is reproducible
-    across engines (ties at 6 decimals break on cent_id) — same trick
-    the brute-force ranking uses. m > 1 is the semantic-dedup
+    broadcast join + the per-vector `_top_by_cosine` ranking (ties at
+    6 decimals break on cent_id). m > 1 is the semantic-dedup
     boundary-recall dial (r14): a near-dup pair straddling two cells
     is verified iff the pair shares ANY of the m cells."""
-    scored = emb.join(F.broadcast(cents), how="cross").withColumn(
-        "cos_c",
-        F.round(
-            cosine_prenormed(
-                F.col("embedding"), F.col("cent_e"), F.col("nrm"), F.col("cent_n")
-            ),
-            6,
-        ),
-    )
-    w_assign = W.partitionBy("vec_id").orderBy(F.col("cos_c").desc(), F.col("cent_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") <= m)
-        .select("vec_id", "cent_id", "rn", "embedding", "nrm")
-    )
+    pairs = emb.join(F.broadcast(cents), how="cross")
+    return _top_by_cosine(
+        pairs, ["vec_id"], "cent_id", ("embedding", "nrm"), _CENT, m, "cos_c", "rn"
+    ).select("vec_id", "cent_id", "rn", "embedding", "nrm")
 
 
 def _assign_nearest(emb: DataFrame, cents: DataFrame) -> DataFrame:
@@ -215,10 +241,7 @@ def _assign_nearest(emb: DataFrame, cents: DataFrame) -> DataFrame:
 def _lloyd_exploded_vals(assign0: DataFrame) -> DataFrame:
     """Shared Lloyd prologue: explode a nearest-seed assignment to
     (cent_id, vec_id, dim, val) rows — |corpus| × dim rows into the
-    per-dimension aggregation, one shuffle. Takes the ASSIGNMENT (not
-    emb+seeds) so callers that already computed it — the IVF seed
-    variant's inverted lists are exactly this frame — can share it
-    instead of re-running the broadcast argmax."""
+    per-dimension aggregation, one shuffle."""
     return assign0.select(
         "cent_id",
         "vec_id",
@@ -240,12 +263,15 @@ def _lloyd_assemble(per_dim: DataFrame) -> DataFrame:
     )
 
 
-def lloyd_refine(emb: DataFrame, seeds: DataFrame) -> DataFrame:
-    """One Lloyd iteration, PRODUCTION path: assign every vector to its
-    nearest seed, then replace each seed with its cluster's
-    per-dimension mean via plain ``avg()`` — constant aggregation state
-    per (cent_id, dim) group, safe at any cluster size (the 100×
-    concern VERDICT r5 #4 raised against the pinned-fold variant).
+def lloyd_refine(assign0: DataFrame) -> DataFrame:
+    """One Lloyd iteration, PRODUCTION path: given the nearest-seed
+    assignment ``assign0`` (`_assign_nearest` output — the caller owns
+    it, so a caller that also serves the seed index's inverted lists
+    computes the broadcast argmax once), replace each seed with its
+    cluster's per-dimension mean via plain ``avg()`` — constant
+    aggregation state per (cent_id, dim) group, safe at any cluster
+    size (the 100× concern VERDICT r5 #4 raised against the pinned-fold
+    variant).
 
     The mean is rounded to 6 decimals before any downstream cosine —
     numerically it agrees with `_lloyd_refine_pinned` at that rounding
@@ -260,19 +286,18 @@ def lloyd_refine(emb: DataFrame, seeds: DataFrame) -> DataFrame:
     full corpus per iteration.
     """
     per_dim = (
-        _lloyd_exploded_vals(_assign_nearest(emb, seeds))
+        _lloyd_exploded_vals(assign0)
         .groupBy("cent_id", "dim")
         .agg(F.round(F.avg("val"), 6).alias("m"))
     )
     return _lloyd_assemble(per_dim)
 
 
-def _lloyd_refine_pinned(
-    emb: DataFrame, seeds: DataFrame, assign0: DataFrame | None = None
-) -> DataFrame:
-    """One deterministic Lloyd iteration, ORACLE-REPLAY path: the
-    per-dimension mean is a left fold over the vec_id-SORTED member
-    values (so the DuckDB replay sums in the identical order), divided
+def _lloyd_refine_pinned(assign0: DataFrame) -> DataFrame:
+    """One deterministic Lloyd iteration over the nearest-seed
+    assignment ``assign0``, ORACLE-REPLAY path: the per-dimension mean
+    is a left fold over the vec_id-SORTED member values (so the DuckDB
+    replay sums in the identical order), divided
     by the member count, and rounded to 6 decimals — both engines then
     see bit-equal centroids. Seeds whose cluster is empty drop out
     (both engines derive centroids from the assignment's groups).
@@ -283,8 +308,6 @@ def _lloyd_refine_pinned(
     bit-replay against a second engine isn't required; the two agree at
     the 6-decimal rounding (pinned by test).
     """
-    if assign0 is None:
-        assign0 = _assign_nearest(emb, seeds)
     per_dim = (
         _lloyd_exploded_vals(assign0)
         .groupBy("cent_id", "dim")
@@ -479,40 +502,6 @@ def _sql_tail(nprobe_expr: str = str(NPROBE), cal_block: str = "") -> str:
 _SQL_TAIL = _sql_tail()
 
 
-def _ivf_seed_frames(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(emb, seeds, seed_assign) — the corpus with norms, the stride
-    seeds, and the nearest-SEED assignment. The seed variant's inverted
-    lists and the kmeans variant's Lloyd input are the SAME frame, so a
-    caller building both variants computes the broadcast argmax once
-    (and may materialize it) instead of three times."""
-    emb = load_embeddings(spark, sf_dir)
-    seeds = emb.filter(F.col("vec_id") % CENTROID_STRIDE == 0).select(
-        F.col("vec_id").alias("cent_id"),
-        F.col("embedding").alias("cent_e"),
-        F.col("nrm").alias("cent_n"),
-    )
-    return emb, seeds, _assign_nearest(emb, seeds)
-
-
-def _ivf_seed_frames_adaptive(
-    spark: SparkSession, sf_dir: str, n: int | None = None
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(emb, seeds, seed_assign) with the sqrt-n centroid stride — the
-    scale path (see ivf_adaptive_stride). The count() is 1-scalar loop
-    control, the same class as srp_adaptive_bits' corpus count;
-    callers that already counted the corpus pass ``n``."""
-    emb = load_embeddings(spark, sf_dir)
-    stride = ivf_adaptive_stride(n if n is not None else emb_count(spark, sf_dir))
-    seeds = emb.filter(F.col("vec_id") % stride == 0).select(
-        F.col("vec_id").alias("cent_id"),
-        F.col("embedding").alias("cent_e"),
-        F.col("nrm").alias("cent_n"),
-    )
-    return emb, seeds, _assign_nearest(emb, seeds)
-
-
 IVF_ASSIGN_BUCKET = 16   # expected centroids per SRP assign-bucket
 IVF_SAMPLE_FLOOR = 4096  # Lloyd training-sample floor (deterministic)
 
@@ -521,7 +510,6 @@ def ivf_build_linear(
     spark: SparkSession,
     sf_dir: str,
     n: int | None = None,
-    lloyd_iters: int = 1,
     pinned: bool = False,
     sample_floor: int = IVF_SAMPLE_FLOOR,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -558,7 +546,7 @@ def ivf_build_linear(
     that branch is the bit-replayable evidence; this builder is the
     production path at 100 TB, where the exact assign is the
     superlinear step. Returns `(emb, cents, assign)` ready for
-    `_ivf_query(frames=...)`.
+    `_ivf_query(emb, cents, assign)`.
 
     r12 (VERDICT r11 #2 — "the production build path stops being
     tests-only"): ``pinned=True`` swaps the avg-based `lloyd_refine`
@@ -579,11 +567,7 @@ def ivf_build_linear(
     if n is None:
         n = emb_count(spark, sf_dir)
     stride = ivf_adaptive_stride(n)
-    seeds = emb.filter(F.col("vec_id") % stride == 0).select(
-        F.col("vec_id").alias("cent_id"),
-        F.col("embedding").alias("cent_e"),
-        F.col("nrm").alias("cent_n"),
-    )
+    seeds = _stride_sample(emb, stride)
     nlist = max(1, n // stride)
     # Deterministic hash sample: first 8 md5 hex chars of the id as a
     # uniform u32 (the sampling family's _u8 convention).
@@ -599,11 +583,9 @@ def ivf_build_linear(
     else:
         sample = emb
     refine = _lloyd_refine_pinned if pinned else lloyd_refine
-    cents = seeds
-    for _ in range(max(0, lloyd_iters)):
-        # the refine keeps the seed cent_ids (clusters with no sample
-        # member drop out — nlist is approximate, as in any IVF train).
-        cents = refine(sample, cents)
+    # The refine keeps the seed cent_ids (clusters with no sample
+    # member drop out — nlist is approximate, as in any IVF train).
+    cents = refine(_assign_nearest(sample, seeds))
     # sqrt-n rows consumed by three downstream joins (bucket hash,
     # query probing, rescue argmax) — materialize once.
     cents = loose_local_checkpoint(cents)
@@ -632,23 +614,10 @@ def ivf_build_linear(
             )
         ).alias("bucket"),
     )
-    scored = probes.join(F.broadcast(cent_b), "bucket").withColumn(
-        "cos_c",
-        F.round(
-            cosine_prenormed(
-                F.col("embedding"), F.col("cent_e"), F.col("nrm"), F.col("cent_n")
-            ),
-            6,
-        ),
-    )
-    w_assign = W.partitionBy("vec_id").orderBy(
-        F.col("cos_c").desc(), F.col("cent_id")
-    )
-    matched = (
-        scored.withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cent_id", "embedding", "nrm")
-    )
+    pairs = probes.join(F.broadcast(cent_b), "bucket")
+    matched = _top_by_cosine(
+        pairs, ["vec_id"], "cent_id", ("embedding", "nrm"), _CENT, 1, "cos_c", "rn"
+    ).select("vec_id", "cent_id", "embedding", "nrm")
     # Consumed twice (rescue anti-join + the final union) — pay the
     # bucket-local argmax once.
     matched = loose_local_checkpoint(matched)
@@ -665,63 +634,30 @@ def ivf_build_linear(
 
 
 def _ivf_query(
-    spark: SparkSession,
-    sf_dir: str,
-    refine: bool,
-    frames: tuple[DataFrame, DataFrame, DataFrame] | None = None,
+    emb: DataFrame,
+    cents: DataFrame,
+    assign: DataFrame,
     nprobe: int = NPROBE,
     query_stride: int = QUERY_STRIDE,
 ) -> DataFrame:
-    """Shared IVF pipeline: centroids → assign → probe → exact re-rank.
-    ``frames`` lets a caller inject pre-(computed|materialized)
-    `_ivf_seed_frames` output. ``nprobe`` is the recall/cost dial —
-    r13: the production branches pass the recall-calibrated value
+    """Query a built IVF index (``cents`` + its inverted lists
+    ``assign`` over the normed corpus ``emb``): each standing query
+    probes its ``nprobe`` nearest lists, then the probed candidates
+    re-rank exactly. ``nprobe`` is the recall/cost dial — r13: the
+    production branches pass the recall-calibrated value
     (ivf_calibrate_nprobe) while seed/kmeans evidence branches stay at
     the pinned NPROBE. ``query_stride`` widens the standing-query
     stride so scale probes can bound the query-set size (recall is a
     per-query average; a few hundred queries measure it)."""
-    emb, seeds, seed_assign = frames or _ivf_seed_frames(spark, sf_dir)
-    if refine:
-        # The registered driver row must bit-replay in DuckDB → pinned
-        # fold; production callers train centroids with the avg-based
-        # lloyd_refine. The Lloyd input IS the seed assignment.
-        cents = _lloyd_refine_pinned(emb, seeds, assign0=seed_assign)
-        assign = _assign_nearest(emb, cents)
-    else:
-        cents, assign = seeds, seed_assign
-    # Queries probe their nprobe nearest lists.
-    q = emb.filter(F.col("vec_id") % query_stride == 0).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("qe"),
-        F.col("nrm").alias("qn"),
-    )
-    qprobe = q.join(F.broadcast(cents), how="cross").withColumn(
-        "cos_c",
-        F.round(
-            cosine_prenormed(F.col("qe"), F.col("cent_e"), F.col("qn"), F.col("cent_n")),
-            6,
-        ),
-    )
-    w_probe = W.partitionBy("q_id").orderBy(F.col("cos_c").desc(), F.col("cent_id"))
-    probes = (
-        qprobe.withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= nprobe)
-        .select("q_id", "qe", "qn", "cent_id")
-    )
-    # Candidates = vectors in probed lists; exact re-rank.
+    q = _stride_sample(emb, query_stride, _QUERY_COLS)
+    qc = q.join(F.broadcast(cents), how="cross")
+    probes = _top_by_cosine(
+        qc, ["q_id"], "cent_id", ("qe", "qn"), _CENT, nprobe, "cos_c", "rn"
+    ).select("q_id", "qe", "qn", "cent_id")
     cands = probes.join(assign, "cent_id").filter(F.col("vec_id") != F.col("q_id"))
-    rescored = cands.withColumn(
-        "cosine",
-        F.round(
-            cosine_prenormed(F.col("qe"), F.col("embedding"), F.col("qn"), F.col("nrm")), 6
-        ),
-    )
-    w_rank = W.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        rescored.withColumn("rnk", F.row_number().over(w_rank))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("q_id", "vec_id", "cosine", "rnk")
-    )
+    return _top_by_cosine(
+        cands, ["q_id"], "vec_id", ("qe", "qn"), ("embedding", "nrm"), TOP_K
+    ).select("q_id", "vec_id", "cosine", "rnk")
 
 
 # Recall-targeted nprobe sizing (VERDICT r12 #1). The r12 sweep
@@ -791,25 +727,12 @@ def calibration_truth(
     (three evaluations at r14: one here, one per branch calibration)."""
     if calq is None:
         calq = _calibration_queries(emb, n, m_target)
-    pairs = (
-        emb.select(
-            "vec_id", F.col("embedding").alias("te"), F.col("nrm").alias("tn")
-        )
-        .join(F.broadcast(calq), F.col("vec_id") != F.col("q_id"))
-        .withColumn(
-            "cosine",
-            F.round(
-                cosine_prenormed(F.col("qe"), F.col("te"), F.col("qn"), F.col("tn")),
-                6,
-            ),
-        )
-    )
-    w_t = W.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w_t))
-        .filter(F.col("rnk") <= k)
-        .select("q_id", "vec_id")
-    )
+    pairs = emb.select(
+        "vec_id", F.col("embedding").alias("te"), F.col("nrm").alias("tn")
+    ).join(F.broadcast(calq), F.col("vec_id") != F.col("q_id"))
+    return _top_by_cosine(
+        pairs, ["q_id"], "vec_id", ("qe", "qn"), ("te", "tn"), k
+    ).select("q_id", "vec_id")
 
 
 def ivf_calibrate_nprobe(
@@ -866,25 +789,10 @@ def ivf_calibrate_nprobe(
         "q_id", "cent_id"
     )
     # Each query's centroid-distance ordering (centroids broadcast).
-    qrank = (
-        calq.join(F.broadcast(cents), how="cross")
-        .withColumn(
-            "cos_c",
-            F.round(
-                cosine_prenormed(
-                    F.col("qe"), F.col("cent_e"), F.col("qn"), F.col("cent_n")
-                ),
-                6,
-            ),
-        )
-        .withColumn(
-            "crank",
-            F.row_number().over(
-                W.partitionBy("q_id").orderBy(F.col("cos_c").desc(), F.col("cent_id"))
-            ),
-        )
-        .select("q_id", "cent_id", "crank")
-    )
+    qc = calq.join(F.broadcast(cents), how="cross")
+    qrank = _top_by_cosine(
+        qc, ["q_id"], "cent_id", ("qe", "qn"), _CENT, None, "cos_c", "crank"
+    ).select("q_id", "cent_id", "crank")
     hr = home.join(qrank, ["q_id", "cent_id"]).select("crank")
     curve = hr.groupBy("crank").agg(F.count("*").alias("c"))
     # Cumulative curve over <= nlist rows — a global window over a
@@ -1064,26 +972,17 @@ def _lsh_topk_multi(
         F.col("nrm").alias("q_nrm"),
     )
     ce = emb.select("vec_id", "embedding", "nrm")
-    scored = (
-        cand.join(F.broadcast(qe), "q_id")
-        .join(ce, "vec_id")
-        .withColumn(
-            "score",
-            F.round(
-                dot(as_double(F.col("q_emb")), as_double(F.col("embedding")))
-                / (F.col("q_nrm") * F.col("nrm")),
-                6,
-            ),
-        )
-    )
-    w = W.partitionBy("label", "q_id").orderBy(
-        F.col("score").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("label", "q_id", "vec_id", "score", "rank")
-    )
+    pairs = cand.join(F.broadcast(qe), "q_id").join(ce, "vec_id")
+    return _top_by_cosine(
+        pairs,
+        ["label", "q_id"],
+        "vec_id",
+        ("q_emb", "q_nrm"),
+        ("embedding", "nrm"),
+        k,
+        score="score",
+        rank="rank",
+    ).select("label", "q_id", "vec_id", "score", "rank")
 
 
 def _lsh_adaptive_oracle() -> str:
@@ -1394,7 +1293,7 @@ def _ivf_linear_oracle() -> str:
     tags=("similarity", "ann", "kmeans", "lsh"),
 )
 def simsearch_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-k cosine per standing query, all six strategies in one
+    """Top-k cosine per standing query, all seven strategies in one
     driver row (`variant` column):
 
     - 'exact': brute-force scan — the baseline every ANN variant's
@@ -1432,8 +1331,9 @@ def simsearch_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     The ANN branches are approximate relative to 'exact' (a true
     neighbor can live in an unprobed list/bucket — recall asserted in
     tests/test_llm_ops), but REPRODUCIBLE: every ranking uses
-    6-decimal-rounded cosines with id tie-breaks, so the DuckDB oracle
-    replays all four pipelines exactly and the driver hash-checks them.
+    6-decimal-rounded cosines with id tie-breaks (`_top_by_cosine`), so
+    the DuckDB oracle replays every variant exactly and the driver
+    hash-checks them.
 
     On the synthetic isotropic testdata the kmeans branch measures
     slightly below the seed branch (0.92 vs 0.96 recall at sf0.01,
@@ -1466,6 +1366,7 @@ def simsearch_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # embeddings cache on the MAIN thread so the chains below never
     # race to build it.
     n = emb_count(spark, sf_dir)
+    emb = load_embeddings(spark, sf_dir)
 
     def _chain_truth():
         # Shared calibration truth (r14): the exact top-k of the
@@ -1479,7 +1380,6 @@ def simsearch_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         # and hand it to the truth and both branch calibrations, so
         # the salted-md5 corpus filter runs once instead of three
         # times (each evaluation is a full corpus scan at 100 TB).
-        emb = load_embeddings(spark, sf_dir)
         calq = loose_local_checkpoint(
             _calibration_queries(emb, n, CAL_QUERY_TARGET)
         )
@@ -1491,8 +1391,8 @@ def simsearch_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         # kmeans variant's Lloyd input are the same broadcast-argmax
         # pass, and a lazy union would re-run it per branch (Catalyst
         # shares no subplans across union arms).
-        emb, seeds, seed_assign = _ivf_seed_frames(spark, sf_dir)
-        return emb, seeds, loose_local_checkpoint(seed_assign)
+        seeds = _stride_sample(emb, CENTROID_STRIDE)
+        return seeds, loose_local_checkpoint(_assign_nearest(emb, seeds))
 
     def _chain_adaptive():
         # The r10 scale-mitigation branch (100x probe: fixed-stride
@@ -1500,19 +1400,19 @@ def simsearch_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         # centroids), so the driver hash proves the adaptive formula
         # bit-agrees with the oracle's scalar-subquery twin at every
         # driver scale.
-        a_emb, a_cents, a_assign = _ivf_seed_frames_adaptive(spark, sf_dir, n=n)
+        a_cents = _stride_sample(emb, ivf_adaptive_stride(n))
         # The assignment feeds TWO consumers (the calibration's
         # home-list lookup and the query candidates) — materialize once.
-        a_assign = loose_local_checkpoint(a_assign)
+        a_assign = loose_local_checkpoint(_assign_nearest(emb, a_cents))
         # r13 (VERDICT r12 #1): the production branches size nprobe
         # from the measured recall curve of THIS index instead of the
         # pinned literal whose recall the r12 sweep showed decaying
         # with n.
         calq, truth = f_truth.result()
         np_a = ivf_calibrate_nprobe(
-            a_emb, a_cents, a_assign, n, truth=truth, calq=calq
+            emb, a_cents, a_assign, n, truth=truth, calq=calq
         )
-        return a_emb, a_cents, a_assign, np_a
+        return a_cents, a_assign, np_a
 
     def _chain_linear():
         # r12 (VERDICT r11 #2): the LINEAR-TIME index build — the
@@ -1525,7 +1425,7 @@ def simsearch_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         # floor keeps the md5 sample non-vacuous (see ivf_build_linear's
         # docstring). Same probe/rerank tail, so the branch differs
         # from ivf_adaptive exactly by the build topology under test.
-        l_emb, l_cents, l_assign = ivf_build_linear(
+        _, l_cents, l_assign = ivf_build_linear(
             spark,
             sf_dir,
             n=n,
@@ -1542,9 +1442,9 @@ def simsearch_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         # less than another eager checkpoint barrier.
         calq, truth = f_truth.result()
         np_l = ivf_calibrate_nprobe(
-            l_emb, l_cents, l_assign, n, truth=truth, calq=calq
+            emb, l_cents, l_assign, n, truth=truth, calq=calq
         )
-        return l_emb, l_cents, l_assign, np_l
+        return l_cents, l_assign, np_l
 
     def _chain_lsh():
         # Both LSH widths run FUSED in one shared pass (projections
@@ -1565,23 +1465,28 @@ def simsearch_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         f_adaptive = pool.submit(_chain_adaptive)
         f_linear = pool.submit(_chain_linear)
         f_lsh = pool.submit(_chain_lsh)
-        frames = f_seed.result()
-        a_emb, a_cents, a_assign, np_a = f_adaptive.result()
-        l_emb, l_cents, l_assign, np_l = f_linear.result()
+        seeds, seed_assign = f_seed.result()
+        a_cents, a_assign, np_a = f_adaptive.result()
+        l_cents, l_assign, np_l = f_linear.result()
         lsh_frame = f_lsh.result()
 
-    seed = _ivf_query(spark, sf_dir, refine=False, frames=frames).select(
+    # The kmeans branch: one pinned Lloyd step over the seed
+    # assignment (the registered row must bit-replay in DuckDB, so the
+    # fold order is pinned; production trains with the avg-based
+    # lloyd_refine), then the corpus reassigned to the refined cells.
+    km_cents = _lloyd_refine_pinned(seed_assign)
+    seed = _ivf_query(emb, seeds, seed_assign).select(
         F.lit("seed").alias("variant"), "*"
     )
-    km = _ivf_query(spark, sf_dir, refine=True, frames=frames).select(
+    km = _ivf_query(emb, km_cents, _assign_nearest(emb, km_cents)).select(
         F.lit("kmeans").alias("variant"), "*"
     )
-    ivf_a = _ivf_query(
-        spark, sf_dir, refine=False, frames=(a_emb, a_cents, a_assign), nprobe=np_a
-    ).select(F.lit("ivf_adaptive").alias("variant"), "*")
-    ivf_lin = _ivf_query(
-        spark, sf_dir, refine=False, frames=(l_emb, l_cents, l_assign), nprobe=np_l
-    ).select(F.lit("ivf_linear").alias("variant"), "*")
+    ivf_a = _ivf_query(emb, a_cents, a_assign, nprobe=np_a).select(
+        F.lit("ivf_adaptive").alias("variant"), "*"
+    )
+    ivf_lin = _ivf_query(emb, l_cents, l_assign, nprobe=np_l).select(
+        F.lit("ivf_linear").alias("variant"), "*"
+    )
     lsh_both = lsh_frame.select(
         F.col("label").alias("variant"),
         "q_id",
@@ -1623,9 +1528,7 @@ def simsearch_ivf_calibrated_topk(
     if info is not None:
         info["nprobe"] = np_c
         info["n"] = n
-    return _ivf_query(
-        spark, sf_dir, refine=False, frames=(emb, cents, assign), nprobe=np_c
-    )
+    return _ivf_query(emb, cents, assign, nprobe=np_c)
 
 
 @register(

@@ -194,6 +194,20 @@ def _collect_topk(df) -> dict[int, set[int]]:
     return out
 
 
+def _stride_index(spark, sf_dir: str, stride: int):
+    """(emb, seeds, assign): stride-sampled seed centroids and the exact
+    nearest-seed assignment — an IVF index ready for `_ivf_query`."""
+    from hgn_spark.operators.similarity import (
+        _assign_nearest,
+        _stride_sample,
+        load_embeddings,
+    )
+
+    emb = load_embeddings(spark, sf_dir)
+    seeds = _stride_sample(emb, stride)
+    return emb, seeds, _assign_nearest(emb, seeds)
+
+
 # ------------------------------------------------------------------- families
 
 
@@ -561,7 +575,7 @@ def probe_ann(spark, sf_dir: str, label: str) -> dict:
         TOP_K,
         QUERY_STRIDE,
         _ivf_query,
-        _ivf_seed_frames_adaptive,
+        ivf_adaptive_stride,
         lsh_adaptive_bits,
         simsearch_lsh_topk,
     )
@@ -595,11 +609,7 @@ def probe_ann(spark, sf_dir: str, label: str) -> dict:
         got, t = _timed(
             lambda p=nprobe: _collect_topk(
                 _ivf_query(
-                    spark,
-                    sf_dir,
-                    refine=False,
-                    frames=_ivf_seed_frames_adaptive(spark, sf_dir, n=n),
-                    nprobe=p,
+                    *_stride_index(spark, sf_dir, ivf_adaptive_stride(n)), nprobe=p
                 )
             )
         )

@@ -68,9 +68,13 @@ def main() -> None:
         neardup_incremental,
         ngram_jaccard_pairs_capped,
     )
+    from recall_probe import _stride_index
+
     from hgn_spark.operators.similarity import (
+        CENTROID_STRIDE,
         _ivf_query,
-        _ivf_seed_frames_adaptive,
+        emb_count,
+        ivf_adaptive_stride,
         load_embeddings,
         lsh_adaptive_bits,
         simsearch_lsh_topk,
@@ -85,7 +89,9 @@ def main() -> None:
         ),
         "minhash_lsh": minhash_lsh_pairs,
         "simhash": dedup_simhash_pairs,
-        "ivf_seed_probe": lambda s, d: _ivf_query(s, d, refine=False),
+        "ivf_seed_probe": lambda s, d: _ivf_query(
+            *_stride_index(s, d, CENTROID_STRIDE)
+        ),
         "lsh_multiprobe": lambda s, d: simsearch_lsh_topk(s, d),
         "pagerank_row": rows["graph_pagerank"].fn,
         "lpa_row": rows["graph_label_propagation"].fn,
@@ -94,7 +100,7 @@ def main() -> None:
         # first run (ivf fixed-stride 846.9x, lsh fixed-width 74.2x,
         # simhash fixed-chunk-space 42.7x)
         "ivf_adaptive_probe": lambda s, d: _ivf_query(
-            s, d, refine=False, frames=_ivf_seed_frames_adaptive(s, d)
+            *_stride_index(s, d, ivf_adaptive_stride(emb_count(s, d)))
         ),
         "lsh_adaptive_multiprobe": lambda s, d: simsearch_lsh_topk(
             s, d, n_bits=lsh_adaptive_bits(load_embeddings(s, d).count())

@@ -5,7 +5,7 @@ reports growth factors plus end-to-end recall@k of the query path over
 each index (numpy brute-force truth, the r11 recall-probe oracle).
 
 Builders:
-- ``exact_assign``: `_ivf_seed_frames_adaptive` — sqrt-n centroids,
+- ``exact_assign``: sqrt-n stride centroids (`ivf_adaptive_stride`),
   exact broadcast argmax assign. O(n^1.5): the n x sqrt(n) assign is
   the superlinear step this probe exists to retire (r10 measured 5.7x
   build time for 3x data, 100x -> 300x).
@@ -56,13 +56,19 @@ def main() -> None:
     ]
     out_path = sys.argv[2] if len(sys.argv) > 2 else None
 
-    from recall_probe import _collect_topk, _load_vectors, _np_exact_topk, _topk_overlap
+    from recall_probe import (
+        _collect_topk,
+        _load_vectors,
+        _np_exact_topk,
+        _stride_index,
+        _topk_overlap,
+    )
 
     from hgn_spark.operators.similarity import (
         TOP_K,
         QUERY_STRIDE,
         _ivf_query,
-        _ivf_seed_frames_adaptive,
+        ivf_adaptive_stride,
         ivf_build_linear,
     )
     from hgn_spark.registry import clear_session_caches
@@ -70,7 +76,7 @@ def main() -> None:
 
     spark = get_spark(app_name="ivf_build_probe")
     builders = {
-        "exact_assign": lambda d, n: _ivf_seed_frames_adaptive(spark, d, n=n),
+        "exact_assign": lambda d, n: _stride_index(spark, d, ivf_adaptive_stride(n)),
         "linear": lambda d, n: ivf_build_linear(spark, d, n=n),
     }
     out: dict = {"probe": "ivf_build_r12", "scales": {}}
@@ -95,11 +101,7 @@ def main() -> None:
             res[name] = {"secs_build": t_build}
             for nprobe in (3, 8, 16, 32):
                 t0 = time.perf_counter()
-                got = _collect_topk(
-                    _ivf_query(
-                        spark, sf_dir, refine=False, frames=frames, nprobe=nprobe
-                    )
-                )
+                got = _collect_topk(_ivf_query(*frames, nprobe=nprobe))
                 t_query = round(time.perf_counter() - t0, 2)
                 res[name][f"nprobe{nprobe}"] = {
                     "secs_query": t_query,

@@ -6,7 +6,7 @@ nprobe=32 decayed 0.95 -> 0.44-0.51 at 100x because nlist ~ sqrt(n)
 shrinks any pinned dial's probed fraction).
 
 Per (corpus, scale) x builder:
-  1. build the index (exact_assign = `_ivf_seed_frames_adaptive`;
+  1. build the index (exact_assign = sqrt-n stride seeds + exact argmax;
      linear = `ivf_build_linear` production avg-Lloyd), materialize
      the assignment (served-index protocol, as in the r12 probe);
   2. `ivf_calibrate_nprobe` sizes the dial from the index's own
@@ -63,14 +63,20 @@ def main() -> None:
     ]
     out_path = sys.argv[2] if len(sys.argv) > 2 else None
 
-    from recall_probe import _collect_topk, _load_vectors, _np_exact_topk, _topk_overlap
+    from recall_probe import (
+        _collect_topk,
+        _load_vectors,
+        _np_exact_topk,
+        _stride_index,
+        _topk_overlap,
+    )
 
     from hgn_spark.operators.similarity import (
         CAL_TARGET_PCT,
         QUERY_STRIDE,
         TOP_K,
         _ivf_query,
-        _ivf_seed_frames_adaptive,
+        ivf_adaptive_stride,
         ivf_build_linear,
         ivf_calibrate_nprobe,
     )
@@ -79,7 +85,7 @@ def main() -> None:
 
     spark = get_spark(app_name="ivf_calibrated_probe")
     builders = {
-        "exact_assign": lambda d, n: _ivf_seed_frames_adaptive(spark, d, n=n),
+        "exact_assign": lambda d, n: _stride_index(spark, d, ivf_adaptive_stride(n)),
         "linear": lambda d, n: ivf_build_linear(spark, d, n=n),
     }
     # r14 (VERDICT r13 #4): the 1000x tier runs the PRODUCTION linear
@@ -120,14 +126,7 @@ def main() -> None:
             nlist = cents.count()
             t0 = time.perf_counter()
             got = _collect_topk(
-                _ivf_query(
-                    spark,
-                    sf_dir,
-                    refine=False,
-                    frames=(emb, cents, assign),
-                    nprobe=np_c,
-                    query_stride=stride,
-                )
+                _ivf_query(emb, cents, assign, nprobe=np_c, query_stride=stride)
             )
             t_query = round(time.perf_counter() - t0, 2)
             res[name] = {

@@ -269,26 +269,50 @@ def test_lloyd_avg_matches_pinned_fold(spark):
     path in changes nothing downstream."""
     from hgn_spark.operators.similarity import (
         CENTROID_STRIDE,
+        _assign_nearest,
         _lloyd_refine_pinned,
+        _stride_sample,
         lloyd_refine,
         load_embeddings,
     )
-    from pyspark.sql import functions as F
 
     emb = load_embeddings(spark, SF_SMOKE)
-    seeds = emb.filter(F.col("vec_id") % CENTROID_STRIDE == 0).select(
-        F.col("vec_id").alias("cent_id"),
-        F.col("embedding").alias("cent_e"),
-        F.col("nrm").alias("cent_n"),
-    )
-    prod = {r["cent_id"]: r["cent_e"] for r in lloyd_refine(emb, seeds).collect()}
+    assign0 = _assign_nearest(emb, _stride_sample(emb, CENTROID_STRIDE))
+    prod = {r["cent_id"]: r["cent_e"] for r in lloyd_refine(assign0).collect()}
     pinned = {
         r["cent_id"]: r["cent_e"]
-        for r in _lloyd_refine_pinned(emb, seeds).collect()
+        for r in _lloyd_refine_pinned(assign0).collect()
     }
     assert set(prod) == set(pinned)
     for cid in prod:
         assert prod[cid] == pinned[cid], cid
+
+
+def test_row_number_only_in_ranking_kernel():
+    """Every similarity ranking goes through ``_top_by_cosine`` — the
+    rule the DuckDB oracles replay (6-decimal cosine, id tie-break,
+    row_number per key) is written once. Only Python ``F.row_number``
+    calls count; the oracle SQL strings are not Python calls."""
+    import ast
+    from pathlib import Path
+
+    import hgn_spark.operators.similarity as sim
+
+    tree = ast.parse(Path(sim.__file__).read_text())
+    owner = {}
+    for fn in ast.walk(tree):
+        if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            for node in ast.walk(fn):
+                owner.setdefault(id(node), fn.name)
+    stray = [
+        f"{owner.get(id(node))}:{node.lineno}"
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "row_number"
+        and owner.get(id(node)) != "_top_by_cosine"
+    ]
+    assert stray == [], f"row_number outside _top_by_cosine: {stray}"
 
 
 def test_neardup_incremental_matches_full_pair_split(spark):
@@ -1605,14 +1629,17 @@ def test_ivf_calibrated_nprobe_meets_target(spark):
     from hgn_spark.operators.similarity import (
         CAL_TARGET_PCT,
         NPROBE,
-        _ivf_seed_frames_adaptive,
+        _assign_nearest,
+        _stride_sample,
         ivf_adaptive_stride,
         ivf_calibrate_nprobe,
         load_embeddings,
     )
 
-    n = load_embeddings(spark, SF_SMOKE).count()
-    emb, cents, assign = _ivf_seed_frames_adaptive(spark, SF_SMOKE, n=n)
+    emb = load_embeddings(spark, SF_SMOKE)
+    n = emb.count()
+    cents = _stride_sample(emb, ivf_adaptive_stride(n))
+    assign = _assign_nearest(emb, cents)
     np_c = ivf_calibrate_nprobe(emb, cents, assign, n)
     nlist = cents.count()
     assert 1 <= np_c <= nlist
