@@ -42,50 +42,6 @@ from hgn_spark.checkpoint import CheckpointJanitor, loose_local_checkpoint
 from hgn_spark.graph.core import symmetrize
 
 
-def shortest_path_lengths(edges: DataFrame, max_len: int = 2) -> DataFrame:
-    """Ordered-pair BFS distances ≤ max_len → (src, dst, distance).
-
-    Iterated frontier expansion: distance d pairs = (d-1)-pairs joined
-    one more hop, minus already-seen pairs. For the reference's k=2 this
-    is a single self-join; general k costs k-1 joins, each shuffling on
-    the frontier key — the distributed analogue of the reference's
-    batched Pregel shortestPaths (graph_tools/graph_tools.py:115-153)
-    without the landmark collect.
-    """
-    sym = symmetrize(edges)
-    known = sym.withColumn("distance", F.lit(1))
-    frontier = sym
-    with CheckpointJanitor(edges.sparkSession) as jan:
-        for d in range(2, max_len + 1):
-            a = frontier.alias("a")
-            b = sym.alias("b")
-            nxt = (
-                a.join(b, F.col("a.dst") == F.col("b.src"))
-                .select(F.col("a.src").alias("src"), F.col("b.dst").alias("dst"))
-                .filter(F.col("src") != F.col("dst"))
-                .distinct()
-                .join(known.select("src", "dst"), ["src", "dst"], "left_anti")
-                .withColumn("distance", F.lit(d))
-            )
-            # Level d's checkpoint copies the whole known set forward,
-            # so level d-1's blocks are superseded — free them eagerly.
-            # The next frontier must be RE-DERIVED from the new
-            # checkpoint, not kept as the lazy `nxt` plan: `nxt`'s
-            # anti-join references the previous `known` generation,
-            # whose blocks are released below — re-evaluating it next
-            # round would read truncated-lineage checkpoint blocks and
-            # crash (observed at max_len >= 4; the shipped k=2/3 depths
-            # never re-evaluate a released generation, which is how the
-            # bug stayed latent).
-            prev, known = known, jan.checkpoint(known.unionByName(nxt))
-            frontier = known.filter(F.col("distance") == d).drop("distance")
-            if d > 2:
-                jan.release(prev)
-        # The last level is the caller's result (level 1 is the lazy
-        # symmetrized input, never checkpointed).
-        return jan.keep(known) if max_len >= 2 else known
-
-
 def shortest_paths(
     edges: DataFrame, max_len: int = 2, edges_canonical: bool = False
 ) -> DataFrame:
@@ -101,6 +57,10 @@ def shortest_paths(
     against known pairs, checkpointed. (The reference enumerates ALL
     walks per length with motifs and intersects with Pregel distances —
     graph_tools.py:162-218 — which revisits every length from scratch.)
+
+    The distinct (src, dst, distance) projection is the truncated BFS
+    distance table (G5; the reference's batched Pregel shortestPaths,
+    graph_tools/graph_tools.py:115-153, without the landmark collect).
     """
     sym = symmetrize(edges, assume_canonical=edges_canonical)
     p1 = sym.select(
@@ -150,10 +110,11 @@ def edge_betweenness_brandes(
     edges_canonical: bool = False,
 ) -> DataFrame:
     """Fractional-GN edge betweenness via truncated Brandes σ/δ
-    accumulation — identical output to ``edge_betweenness`` (default
-    semantics, pinned in tests) but built for LARGE truncation depths.
+    accumulation — identical output to path enumeration (default
+    semantics, pinned in tests) but built for LARGE truncation depths;
+    `edge_betweenness` runs it at k >= 3.
 
-    ``edge_betweenness`` materializes every shortest path as an array;
+    Enumeration materializes every shortest path as an array;
     its row count is the number of PATHS, which grows multiplicatively
     with depth on dense graphs. This variant keeps only per-pair state:
 
@@ -311,42 +272,27 @@ def edge_betweenness_sampled(
     )
 
 
-def choose_betweenness_path(
-    max_sp_length: int,
-    any_compat: bool = False,
-    allow_approx: bool = False,
-) -> str:
-    """The kernel-dispatch rule as a PURE plan-time function (VERDICT
-    r13 #3: the dial rule lived in ARCHITECTURE prose while
-    `choose_jaccard_path` set the precedent of executable dispatch —
-    a caller asking for k=4 got the 381.7 s enumeration unless they
-    knew the flags). Returns 'paths', 'sigma' or 'sampled'.
+def choose_betweenness_path(max_sp_length: int, any_compat: bool = False) -> str:
+    """The kernel-dispatch rule as a PURE plan-time function (the
+    `choose_jaccard_path` mold): returns 'paths' or 'sigma'.
 
     Rationale, all points MEASURED on Hamsterster (1.9k vertices /
-    12.5k edges, local[32]; ARCHITECTURE §betweenness +
-    PROBE_betweenness_sampled_r13):
+    12.5k edges, local[32]; ARCHITECTURE §betweenness, outputs
+    bit-equal):
 
     - k <= 2 → 'paths': enumeration wins (1.9 s vs sigma 7.7 s at
       k=2) — path volume is still tiny and the σ/δ backward pass's
       per-level joins cost more stages than they save;
-    - k == 3 → 'sigma': per-pair state overtakes enumeration
-      (22.9 s vs 38.4 s) as path count grows multiplicatively;
-    - k >= 4 → 'sigma' exact by default (26.1 s vs 381.7 s — 14.6×);
-      with ``allow_approx`` → 'sampled' (Brandes–Pich source
-      sampling: 14.4 s at f=0.25, 7.5 s at f=0.1, downstream
-      delete-rule flag precision 1.0 / recall 0.95 at f=0.25).
-      Sampling is an ESTIMATOR — it changes values, so it is never
-      chosen unless the caller opts in.
+    - k >= 3 → 'sigma': per-pair state overtakes enumeration
+      (k=3: 22.9 s vs 38.4 s; k=4: 26.1 s vs 381.7 s, 14.6×) as path
+      count grows multiplicatively with depth.
 
     Compat modes need concrete paths, so they force 'paths' at any
     depth (the quirk-fidelity modes exist for small reference-parity
-    runs, not scale)."""
-    if any_compat:
+    runs, not scale). The source-sampled estimator is never chosen
+    here — it changes values; call `edge_betweenness_sampled`."""
+    if any_compat or max_sp_length <= 2:
         return "paths"
-    if max_sp_length <= 2:
-        return "paths"
-    if max_sp_length >= 4 and allow_approx:
-        return "sampled"
     return "sigma"
 
 
@@ -355,32 +301,15 @@ def edge_betweenness(
     max_sp_length: int = 2,
     compat_single_path: bool = False,
     compat_max_length_only: bool = False,
-    method: str = "auto",
-    allow_approx: bool = False,
-    source_fraction: float = 0.25,
     edges_canonical: bool = False,
 ) -> DataFrame:
     """→ (src, dst, betweenness) on canonical src < dst edges, for any
-    truncation depth: enumerate shortest paths, credit each ordered
-    pair's unit across its σ paths (or a single deterministic path in
-    compat mode — quirk §8.2), explode the path arrays, sum per
-    canonical edge.
-
-    ``method``: "paths" (enumerate; fewer stages, fastest at k=2),
-    "sigma" (edge_betweenness_brandes; per-pair state only, the
-    deep-truncation scale path), or "auto" (r14: delegates to the
-    executable `choose_betweenness_path` rule — paths at k <= 2,
-    sigma at k = 3+, and with ``allow_approx`` the Brandes–Pich
-    source-sampled estimator at ``source_fraction`` for k >= 4;
-    approximation changes VALUES, so it is opt-in and never chosen
-    silently). The thresholds are measured, not guessed — on
-    Hamsterster (1.9k vertices / 12.5k edges, local[32], outputs
-    bit-equal): k=2 paths 1.9 s vs sigma 7.7 s; k=3 paths 38.4 s vs
-    sigma 22.9 s; k=4 paths 381.7 s vs sigma 26.1 s (14.6×) — path
-    enumeration detonates multiplicatively with depth while σ/δ state
-    stays per-pair (full numbers in ARCHITECTURE.md §betweenness).
-    Compat modes (reference-fidelity quirks, each independently
-    toggleable; both at once reproduces the reference most closely):
+    truncation depth, through the kernel `choose_betweenness_path`
+    picks: shortest-path enumeration at k <= 2 (`_edge_betweenness_paths`),
+    σ/δ accumulation (`edge_betweenness_brandes`) at k >= 3. Both give
+    the same values (pinned in tests). Compat modes (reference-fidelity
+    quirks, each independently toggleable; both at once reproduces the
+    reference most closely) always enumerate:
 
     - ``compat_single_path`` (SURVEY §8.2): one surviving path per
       ordered pair instead of fractional 1/σ credit;
@@ -390,27 +319,32 @@ def edge_betweenness(
       every shorter length, so e.g. its k=2 betweenness never credits
       the distance-1 pairs. Default-correct behavior counts all
       lengths.
-
-    Compat modes need concrete paths, so they always enumerate.
     """
-    if method not in ("auto", "paths", "sigma"):
-        raise ValueError(f"unknown betweenness method: {method!r}")
     any_compat = compat_single_path or compat_max_length_only
-    if method == "sigma" and any_compat:
-        raise ValueError("compat modes need concrete paths; use method='paths'")
-    if method == "auto":
-        chosen = choose_betweenness_path(
-            max_sp_length, any_compat=any_compat, allow_approx=allow_approx
-        )
-        if chosen == "sampled":
-            return edge_betweenness_sampled(
-                edges, max_sp_length, source_fraction=source_fraction
-            )
-        method = chosen
-    if method == "sigma":
+    if choose_betweenness_path(max_sp_length, any_compat) == "sigma":
         return edge_betweenness_brandes(
             edges, max_sp_length, edges_canonical=edges_canonical
         )
+    return _edge_betweenness_paths(
+        edges,
+        max_sp_length,
+        compat_single_path=compat_single_path,
+        compat_max_length_only=compat_max_length_only,
+        edges_canonical=edges_canonical,
+    )
+
+
+def _edge_betweenness_paths(
+    edges: DataFrame,
+    max_sp_length: int,
+    compat_single_path: bool = False,
+    compat_max_length_only: bool = False,
+    edges_canonical: bool = False,
+) -> DataFrame:
+    """Betweenness by enumeration: every shortest path ≤ max_sp_length,
+    each ordered pair's unit credited across its σ paths (or to a
+    single deterministic path in compat mode — quirk §8.2), path arrays
+    exploded and summed per canonical edge."""
     sp = shortest_paths(
         edges, max_len=max_sp_length, edges_canonical=edges_canonical
     )

@@ -279,13 +279,8 @@ def hgn_communities(
                 ),
                 storage_level=_pair_table_storage(e.sparkSession, n_edges),
             )
-            scored, _members_all = r_metrics_edges_pairs(
-                e,
-                p.r_lvl1_thres,
-                p.r_lvl2_thres,
-                scope=scope,
-                edges_canonical=True,
-                pairs=pt,
+            scored = r_metrics_edges_pairs(
+                scope if scope is not None else e, pt, p.r_lvl1_thres, p.r_lvl2_thres
             )
             cand = jan.checkpoint(scored.filter(~F.col("keepit")).select("src", "dst"))
             weights = hybrid_edge_weights_members(

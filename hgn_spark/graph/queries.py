@@ -30,7 +30,7 @@ from hgn_spark.graph.betweenness import edge_betweenness
 from hgn_spark.graph.components import connected_components
 from hgn_spark.graph.core import degrees, neighbors
 from hgn_spark.graph.hgn import HGNParams, hgn_communities
-from hgn_spark.graph.rmetrics import r_metrics_edges
+from hgn_spark.graph.rmetrics import _tagged_pairs2, r_metrics_edges_pairs
 from hgn_spark.registry import register
 
 R1_THRES = 0.25
@@ -201,10 +201,12 @@ def graph_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("graph",),
 )
 def graph_rmetrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r11/r12/r21/r22 + keepit per edge (G4 with UD2-UD5 as native
-    expressions, graph_tools/graph_tools.py:372-435)."""
-    scored = r_metrics_edges(
-        derived_edges(spark, sf_dir), R1_THRES, R2_THRES, edges_canonical=True
+    """r11/r12/r21/r22 + keepit per edge (G4 with UD2-UD5 as joins and
+    counts over the tagged pair table, graph_tools/graph_tools.py:372-435)
+    — the scorer every hgn_communities step runs."""
+    e = derived_edges(spark, sf_dir)
+    scored = r_metrics_edges_pairs(
+        e, _tagged_pairs2(e, edges_canonical=True), R1_THRES, R2_THRES
     )
     return scored.select(
         "src",
@@ -320,9 +322,9 @@ def graph_shortest_paths_k2(spark: SparkSession, sf_dir: str) -> DataFrame:
     (src, dst, distance) projection of this row IS the truncated
     BFS-distances result, so this also carries the G5 evidence (the
     formerly standalone `graph_sp_lengths` row — merged to free an
-    oracle slot; `betweenness.shortest_path_lengths` itself stays
-    covered by tests/test_graph.py and the BFS property test). The
-    array<struct> path column is exercised in tests/test_graph.py."""
+    oracle slot; the BFS property tests check the same projection at
+    deeper truncations). The array<struct> path column is exercised in
+    tests/test_graph.py."""
     from hgn_spark.graph.betweenness import shortest_paths
 
     sp = shortest_paths(derived_edges(spark, sf_dir), max_len=2, edges_canonical=True)

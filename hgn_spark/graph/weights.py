@@ -13,10 +13,11 @@ per feature column, so
 
 which is a handful of native comparisons — no ML pipeline, no Python
 worker hop, exact. (Divergence note: the reference's OneHotEncoder
-keeps Spark's dropLast=True default, so one category per feature
-encodes as the zero vector and its matches score 0 — SURVEY §8.10. We
-compute the true cosine; pass compat_drop_last=True to reproduce the
-reference's artifact.)
+keeps Spark's dropLast=True default, which SURVEY §8.10 expects to
+encode one category per feature as the zero vector. For the reference
+pipeline itself, run ml_one_hot_cosine_similarities: it is the actual
+StringIndexer/OneHotEncoder chain, and its parity with the closed form
+here is pinned in tests.)
 
 Hybrid weights: the reference's j_1/j_2/j_3 right-join dance
 (graph_tools/graph_tools.py:437-517) computes, per candidate-delete
@@ -37,7 +38,6 @@ def one_hot_cosine_similarities(
     edges: DataFrame,
     vertices: DataFrame,
     feature_cols: list[str],
-    compat_drop_last: bool = False,
 ) -> DataFrame:
     """Per-edge attribute cosine → (src, dst, similarity).
 
@@ -56,14 +56,6 @@ def one_hot_cosine_similarities(
     joined = edges.join(src_side, edges["src"] == src_side["_sid"]).join(
         dst_side, edges["dst"] == dst_side["_did"]
     )
-    if compat_drop_last:
-        # Bit-parity with the reference's ML pipeline belongs to
-        # ml_one_hot_cosine_similarities, which runs the actual
-        # StringIndexer/OneHotEncoder chain (quirks §8.9/§8.10 included)
-        # rather than re-deriving Spark ML internals here.
-        raise NotImplementedError(
-            "use ml_one_hot_cosine_similarities for reference-pipeline parity"
-        )
     matches = sum(
         F.when(F.col(f"_src_{c}") == F.col(f"_dst_{c}"), 1).otherwise(0)
         for c in feature_cols

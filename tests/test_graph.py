@@ -14,9 +14,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from hgn_spark.graph.betweenness import (
+    _edge_betweenness_paths,
     edge_betweenness,
     edge_betweenness_brandes,
-    shortest_path_lengths,
+    edge_betweenness_sampled,
     shortest_paths,
 )
 from hgn_spark.graph.components import (
@@ -26,12 +27,18 @@ from hgn_spark.graph.components import (
 )
 from hgn_spark.graph.core import degrees, drop_isolated_vertices, neighbors, symmetrize
 from hgn_spark.graph.hgn import HGNParams, hgn_communities
-from hgn_spark.graph.rmetrics import r_metrics_edges
+from hgn_spark.graph.rmetrics import (
+    _common_member_rows,
+    _endpoints,
+    _tagged_pairs2,
+    candidate_common_members,
+    r_metrics_edges_pairs,
+)
 from hgn_spark.graph.weights import (
     hybrid_edge_weights_members,
     one_hot_cosine_similarities,
 )
-from tests.conftest import SF_BENCH, set_scope_gates
+from tests.conftest import SF_BENCH, SF_SMOKE, set_scope_gates
 
 EDGES = [(1, 2), (2, 3), (1, 3), (4, 5), (5, 6), (4, 6), (3, 4)]
 
@@ -71,13 +78,16 @@ def test_symmetrize_assume_canonical_same_rows(edges):
 
 
 def test_rmetrics_pairs_canonical_flag_identical(edges):
-    """r_metrics_edges_pairs with edges_canonical=True (the HGN loop's
-    call shape since r15) equals the safe default on canonical input —
-    scored values and member rows both."""
-    from hgn_spark.graph.rmetrics import r_metrics_edges_pairs
-
-    s0, m0 = r_metrics_edges_pairs(edges, 0.25, 0.9)
-    s1, m1 = r_metrics_edges_pairs(edges, 0.25, 0.9, edges_canonical=True)
+    """Scoring through a pair table built with edges_canonical=True
+    (the HGN loop's and the graph_rmetrics row's call shape) equals the
+    safe default on canonical input — scored values and member rows
+    both."""
+    pt0 = _tagged_pairs2(edges)
+    pt1 = _tagged_pairs2(edges, edges_canonical=True)
+    s0 = r_metrics_edges_pairs(edges, pt0, 0.25, 0.9)
+    s1 = r_metrics_edges_pairs(edges, pt1, 0.25, 0.9)
+    m0 = _common_member_rows(edges, pt0)
+    m1 = _common_member_rows(edges, pt1)
     key = lambda r: (r["src"], r["dst"])  # noqa: E731
     assert {key(r): (r["r11"], r["r12"], r["r21"], r["r22"], r["keepit"])
             for r in s0.collect()} == {
@@ -110,8 +120,12 @@ def test_neighbors_lvl2(edges):
 
 
 def test_shortest_path_lengths(edges):
-    sp = shortest_path_lengths(edges, max_len=2)
-    got = {(r["src"], r["dst"]): r["distance"] for r in sp.collect()}
+    """Truncated BFS distances are the (src, dst, distance) projection
+    of shortest_paths: one distance per ordered pair."""
+    sp = shortest_paths(edges, max_len=2).select("src", "dst", "distance").distinct()
+    rows = sp.collect()
+    got = {(r["src"], r["dst"]): r["distance"] for r in rows}
+    assert len(got) == len(rows)
     assert got[(1, 2)] == 1
     assert got[(1, 4)] == 2
     assert got[(3, 5)] == 2
@@ -120,7 +134,8 @@ def test_shortest_path_lengths(edges):
 
 
 def test_rmetrics(edges):
-    scored = r_metrics_edges(edges, r_lvl1_thres=0.25, r_lvl2_thres=0.9)
+    pt = _tagged_pairs2(edges)
+    scored = r_metrics_edges_pairs(edges, pt, r_lvl1_thres=0.25, r_lvl2_thres=0.9)
     rows = {(r["src"], r["dst"]): r for r in scored.collect()}
     e12 = rows[(1, 2)]
     assert e12["r11"] == pytest.approx(0.5)  # CN={3}, deg(1)=2
@@ -128,7 +143,8 @@ def test_rmetrics(edges):
     assert e12["keepit"] is True
     bridge = rows[(3, 4)]
     assert bridge["r11"] == 0.0 and bridge["r12"] == 0.0  # no lvl1 CN
-    assert sorted(bridge["common_neighbors"]) == [1, 2, 5, 6]  # lvl2 CN
+    members = _common_member_rows(edges, pt).filter("src = 3 AND dst = 4")
+    assert sorted(r["member"] for r in members.collect()) == [1, 2, 5, 6]  # lvl2 CN
     assert bridge["r21"] == pytest.approx(4 / 5)  # |CN|=4, |lvl2(3)|=5
     assert bridge["r22"] == pytest.approx(4 / 5)
     assert bridge["keepit"] is False  # 0.8 < 0.9 threshold
@@ -192,10 +208,6 @@ def test_betweenness_compat_max_length_only(spark):
     # only the two ordered distance-2 paths (1→3, 3→1), each crossing
     # both edges once
     assert compat == {(1, 2): pytest.approx(2.0), (2, 3): pytest.approx(2.0)}
-    with pytest.raises(ValueError, match="compat"):
-        edge_betweenness(
-            pg, max_sp_length=2, compat_max_length_only=True, method="sigma"
-        )
 
 
 def test_betweenness_k3_path_graph(spark):
@@ -223,12 +235,12 @@ def test_brandes_equals_path_enumeration(edges, k):
     path-enumeration default at every truncation depth (same edge set,
     values to 1e-9) — here on the two-triangle bridge fixture, whose
     diameter (3) exercises a non-trivial deepest layer at k=3."""
-    # method="paths" pins the enumerating side explicitly — auto would
+    # The enumeration body is called directly — edge_betweenness would
     # route k=3 through sigma too (measured crossover at k > 2), making
     # the comparison vacuous.
     a = {
         (r["src"], r["dst"]): r["betweenness"]
-        for r in edge_betweenness(edges, max_sp_length=k, method="paths").collect()
+        for r in _edge_betweenness_paths(edges, max_sp_length=k).collect()
     }
     b = {
         (r["src"], r["dst"]): r["betweenness"]
@@ -408,10 +420,9 @@ def test_ml_pipeline_cosine_equals_closed_form(spark):
 
 
 def test_hybrid_edge_weights_members(edges, vertices):
-    from hgn_spark.graph.rmetrics import r_metrics_edges_pairs
-
-    scored, members = r_metrics_edges_pairs(edges, 0.25, 0.9)
-    cand_members = members.join(
+    pt = _tagged_pairs2(edges)
+    scored = r_metrics_edges_pairs(edges, pt, 0.25, 0.9)
+    cand_members = _common_member_rows(edges, pt).join(
         scored.filter(~F.col("keepit")).select("src", "dst"),
         ["src", "dst"],
         "left_semi",
@@ -445,37 +456,82 @@ def test_hgn_loop_splits_triangles(edges, vertices):
     assert comps == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 4}
 
 
-def test_rmetrics_pair_form_equals_array_form(spark):
-    """r13 delete-rule dial (VERDICT r12 #3): the pair-form r-metrics
-    (flat (id, nb) equi-joins — the DuckDB oracle's own formulation)
-    must be BIT-identical to the array form on the real derived graph:
-    same edges, same four ratios, same keepit. Integer counts divided
-    by integer counts leave no rounding surface."""
+@pytest.mark.parametrize(
+    "sf,structured",
+    [
+        (SF_SMOKE, False),
+        pytest.param(
+            SF_BENCH,
+            True,
+            marks=pytest.mark.skipif(
+                not os.path.isdir(SF_BENCH), reason="sf0.1 data absent"
+            ),
+        ),
+    ],
+    ids=["smoke", "sf0.1"],
+)
+def test_rmetrics_matches_python_sets_reference(spark, sf, structured):
+    """The scorer against an independent driver-side reference on the
+    real derived graph: per edge, level-1/level-2 neighborhoods as
+    plain Python sets, their sizes, the common members, the four
+    ratios and keepit. Integer counts divided by integer counts, so
+    the doubles must be equal, not close. The smoke graph is five
+    disjoint edges (every ratio 0); sf0.1's 2,824 edges carry common
+    members and both keepit outcomes."""
     from hgn_spark.graph.queries import R1_THRES, R2_THRES, derived_edges
-    from hgn_spark.graph.rmetrics import r_metrics_edges, r_metrics_edges_pairs
-    from tests.conftest import SF_SMOKE
 
-    e = derived_edges(spark, SF_SMOKE)
-    arr = {
+    e = derived_edges(spark, sf)
+    pairs = [(r["src"], r["dst"]) for r in e.collect()]
+    n1: dict[int, set[int]] = {}
+    for u, v in pairs:
+        n1.setdefault(u, set()).add(v)
+        n1.setdefault(v, set()).add(u)
+    n2 = {
+        v: (nb | {w for u in nb for w in n1[u]}) - {v} for v, nb in n1.items()
+    }
+    want_scored, want_members, want_cc = {}, set(), {}
+    for s, d in pairs:
+        c1 = (n1[s] & n1[d]) - {s, d}
+        c2 = (n2[s] & n2[d]) - {s, d}
+        r = (
+            len(c1) / len(n1[s]),
+            len(c1) / len(n1[d]),
+            len(c2) / len(n2[s]),
+            len(c2) / len(n2[d]),
+        )
+        keep = r[0] > R1_THRES or r[1] > R1_THRES or r[2] > R2_THRES or r[3] > R2_THRES
+        want_scored[(s, d)] = (*r, keep)
+        want_members |= {(s, d, m) for m in c2}
+        if c2:
+            want_cc[(s, d)] = (len(c1), len(c2))
+    if structured:
+        assert {v[4] for v in want_scored.values()} == {True, False}
+        assert want_members
+
+    pt = _tagged_pairs2(e, edges_canonical=True)
+    got_counts = {
+        r["src"]: (r["c1"], r["c2"])
+        for r in pt.groupBy("src")
+        .agg(F.count(F.when(F.col("is_l1"), 1)).alias("c1"), F.count("*").alias("c2"))
+        .collect()
+    }
+    assert got_counts == {v: (len(n1[v]), len(n2[v])) for v in n1}
+    got_scored = {
         (r["src"], r["dst"]): (r["r11"], r["r12"], r["r21"], r["r22"], r["keepit"])
-        for r in r_metrics_edges(e, R1_THRES, R2_THRES).collect()
+        for r in r_metrics_edges_pairs(e, pt, R1_THRES, R2_THRES).collect()
     }
-    scored, members2 = r_metrics_edges_pairs(e, R1_THRES, R2_THRES)
-    pair = {
-        (r["src"], r["dst"]): (r["r11"], r["r12"], r["r21"], r["r22"], r["keepit"])
-        for r in scored.collect()
+    assert got_scored == want_scored
+    members = _common_member_rows(e, pt, both_l1=True)
+    assert {
+        (r["src"], r["dst"], r["member"]) for r in members.collect()
+    } == want_members
+    got_cc = {
+        (r["src"], r["dst"]): (r["c1"], r["c2"])
+        for r in members.groupBy("src", "dst")
+        .agg(F.count(F.when(F.col("both_l1"), 1)).alias("c1"), F.count("*").alias("c2"))
+        .collect()
     }
-    assert arr == pair
-    # and the member rows equal the array path's exploded sets
-    want_members = {
-        (r["src"], r["dst"], m)
-        for r in r_metrics_edges(e, R1_THRES, R2_THRES).collect()
-        for m in r["common_neighbors"]
-    }
-    got_members = {
-        (r["src"], r["dst"], r["member"]) for r in members2.collect()
-    }
-    assert got_members == want_members
+    assert got_cc == want_cc
 
 
 def test_candidate_common_members_matches_full(edges):
@@ -485,13 +541,9 @@ def test_candidate_common_members_matches_full(edges):
     candidate members). On the fixture the bridge (3,4) is the sole
     candidate at these thresholds, with level-2 common members
     {1,2,5,6}."""
-    from hgn_spark.graph.rmetrics import (
-        candidate_common_members,
-        r_metrics_edges_pairs,
-    )
-    from pyspark.sql import functions as F
-
-    scored, members_all = r_metrics_edges_pairs(edges, 0.25, 0.9)
+    pt = _tagged_pairs2(edges)
+    scored = r_metrics_edges_pairs(edges, pt, 0.25, 0.9)
+    members_all = _common_member_rows(edges, pt)
     cand = scored.filter(~F.col("keepit")).select("src", "dst")
     want = {
         (r["src"], r["dst"], r["member"])
@@ -940,26 +992,12 @@ def test_connected_components_raises_on_guard_before_fixpoint(spark):
     assert len(got) == 60 and set(got.values()) == {1}
 
 
-def test_shortest_path_lengths_result_released_on_clear(spark, edges):
-    """shortest_path_lengths hands its final level to the loose store:
-    once the caller is done, clear_session_caches frees it, leaving no
-    persistent RDD behind."""
-    from hgn_spark.checkpoint import persistent_rdd_ids
-    from hgn_spark.registry import clear_session_caches
-
-    clear_session_caches(blocking=True)
-    before = persistent_rdd_ids(spark)
-    assert shortest_path_lengths(edges, 3).collect()
-    clear_session_caches(blocking=True)
-    assert persistent_rdd_ids(spark) - before == set()
-
-
 @pytest.mark.parametrize(
     "call",
     [
         lambda e: edge_betweenness(e, 3),
         lambda e: shortest_paths(e, 3),
-        lambda e: edge_betweenness(e, 4, allow_approx=True),
+        lambda e: edge_betweenness_sampled(e, 4),
     ],
     ids=["sigma_k3", "shortest_paths_k3", "sampled_k4"],
 )
@@ -1019,14 +1057,14 @@ def test_loops_release_every_generation_on_error(spark, monkeypatch, edges):
 
 def test_rmetrics_scoped_equals_full_filtered(spark):
     """ADVICE r13 #3: direct row-for-row pin of the scope contract —
-    r_metrics_edges_pairs(scope=subset) must equal the unscoped call
-    filtered to the same edges (all four ratios + keepit), on the real
-    derived graph with an arbitrary scope subset. Previously only
+    scoring an edge subset against a pair table source-restricted to
+    its endpoints (the HGN loop's scoped step) must equal the full
+    call filtered to the same edges (all four ratios + keepit), on the
+    real derived graph with an arbitrary scope subset. Previously only
     covered transitively via end-to-end community equality, which
     could mask a scoped-scoring bug that happens not to change final
     components."""
     from hgn_spark.graph.queries import R1_THRES, R2_THRES, derived_edges
-    from hgn_spark.graph.rmetrics import r_metrics_edges_pairs
     from tests.conftest import SF_SMOKE
 
     e = derived_edges(spark, SF_SMOKE)
@@ -1034,10 +1072,12 @@ def test_rmetrics_scoped_equals_full_filtered(spark):
     scope = e.filter((F.col("src") + F.col("dst")) % 3 == 0)
     assert 0 < scope.count() < e.count()
 
-    full_scored, full_members = r_metrics_edges_pairs(e, R1_THRES, R2_THRES)
-    scoped_scored, scoped_members = r_metrics_edges_pairs(
-        e, R1_THRES, R2_THRES, scope=scope
-    )
+    pt_full = _tagged_pairs2(e)
+    pt_scope = _tagged_pairs2(e, sources=_endpoints(scope))
+    full_scored = r_metrics_edges_pairs(e, pt_full, R1_THRES, R2_THRES)
+    full_members = _common_member_rows(e, pt_full)
+    scoped_scored = r_metrics_edges_pairs(scope, pt_scope, R1_THRES, R2_THRES)
+    scoped_members = _common_member_rows(scope, pt_scope)
     keys = {(r["src"], r["dst"]) for r in scope.collect()}
     want = {
         (r["src"], r["dst"]): (r["r11"], r["r12"], r["r21"], r["r22"], r["keepit"])
@@ -1062,25 +1102,9 @@ def test_rmetrics_scoped_equals_full_filtered(spark):
 
 
 def test_betweenness_auto_approx_dispatch(edges):
-    """VERDICT r13 #3 wiring: method='auto' + allow_approx at k>=4
-    returns exactly what the sampled estimator returns (same fraction,
-    same deterministic md5 sample); without the opt-in, auto stays
-    exact (bit-equal to the sigma kernel)."""
-    from hgn_spark.graph.betweenness import edge_betweenness_sampled
-
-    got = _as_dict(
-        edge_betweenness(edges, 4, allow_approx=True, source_fraction=0.5)
-        .withColumn("k", F.concat_ws("-", "src", "dst")),
-        "k",
-        "betweenness",
-    )
-    want = _as_dict(
-        edge_betweenness_sampled(edges, 4, source_fraction=0.5)
-        .withColumn("k", F.concat_ws("-", "src", "dst")),
-        "k",
-        "betweenness",
-    )
-    assert got == want
+    """edge_betweenness at k=4 stays exact: bit-equal to the sigma
+    kernel (the sampled estimator is only reached by calling
+    edge_betweenness_sampled)."""
     exact = _as_dict(
         edge_betweenness(edges, 4).withColumn(
             "k", F.concat_ws("-", "src", "dst")
@@ -1340,19 +1364,12 @@ def test_pair_table_storage_follows_block_store_memory(spark):
 
 def test_shared_pair_table_members_match_full_expansion(spark):
     """One tagged level-2 pair table serves both HGN consumers: scoring
-    through r_metrics_edges_pairs(pairs=...) equals the self-built
-    call, and the candidates' member rows read off the same table
+    through the materialized table equals scoring through the lazy
+    one, and the candidates' member rows read off the same table
     (_common_member_rows) equal the full member expansion filtered to
     the candidates — for the full table and for a scope-restricted
     one. Also pins the stand-alone candidate_common_members to them."""
     from hgn_spark.graph.queries import R1_THRES, R2_THRES, derived_edges
-    from hgn_spark.graph.rmetrics import (
-        _common_member_rows,
-        _endpoints,
-        _tagged_pairs2,
-        candidate_common_members,
-        r_metrics_edges_pairs,
-    )
     from tests.conftest import SF_SMOKE
 
     e = derived_edges(spark, SF_SMOKE)
@@ -1362,14 +1379,14 @@ def test_shared_pair_table_members_match_full_expansion(spark):
 
     score_cols = ["src", "dst", "r11", "r12", "r21", "r22", "keepit"]
     member_cols = ["src", "dst", "member"]
-    full_scored, full_members = r_metrics_edges_pairs(e, R1_THRES, R2_THRES)
+    full_members = _common_member_rows(e, _tagged_pairs2(e))
     scope = e.filter((F.col("src") + F.col("dst")) % 3 == 0)
     for sc in (None, scope):
-        pt = _tagged_pairs2(
-            e, sources=_endpoints(sc) if sc is not None else None
-        ).localCheckpoint()
-        scored, _ = r_metrics_edges_pairs(e, R1_THRES, R2_THRES, scope=sc, pairs=pt)
-        self_built, _ = r_metrics_edges_pairs(e, R1_THRES, R2_THRES, scope=sc)
+        lazy = _tagged_pairs2(e, sources=_endpoints(sc) if sc is not None else None)
+        pt = lazy.localCheckpoint()
+        target = sc if sc is not None else e
+        scored = r_metrics_edges_pairs(target, pt, R1_THRES, R2_THRES)
+        self_built = r_metrics_edges_pairs(target, lazy, R1_THRES, R2_THRES)
         assert rows(scored, score_cols) == rows(self_built, score_cols)
         cand = scored.filter(~F.col("keepit")).select("src", "dst")
         assert cand.count() > 0

@@ -12,7 +12,7 @@ from collections import defaultdict
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from hgn_spark.graph.betweenness import shortest_path_lengths
+from hgn_spark.graph.betweenness import shortest_paths
 from hgn_spark.graph.components import connected_components
 
 edge_lists = st.lists(
@@ -94,7 +94,10 @@ def test_sp_lengths_match_bfs(spark, edges):
     df = spark.createDataFrame(real, "src long, dst long")
     got = {
         (r["src"], r["dst"]): r["distance"]
-        for r in shortest_path_lengths(df, max_len=3).collect()
+        for r in shortest_paths(df, max_len=3)
+        .select("src", "dst", "distance")
+        .distinct()
+        .collect()
     }
     assert got == _bfs_dists(real, max_len=3)
 
@@ -106,17 +109,20 @@ def test_sp_lengths_match_bfs(spark, edges):
 )
 @given(edges=edge_lists)
 def test_sp_lengths_deep_truncation(spark, edges):
-    """max_len >= 4 regression: the loop used to release the checkpoint
-    generation the next frontier's lazy plan still referenced, crashing
-    on any depth that re-evaluates a released generation (depths 2-3
-    never did, which kept it latent)."""
+    """max_len >= 4: every deeper level extends the previous level's
+    loose checkpoint and anti-joins the union of all earlier levels,
+    so a level that read freed or stale blocks shows up here (the
+    shipped k=2/3 depths never reach that far)."""
     real = [(u, v) for u, v in edges if u != v]
     if not real:
         return
     df = spark.createDataFrame(real, "src long, dst long")
     got = {
         (r["src"], r["dst"]): r["distance"]
-        for r in shortest_path_lengths(df, max_len=5).collect()
+        for r in shortest_paths(df, max_len=5)
+        .select("src", "dst", "distance")
+        .distinct()
+        .collect()
     }
     assert got == _bfs_dists(real, max_len=5)
 

@@ -234,24 +234,20 @@ def test_minhash_recall_perms_budget_binds_loudly():
 
 
 @pytest.mark.parametrize(
-    "k,compat,approx,want",
+    "k,compat,want",
     [
-        (1, False, False, "paths"),
-        (2, False, False, "paths"),   # measured: 1.9 s vs sigma 7.7 s
-        (2, False, True, "paths"),    # approx never applies at k<=3
-        (3, False, False, "sigma"),   # measured: 22.9 s vs paths 38.4 s
-        (3, False, True, "sigma"),
-        (4, False, False, "sigma"),   # exact by default: 26.1 s vs 381.7 s
-        (4, False, True, "sampled"),  # opt-in: 14.4 s at f=0.25
-        (8, False, True, "sampled"),
-        (4, True, False, "paths"),    # compat modes need concrete paths
-        (4, True, True, "paths"),
+        (1, False, "paths"),
+        (2, False, "paths"),   # measured: 1.9 s vs sigma 7.7 s
+        (3, False, "sigma"),   # measured: 22.9 s vs paths 38.4 s
+        (4, False, "sigma"),   # 26.1 s vs 381.7 s
+        (8, False, "sigma"),
+        (4, True, "paths"),    # compat modes need concrete paths
     ],
 )
-def test_choose_betweenness_path_dispatch(k, compat, approx, want):
+def test_choose_betweenness_path_dispatch(k, compat, want):
     """Both dispatch directions pinned on the measured shapes
-    (PROBE_betweenness_sampled_r13 / ARCHITECTURE §betweenness) —
-    VERDICT r13 #3: the dial rule is executable, not prose."""
+    (ARCHITECTURE §betweenness) — VERDICT r13 #3: the dial rule is
+    executable, not prose."""
     from hgn_spark.graph.betweenness import choose_betweenness_path
 
-    assert choose_betweenness_path(k, any_compat=compat, allow_approx=approx) == want
+    assert choose_betweenness_path(k, any_compat=compat) == want
