@@ -234,20 +234,47 @@ def test_minhash_recall_perms_budget_binds_loudly():
 
 
 @pytest.mark.parametrize(
-    "k,compat,want",
+    "k,compat,approx,want",
     [
-        (1, False, "paths"),
-        (2, False, "paths"),   # measured: 1.9 s vs sigma 7.7 s
-        (3, False, "sigma"),   # measured: 22.9 s vs paths 38.4 s
-        (4, False, "sigma"),   # 26.1 s vs 381.7 s
-        (8, False, "sigma"),
-        (4, True, "paths"),    # compat modes need concrete paths
+        (1, False, False, "paths"),
+        (2, False, False, "paths"),   # measured: 1.9 s vs sigma 7.7 s
+        (2, False, True, "paths"),    # an estimate never pays at k<=3
+        (3, False, False, "sigma"),   # measured: 22.9 s vs paths 38.4 s
+        (3, False, True, "sigma"),
+        (4, False, False, "sigma"),   # exact by default: 26.1 s vs 381.7 s
+        (4, False, True, "sampled"),  # direct call: 14.4 s at f=0.25
+        (8, False, True, "sampled"),
+        (4, True, False, "paths"),    # compat modes need concrete paths
+        (4, True, True, "paths"),
     ],
 )
-def test_choose_betweenness_path_dispatch(k, compat, want):
+def test_choose_betweenness_path_dispatch(k, compat, approx, want):
     """Both dispatch directions pinned on the measured shapes
     (ARCHITECTURE §betweenness) — VERDICT r13 #3: the dial rule is
-    executable, not prose."""
-    from hgn_spark.graph.betweenness import choose_betweenness_path
+    executable, not prose.
 
-    assert choose_betweenness_path(k, any_compat=compat) == want
+    `approx` is a caller who would accept an estimate. No dispatch
+    reaches the estimator (it changes values): `edge_betweenness` has
+    no option for it, so the exact pick is the same either way.
+    'sampled' marks the measured payoff region where that caller calls
+    `edge_betweenness_sampled` directly — a σ/δ run over sampled
+    sources, so it stands in for the sigma kernel there."""
+    import inspect
+
+    from hgn_spark.graph.betweenness import (
+        choose_betweenness_path,
+        edge_betweenness,
+        edge_betweenness_sampled,
+    )
+
+    exact_opts = set(inspect.signature(edge_betweenness).parameters)
+    assert not exact_opts & {"method", "allow_approx", "source_fraction"}
+    pick = choose_betweenness_path(k, any_compat=compat)
+    if want == "sampled":
+        assert approx
+        assert pick == "sigma"
+        assert "source_fraction" in inspect.signature(
+            edge_betweenness_sampled
+        ).parameters
+    else:
+        assert pick == want
