@@ -25,10 +25,14 @@ that outlives the loop to the loose store (``keep``), and
 frees everything else it still holds when the block exits, normally or
 by an exception. A loop never sees an RDD id. Every generation is
 materialized before ``checkpoint`` returns, so nothing a later round
-reads can depend on a released generation's blocks. The persistent-RDD
-ids behind a frame are found by diffing ``SparkContext.getPersistentRDDs``
-around the call (the ``DataFrame`` API does not expose the RDD backing
-a localCheckpoint).
+reads can depend on a released generation's blocks. The persistent RDD
+behind a checkpointed frame is read off the frame's own plan (its
+``LogicalRDD``; the ``DataFrame`` API does not expose the RDD backing a
+localCheckpoint), so attribution takes no lock and needs no
+before/after diff of ``SparkContext.getPersistentRDDs``: concurrent
+chains (the HGN init pair, simsearch's IVF/LSH pool) checkpoint at the
+same time, including the shuffle stages AQE runs inside a lazy
+``localCheckpoint`` call.
 
 Blocks that live for the session (kept results, loose checkpoints and
 ``SessionMemo``'s one materialization per ``(session, sf_dir)``) all
@@ -44,21 +48,6 @@ from collections.abc import Callable, Iterable
 
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
-
-# Serializes checkpoint ATTRIBUTION windows (the getPersistentRDDs
-# before/after diff) across threads (ADVICE r14, medium): concurrent
-# chains — the HGN init pair, simsearch's IVF/LSH pool — would
-# otherwise capture each other's freshly-persisted RDD ids, and a later
-# release of one set could unpersist another thread's live
-# localCheckpoint (which has no lineage and cannot be recomputed). Only
-# the diff window is locked; the eager materialization job runs OUTSIDE
-# the lock, so concurrent chains still overlap their cluster work
-# (guide §2.6). This relies on Dataset.localCheckpoint registering the
-# RDD with the context's persistent map synchronously even for
-# eager=False (RDD.localCheckpoint → persist() at call time; the blocks
-# materialize on the first job), which tests pin.
-_ATTRIBUTION_LOCK = threading.Lock()
-
 
 def _persistent_rdd_jmap(spark: SparkSession):
     """java.util.Map[Integer, RDD] of currently persisted RDDs."""
@@ -100,27 +89,23 @@ def _materialize(out: DataFrame) -> int:
 def _attributed(
     df: DataFrame, storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK_DESER
 ) -> tuple[DataFrame, frozenset[int]]:
-    """Lazy localCheckpoint of ``df`` and the persistent-RDD ids it
-    created, diffed under the module attribution lock (the lazy call
-    registers its RDD synchronously, so the diff is exact per thread).
-    The one attribution primitive behind every tracked checkpoint."""
-    spark = df.sparkSession
-    with _ATTRIBUTION_LOCK:
-        before = persistent_rdd_ids(spark)
-        out = df.localCheckpoint(eager=False, storageLevel=storage_level)
-        return out, frozenset(persistent_rdd_ids(spark) - before)
+    """Lazy localCheckpoint of ``df`` and the id of the persistent RDD
+    it created, read off the checkpointed frame: its logical plan is
+    the ``LogicalRDD`` over the localCheckpointed RDD. Nothing is
+    shared between threads, so concurrent calls overlap (under AQE the
+    lazy call itself runs every shuffle stage of ``df``). The one
+    attribution primitive behind every tracked checkpoint."""
+    out = df.localCheckpoint(eager=False, storageLevel=storage_level)
+    return out, frozenset({int(out._jdf.queryExecution().logical().rdd().id())})
 
 
 def attributed_local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Raw (untracked) localCheckpoint that cannot pollute a concurrent
-    janitor attribution window: the persistent-RDD registration happens
-    under the module attribution lock, the materialization (if eager)
-    outside it. Nothing releases its blocks but async GC, so package
-    code checkpoints through a janitor, ``loose_local_checkpoint`` or a
+    """Raw (untracked) localCheckpoint, materialized when ``eager``.
+    Nothing releases its blocks but async GC, so package code
+    checkpoints through a janitor, ``loose_local_checkpoint`` or a
     ``SessionMemo`` instead; this stays only as a layer target that
     ``perfbench/trace.py`` names."""
-    with _ATTRIBUTION_LOCK:
-        out = df.localCheckpoint(eager=False)
+    out = df.localCheckpoint(eager=False)
     if eager:
         _materialize(out)
     return out
@@ -204,11 +189,11 @@ class CheckpointJanitor:
         _observe: dict[str, Column] | None = None,
         _seen: dict | None = None,
     ) -> DataFrame:
-        # Attribution under the module lock, materialization outside it
-        # (see _ATTRIBUTION_LOCK), so the expensive job — the count that
-        # materializes every partition into blocks — still overlaps
-        # with other threads' chains. The frame is held before that
-        # job runs: if it fails, leaving the block frees the blocks.
+        # Attribution reads the frame's own RDD id (see _attributed),
+        # so concurrent chains overlap both the shuffle stages the lazy
+        # call runs and the count that materializes every partition
+        # into blocks. The frame is held before that job runs: if it
+        # fails, leaving the block frees the blocks.
         # ``storage_level`` goes to localCheckpoint; the default is
         # Spark's own (deserialized).
         #

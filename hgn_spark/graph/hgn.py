@@ -7,6 +7,17 @@ iteration r-metrics → hybrid edge weights → deletion rule → anti-join,
 until no edge qualifies or max_steps is hit. Communities are the final
 connected components.
 
+Two ways to run the steps. Above an edge bound (_DRIVER_FINISH_MAX_EDGES)
+a step is a chain of Spark jobs with an eager checkpoint at every phase
+boundary; the step that starts at or below the bound collects the edge
+generation and the init frames once and runs itself, the remaining
+steps and the final components in-process (_finish_on_driver), where a
+step costs milliseconds instead of Spark's per-job driver cost. Init
+always runs in Spark. Both ways delete the same edges in every step:
+every value the delete rule compares is a double Spark computed
+(collected, never recomputed) or a ratio of two integer counts, one
+correctly rounded division on either side.
+
 Deliberate divergences from the reference (each documented in SURVEY §8):
 
 - §8.1 the force-keep union could duplicate edges — we never re-add
@@ -22,6 +33,8 @@ Deliberate divergences from the reference (each documented in SURVEY §8):
 
 from __future__ import annotations
 
+import time as _time
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark import StorageLevel
@@ -64,6 +77,18 @@ _PAIR_ROW_BYTES_DESER = 92
 _SCOPE_MAX_DELETED_FRACTION = 0.02
 _SCOPE_MAX_EDGE_FRACTION = 1 / 3
 
+# Edge bound of the in-process finish (ARCHITECTURE "In-process finish
+# below an edge bound"): a step that starts with at most this many edges
+# collects the edge generation, the init similarities and betweenness
+# once and runs this step, the remaining ones and the final components
+# on the driver. The largest size measured where that wins, with
+# scripts/scale_probe_hgn_cascade.py on the derived graph at sf0.1 and
+# its 10x/100x slices (4-core machine, 6 GB driver; six cascade steps
+# plus components, collect included): 2,824 edges 0.46 s vs 9.83 s in
+# Spark, 28,240 edges 1.14 s vs 15.34 s, 282,400 edges 13.80 s vs
+# 49.90 s, the driver process growing by 404 MB at that size.
+_DRIVER_FINISH_MAX_EDGES = 282_400
+
 
 def _pair_table_storage(spark: SparkSession, n_edges: int) -> StorageLevel:
     """Storage level for a step's pair table on an ``n_edges`` graph.
@@ -90,6 +115,201 @@ def _pair_table_storage(spark: SparkSession, n_edges: int) -> StorageLevel:
     if est <= frac * pool_bytes:
         return StorageLevel.MEMORY_AND_DISK_DESER
     return StorageLevel.MEMORY_AND_DISK
+
+
+def _driver_delete_rule(
+    adj: dict[int, set[int]],
+    sim_all: dict[int, set[int]],
+    sim_hit: dict[int, set[int]],
+    betw: dict[tuple[int, int], float],
+    p: HGNParams,
+) -> list[tuple[int, int]]:
+    """One step of the delete rule over plain Python sets → the
+    canonical (src, dst) edges to delete. ``adj`` is the symmetric
+    adjacency of the current generation; ``sim_all``/``sim_hit`` map a
+    vertex to the other endpoints of its (both-orientation) init
+    similarity edges, all of them / those at or above
+    ``feature_min_avg``; ``betw`` is the init betweenness.
+
+    The same rule as the Spark step: r-metrics from the level-1
+    (adjacent) and level-2 (adjacent ∪ two-hop, minus the vertex)
+    sets, the common level-2 members of every candidate (keepit false)
+    without its endpoints, the hybrid weight as hits / similarity
+    edges inside that member set (no weight, no deletion), and the
+    weight/betweenness rule against the init betweenness (no
+    betweenness, no deletion). Every compared value is a double Spark
+    computed (similarity, betweenness) or a ratio of two integer
+    counts, one correctly rounded division here as in Spark, so the
+    deletions are the Spark step's. Every endpoint has degree >= 1, so
+    the scorer's zero-count guard never fires."""
+    lvl2 = {}
+    for v, nv in adj.items():
+        s = set(nv).union(*(adj[w] for w in nv))
+        s.discard(v)
+        lvl2[v] = s
+    r1, r2 = p.r_lvl1_thres, p.r_lvl2_thres
+    mw, bt = p.max_edge_weight, p.betweenness_thres
+    out = []
+    for src, ns in adj.items():
+        ls = lvl2[src]
+        for dst in ns:
+            if dst < src:
+                continue  # each canonical edge once
+            nd, ld = adj[dst], lvl2[dst]
+            cc1 = len(ns & nd)
+            members = ls & ld
+            members.discard(src)
+            members.discard(dst)
+            cc2 = len(members)
+            if (
+                cc1 / len(ns) > r1
+                or cc1 / len(nd) > r1
+                or cc2 / len(ls) > r2
+                or cc2 / len(ld) > r2
+            ):
+                continue  # keepit
+            total = hits = 0
+            for x in members:
+                if x in sim_all:
+                    total += len(sim_all[x] & members)
+                    hits += len(sim_hit[x] & members)
+            b = betw.get((src, dst))
+            if total == 0 or b is None:
+                continue
+            # Spark's (w < mw) | ((w >= mw) & (b > bt)); w is never NaN
+            if hits / total < mw or b > bt:
+                out.append((src, dst))
+    return out
+
+
+def _min_label_components(adj: dict[int, set[int]]) -> dict[int, int]:
+    """Union-find over a symmetric adjacency → {vertex: min vertex id
+    of its component} for every vertex with an edge."""
+    parent = {v: v for v, nv in adj.items() if nv}
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, nu in adj.items():
+        for v in nu:
+            a, b = find(u), find(v)
+            if a != b:
+                # the smaller root wins, so every root is its
+                # component's minimum
+                if a < b:
+                    parent[b] = a
+                else:
+                    parent[a] = b
+    return {v: find(v) for v in parent}
+
+
+def _collect_state(
+    e: DataFrame, sims: DataFrame, betw: DataFrame, feature_min_avg: float
+) -> tuple[dict, dict, dict, dict]:
+    """Collect the edge generation, the init similarities and the init
+    betweenness as Arrow (no Python workers) → the inputs of
+    `_driver_delete_rule`: (adj, sim_all, sim_hit, betw)."""
+    adj: dict[int, set[int]] = {}
+    tbl = e.toArrow()
+    for u, v in zip(tbl["src"].to_pylist(), tbl["dst"].to_pylist()):
+        adj.setdefault(u, set()).add(v)
+        adj.setdefault(v, set()).add(u)
+    sim_all: dict[int, set[int]] = {}
+    sim_hit: dict[int, set[int]] = {}
+    tbl = sims.toArrow()
+    for x, y, sim in zip(
+        tbl["src"].to_pylist(), tbl["dst"].to_pylist(), tbl["similarity"].to_pylist()
+    ):
+        sim_all.setdefault(x, set()).add(y)
+        hit = sim_hit.setdefault(x, set())
+        if sim >= feature_min_avg:
+            hit.add(y)
+    tbl = betw.toArrow()
+    bw = dict(
+        zip(
+            zip(tbl["src"].to_pylist(), tbl["dst"].to_pylist()),
+            tbl["betweenness"].to_pylist(),
+        )
+    )
+    return adj, sim_all, sim_hit, bw
+
+
+def _finish_on_driver(
+    vertices: DataFrame,
+    e: DataFrame,
+    n_edges: int,
+    sims: DataFrame,
+    betw: DataFrame,
+    p: HGNParams,
+    first_step: int,
+    t: dict | None,
+    mark: Callable[[str, float], float],
+) -> DataFrame:
+    """Steps ``first_step``..``max_steps`` and the final components of
+    `hgn_communities` in-process, on an edge generation ``e`` of
+    ``n_edges`` rows (``first_step <= max_steps``) → (id, component)
+    with the Spark path's schema.
+
+    Collects once (`_collect_state`), inside the first step's timing
+    window; records the same ``phase_timings`` keys and list lengths
+    as the Spark steps (every step scores all edges; no scope is
+    built)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import StructField, StructType
+
+    state = None
+    for step in range(first_step, p.max_steps + 1):
+        if t is not None:
+            t["n_steps"] = step
+            if step > 1:
+                t.setdefault("n_scope_per_step", []).append(None)
+            t.setdefault("n_scored_per_step", []).append(n_edges)
+        t0 = _time.perf_counter()
+        if state is None:
+            state = _collect_state(e, sims, betw, p.feature_min_avg)
+        adj = state[0]
+        to_delete = _driver_delete_rule(*state, p)
+        dt = mark("loop_delete_rule", t0)
+        if t is not None:
+            t.setdefault("loop_delete_rule_per_step", []).append(round(dt, 3))
+            t.setdefault("n_deleted_per_step", []).append(len(to_delete))
+        if not to_delete:
+            break
+        t0 = _time.perf_counter()
+        for u, v in to_delete:
+            adj[u].discard(v)
+            adj[v].discard(u)
+        n_edges -= len(to_delete)
+        mark("loop_anti_join", t0)
+
+    t0 = _time.perf_counter()
+    comp = _min_label_components(adj)
+    et = e.schema["dst"].dataType
+    at = to_arrow_type(et)
+    mapping = e.sparkSession.createDataFrame(
+        pa.table(
+            {
+                "id": pa.array(list(comp), at),
+                "component": pa.array(list(comp.values()), at),
+            }
+        ),
+        StructType([StructField("id", et), StructField("component", et)]),
+    )
+    # The Spark path's final projection over the same join keys:
+    # vertices that appear in ``vertices`` and keep an edge, with
+    # coalesce(component, id) so the column types and nullability are
+    # the Spark path's.
+    out = (
+        vertices.select("id")
+        .join(mapping, "id")
+        .select("id", F.coalesce("component", F.col("id")).alias("component"))
+    )
+    mark("final_cc", t0)
+    return out
 
 
 @dataclass
@@ -122,19 +342,18 @@ def hgn_communities(
     ``phase_timings`` (r12, VERDICT r11 #7): pass a dict to receive
     wall-clock attribution per phase — init_sims / init_betweenness /
     loop_delete_rule / loop_anti_join (the loop keys accumulate across
-    iterations; n_steps records how many ran) and final_cc. Every
-    phase boundary is an EAGER checkpoint (whose own job also yields
-    the loop's row counts), so the numbers are true materialization
-    costs, not lazy-plan noise; instrumentation costs two
-    time.perf_counter() calls per phase and
-    nothing when the dict is omitted. Per step it also records
+    iterations; n_steps records how many ran, set as each step starts)
+    and final_cc. In the Spark steps every phase boundary is an EAGER
+    checkpoint (whose own job also yields the loop's row counts), so
+    the numbers are true materialization costs, not lazy-plan noise;
+    the in-process finish bills its one collect to the first step it
+    runs. Instrumentation costs two time.perf_counter() calls per phase
+    and nothing when the dict is omitted. Per step it also records
     loop_delete_rule_per_step, n_deleted_per_step, n_scored_per_step
     and, from step 2, n_scope_per_step (None where the scope was not
-    built); the cascade probe (scripts/scale_probe_hgn_cascade.py)
-    reads them.
+    built, as in every in-process step); the cascade probe
+    (scripts/scale_probe_hgn_cascade.py) reads them.
     """
-    import time as _time
-
     p = params or HGNParams()
     t = phase_timings
 
@@ -161,9 +380,10 @@ def hgn_communities(
         # r14 (guide §2.6): the similarity and betweenness init frames both
         # read the materialized `e` and nothing of each other — run their
         # eager checkpoints concurrently on the one janitor (its held
-        # map is locked; attribution is per call). Both are released
-        # when the block exits. Phase timings record each chain's own
-        # wall clock (they overlap).
+        # map is locked; each checkpoint reads its own RDD id, so the
+        # two chains' jobs overlap). Both are released when the block
+        # exits. Phase timings record each chain's own wall clock (they
+        # overlap).
         from concurrent.futures import ThreadPoolExecutor
 
         def _init_sims():
@@ -231,6 +451,11 @@ def hgn_communities(
         # way (pinned by test).
         aff_v = None  # scope seed, built only for a step that reads it
         for _step in range(1, p.max_steps + 1):
+            if n_edges <= _DRIVER_FINISH_MAX_EDGES:
+                # n_edges came from the last checkpoint: no job to decide.
+                return _finish_on_driver(
+                    vertices, e, n_edges, sims, betw, p, _step, t, _mark
+                )
             if t is not None:
                 t["n_steps"] = _step
             t0 = _time.perf_counter()

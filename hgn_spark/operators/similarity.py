@@ -1351,9 +1351,10 @@ def simsearch_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # back-fill the executor idle time of another's driver round-trips:
     # measured 8.0 s -> ~5.5 s for the row at sf0.1 with identical
     # results (every chain is deterministic on its own inputs; job
-    # descriptions are thread-local; all checkpoints here are LOOSE,
-    # i.e. parked in one shared store, so concurrent id-diff attribution
-    # cannot mis-release a block). The same overlap holds on a cluster:
+    # descriptions are thread-local; every checkpoint reads its own RDD
+    # id off its frame and takes no lock, so the chains' checkpoints
+    # overlap too, and all of them are LOOSE, parked in one shared
+    # store released only at session clear). The same overlap holds on a cluster:
     # a sqrt(n)-row calibration never fills it, so the other chains'
     # scans run in the gap.
     from concurrent.futures import ThreadPoolExecutor

@@ -1,26 +1,38 @@
-"""HGN delete-rule CASCADE probe: step-2+ delete-rule cost on a REAL
-multi-step deletion cascade at sf0.1 and the 1000x-class graph tier.
-hgn_communities scores a step on only the edges near the previous
-step's deletions when its two scope gates open (hgn._SCOPE_MAX_*);
-each scale runs the loop as shipped and once more with both gates
-patched shut (every step scores all edges) as the equality reference,
-reading the loop's per-step instrumentation:
+"""HGN delete-rule CASCADE probe: the loop's per-step cost on a REAL
+multi-step deletion cascade at sf0.1 and larger graph slices, in each
+of its finishing forms. Each scale runs three legs, each patching
+hgn's module constants for one run:
+
+  driver_finish — _DRIVER_FINISH_MAX_EDGES = inf: every step and the
+                  final components run in-process after one collect
+  bound_0       — _DRIVER_FINISH_MAX_EDGES = 0: the Spark loop with the
+                  shipped scope gates (hgn._SCOPE_MAX_*)
+  gates_shut    — bound 0 and both scope gates shut: every Spark step
+                  scores all edges (the scope's equality reference)
+
+and reads the loop's per-step instrumentation:
 
   loop_delete_rule_per_step  — wall clock of each scoring+delete step
   n_scored_per_step          — |edges scored| (full |E| vs |scoped|)
   n_scope_per_step           — |scope| from step 2, None where unbuilt
   n_deleted_per_step         — the cascade shape itself
 
-One untimed run of the shipped loop precedes the timed legs, and the
-two legs swap order from one scale to the next (`leg_order` in the
-JSON), so the JVM and codegen warm-in of a process's first run is
-billed to neither form and `step2plus.speedup` does not measure leg
-order.
+Headlines per scale: ``finish`` compares the driver_finish leg's steps
+plus final components (the collect included) with bound_0's — the
+crossover that sets hgn._DRIVER_FINISH_MAX_EDGES; ``step2plus``
+compares bound_0's step-2+ delete-rule cost with gates_shut's. Each leg
+also reports the peak growth of this process's resident set
+(``py_rss_peak_mb``, sampled every 20 ms), which holds the collected
+rows of the driver_finish leg.
 
-The claim under test: step-2+ cost scales with |affected| (the scoped
-edge count), not |E|. The equality pin is re-asserted ON THE PROBE
-SHAPE: both runs must land on identical communities at every scale
-(row count + per-row hash-sum fingerprint compared Spark-to-Spark).
+One untimed run of the Spark loop precedes the timed legs, and the
+leg order rotates from one scale to the next (`leg_order` in the
+JSON), so the JVM and codegen warm-in of a process's first run is
+billed to no leg and the headlines do not measure leg order.
+
+The equality pin is re-asserted ON THE PROBE SHAPE: all three legs
+must land on identical communities at every scale (row count +
+per-row hash-sum fingerprint compared Spark-to-Spark).
 
 The registered driver row's config converges in 2 steps (one deletion
 generation) at every probed scale — no cascade to maintain
@@ -36,6 +48,7 @@ Usage:
       # cascade shape per config (load-immune; secs are not).
   python scripts/scale_probe_hgn_cascade.py run [scales] [out.json]
       # scales default "sf0.1=/root/testdata/sf0.1,1000x=/tmp/hgn_scale/sf100graph"
+      # (10x/100x slices: python scripts/gen_graph_slice.py 10|100 <sf0.1> <out>)
 """
 
 from __future__ import annotations
@@ -44,6 +57,7 @@ import contextlib
 import json
 import os
 import sys
+import threading
 import time
 from unittest import mock
 
@@ -93,9 +107,47 @@ def _params(cfg: dict):
     )
 
 
-def _run_once(spark, sf_dir: str, cfg: dict, gates_shut: bool = False):
-    """One full hgn_communities run → (timings, fingerprint);
-    ``gates_shut`` patches both scope gates shut for the run."""
+# Module constants of hgn_spark.graph.hgn each leg patches.
+_SHUT = {"_SCOPE_MAX_DELETED_FRACTION": 0.0, "_SCOPE_MAX_EDGE_FRACTION": 0.0}
+LEGS = {
+    "driver_finish": {"_DRIVER_FINISH_MAX_EDGES": float("inf")},
+    "bound_0": {"_DRIVER_FINISH_MAX_EDGES": 0},
+    "gates_shut": {"_DRIVER_FINISH_MAX_EDGES": 0, **_SHUT},
+}
+
+
+def _rss_mb() -> float:
+    with open("/proc/self/status", encoding="ascii") as fh:
+        for line in fh:
+            if line.startswith("VmRSS:"):
+                return int(line.split()[1]) / 1024
+    return 0.0
+
+
+class _RssPeak:
+    """Peak growth of this process's resident set over a block,
+    sampled every 20 ms on a thread."""
+
+    def __enter__(self):
+        self.base = self.peak = _rss_mb()
+        self._stop = threading.Event()
+        self._thread = threading.Thread(target=self._sample, daemon=True)
+        self._thread.start()
+        return self
+
+    def _sample(self):
+        while not self._stop.wait(0.02):
+            self.peak = max(self.peak, _rss_mb())
+
+    def __exit__(self, *exc):
+        self._stop.set()
+        self._thread.join()
+        self.growth_mb = round(max(self.peak, _rss_mb()) - self.base, 1)
+
+
+def _run_once(spark, sf_dir: str, cfg: dict, leg: str | None = None):
+    """One full hgn_communities run → (timings, fingerprint); ``leg``
+    names the LEGS patch to run under (None: the shipped constants)."""
     from pyspark.sql import functions as F
 
     from hgn_spark.graph import hgn as hgn_mod
@@ -105,19 +157,18 @@ def _run_once(spark, sf_dir: str, cfg: dict, gates_shut: bool = False):
     spark.sparkContext._jvm.System.gc()
     vertices, edges = _inputs(spark, sf_dir)
     timings: dict = {}
-    shut = mock.patch.multiple(
-        hgn_mod, _SCOPE_MAX_DELETED_FRACTION=0.0, _SCOPE_MAX_EDGE_FRACTION=0.0
-    )
     t0 = time.perf_counter()
-    with shut if gates_shut else contextlib.nullcontext():
+    patch = mock.patch.multiple(hgn_mod, **LEGS[leg]) if leg else contextlib.nullcontext()
+    with patch, _RssPeak() as rss:
         res = hgn_mod.hgn_communities(
             vertices, edges, ["nationkey"], _params(cfg), phase_timings=timings
         )
+    timings["py_rss_peak_mb"] = rss.growth_mb
     # Fingerprint instead of noop drain: one aggregate action both
     # materializes the result and yields the equality evidence
     # (Spark-to-Spark comparison, so Spark's internal Murmur3 hash is
-    # a valid fingerprint; component ids are xxhash-min labels from
-    # connected_components, deterministic across runs).
+    # a valid fingerprint; component ids are min vertex ids on every
+    # leg, deterministic across runs).
     t1 = time.perf_counter()
     fp_row = res.agg(
         F.count(F.lit(1)).alias("n"),
@@ -128,6 +179,13 @@ def _run_once(spark, sf_dir: str, cfg: dict, gates_shut: bool = False):
     timings["total"] = round(time.perf_counter() - t0, 3)
     fp = {"n_rows": fp_row["n"], "hash_sum": fp_row["h"], "n_comp": fp_row["n_comp"]}
     return timings, fp
+
+
+def _finish_s(t: dict) -> float:
+    """Steps plus final components: everything after init."""
+    return sum(t.get("loop_delete_rule_per_step", [])) + t.get(
+        "loop_anti_join", 0.0
+    ) + t.get("final_cc", 0.0)
 
 
 def sweep(sf_dir: str) -> None:
@@ -165,34 +223,43 @@ def run(scales, out_path: str | None) -> None:
     scales = [(label, sf_dir) for label, sf_dir in scales if os.path.isdir(sf_dir)]
     if scales:
         # The process's first hgn_communities run pays the JVM and
-        # codegen warm-in; run the shipped loop once untimed on the
-        # first scale so neither timed leg carries it.
-        warm, _ = _run_once(spark, scales[0][1], CASCADE)
+        # codegen warm-in; run the Spark loop once untimed on the
+        # first scale so no timed leg carries it.
+        warm, _ = _run_once(spark, scales[0][1], CASCADE, "bound_0")
         out["warmup"] = {"scale": scales[0][0], "total": warm["total"]}
+    legs = list(LEGS)
     for i, (label, sf_dir) in enumerate(scales):
         per_leg: dict = {}
         fps: dict = {}
-        # Alternate which leg runs first per scale, so a residual
-        # order effect does not always favour the same form.
-        order = ("default", "gates_shut") if i % 2 == 0 else ("gates_shut", "default")
-        per_leg["leg_order"] = list(order)
+        # Rotate the leg order per scale, so a residual order effect
+        # does not always favour the same form.
+        order = legs[i % len(legs):] + legs[: i % len(legs)]
+        per_leg["leg_order"] = order
         for leg in order:
-            timings, fp = _run_once(spark, sf_dir, CASCADE, leg == "gates_shut")
+            timings, fp = _run_once(spark, sf_dir, CASCADE, leg)
             per_leg[leg] = timings
             fps[leg] = fp
             print(f"# {label}/{leg}: {json.dumps(timings)} fp={fp}",
                   file=sys.stderr, flush=True)
         # The equality pin, re-asserted on the probe shape (cascade
         # config, probe scales — not just Quakers).
-        per_leg["communities_equal"] = fps["default"] == fps["gates_shut"]
-        per_leg["fingerprint"] = fps["default"]
+        per_leg["communities_equal"] = len({json.dumps(f) for f in fps.values()}) == 1
+        per_leg["fingerprint"] = fps[legs[0]]
         if not per_leg["communities_equal"]:
             per_leg["fingerprints"] = fps
             print(f"# {label}: EQUALITY PIN FAILED {fps}", file=sys.stderr)
-        # Headline: step-2+ delete-rule cost ratio (scoped/full) next to
-        # the scored-edge ratio that should explain it.
-        a = per_leg["gates_shut"]
-        b = per_leg["default"]
+        drv, spk = per_leg["driver_finish"], per_leg["bound_0"]
+        per_leg["finish"] = {
+            "n_edges": spk["n_scored_per_step"][0],
+            "secs_driver": round(_finish_s(drv), 3),
+            "secs_spark": round(_finish_s(spk), 3),
+            "speedup": round(_finish_s(spk) / max(_finish_s(drv), 1e-9), 2),
+            "driver_step1_s": drv["loop_delete_rule_per_step"][0],
+            "py_rss_peak_mb": drv["py_rss_peak_mb"],
+        }
+        # Step-2+ delete-rule cost ratio (scoped/full) next to the
+        # scored-edge ratio that should explain it.
+        a, b = per_leg["gates_shut"], spk
         tail = slice(1, None)
         ta = a.get("loop_delete_rule_per_step", [])[tail]
         tb = b.get("loop_delete_rule_per_step", [])[tail]

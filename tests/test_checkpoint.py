@@ -1,11 +1,11 @@
 """CheckpointJanitor ownership and attribution under concurrency
-(ADVICE r14, medium): the getPersistentRDDs before/after diff is
-exercised from thread pools (HGN init, simsearch chains); attribution
-must be exact per thread so releasing one thread's generation can never
-unpersist another thread's live localCheckpoint (which has no lineage
-and cannot be recomputed). The janitor owns what it checkpoints:
-releasing a frame it does not hold fails loudly, and leaving its block
-frees everything still held."""
+(ADVICE r14, medium): checkpoints run from thread pools (HGN init,
+simsearch chains); attribution must be exact per thread so releasing
+one thread's generation can never unpersist another thread's live
+localCheckpoint (which has no lineage and cannot be recomputed), and
+no thread's checkpoint may wait for another's. The janitor owns what
+it checkpoints: releasing a frame it does not hold fails loudly, and
+leaving its block frees everything still held."""
 
 from __future__ import annotations
 
@@ -15,23 +15,67 @@ import pytest
 
 from hgn_spark.checkpoint import (
     CheckpointJanitor,
+    _attributed,
     attributed_local_checkpoint,
     persistent_rdd_ids,
     release_rdds,
 )
 
 
-def test_lazy_local_checkpoint_registers_persistent_rdd_synchronously(spark):
-    """The locked-attribution design depends on Dataset.localCheckpoint
-    (eager=False) registering its RDD with the context's persistent map
-    at CALL time, before any job runs — pin that engine behavior."""
-    df = spark.range(100)
+def test_attributed_id_is_the_one_persistent_rdd_added(spark):
+    """The id read off a checkpointed frame (its LogicalRDD) is the one
+    persistent RDD the lazy localCheckpoint registered, and releasing
+    it frees exactly that RDD."""
+    df = spark.range(100).selectExpr("id", "id % 7 AS k").groupBy("k").count()
     before = persistent_rdd_ids(spark)
-    lazy = df.localCheckpoint(eager=False)
-    new = persistent_rdd_ids(spark) - before
-    assert new, "lazy localCheckpoint did not register a persistent RDD"
-    assert lazy.count() == 100
-    release_rdds(spark, new)
+    lazy, ids = _attributed(df)
+    assert persistent_rdd_ids(spark) - before == set(ids) and len(ids) == 1
+    assert lazy.count() == 7
+    release_rdds(spark, ids)
+    assert persistent_rdd_ids(spark) - before == set()
+
+
+def test_checkpoint_does_not_wait_for_another_threads_shuffle(spark):
+    """Under AQE a lazy localCheckpoint runs its frame's shuffle map
+    stages before it returns. While one thread checkpoints a frame
+    whose map stage sleeps 3 s, another thread's checkpoint of a small
+    frame returns well inside that time: attribution holds no lock
+    across that call."""
+    import threading
+    import time
+
+    from pyspark.sql import functions as F
+
+    sleep_ms = 3000
+    slow = (
+        spark.range(2, numPartitions=2)
+        .groupBy(
+            F.expr(
+                "concat(cast(id % 2 AS string), coalesce(reflect("
+                f"'java.lang.Thread', 'sleep', cast({sleep_ms} AS bigint)), ''))"
+            ).alias("k")
+        )
+        .count()
+    )
+    with CheckpointJanitor(spark) as jan:
+        jan.checkpoint(spark.range(10))  # warm the small frame's path
+        started = threading.Event()
+
+        def slow_chain():
+            started.set()
+            return jan.checkpoint(slow)
+
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            fut = pool.submit(slow_chain)
+            started.wait()
+            time.sleep(0.5)
+            t0 = time.perf_counter()
+            fast = jan.checkpoint(spark.range(10))
+            dt = time.perf_counter() - t0
+            slow_done_first = fut.done()
+            assert fut.result().count() == 2
+        assert fast.count() == 10
+        assert not slow_done_first and dt < sleep_ms / 2000, dt
 
 
 def test_concurrent_janitor_attribution_is_disjoint_and_safe(spark):

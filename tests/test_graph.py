@@ -38,7 +38,14 @@ from hgn_spark.graph.weights import (
     hybrid_edge_weights_members,
     one_hot_cosine_similarities,
 )
-from tests.conftest import SF_BENCH, SF_SMOKE, set_scope_gates
+from tests.conftest import (
+    SF_BENCH,
+    SF_SMALL,
+    SF_SMOKE,
+    force_spark_loop,
+    set_scope_gates,
+)
+from tests.test_reference_data import HAMSTER, QUAKERS
 
 EDGES = [(1, 2), (2, 3), (1, 3), (4, 5), (5, 6), (4, 6), (3, 4)]
 
@@ -1055,6 +1062,7 @@ def test_loops_release_every_generation_on_error(spark, monkeypatch, edges):
     assert persistent_rdd_ids(spark) - before == set()
 
 
+@pytest.mark.skipif(not os.path.isdir(SF_SMALL), reason="sf0.01 data absent")
 def test_rmetrics_scoped_equals_full_filtered(spark):
     """ADVICE r13 #3: direct row-for-row pin of the scope contract —
     scoring an edge subset against a pair table source-restricted to
@@ -1063,11 +1071,11 @@ def test_rmetrics_scoped_equals_full_filtered(spark):
     real derived graph with an arbitrary scope subset. Previously only
     covered transitively via end-to-end community equality, which
     could mask a scoped-scoring bug that happens not to change final
-    components."""
+    components. The sf0.01 graph (235 edges, maximum degree 10) gives
+    the scope common members and nonzero ratios to compare."""
     from hgn_spark.graph.queries import R1_THRES, R2_THRES, derived_edges
-    from tests.conftest import SF_SMOKE
 
-    e = derived_edges(spark, SF_SMOKE)
+    e = derived_edges(spark, SF_SMALL)
     # arbitrary, deterministic, non-trivial subset (~1/3 of edges)
     scope = e.filter((F.col("src") + F.col("dst")) % 3 == 0)
     assert 0 < scope.count() < e.count()
@@ -1089,6 +1097,7 @@ def test_rmetrics_scoped_equals_full_filtered(spark):
         for r in scoped_scored.collect()
     }
     assert got == want and set(got) == keys
+    assert any(any(v[:4]) for v in got.values())  # some nonzero ratio
     # the member rows obey the same contract
     want_m = {
         (r["src"], r["dst"], r["member"])
@@ -1098,7 +1107,7 @@ def test_rmetrics_scoped_equals_full_filtered(spark):
     got_m = {
         (r["src"], r["dst"], r["member"]) for r in scoped_members.collect()
     }
-    assert got_m == want_m
+    assert got_m == want_m and got_m
 
 
 def test_betweenness_auto_approx_dispatch(edges):
@@ -1207,8 +1216,9 @@ def _assert_scope_gates(t: dict, gates: str) -> None:
 def test_hgn_actions_are_checkpoint_materializations(
     edges, vertices, monkeypatch, gates
 ):
-    """Every count/collect/isEmpty issued while hgn_communities runs
-    comes from a checkpoint's own materializing job (issued from
+    """Every count/collect/isEmpty issued while hgn_communities' Spark
+    loop runs (the in-process finish bound patched to 0) comes from a
+    checkpoint's own materializing job (issued from
     hgn_spark/checkpoint.py): the loop's gates and connected
     components' round signature read their numbers off those jobs, not
     off separate driver actions. The fixture runs two steps (the
@@ -1219,6 +1229,7 @@ def test_hgn_actions_are_checkpoint_materializations(
 
     from pyspark.sql.classic.dataframe import DataFrame as ClassicDF
 
+    force_spark_loop(monkeypatch)
     set_scope_gates(monkeypatch, gates)
     callers: list[tuple[str, str]] = []
     for name in ("count", "collect", "isEmpty"):
@@ -1263,11 +1274,12 @@ def test_hgn_serialized_pair_table_same_communities(
 ):
     """A pair table too large for the block store is checkpointed
     serialized; the fixture forced onto that path (an estimated row
-    size no memory pool holds) lands on the same deletions and
-    communities, scoped or not."""
+    size no memory pool holds, the Spark loop forced) lands on the same
+    deletions and communities, scoped or not."""
     from hgn_spark.graph import hgn as hgn_mod
 
     monkeypatch.setattr(hgn_mod, "_PAIR_ROW_BYTES_DESER", 10**15)
+    force_spark_loop(monkeypatch)
     set_scope_gates(monkeypatch, gates)
     t: dict = {}
     out = hgn_communities(
@@ -1295,7 +1307,8 @@ def test_hgn_serialized_pair_table_same_communities(
 def test_hgn_scoped_steps_match_full_scoring(spark, monkeypatch):
     """The scoped delete rule on a real deletion cascade: the derived
     graph at sf0.1 under the cascade config of
-    scripts/scale_probe_hgn_cascade.py. The shipped gates open for
+    scripts/scale_probe_hgn_cascade.py, in the Spark loop (the
+    in-process finish bound patched to 0). The shipped gates open for
     steps 5 and 6 (the steps before deleted 21 and 2 edges, under 2% of
     the 1,277 and 1,275 left) and keep scopes under 1/3 of the edges;
     with both gates shut
@@ -1319,6 +1332,7 @@ def test_hgn_scoped_steps_match_full_scoring(spark, monkeypatch):
     )
 
     def run(gates):
+        force_spark_loop(monkeypatch)
         set_scope_gates(monkeypatch, gates)
         t: dict = {}
         comps = sorted(
@@ -1350,6 +1364,124 @@ def test_hgn_scoped_steps_match_full_scoring(spark, monkeypatch):
     assert comps_def == comps_shut
 
 
+def _hgn_parity_input(spark, graph: str):
+    """(vertices, edges, feature columns, params, edges_canonical) of
+    one parity graph: the derived graph at sf0.01 (r-metric thresholds
+    0.75, which delete [30, 9, 7, 0]; the registered row's 0.25
+    deletes nothing there) and sf0.1 (the cascade probe's config), and
+    the reference's Quakers and Hamsterster networks with their conf
+    files' options, capped at three steps."""
+    from hgn_spark.catalog import load_table
+    from hgn_spark.graph.queries import derived_edges
+    from hgn_spark.sources.csv import load_edges_csv, load_nodes_csv
+
+    if graph.startswith("sf"):
+        sf = SF_SMALL if graph == "sf0.01" else SF_BENCH
+        verts = load_table(spark, sf, "supplier").select(
+            F.col("s_suppkey").alias("id"), F.col("s_nationkey").alias("nationkey")
+        )
+        r, mw, bt = (0.75, 0.5, 2.0) if graph == "sf0.01" else (0.5, 0.4, 3.0)
+        params = HGNParams(
+            r_lvl1_thres=r,
+            r_lvl2_thres=r,
+            max_edge_weight=mw,
+            betweenness_thres=bt,
+            feature_min_avg=0.5,
+            max_steps=6,
+        )
+        return verts, derived_edges(spark, sf), ["nationkey"], params, True
+    params = HGNParams(
+        r_lvl1_thres=0.50,
+        r_lvl2_thres=0.85,
+        max_edge_weight=0.50,
+        betweenness_thres=10.0,
+        feature_min_avg=0.33,
+        max_steps=3,
+        max_sp_length=2,
+    )
+    if graph == "quakers":
+        nodes = load_nodes_csv(
+            spark,
+            f"{QUAKERS}/quakers_nodelist.csv2",
+            feature_names=["id", "Historical_Significance", "Gender", "Birthdate",
+                           "Deathdate", "internal_id"],
+            has_header=True,
+            encoding="ISO-8859-1",
+        )
+        edges = load_edges_csv(
+            spark, f"{QUAKERS}/quakers_edgelist.csv2", has_header=True
+        )
+        return nodes, edges, ["Gender"], params, False
+    nodes = load_nodes_csv(
+        spark,
+        f"{HAMSTER}/nodes",
+        feature_names=["id", "name", "joined", "species", "coloring", "gender",
+                       "birthday", "age", "hometown", "favorite_toy",
+                       "favorite_activity", "favorite_foo"],
+        delimiter="|",
+        has_header=True,
+        encoding="ISO-8859-1",
+    )
+    edges = load_edges_csv(spark, f"{HAMSTER}/edges", delimiter=" ", has_header=True)
+    return nodes, edges, ["species", "coloring", "hometown"], params, False
+
+
+@pytest.mark.parametrize(
+    "graph",
+    [
+        pytest.param(
+            g,
+            marks=pytest.mark.skipif(not os.path.exists(path), reason=f"{g} absent"),
+        )
+        for g, path in (
+            ("sf0.01", SF_SMALL),
+            ("sf0.1", SF_BENCH),
+            ("quakers", QUAKERS),
+            ("hamsterster", HAMSTER),
+        )
+    ],
+)
+def test_hgn_driver_finish_matches_spark_loop(spark, monkeypatch, graph):
+    """Below the edge bound hgn_communities finishes in-process: with
+    the shipped bound every graph here takes the in-process finish from
+    step 1, and with the bound patched to 0 the Spark loop runs every
+    step. Both land on the same communities, the same deletions per
+    step, the same output schema and the same phase_timings keys and
+    per-step list lengths."""
+    from hgn_spark.graph import hgn as hgn_mod
+
+    vertices, edges, features, params, canonical = _hgn_parity_input(spark, graph)
+    first_steps = []
+    orig = hgn_mod._finish_on_driver
+
+    def spy(*args):
+        first_steps.append(args[6])
+        return orig(*args)
+
+    monkeypatch.setattr(hgn_mod, "_finish_on_driver", spy)
+
+    def run():
+        t: dict = {}
+        out = hgn_communities(
+            vertices, edges, features, params, phase_timings=t,
+            edges_canonical=canonical,
+        )
+        return t, out.schema, sorted(tuple(r) for r in out.collect())
+
+    t_drv, schema_drv, comps_drv = run()
+    assert first_steps == [1]
+    force_spark_loop(monkeypatch)
+    t_spk, schema_spk, comps_spk = run()
+    assert first_steps == [1]
+    assert comps_drv == comps_spk and comps_drv
+    assert schema_drv == schema_spk
+    assert t_drv["n_deleted_per_step"] == t_spk["n_deleted_per_step"]
+    assert sum(t_drv["n_deleted_per_step"]) > 0
+    assert set(t_drv) == set(t_spk)
+    for key in ("n_scored_per_step", "loop_delete_rule_per_step", "n_scope_per_step"):
+        assert len(t_drv.get(key, [])) == len(t_spk.get(key, [])), key
+
+
 def test_pair_table_storage_follows_block_store_memory(spark):
     """The pair table stays deserialized while its estimated size fits
     the protected storage share of the block managers' memory, and is
@@ -1362,17 +1494,21 @@ def test_pair_table_storage_follows_block_store_memory(spark):
     assert _pair_table_storage(spark, 10**9) == StorageLevel.MEMORY_AND_DISK
 
 
+@pytest.mark.skipif(not os.path.isdir(SF_SMALL), reason="sf0.01 data absent")
 def test_shared_pair_table_members_match_full_expansion(spark):
     """One tagged level-2 pair table serves both HGN consumers: scoring
     through the materialized table equals scoring through the lazy
     one, and the candidates' member rows read off the same table
     (_common_member_rows) equal the full member expansion filtered to
     the candidates — for the full table and for a scope-restricted
-    one. Also pins the stand-alone candidate_common_members to them."""
-    from hgn_spark.graph.queries import R1_THRES, R2_THRES, derived_edges
-    from tests.conftest import SF_SMOKE
+    one. Also pins the stand-alone candidate_common_members to them.
+    On the sf0.01 graph (235 edges, maximum degree 10), so scores and
+    member sets are not all empty; at thresholds 0.6 two edges are
+    candidates (the registered 0.25 keeps every edge there)."""
+    from hgn_spark.graph.queries import derived_edges
 
-    e = derived_edges(spark, SF_SMOKE)
+    e = derived_edges(spark, SF_SMALL)
+    thres = 0.6
 
     def rows(df, cols):
         return {tuple(r[c] for c in cols) for r in df.collect()}
@@ -1385,11 +1521,14 @@ def test_shared_pair_table_members_match_full_expansion(spark):
         lazy = _tagged_pairs2(e, sources=_endpoints(sc) if sc is not None else None)
         pt = lazy.localCheckpoint()
         target = sc if sc is not None else e
-        scored = r_metrics_edges_pairs(target, pt, R1_THRES, R2_THRES)
-        self_built = r_metrics_edges_pairs(target, lazy, R1_THRES, R2_THRES)
-        assert rows(scored, score_cols) == rows(self_built, score_cols)
+        scored = r_metrics_edges_pairs(target, pt, thres, thres)
+        self_built = r_metrics_edges_pairs(target, lazy, thres, thres)
+        got_scores = rows(scored, score_cols)
+        assert got_scores == rows(self_built, score_cols)
+        assert any(any(r[2:6]) for r in got_scores)  # some nonzero ratio
         cand = scored.filter(~F.col("keepit")).select("src", "dst")
         assert cand.count() > 0
         want = rows(full_members.join(cand, ["src", "dst"], "left_semi"), member_cols)
+        assert want  # some candidate has a common member
         assert rows(_common_member_rows(cand, pt), member_cols) == want
         assert rows(candidate_common_members(e, cand), member_cols) == want
