@@ -7,16 +7,19 @@ iteration r-metrics → hybrid edge weights → deletion rule → anti-join,
 until no edge qualifies or max_steps is hit. Communities are the final
 connected components.
 
-Two ways to run the steps. Above an edge bound (_DRIVER_FINISH_MAX_EDGES)
-a step is a chain of Spark jobs with an eager checkpoint at every phase
-boundary; the step that starts at or below the bound collects the edge
-generation and the init frames once and runs itself, the remaining
-steps and the final components in-process (_finish_on_driver), where a
-step costs milliseconds instead of Spark's per-job driver cost. Init
-always runs in Spark. Both ways delete the same edges in every step:
-every value the delete rule compares is a double Spark computed
-(collected, never recomputed) or a ratio of two integer counts, one
-correctly rounded division on either side.
+Two ways to run the steps. A step is a chain of Spark jobs with an
+eager checkpoint at every phase boundary, unless the edge generation it
+starts on is small enough for the driver: its estimated in-process
+working set, linear in the edges and in Σ deg(v)² (a bound on the
+level-2 set entries the in-process rule holds), is within
+_DRIVER_FINISH_BUDGET_BYTES. Such a step collects the edge generation
+and the init frames once and runs itself, the remaining steps and the
+final components in-process (_finish_on_driver), where a step costs
+milliseconds instead of Spark's per-job driver cost. Init always runs
+in Spark. Both ways delete the same edges in every step: every value
+the delete rule compares is a double Spark computed (collected, never
+recomputed) or a ratio of two integer counts, one correctly rounded
+division on either side.
 
 Deliberate divergences from the reference (each documented in SURVEY §8):
 
@@ -77,17 +80,37 @@ _PAIR_ROW_BYTES_DESER = 92
 _SCOPE_MAX_DELETED_FRACTION = 0.02
 _SCOPE_MAX_EDGE_FRACTION = 1 / 3
 
-# Edge bound of the in-process finish (ARCHITECTURE "In-process finish
-# below an edge bound"): a step that starts with at most this many edges
-# collects the edge generation, the init similarities and betweenness
-# once and runs this step, the remaining ones and the final components
-# on the driver. The largest size measured where that wins, with
-# scripts/scale_probe_hgn_cascade.py on the derived graph at sf0.1 and
-# its 10x/100x slices (4-core machine, 6 GB driver; six cascade steps
-# plus components, collect included): 2,824 edges 0.46 s vs 9.83 s in
-# Spark, 28,240 edges 1.14 s vs 15.34 s, 282,400 edges 13.80 s vs
-# 49.90 s, the driver process growing by 404 MB at that size.
-_DRIVER_FINISH_MAX_EDGES = 282_400
+# Driver-memory budget of the in-process finish (ARCHITECTURE
+# "In-process finish within a driver-memory budget"): a step whose edge
+# generation's estimated working set fits it collects the generation,
+# the init similarities and betweenness once and runs this step, the
+# remaining ones and the final components on the driver. The estimate
+# is linear in the edges (their adjacency, similarity and betweenness
+# entries) and in Σ_v deg(v)² (`_level2_bound`, which bounds the
+# level-2 set entries), so it follows degree skew, not just the edge
+# count. The rates fit the driver process's peak growth over the
+# in-process finish, measured with scripts/scale_probe_hgn_cascade.py
+# (4-core machine): least squares gives ~1,070-1,130 B per edge and
+# ~32-33 B per unit of Σ deg² over the derived graph's 10x/100x/1000x
+# slices and two preferential-attachment graphs with hubs; rounded up,
+# every measured growth is under its estimate (4,275 MB against
+# 4,443 MB at the 1000x slice). The in-process finish won on time at
+# every size measured, 1000x included (167 s against 572 s for the
+# Spark steps), so the budget, not a crossover, is what bounds it: past
+# it the driver would hold gigabytes of Python sets where the Spark
+# loop spills and scales out.
+_DRIVER_FINISH_BUDGET_BYTES = 1 << 30
+_DRIVER_FINISH_BYTES_PER_EDGE = 1_100
+_DRIVER_FINISH_BYTES_PER_LEVEL2 = 40
+
+
+def _driver_finish_bytes(n_edges: int, level2: int) -> int:
+    """Estimated driver working set of the in-process finish on a
+    generation of ``n_edges`` edges whose Σ deg² is ``level2``."""
+    return (
+        _DRIVER_FINISH_BYTES_PER_EDGE * n_edges
+        + _DRIVER_FINISH_BYTES_PER_LEVEL2 * level2
+    )
 
 
 def _pair_table_storage(spark: SparkSession, n_edges: int) -> StorageLevel:
@@ -206,17 +229,30 @@ def _min_label_components(adj: dict[int, set[int]]) -> dict[int, int]:
     return {v: find(v) for v in parent}
 
 
-def _collect_state(
-    e: DataFrame, sims: DataFrame, betw: DataFrame, feature_min_avg: float
-) -> tuple[dict, dict, dict, dict]:
-    """Collect the edge generation, the init similarities and the init
-    betweenness as Arrow (no Python workers) → the inputs of
-    `_driver_delete_rule`: (adj, sim_all, sim_hit, betw)."""
+def _collect_adjacency(e: DataFrame) -> dict[int, set[int]]:
+    """Collect an edge generation as Arrow (no Python workers) → its
+    symmetric adjacency."""
     adj: dict[int, set[int]] = {}
     tbl = e.toArrow()
     for u, v in zip(tbl["src"].to_pylist(), tbl["dst"].to_pylist()):
         adj.setdefault(u, set()).add(v)
         adj.setdefault(v, set()).add(u)
+    return adj
+
+
+def _level2_bound(adj: dict[int, set[int]]) -> int:
+    """Σ_v deg(v)² of a symmetric adjacency. It equals
+    Σ_v Σ_{w∈N(v)} deg(w), and v's level-2 set (N(v) and every N(w),
+    minus v) has at most Σ_{w∈N(v)} deg(w) members, so it bounds the
+    level-2 entries `_driver_delete_rule` holds."""
+    return sum(len(nv) ** 2 for nv in adj.values())
+
+
+def _collect_init(
+    sims: DataFrame, betw: DataFrame, feature_min_avg: float
+) -> tuple[dict, dict, dict]:
+    """Collect the init similarities and betweenness as Arrow → the
+    (sim_all, sim_hit, betw) inputs of `_driver_delete_rule`."""
     sim_all: dict[int, set[int]] = {}
     sim_hit: dict[int, set[int]] = {}
     tbl = sims.toArrow()
@@ -234,45 +270,47 @@ def _collect_state(
             tbl["betweenness"].to_pylist(),
         )
     )
-    return adj, sim_all, sim_hit, bw
+    return sim_all, sim_hit, bw
 
 
 def _finish_on_driver(
     vertices: DataFrame,
     e: DataFrame,
+    adj: dict[int, set[int]],
     n_edges: int,
     sims: DataFrame,
     betw: DataFrame,
     p: HGNParams,
     first_step: int,
+    t0: float,
     t: dict | None,
     mark: Callable[[str, float], float],
 ) -> DataFrame:
     """Steps ``first_step``..``max_steps`` and the final components of
     `hgn_communities` in-process, on an edge generation ``e`` of
-    ``n_edges`` rows (``first_step <= max_steps``) → (id, component)
-    with the Spark path's schema.
+    ``n_edges`` rows collected as ``adj`` (``first_step <= max_steps``)
+    → (id, component) with the Spark path's schema.
 
-    Collects once (`_collect_state`), inside the first step's timing
-    window; records the same ``phase_timings`` keys and list lengths
-    as the Spark steps (every step scores all edges; no scope is
-    built)."""
+    The caller opened the first step (``n_steps`` set, its clock read
+    at ``t0``) and collected ``adj`` inside it; the init frames are
+    collected once, also billed to the first step. Records the same
+    ``phase_timings`` keys and list lengths as the Spark steps (every
+    step scores all edges; no scope is built)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
     from pyspark.sql.types import StructField, StructType
 
-    state = None
+    sim_all, sim_hit, bw = _collect_init(sims, betw, p.feature_min_avg)
     for step in range(first_step, p.max_steps + 1):
+        if step > first_step:
+            if t is not None:
+                t["n_steps"] = step
+            t0 = _time.perf_counter()
         if t is not None:
-            t["n_steps"] = step
             if step > 1:
                 t.setdefault("n_scope_per_step", []).append(None)
             t.setdefault("n_scored_per_step", []).append(n_edges)
-        t0 = _time.perf_counter()
-        if state is None:
-            state = _collect_state(e, sims, betw, p.feature_min_avg)
-        adj = state[0]
-        to_delete = _driver_delete_rule(*state, p)
+        to_delete = _driver_delete_rule(adj, sim_all, sim_hit, bw, p)
         dt = mark("loop_delete_rule", t0)
         if t is not None:
             t.setdefault("loop_delete_rule_per_step", []).append(round(dt, 3))
@@ -346,8 +384,9 @@ def hgn_communities(
     and final_cc. In the Spark steps every phase boundary is an EAGER
     checkpoint (whose own job also yields the loop's row counts), so
     the numbers are true materialization costs, not lazy-plan noise;
-    the in-process finish bills its one collect to the first step it
-    runs. Instrumentation costs two time.perf_counter() calls per phase
+    the in-process finish bills its collects to the first step it runs,
+    and a Spark step whose edge collect found the generation over the
+    budget bills that collect to itself. Instrumentation costs two time.perf_counter() calls per phase
     and nothing when the dict is omitted. Per step it also records
     loop_delete_rule_per_step, n_deleted_per_step, n_scored_per_step
     and, from step 2, n_scope_per_step (None where the scope was not
@@ -451,14 +490,23 @@ def hgn_communities(
         # way (pinned by test).
         aff_v = None  # scope seed, built only for a step that reads it
         for _step in range(1, p.max_steps + 1):
-            if n_edges <= _DRIVER_FINISH_MAX_EDGES:
-                # n_edges came from the last checkpoint: no job to decide.
-                return _finish_on_driver(
-                    vertices, e, n_edges, sims, betw, p, _step, t, _mark
-                )
             if t is not None:
                 t["n_steps"] = _step
             t0 = _time.perf_counter()
+            # Σ deg² >= Σ deg = 2·n_edges, and n_edges came from the last
+            # checkpoint: a generation too large for the in-process finish
+            # is ruled out without a job. Below that, the edge collect
+            # (16 B per edge) decides, and is kept if the step finishes
+            # in-process.
+            budget = _DRIVER_FINISH_BUDGET_BYTES
+            if _driver_finish_bytes(n_edges, 2 * n_edges) <= budget:
+                adj = _collect_adjacency(e)
+                if _driver_finish_bytes(n_edges, _level2_bound(adj)) <= budget:
+                    return _finish_on_driver(
+                        vertices, e, adj, n_edges, sims, betw, p, _step, t0, t,
+                        _mark,
+                    )
+                del adj
             scope = n_scope = None
             if aff_v is not None:
                 scope, n_scope, _ = jan.counted(

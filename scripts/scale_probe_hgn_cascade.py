@@ -1,12 +1,12 @@
 """HGN delete-rule CASCADE probe: the loop's per-step cost on a REAL
-multi-step deletion cascade at sf0.1 and larger graph slices, in each
-of its finishing forms. Each scale runs three legs, each patching
-hgn's module constants for one run:
+multi-step deletion cascade at sf0.1 and larger graphs, in each of its
+finishing forms. Each scale runs up to three legs, each patching hgn's
+module constants for one run:
 
-  driver_finish — _DRIVER_FINISH_MAX_EDGES = inf: every step and the
-                  final components run in-process after one collect
-  bound_0       — _DRIVER_FINISH_MAX_EDGES = 0: the Spark loop with the
-                  shipped scope gates (hgn._SCOPE_MAX_*)
+  driver_finish — _DRIVER_FINISH_BUDGET_BYTES = inf: every step and
+                  the final components run in-process after one collect
+  bound_0       — _DRIVER_FINISH_BUDGET_BYTES = 0: the Spark loop with
+                  the shipped scope gates (hgn._SCOPE_MAX_*)
   gates_shut    — bound 0 and both scope gates shut: every Spark step
                   scores all edges (the scope's equality reference)
 
@@ -18,21 +18,31 @@ and reads the loop's per-step instrumentation:
   n_deleted_per_step         — the cascade shape itself
 
 Headlines per scale: ``finish`` compares the driver_finish leg's steps
-plus final components (the collect included) with bound_0's — the
-crossover that sets hgn._DRIVER_FINISH_MAX_EDGES; ``step2plus``
-compares bound_0's step-2+ delete-rule cost with gates_shut's. Each leg
-also reports the peak growth of this process's resident set
-(``py_rss_peak_mb``, sampled every 20 ms), which holds the collected
-rows of the driver_finish leg.
+plus final components (the collect included) with bound_0's, next to
+the graph's edges and Σ deg(v)² (``level2_bound``), the driver_finish
+leg's peak growth of this process's resident set (``py_rss_peak_mb``,
+sampled every 20 ms) and hgn's estimate of it
+(``estimate_mb``, hgn._driver_finish_bytes) — the measurements the
+rates hgn._DRIVER_FINISH_BYTES_PER_* are fitted to.
+``step2plus`` compares bound_0's step-2+ delete-rule cost with
+gates_shut's. Run a scale's driver_finish leg first in its process (or
+after smaller scales only): freed memory a Python process keeps for
+reuse would hide part of a later leg's growth.
 
 One untimed run of the Spark loop precedes the timed legs, and the
 leg order rotates from one scale to the next (`leg_order` in the
 JSON), so the JVM and codegen warm-in of a process's first run is
 billed to no leg and the headlines do not measure leg order.
 
-The equality pin is re-asserted ON THE PROBE SHAPE: all three legs
-must land on identical communities at every scale (row count +
-per-row hash-sum fingerprint compared Spark-to-Spark).
+The equality pin is re-asserted ON THE PROBE SHAPE: all legs run must
+land on identical communities at every scale (row count + per-row
+hash-sum fingerprint compared Spark-to-Spark).
+
+A scale is a data directory holding either the TPC-H-shaped tables the
+derived graph is built from (sf0.1, or a slice of
+scripts/gen_graph_slice.py) or a graph written by the ``graph`` mode:
+``hgn_edges.parquet`` (src, dst) and ``hgn_vertices.parquet``
+(id, nationkey).
 
 The registered driver row's config converges in 2 steps (one deletion
 generation) at every probed scale — no cascade to maintain
@@ -46,9 +56,16 @@ Usage:
       # grid-search (r_thres, max_edge_weight, betweenness_thres) at
       # sf0.1 for a config with >=3 nonzero deletion steps; prints the
       # cascade shape per config (load-immune; secs are not).
-  python scripts/scale_probe_hgn_cascade.py run [scales] [out.json]
+  python scripts/scale_probe_hgn_cascade.py run [scales] [out.json] [legs]
       # scales default "sf0.1=/root/testdata/sf0.1,1000x=/tmp/hgn_scale/sf100graph"
-      # (10x/100x slices: python scripts/gen_graph_slice.py 10|100 <sf0.1> <out>)
+      # (10x/100x slices: python scripts/gen_graph_slice.py 10|100 <sf0.1> <out>);
+      # legs: comma list of LEGS, default all three
+  python scripts/scale_probe_hgn_cascade.py graph derived <k> <sf_dir> <out>
+      # k disjoint copies of sf_dir's derived graph (ids offset per copy)
+  python scripts/scale_probe_hgn_cascade.py graph ba <n> <m> <seed> <out>
+      # a preferential-attachment graph with hubs (networkx
+      # barabasi_albert_graph; n=1856, m=7 is Hamsterster's size:
+      # 12,943 edges, max degree 184), nationkey uniform over 25 values
 """
 
 from __future__ import annotations
@@ -85,6 +102,11 @@ def _inputs(spark, sf_dir):
     from hgn_spark.catalog import load_table
     from hgn_spark.graph.queries import derived_edges
 
+    if os.path.exists(f"{sf_dir}/hgn_edges.parquet"):
+        return (
+            spark.read.parquet(f"{sf_dir}/hgn_vertices.parquet"),
+            spark.read.parquet(f"{sf_dir}/hgn_edges.parquet"),
+        )
     edges = derived_edges(spark, sf_dir)
     vertices = load_table(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").alias("id"),
@@ -110,9 +132,9 @@ def _params(cfg: dict):
 # Module constants of hgn_spark.graph.hgn each leg patches.
 _SHUT = {"_SCOPE_MAX_DELETED_FRACTION": 0.0, "_SCOPE_MAX_EDGE_FRACTION": 0.0}
 LEGS = {
-    "driver_finish": {"_DRIVER_FINISH_MAX_EDGES": float("inf")},
-    "bound_0": {"_DRIVER_FINISH_MAX_EDGES": 0},
-    "gates_shut": {"_DRIVER_FINISH_MAX_EDGES": 0, **_SHUT},
+    "driver_finish": {"_DRIVER_FINISH_BUDGET_BYTES": float("inf")},
+    "bound_0": {"_DRIVER_FINISH_BUDGET_BYTES": 0},
+    "gates_shut": {"_DRIVER_FINISH_BUDGET_BYTES": 0, **_SHUT},
 }
 
 
@@ -207,7 +229,29 @@ def sweep(sf_dir: str) -> None:
                 )
 
 
-def run(scales, out_path: str | None) -> None:
+def _level2_bound(spark, sf_dir: str) -> tuple[int, int]:
+    """(edges, Σ_v deg(v)²) of a scale's canonical input graph."""
+    from pyspark.sql import functions as F
+
+    from hgn_spark.graph.core import canonicalize, symmetrize
+
+    _, edges = _inputs(spark, sf_dir)
+    e = canonicalize(edges)
+    row = (
+        symmetrize(e, assume_canonical=True)
+        .groupBy("src")
+        .count()
+        .agg(
+            (F.sum("count") / 2).cast("long").alias("n"),
+            F.sum(F.col("count") * F.col("count")).alias("l2"),
+        )
+        .collect()[0]
+    )
+    return int(row["n"]), int(row["l2"])
+
+
+def run(scales, out_path: str | None, legs: list[str]) -> None:
+    from hgn_spark.graph import hgn as hgn_mod
     from hgn_spark.session import get_spark
 
     spark = get_spark(app_name="hgn_cascade_probe")
@@ -227,7 +271,6 @@ def run(scales, out_path: str | None) -> None:
         # first scale so no timed leg carries it.
         warm, _ = _run_once(spark, scales[0][1], CASCADE, "bound_0")
         out["warmup"] = {"scale": scales[0][0], "total": warm["total"]}
-    legs = list(LEGS)
     for i, (label, sf_dir) in enumerate(scales):
         per_leg: dict = {}
         fps: dict = {}
@@ -244,22 +287,28 @@ def run(scales, out_path: str | None) -> None:
         # The equality pin, re-asserted on the probe shape (cascade
         # config, probe scales — not just Quakers).
         per_leg["communities_equal"] = len({json.dumps(f) for f in fps.values()}) == 1
-        per_leg["fingerprint"] = fps[legs[0]]
+        per_leg["fingerprint"] = fps[order[0]]
         if not per_leg["communities_equal"]:
             per_leg["fingerprints"] = fps
             print(f"# {label}: EQUALITY PIN FAILED {fps}", file=sys.stderr)
-        drv, spk = per_leg["driver_finish"], per_leg["bound_0"]
-        per_leg["finish"] = {
-            "n_edges": spk["n_scored_per_step"][0],
-            "secs_driver": round(_finish_s(drv), 3),
-            "secs_spark": round(_finish_s(spk), 3),
-            "speedup": round(_finish_s(spk) / max(_finish_s(drv), 1e-9), 2),
-            "driver_step1_s": drv["loop_delete_rule_per_step"][0],
-            "py_rss_peak_mb": drv["py_rss_peak_mb"],
-        }
+        n_edges, level2 = _level2_bound(spark, sf_dir)
+        fin: dict = {"n_edges": n_edges, "level2_bound": level2}
+        drv, spk = per_leg.get("driver_finish"), per_leg.get("bound_0")
+        if drv:
+            fin["secs_driver"] = round(_finish_s(drv), 3)
+            fin["driver_step1_s"] = drv["loop_delete_rule_per_step"][0]
+            fin["py_rss_peak_mb"] = drv["py_rss_peak_mb"]
+            fin["estimate_mb"] = round(
+                hgn_mod._driver_finish_bytes(n_edges, level2) / 2**20, 1
+            )
+        if spk:
+            fin["secs_spark"] = round(_finish_s(spk), 3)
+        if drv and spk:
+            fin["speedup"] = round(_finish_s(spk) / max(_finish_s(drv), 1e-9), 2)
+        per_leg["finish"] = fin
         # Step-2+ delete-rule cost ratio (scoped/full) next to the
         # scored-edge ratio that should explain it.
-        a, b = per_leg["gates_shut"], spk
+        a, b = per_leg.get("gates_shut", {}), spk or {}
         tail = slice(1, None)
         ta = a.get("loop_delete_rule_per_step", [])[tail]
         tb = b.get("loop_delete_rule_per_step", [])[tail]
@@ -282,16 +331,73 @@ def run(scales, out_path: str | None) -> None:
             fh.write(js + "\n")
 
 
+def write_graph(kind: str, args: list[str]) -> None:
+    """Write a probe graph directory (see the module docstring)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    out_dir = args[-1]
+    if kind == "derived":
+        from pyspark.sql import functions as F
+
+        from hgn_spark.session import get_spark
+
+        k, sf_dir = int(args[0]), args[1]
+        spark = get_spark(app_name="hgn_cascade_graph")
+        vertices, edges = _inputs(spark, sf_dir)
+        v = vertices.select(F.col("id").cast("long"), "nationkey").toArrow()
+        e = edges.select(F.col("src").cast("long"), F.col("dst").cast("long")).toArrow()
+        ids = v["id"].to_numpy()
+        src, dst = e["src"].to_numpy(), e["dst"].to_numpy()
+        # Disjoint copies: copy c shifts every id by c * pad, which keeps
+        # each copy's id order (so canonical orientation and min-id
+        # component labels are the base graph's, shifted).
+        pad = int(max(ids.max(), src.max(), dst.max())) + 1
+
+        def shift(a):
+            return np.concatenate([a + c * pad for c in range(k)])
+
+        vt = pa.table(
+            {"id": shift(ids), "nationkey": np.tile(v["nationkey"].to_numpy(), k)}
+        )
+        et = pa.table({"src": shift(src), "dst": shift(dst)})
+    elif kind == "ba":
+        import networkx as nx
+
+        n, m, seed = int(args[0]), int(args[1]), int(args[2])
+        g = nx.barabasi_albert_graph(n, m, seed=seed)
+        pairs = np.array(sorted((min(a, b), max(a, b)) for a, b in g.edges()))
+        rng = np.random.default_rng(seed)
+        vt = pa.table(
+            {
+                "id": np.arange(1, n + 1, dtype=np.int64),
+                "nationkey": rng.integers(25, size=n).astype(np.int32),
+            }
+        )
+        et = pa.table({"src": pairs[:, 0] + 1, "dst": pairs[:, 1] + 1})
+    else:
+        raise SystemExit(f"unknown graph kind {kind!r}")
+    os.makedirs(out_dir, exist_ok=True)
+    pq.write_table(vt, f"{out_dir}/hgn_vertices.parquet")
+    pq.write_table(et, f"{out_dir}/hgn_edges.parquet")
+    print(f"{out_dir}: {vt.num_rows} vertices, {et.num_rows} edges")
+
+
 def main() -> None:
     mode = sys.argv[1] if len(sys.argv) > 1 else "run"
     if mode == "sweep":
         sweep(sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1")
         return
+    if mode == "graph":
+        write_graph(sys.argv[2], sys.argv[3:])
+        return
     scales = [
         tuple(s.split("=", 1))
         for s in (sys.argv[2] if len(sys.argv) > 2 else DEFAULT_SCALES).split(",")
     ]
-    run(scales, sys.argv[3] if len(sys.argv) > 3 else None)
+    legs = sys.argv[4].split(",") if len(sys.argv) > 4 else list(LEGS)
+    run(scales, sys.argv[3] if len(sys.argv) > 3 else None, legs)
 
 
 if __name__ == "__main__":

@@ -18,10 +18,10 @@ SF_BENCH = str(Path(SF_SMOKE).parent / "sf0.1")
 
 def force_spark_loop(monkeypatch) -> None:
     """Make hgn_communities run every step and the final components in
-    Spark: its in-process finish bound patched to 0 edges."""
+    Spark: its in-process finish budget patched to 0 bytes."""
     from hgn_spark.graph import hgn as hgn_mod
 
-    monkeypatch.setattr(hgn_mod, "_DRIVER_FINISH_MAX_EDGES", 0)
+    monkeypatch.setattr(hgn_mod, "_DRIVER_FINISH_BUDGET_BYTES", 0)
 
 
 def set_scope_gates(monkeypatch, gates: str) -> None:

@@ -39,6 +39,7 @@ from hgn_spark.graph.weights import (
     one_hot_cosine_similarities,
 )
 from tests.conftest import (
+    REPO,
     SF_BENCH,
     SF_SMALL,
     SF_SMOKE,
@@ -1368,13 +1369,37 @@ def _hgn_parity_input(spark, graph: str):
     """(vertices, edges, feature columns, params, edges_canonical) of
     one parity graph: the derived graph at sf0.01 (r-metric thresholds
     0.75, which delete [30, 9, 7, 0]; the registered row's 0.25
-    deletes nothing there) and sf0.1 (the cascade probe's config), and
-    the reference's Quakers and Hamsterster networks with their conf
+    deletes nothing there) and sf0.1 (the cascade probe's config), a
+    preferential-attachment graph with hubs (400 vertices, 1,975
+    edges, max degree 90; the cascade probe's config), and the
+    reference's Quakers and Hamsterster networks with their conf
     files' options, capped at three steps."""
     from hgn_spark.catalog import load_table
     from hgn_spark.graph.queries import derived_edges
     from hgn_spark.sources.csv import load_edges_csv, load_nodes_csv
 
+    if graph == "hubs":
+        import random
+
+        import networkx as nx
+
+        g = nx.barabasi_albert_graph(400, 5, seed=3)
+        rng = random.Random(3)
+        verts = spark.createDataFrame(
+            [(v, rng.randrange(25)) for v in g.nodes()], "id long, nationkey int"
+        )
+        edges = spark.createDataFrame(
+            sorted((min(a, b), max(a, b)) for a, b in g.edges()), "src long, dst long"
+        )
+        params = HGNParams(
+            r_lvl1_thres=0.5,
+            r_lvl2_thres=0.5,
+            max_edge_weight=0.4,
+            betweenness_thres=3.0,
+            feature_min_avg=0.5,
+            max_steps=6,
+        )
+        return verts, edges, ["nationkey"], params, True
     if graph.startswith("sf"):
         sf = SF_SMALL if graph == "sf0.01" else SF_BENCH
         verts = load_table(spark, sf, "supplier").select(
@@ -1436,15 +1461,17 @@ def _hgn_parity_input(spark, graph: str):
         for g, path in (
             ("sf0.01", SF_SMALL),
             ("sf0.1", SF_BENCH),
+            ("hubs", REPO),
             ("quakers", QUAKERS),
             ("hamsterster", HAMSTER),
         )
     ],
 )
 def test_hgn_driver_finish_matches_spark_loop(spark, monkeypatch, graph):
-    """Below the edge bound hgn_communities finishes in-process: with
-    the shipped bound every graph here takes the in-process finish from
-    step 1, and with the bound patched to 0 the Spark loop runs every
+    """Within the driver-memory budget hgn_communities finishes
+    in-process: with the shipped budget every graph here takes the
+    in-process finish from step 1, and with it patched to 0 the Spark
+    loop runs every
     step. Both land on the same communities, the same deletions per
     step, the same output schema and the same phase_timings keys and
     per-step list lengths."""
@@ -1455,7 +1482,7 @@ def test_hgn_driver_finish_matches_spark_loop(spark, monkeypatch, graph):
     orig = hgn_mod._finish_on_driver
 
     def spy(*args):
-        first_steps.append(args[6])
+        first_steps.append(args[7])
         return orig(*args)
 
     monkeypatch.setattr(hgn_mod, "_finish_on_driver", spy)
@@ -1480,6 +1507,87 @@ def test_hgn_driver_finish_matches_spark_loop(spark, monkeypatch, graph):
     assert set(t_drv) == set(t_spk)
     for key in ("n_scored_per_step", "loop_delete_rule_per_step", "n_scope_per_step"):
         assert len(t_drv.get(key, [])) == len(t_spk.get(key, [])), key
+
+
+def test_level2_bound_covers_the_level2_sets():
+    """The in-process finish's memory estimate reads Σ deg², which
+    bounds the level-2 entries its delete rule holds: tight on a star (every leaf sees the
+    hub and all other leaves), loose on a triangle (shared neighbours)."""
+    from hgn_spark.graph.hgn import _level2_bound
+
+    def level2_entries(adj):
+        return sum(
+            len(set(nv).union(*(adj[w] for w in nv)) - {v}) for v, nv in adj.items()
+        )
+
+    star = {0: {1, 2, 3, 4, 5}, **{i: {0} for i in range(1, 6)}}
+    triangle = {0: {1, 2}, 1: {0, 2}, 2: {0, 1}}
+    path = {1: {2}, 2: {1, 3}, 3: {2}}
+    assert _level2_bound(star) == level2_entries(star) == 30
+    assert (_level2_bound(triangle), level2_entries(triangle)) == (12, 6)
+    assert _level2_bound(path) == level2_entries(path) == 6
+
+
+@pytest.mark.skipif(not os.path.isdir(SF_BENCH), reason="sf0.1 data absent")
+def test_hgn_hands_off_from_spark_steps_to_in_process_finish(spark, monkeypatch):
+    """A generation over the driver-memory budget runs its step in
+    Spark; once the deletions bring its estimated working set under the
+    budget the next step finishes in-process. With the budget one byte
+    under the initial sf0.1 graph's estimate (the pre-check on its edge
+    count passes, so the edge collect decides and is dropped), step 1
+    runs in Spark and steps 2+ in-process, and the run deletes and
+    groups exactly as the Spark loop does."""
+    from hgn_spark.graph import hgn as hgn_mod
+
+    vertices, edges, features, params, canonical = _hgn_parity_input(spark, "sf0.1")
+    adj0 = hgn_mod._collect_adjacency(edges)
+    n0 = sum(len(nv) for nv in adj0.values()) // 2
+    budget = hgn_mod._driver_finish_bytes(n0, hgn_mod._level2_bound(adj0)) - 1
+    assert hgn_mod._driver_finish_bytes(n0, 2 * n0) <= budget
+    first_steps = []
+    orig = hgn_mod._finish_on_driver
+
+    def spy(*args):
+        first_steps.append(args[7])
+        return orig(*args)
+
+    monkeypatch.setattr(hgn_mod, "_finish_on_driver", spy)
+
+    def run():
+        t: dict = {}
+        out = hgn_communities(
+            vertices, edges, features, params, phase_timings=t,
+            edges_canonical=canonical,
+        )
+        return t, out.schema, sorted(tuple(r) for r in out.collect())
+
+    monkeypatch.setattr(hgn_mod, "_DRIVER_FINISH_BUDGET_BYTES", budget)
+    t_mix, schema_mix, comps_mix = run()
+    assert first_steps == [2]
+    force_spark_loop(monkeypatch)
+    t_spk, schema_spk, comps_spk = run()
+    assert first_steps == [2]
+    assert comps_mix == comps_spk and comps_mix
+    assert schema_mix == schema_spk
+    assert (
+        t_mix["n_deleted_per_step"]
+        == t_spk["n_deleted_per_step"]
+        == [1359, 131, 36, 21, 2, 0]
+    )
+    assert t_mix["n_steps"] == t_spk["n_steps"] == 6
+    assert set(t_mix) == set(t_spk)
+    for key in ("n_scored_per_step", "loop_delete_rule_per_step", "n_scope_per_step"):
+        assert len(t_mix[key]) == len(t_spk[key]), key
+    # Step 1 scored every edge in Spark; each in-process step scores
+    # every edge left and builds no scope.
+    assert t_mix["n_scored_per_step"][0] == n0
+    left = n0 - 1359
+    for scored, deleted in zip(
+        t_mix["n_scored_per_step"][1:], t_mix["n_deleted_per_step"][1:]
+    ):
+        assert scored == left
+        left -= deleted
+    assert t_mix["n_scope_per_step"] == [None] * 5
 
 
 def test_pair_table_storage_follows_block_store_memory(spark):
