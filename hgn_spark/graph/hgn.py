@@ -7,17 +7,19 @@ iteration r-metrics → hybrid edge weights → deletion rule → anti-join,
 until no edge qualifies or max_steps is hit. Communities are the final
 connected components.
 
-Two ways to run the steps. A step is a chain of Spark jobs with an
-eager checkpoint at every phase boundary, unless the edge generation it
-starts on is small enough for the driver: its estimated in-process
-working set, linear in the edges and in Σ deg(v)² (a bound on the
-level-2 set entries the in-process rule holds), is within
-_DRIVER_FINISH_BUDGET_BYTES. Such a step collects the edge generation
-and the init frames once and runs itself, the remaining steps and the
-final components in-process (_finish_on_driver), where a step costs
-milliseconds instead of Spark's per-job driver cost. Init always runs
-in Spark. Both ways delete the same edges in every step: every value
-the delete rule compares is a double Spark computed (collected, never
+One loop, two step bodies. Every step opens with the same check: its
+edge generation's estimated in-process working set, linear in the
+edges and in Σ deg(v)² (a bound on the level-2 set entries the
+in-process rule holds), against _DRIVER_FINISH_BUDGET_BYTES. Until a
+generation fits, a step is a chain of Spark jobs with an eager
+checkpoint at every phase boundary. Once one fits, the driver takes
+over: it collects the edge generation and the init frames once, holds
+the adjacency to the end, and runs this step and the remaining ones in
+plain Python (a step costs milliseconds instead of Spark's per-job
+driver cost). The final components run where the last step ran: Spark
+components, or union-find on the driver. Init always runs in Spark.
+Both bodies delete the same edges in every step: every value the
+delete rule compares is a double Spark computed (collected, never
 recomputed) or a ratio of two integer counts, one correctly rounded
 division on either side.
 
@@ -37,11 +39,10 @@ Deliberate divergences from the reference (each documented in SURVEY §8):
 from __future__ import annotations
 
 import time as _time
-from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hgn_spark.checkpoint import CheckpointJanitor
@@ -59,14 +60,6 @@ from hgn_spark.graph.weights import (
     one_hot_cosine_similarities,
 )
 
-
-# Size of a step's shared 2-hop pair table, measured (4-core machine,
-# 6 GB local driver) on the derived graph at sf0.1 and its 10x/100x
-# slices (2,824 / 28,240 / 282,400 edges): 11.99 pair rows per edge at
-# every size, 92 B per row in the block store deserialized, 10.5 B
-# serialized.
-_PAIR_ROWS_PER_EDGE = 12
-_PAIR_ROW_BYTES_DESER = 92
 
 # Gates of the scoped delete rule, measured on the 1000x cascade
 # (ARCHITECTURE "Incremental delete rule at 1000×"). A step scores only
@@ -111,33 +104,6 @@ def _driver_finish_bytes(n_edges: int, level2: int) -> int:
         _DRIVER_FINISH_BYTES_PER_EDGE * n_edges
         + _DRIVER_FINISH_BYTES_PER_LEVEL2 * level2
     )
-
-
-def _pair_table_storage(spark: SparkSession, n_edges: int) -> StorageLevel:
-    """Storage level for a step's pair table on an ``n_edges`` graph.
-
-    Deserialized (Spark's default) unless its estimated size exceeds
-    the storage share of the block managers' memory that execution
-    cannot evict (``spark.memory.storageFraction`` of the unified
-    pool); then serialized, which spills instead. Serialized costs
-    every scan a deserialization: +7% median task CPU on a 9,000-edge
-    graph (~5 scans per step); on the 282,400-edge 100x slice two
-    alternating runs of each did not separate the two. A held
-    deserialized table is memory the step's joins lose: at the 1000x
-    slice (~3.1 GB estimated, 85% of a 6 GB driver's 3.7 GB pool) the
-    cascade probe's scoped run went out of heap. Local mode has one
-    block manager, the driver's; on a cluster the driver's share is
-    counted too, though it holds no partitions."""
-    est = _PAIR_ROWS_PER_EDGE * _PAIR_ROW_BYTES_DESER * n_edges
-    pool = spark.sparkContext._jsc.sc().getExecutorMemoryStatus().values()
-    it = pool.iterator()
-    pool_bytes = 0
-    while it.hasNext():
-        pool_bytes += int(it.next()._1())
-    frac = float(spark.conf.get("spark.memory.storageFraction", "0.5"))
-    if est <= frac * pool_bytes:
-        return StorageLevel.MEMORY_AND_DISK_DESER
-    return StorageLevel.MEMORY_AND_DISK
 
 
 def _driver_delete_rule(
@@ -273,83 +239,6 @@ def _collect_init(
     return sim_all, sim_hit, bw
 
 
-def _finish_on_driver(
-    vertices: DataFrame,
-    e: DataFrame,
-    adj: dict[int, set[int]],
-    n_edges: int,
-    sims: DataFrame,
-    betw: DataFrame,
-    p: HGNParams,
-    first_step: int,
-    t0: float,
-    t: dict | None,
-    mark: Callable[[str, float], float],
-) -> DataFrame:
-    """Steps ``first_step``..``max_steps`` and the final components of
-    `hgn_communities` in-process, on an edge generation ``e`` of
-    ``n_edges`` rows collected as ``adj`` (``first_step <= max_steps``)
-    → (id, component) with the Spark path's schema.
-
-    The caller opened the first step (``n_steps`` set, its clock read
-    at ``t0``) and collected ``adj`` inside it; the init frames are
-    collected once, also billed to the first step. Records the same
-    ``phase_timings`` keys and list lengths as the Spark steps (every
-    step scores all edges; no scope is built)."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_type
-    from pyspark.sql.types import StructField, StructType
-
-    sim_all, sim_hit, bw = _collect_init(sims, betw, p.feature_min_avg)
-    for step in range(first_step, p.max_steps + 1):
-        if step > first_step:
-            if t is not None:
-                t["n_steps"] = step
-            t0 = _time.perf_counter()
-        if t is not None:
-            if step > 1:
-                t.setdefault("n_scope_per_step", []).append(None)
-            t.setdefault("n_scored_per_step", []).append(n_edges)
-        to_delete = _driver_delete_rule(adj, sim_all, sim_hit, bw, p)
-        dt = mark("loop_delete_rule", t0)
-        if t is not None:
-            t.setdefault("loop_delete_rule_per_step", []).append(round(dt, 3))
-            t.setdefault("n_deleted_per_step", []).append(len(to_delete))
-        if not to_delete:
-            break
-        t0 = _time.perf_counter()
-        for u, v in to_delete:
-            adj[u].discard(v)
-            adj[v].discard(u)
-        n_edges -= len(to_delete)
-        mark("loop_anti_join", t0)
-
-    t0 = _time.perf_counter()
-    comp = _min_label_components(adj)
-    et = e.schema["dst"].dataType
-    at = to_arrow_type(et)
-    mapping = e.sparkSession.createDataFrame(
-        pa.table(
-            {
-                "id": pa.array(list(comp), at),
-                "component": pa.array(list(comp.values()), at),
-            }
-        ),
-        StructType([StructField("id", et), StructField("component", et)]),
-    )
-    # The Spark path's final projection over the same join keys:
-    # vertices that appear in ``vertices`` and keep an edge, with
-    # coalesce(component, id) so the column types and nullability are
-    # the Spark path's.
-    out = (
-        vertices.select("id")
-        .join(mapping, "id")
-        .select("id", F.coalesce("component", F.col("id")).alias("component"))
-    )
-    mark("final_cc", t0)
-    return out
-
-
 @dataclass
 class HGNParams:
     """Knobs mirroring the reference's run_options config section
@@ -377,29 +266,28 @@ def hgn_communities(
 
     ``vertices``: (id, *features); ``edges``: (src, dst) any orientation.
 
-    ``phase_timings`` (r12, VERDICT r11 #7): pass a dict to receive
-    wall-clock attribution per phase — init_sims / init_betweenness /
-    loop_delete_rule / loop_anti_join (the loop keys accumulate across
-    iterations; n_steps records how many ran, set as each step starts)
-    and final_cc. In the Spark steps every phase boundary is an EAGER
-    checkpoint (whose own job also yields the loop's row counts), so
-    the numbers are true materialization costs, not lazy-plan noise;
-    the in-process finish bills its collects to the first step it runs,
-    and a Spark step whose edge collect found the generation over the
-    budget bills that collect to itself. Instrumentation costs two time.perf_counter() calls per phase
-    and nothing when the dict is omitted. Per step it also records
-    loop_delete_rule_per_step, n_deleted_per_step, n_scored_per_step
-    and, from step 2, n_scope_per_step (None where the scope was not
-    built, as in every in-process step); the cascade probe
-    (scripts/scale_probe_hgn_cascade.py) reads them.
+    ``phase_timings``: pass a dict to receive wall-clock attribution
+    per phase (``None``, the default, records into a throwaway dict) —
+    init_sims / init_betweenness / loop_delete_rule / loop_anti_join
+    (the loop keys accumulate across iterations; n_steps records how
+    many ran, set as each step starts) and final_cc. In a Spark step
+    every phase boundary is an EAGER checkpoint (whose own job also
+    yields the loop's row counts), so the numbers are true
+    materialization costs, not lazy-plan noise; the step in which the
+    driver takes over bills its collects to itself, and so does a Spark
+    step whose edge collect found the generation over the budget.
+    Instrumentation costs two time.perf_counter() calls per phase. Per
+    step it also records loop_delete_rule_per_step, n_deleted_per_step,
+    n_scored_per_step and, from step 2, n_scope_per_step (None where
+    the scope was not built, as in every in-process step); the cascade
+    probe (scripts/scale_probe_hgn_cascade.py) reads them.
     """
     p = params or HGNParams()
-    t = phase_timings
+    t = {} if phase_timings is None else phase_timings
 
     def _mark(key: str, t0: float) -> float:
         dt = _time.perf_counter() - t0
-        if t is not None:
-            t[key] = round(t.get(key, 0.0) + dt, 3)
+        t[key] = round(t.get(key, 0.0) + dt, 3)
         return dt
 
     with CheckpointJanitor(edges.sparkSession) as jan:
@@ -445,17 +333,19 @@ def hgn_communities(
 
         def _init_betw():
             t0 = _time.perf_counter()
-            # INVARIANT (ADVICE r13 #4): betweenness is computed ONCE here,
-            # on the initial edge set, and never refreshed inside the loop —
-            # the reference does the same (main.py:243-258).
-            # The scoped delete rule's soundness DEPENDS on this: with
-            # init-once betweenness (and init-once sims), an untouched
-            # edge's delete condition is time-invariant, so a step may
-            # re-score only edges whose endpoint neighborhoods the
-            # previous deletions changed. If a future change recomputes
-            # betweenness per step, every survivor's condition can flip
-            # and the scope becomes unsound — a per-step betweenness
-            # refresh must shut the scope gates.
+            # INVARIANT: betweenness is computed ONCE here, on the initial
+            # edge set, and never refreshed inside the loop — the
+            # reference does the same (main.py:243-258). Two parts of
+            # the loop DEPEND on this (and on init-once sims):
+            # - the scoped delete rule: an untouched edge's delete
+            #   condition is time-invariant, so a step may re-score only
+            #   edges whose endpoint neighborhoods the previous deletions
+            #   changed;
+            # - the in-process steps: they collect the similarities and
+            #   betweenness once, when the driver takes over, and score
+            #   every later step against that copy.
+            # A per-step betweenness refresh must therefore shut both the
+            # scope gates and the in-process steps.
             out = jan.checkpoint(
                 edge_betweenness(
                     e, max_sp_length=p.max_sp_length, edges_canonical=True
@@ -471,14 +361,14 @@ def hgn_communities(
             betw = _f_betw.result()
 
         # --- main loop ------------------------------------------------------
-        # One delete rule, scored in pair form (PROBE_hgn_subphase_r13):
+        # A Spark step scores in pair form (PROBE_hgn_subphase_r13):
         # score once, CHECKPOINT the small candidate list, then expand
         # common members for the candidates only — the full-edge member
         # expansion is the phase's dominant term (49M rows at 1000x) and
         # Catalyst would re-run the scored plan per consumer without the
         # materialization barrier.
         #
-        # A step may score only the edges with an endpoint within
+        # A Spark step may score only the edges with an endpoint within
         # distance 1 of the previous step's deleted endpoints (`scope`,
         # seeded by `aff_v`). Sound because an edge's metrics depend only
         # on its endpoints' level-1/2 neighborhoods, which deleting
@@ -489,111 +379,126 @@ def hgn_communities(
         # the scope is built and kept; communities are identical either
         # way (pinned by test).
         aff_v = None  # scope seed, built only for a step that reads it
-        for _step in range(1, p.max_steps + 1):
-            if t is not None:
-                t["n_steps"] = _step
+        adj = None  # the driver's adjacency, held from the hand-off on
+        for step in range(1, p.max_steps + 1):
+            t["n_steps"] = step
             t0 = _time.perf_counter()
             # Σ deg² >= Σ deg = 2·n_edges, and n_edges came from the last
-            # checkpoint: a generation too large for the in-process finish
+            # checkpoint: a generation too large for the in-process steps
             # is ruled out without a job. Below that, the edge collect
-            # (16 B per edge) decides, and is kept if the step finishes
-            # in-process.
+            # (16 B per edge) decides, and is kept if the driver takes
+            # over.
             budget = _DRIVER_FINISH_BUDGET_BYTES
-            if _driver_finish_bytes(n_edges, 2 * n_edges) <= budget:
+            if adj is None and _driver_finish_bytes(n_edges, 2 * n_edges) <= budget:
                 adj = _collect_adjacency(e)
                 if _driver_finish_bytes(n_edges, _level2_bound(adj)) <= budget:
-                    return _finish_on_driver(
-                        vertices, e, adj, n_edges, sims, betw, p, _step, t0, t,
-                        _mark,
-                    )
-                del adj
+                    init = _collect_init(sims, betw, p.feature_min_avg)
+                    jan.release(aff_v)
+                    aff_v = None
+                else:
+                    adj = None
             scope = n_scope = None
-            if aff_v is not None:
-                scope, n_scope, _ = jan.counted(
-                    e.join(aff_v.withColumnRenamed("id", "src"), "src", "left_semi")
-                    .unionByName(
+            if adj is not None:
+                to_delete = _driver_delete_rule(adj, *init, p)
+                n_del = len(to_delete)
+            else:
+                if aff_v is not None:
+                    scope, n_scope, _ = jan.counted(
                         e.join(
-                            aff_v.withColumnRenamed("id", "dst"), "dst", "left_semi"
+                            aff_v.withColumnRenamed("id", "src"), "src", "left_semi"
+                        )
+                        .unionByName(
+                            e.join(
+                                aff_v.withColumnRenamed("id", "dst"), "dst", "left_semi"
+                            )
+                        )
+                        .distinct()
+                    )
+                    jan.release(aff_v)
+                    aff_v = None
+                    if n_scope >= _SCOPE_MAX_EDGE_FRACTION * n_edges:
+                        jan.release(scope)
+                        scope = None
+                # The step's ONE 2-hop expansion: the tagged level-2 pair
+                # table (source-restricted to the scope's endpoints when
+                # scoped), materialized once and read by BOTH consumers —
+                # the r-metric scoring and the candidates' common-member
+                # expansion for the hybrid weights — so the 2-hop self-join
+                # runs once per step, not once per consumer. It is held
+                # until the step's deletion set is materialized and is the
+                # loop's largest generation (11.99 rows per edge on the
+                # derived graph, 46.5-83.8 on preferential-attachment
+                # graphs with hubs), so it is stored serialized (10.5 B a
+                # row against 92 B deserialized) and spills rather than
+                # taking the heap the step's joins need.
+                # e is canonical by construction (canonicalize at init;
+                # anti-join deletion preserves it) — every symmetrize in the
+                # scoring path may skip its dedup exchange.
+                pt = jan.checkpoint(
+                    _tagged_pairs2(
+                        e,
+                        sources=_endpoints(scope) if scope is not None else None,
+                        edges_canonical=True,
+                    ),
+                    storage_level=StorageLevel.MEMORY_AND_DISK,
+                )
+                scored = r_metrics_edges_pairs(
+                    scope if scope is not None else e,
+                    pt,
+                    p.r_lvl1_thres,
+                    p.r_lvl2_thres,
+                )
+                cand = jan.checkpoint(
+                    scored.filter(~F.col("keepit")).select("src", "dst")
+                )
+                weights = hybrid_edge_weights_members(
+                    _common_member_rows(cand, pt), sims, p.feature_min_avg
+                )
+                # Canonical edges → single equi-join against canonical
+                # betweenness (the reference probes both orientations,
+                # main.py:130-134). Its row count — the loop control —
+                # comes from the checkpoint job.
+                to_delete, n_del, _ = jan.counted(
+                    weights.join(betw, ["src", "dst"], "inner")
+                    .filter(
+                        (F.col("edge_weight") < p.max_edge_weight)
+                        | (
+                            (F.col("edge_weight") >= p.max_edge_weight)
+                            & (F.col("betweenness") > p.betweenness_thres)
                         )
                     )
-                    .distinct()
+                    .select("src", "dst")
                 )
-                jan.release(aff_v)
-                aff_v = None
-                if n_scope >= _SCOPE_MAX_EDGE_FRACTION * n_edges:
-                    jan.release(scope)
-                    scope = None
-            if t is not None:
-                if _step > 1:
-                    t.setdefault("n_scope_per_step", []).append(n_scope)
-                # |edges actually scored| this step — what the step's
-                # delete-rule cost scales with.
-                t.setdefault("n_scored_per_step", []).append(
-                    n_scope if scope is not None else n_edges
-                )
-            # The step's ONE 2-hop expansion: the tagged level-2 pair
-            # table (source-restricted to the scope's endpoints when
-            # scoped), materialized once and read by BOTH consumers —
-            # the r-metric scoring and the candidates' common-member
-            # expansion for the hybrid weights — so the 2-hop self-join
-            # runs once per step, not once per consumer. It is held
-            # until the step's deletion set is materialized and is the
-            # loop's largest generation (~12x |e| rows on the derived
-            # graph); one too large for the block store is stored
-            # serialized (see _pair_table_storage).
-            # e is canonical by construction (canonicalize at init;
-            # anti-join deletion preserves it) — every symmetrize in the
-            # scoring path may skip its dedup exchange.
-            pt = jan.checkpoint(
-                _tagged_pairs2(
-                    e,
-                    sources=_endpoints(scope) if scope is not None else None,
-                    edges_canonical=True,
-                ),
-                storage_level=_pair_table_storage(e.sparkSession, n_edges),
-            )
-            scored = r_metrics_edges_pairs(
-                scope if scope is not None else e, pt, p.r_lvl1_thres, p.r_lvl2_thres
-            )
-            cand = jan.checkpoint(scored.filter(~F.col("keepit")).select("src", "dst"))
-            weights = hybrid_edge_weights_members(
-                _common_member_rows(cand, pt), sims, p.feature_min_avg
-            )
-            # Canonical edges → single equi-join against canonical betweenness
-            # (the reference probes both orientations, main.py:130-134). Its
-            # row count — the loop control — comes from the checkpoint job.
-            to_delete, n_del, _ = jan.counted(
-                weights.join(betw, ["src", "dst"], "inner")
-                .filter(
-                    (F.col("edge_weight") < p.max_edge_weight)
-                    | (
-                        (F.col("edge_weight") >= p.max_edge_weight)
-                        & (F.col("betweenness") > p.betweenness_thres)
-                    )
-                )
-                .select("src", "dst")
+                # The pair table and candidate list fed to_delete, now
+                # materialized — free them.
+                jan.release(pt, cand, scope)
+            # The per-step record: |edges actually scored| is what the
+            # step's delete-rule cost scales with; the cascade probe reads
+            # step-2+ cost against it, and n_deleted_per_step gives the
+            # cascade shape alongside.
+            if step > 1:
+                t.setdefault("n_scope_per_step", []).append(n_scope)
+            t.setdefault("n_scored_per_step", []).append(
+                n_scope if scope is not None else n_edges
             )
             dt = _mark("loop_delete_rule", t0)
-            if t is not None:
-                # Per-step breakdown (r14, VERDICT r13 #1): the cascade
-                # probe needs step-2+ cost separately from the accumulated
-                # total to show the scoped step's cost scaling with
-                # |scope| instead of |E|. n_deleted_per_step gives the
-                # cascade shape alongside.
-                t.setdefault("loop_delete_rule_per_step", []).append(round(dt, 3))
-                t.setdefault("n_deleted_per_step", []).append(n_del)
-            # The pair table and candidate list fed to_delete, now
-            # materialized — free them.
-            jan.release(pt, cand, scope)
+            t.setdefault("loop_delete_rule_per_step", []).append(round(dt, 3))
+            t.setdefault("n_deleted_per_step", []).append(n_del)
             if n_del == 0:
-                jan.release(to_delete)
                 break
             t0 = _time.perf_counter()
+            if adj is not None:
+                for u, v in to_delete:
+                    adj[u].discard(v)
+                    adj[v].discard(u)
+                n_edges -= n_del
+                _mark("loop_anti_join", t0)
+                continue
             new_e, n_edges, _ = jan.counted(
                 e.join(to_delete, ["src", "dst"], "left_anti")
             )
             _mark("loop_anti_join", t0)
-            if _step < p.max_steps and n_del < _SCOPE_MAX_DELETED_FRACTION * n_edges:
+            if step < p.max_steps and n_del < _SCOPE_MAX_DELETED_FRACTION * n_edges:
                 # The next step's pre-gate is open (n_edges is the count it
                 # reads): seed its scope with the deleted endpoints plus
                 # their neighbors in the pre-deletion generation — exactly
@@ -620,14 +525,42 @@ def hgn_communities(
             e = new_e
 
         t0 = _time.perf_counter()
-        survivors = drop_isolated_vertices(
-            vertices.select("id"), e, edges_canonical=True
-        )
-        out = connected_components(e, survivors, edges_canonical=True)
+        if adj is None:
+            survivors = drop_isolated_vertices(
+                vertices.select("id"), e, edges_canonical=True
+            )
+            out = connected_components(e, survivors, edges_canonical=True)
+            # The returned plan references the final edge generation
+            # lazily (survivors join + CC mapping): it is the caller's
+            # result. The init-step similarity and betweenness
+            # checkpoints are dead weight from here; the block's exit
+            # frees them.
+            jan.keep(e)
+        else:
+            import pyarrow as pa
+            from pyspark.sql.pandas.types import to_arrow_type
+            from pyspark.sql.types import StructField, StructType
+
+            comp = _min_label_components(adj)
+            et = e.schema["dst"].dataType
+            at = to_arrow_type(et)
+            mapping = e.sparkSession.createDataFrame(
+                pa.table(
+                    {
+                        "id": pa.array(list(comp), at),
+                        "component": pa.array(list(comp.values()), at),
+                    }
+                ),
+                StructType([StructField("id", et), StructField("component", et)]),
+            )
+            # The Spark components' final projection over the same join
+            # keys: vertices that appear in ``vertices`` and keep an
+            # edge, with coalesce(component, id) so the column types and
+            # nullability are the Spark path's.
+            out = (
+                vertices.select("id")
+                .join(mapping, "id")
+                .select("id", F.coalesce("component", F.col("id")).alias("component"))
+            )
         _mark("final_cc", t0)
-        # The returned plan references the final edge generation lazily
-        # (survivors join + CC mapping): it is the caller's result. The
-        # init-step similarity and betweenness checkpoints are dead
-        # weight from here; the block's exit frees them.
-        jan.keep(e)
         return out

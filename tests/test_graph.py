@@ -1224,14 +1224,27 @@ def test_hgn_actions_are_checkpoint_materializations(
     components' round signature read their numbers off those jobs, not
     off separate driver actions. The fixture runs two steps (the
     bridge is deleted, then nothing), so the per-step gates run; with
-    the scope gates forced open, step 2 scores a scope."""
+    the scope gates forced open, step 2 scores a scope. Every step's
+    pair table is checkpointed serialized."""
     import os
     import sys
 
+    from pyspark import StorageLevel
     from pyspark.sql.classic.dataframe import DataFrame as ClassicDF
+
+    from hgn_spark.checkpoint import CheckpointJanitor
 
     force_spark_loop(monkeypatch)
     set_scope_gates(monkeypatch, gates)
+    pair_levels = []
+    orig_checkpoint = CheckpointJanitor.checkpoint
+
+    def checkpoint(self, df, **kw):
+        if df.columns == ["src", "dst", "is_l1"]:
+            pair_levels.append(kw.get("storage_level"))
+        return orig_checkpoint(self, df, **kw)
+
+    monkeypatch.setattr(CheckpointJanitor, "checkpoint", checkpoint)
     callers: list[tuple[str, str]] = []
     for name in ("count", "collect", "isEmpty"):
         orig = getattr(ClassicDF, name)
@@ -1259,46 +1272,12 @@ def test_hgn_actions_are_checkpoint_materializations(
     monkeypatch.undo()
     assert t["n_deleted_per_step"] == [1, 0]
     _assert_scope_gates(t, gates)
+    assert pair_levels == [StorageLevel.MEMORY_AND_DISK] * 2
     ckpt = os.path.join("hgn_spark", "checkpoint.py")
     stray = [c for c in callers if not c[1].endswith(ckpt)]
     assert not stray, stray
     # the wrapper is live: CC's observed round counts pass through it
     assert any(n == "count" for n, _ in callers)
-    assert _as_dict(out, "id", "component") == {
-        1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 4
-    }
-
-
-@pytest.mark.parametrize("gates", _GATES_CASES)
-def test_hgn_serialized_pair_table_same_communities(
-    edges, vertices, monkeypatch, gates
-):
-    """A pair table too large for the block store is checkpointed
-    serialized; the fixture forced onto that path (an estimated row
-    size no memory pool holds, the Spark loop forced) lands on the same
-    deletions and communities, scoped or not."""
-    from hgn_spark.graph import hgn as hgn_mod
-
-    monkeypatch.setattr(hgn_mod, "_PAIR_ROW_BYTES_DESER", 10**15)
-    force_spark_loop(monkeypatch)
-    set_scope_gates(monkeypatch, gates)
-    t: dict = {}
-    out = hgn_communities(
-        vertices,
-        edges,
-        ["attr"],
-        HGNParams(
-            r_lvl1_thres=0.25,
-            r_lvl2_thres=0.9,
-            max_edge_weight=0.9,
-            betweenness_thres=5.0,
-            feature_min_avg=0.6,
-            max_steps=5,
-        ),
-        phase_timings=t,
-    )
-    assert t["n_deleted_per_step"] == [1, 0]
-    _assert_scope_gates(t, gates)
     assert _as_dict(out, "id", "component") == {
         1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 4
     }
@@ -1479,21 +1458,24 @@ def test_hgn_driver_finish_matches_spark_loop(spark, monkeypatch, graph):
 
     vertices, edges, features, params, canonical = _hgn_parity_input(spark, graph)
     first_steps = []
-    orig = hgn_mod._finish_on_driver
+    orig = hgn_mod._collect_init
+    t: dict = {}
 
     def spy(*args):
-        first_steps.append(args[7])
+        # the driver takes over: the step it opens is the first one
+        # it runs in-process
+        first_steps.append(t["n_steps"])
         return orig(*args)
 
-    monkeypatch.setattr(hgn_mod, "_finish_on_driver", spy)
+    monkeypatch.setattr(hgn_mod, "_collect_init", spy)
 
     def run():
-        t: dict = {}
+        t.clear()
         out = hgn_communities(
             vertices, edges, features, params, phase_timings=t,
             edges_canonical=canonical,
         )
-        return t, out.schema, sorted(tuple(r) for r in out.collect())
+        return dict(t), out.schema, sorted(tuple(r) for r in out.collect())
 
     t_drv, schema_drv, comps_drv = run()
     assert first_steps == [1]
@@ -1545,21 +1527,24 @@ def test_hgn_hands_off_from_spark_steps_to_in_process_finish(spark, monkeypatch)
     budget = hgn_mod._driver_finish_bytes(n0, hgn_mod._level2_bound(adj0)) - 1
     assert hgn_mod._driver_finish_bytes(n0, 2 * n0) <= budget
     first_steps = []
-    orig = hgn_mod._finish_on_driver
+    orig = hgn_mod._collect_init
+    t: dict = {}
 
     def spy(*args):
-        first_steps.append(args[7])
+        # the driver takes over: the step it opens is the first one
+        # it runs in-process
+        first_steps.append(t["n_steps"])
         return orig(*args)
 
-    monkeypatch.setattr(hgn_mod, "_finish_on_driver", spy)
+    monkeypatch.setattr(hgn_mod, "_collect_init", spy)
 
     def run():
-        t: dict = {}
+        t.clear()
         out = hgn_communities(
             vertices, edges, features, params, phase_timings=t,
             edges_canonical=canonical,
         )
-        return t, out.schema, sorted(tuple(r) for r in out.collect())
+        return dict(t), out.schema, sorted(tuple(r) for r in out.collect())
 
     monkeypatch.setattr(hgn_mod, "_DRIVER_FINISH_BUDGET_BYTES", budget)
     t_mix, schema_mix, comps_mix = run()
@@ -1588,18 +1573,6 @@ def test_hgn_hands_off_from_spark_steps_to_in_process_finish(spark, monkeypatch)
         assert scored == left
         left -= deleted
     assert t_mix["n_scope_per_step"] == [None] * 5
-
-
-def test_pair_table_storage_follows_block_store_memory(spark):
-    """The pair table stays deserialized while its estimated size fits
-    the protected storage share of the block managers' memory, and is
-    serialized beyond it (1e9 edges: ~1.1 TB estimated)."""
-    from pyspark import StorageLevel
-
-    from hgn_spark.graph.hgn import _pair_table_storage
-
-    assert _pair_table_storage(spark, 9_000) == StorageLevel.MEMORY_AND_DISK_DESER
-    assert _pair_table_storage(spark, 10**9) == StorageLevel.MEMORY_AND_DISK
 
 
 @pytest.mark.skipif(not os.path.isdir(SF_SMALL), reason="sf0.01 data absent")
