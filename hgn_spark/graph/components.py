@@ -164,24 +164,3 @@ def component_sizes(components: DataFrame, min_size: int = 1) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_members"))
         .filter(F.col("n_members") >= min_size)
     )
-
-
-def filter_small_components(
-    vertices: DataFrame, edges: DataFrame, min_size: int
-) -> tuple[DataFrame, DataFrame]:
-    """Drop communities below ``min_size`` (reference G14,
-    filter_out_small_communities, graph_tools/graph_tools.py:519-540 —
-    defined there but never wired into main.py; wired here).
-
-    Returns (vertices, edges) both restricted via semi-joins (J10 shape).
-    """
-    comps = connected_components(edges, vertices)
-    big = component_sizes(comps, min_size=min_size)
-    keep_ids = comps.join(big, "component", "left_semi").select("id")
-    v = vertices.join(keep_ids, "id", "left_semi")
-    e = (
-        edges.join(keep_ids.withColumnRenamed("id", "src"), "src", "left_semi")
-        .join(keep_ids.withColumnRenamed("id", "dst"), "dst", "left_semi")
-        .select("src", "dst")
-    )
-    return v, e

@@ -39,6 +39,42 @@ def symmetrize(edges: DataFrame, assume_canonical: bool = False) -> DataFrame:
     return e.union(rev).filter(F.col("src") != F.col("dst")).distinct()
 
 
+def _tagged_pairs2(
+    edges: DataFrame,
+    sources: DataFrame | None = None,
+    edges_canonical: bool = False,
+) -> DataFrame:
+    """Level-2 neighbor pairs carrying a level-1 membership tag —
+    (src, dst, is_l1) with is_l1 true iff dst is ADJACENT to src.
+
+    The graph layer's one 2-hop enumerator: `neighbor_pairs` (level=2)
+    is its (src, dst) projection, and the r-metric scorer and the HGN
+    loop read the tag. The level-2 neighborhood is adjacent ∪ two-hop,
+    so p1 ⊆ p2 and one tagged frame serves both levels' counts and
+    common-member sets; the groupBy+max over (src, dst) is the exchange
+    a distinct would run, carrying the 1-byte tag. ``sources``
+    restricts the expansion to those source vertices.
+    """
+    sym = symmetrize(edges, assume_canonical=edges_canonical)
+    base = (
+        sym.join(sources.select(F.col("id").alias("src")), "src", "left_semi")
+        if sources is not None
+        else sym
+    )
+    a = base.alias("a")
+    b = sym.alias("b")
+    two = a.join(b, F.col("a.dst") == F.col("b.src")).select(
+        F.col("a.src").alias("src"), F.col("b.dst").alias("dst")
+    )
+    return (
+        base.withColumn("is_l1", F.lit(True))
+        .unionByName(two.withColumn("is_l1", F.lit(False)))
+        .filter(F.col("src") != F.col("dst"))
+        .groupBy("src", "dst")
+        .agg(F.max("is_l1").alias("is_l1"))
+    )
+
+
 def canonicalize(edges: DataFrame) -> DataFrame:
     """Collapse both orientations onto ``src < dst`` rows."""
     return (
@@ -70,22 +106,17 @@ def neighbor_pairs(
     (the reference's lvl2 includes lvl1 midpoints — graph_tools/
     graph_tools.py:343-350 unions dst and dst_2), excluding self.
 
-    The 2-hop set is built with one self-join of the symmetrized edge
-    table, not the motif API: at scale the join shuffles once on the
-    midpoint key and AQE handles skewed hubs; a motif engine would
-    build the same join chain with less control.
+    The 2-hop set is the (src, dst) projection of `_tagged_pairs2`:
+    one self-join of the symmetrized edge table, not the motif API; at
+    scale the join shuffles once on the midpoint key and AQE handles
+    skewed hubs. With the tag unread, Catalyst prunes its max and the
+    groupBy plans as the distinct.
     """
     if level not in (1, 2):
         raise ValueError(f"neighbor_pairs supports level 1 or 2, got {level}")
-    sym = symmetrize(edges, assume_canonical=edges_canonical)
     if level == 1:
-        return sym
-    a = sym.alias("a")
-    b = sym.alias("b")
-    two = a.join(b, F.col("a.dst") == F.col("b.src")).select(
-        F.col("a.src").alias("src"), F.col("b.dst").alias("dst")
-    )
-    return sym.unionByName(two).filter(F.col("src") != F.col("dst")).distinct()
+        return symmetrize(edges, assume_canonical=edges_canonical)
+    return _tagged_pairs2(edges, edges_canonical=edges_canonical).select("src", "dst")
 
 
 def neighbors(

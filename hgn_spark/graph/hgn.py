@@ -48,11 +48,15 @@ from pyspark.sql import functions as F
 from hgn_spark.checkpoint import CheckpointJanitor
 from hgn_spark.graph.betweenness import edge_betweenness
 from hgn_spark.graph.components import connected_components
-from hgn_spark.graph.core import canonicalize, drop_isolated_vertices, symmetrize
+from hgn_spark.graph.core import (
+    _tagged_pairs2,
+    canonicalize,
+    drop_isolated_vertices,
+    symmetrize,
+)
 from hgn_spark.graph.rmetrics import (
     _common_member_rows,
     _endpoints,
-    _tagged_pairs2,
     r_metrics_edges_pairs,
 )
 from hgn_spark.graph.weights import (

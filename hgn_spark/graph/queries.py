@@ -28,9 +28,9 @@ from hgn_spark.catalog import load_table
 from hgn_spark.checkpoint import SessionMemo
 from hgn_spark.graph.betweenness import edge_betweenness
 from hgn_spark.graph.components import connected_components
-from hgn_spark.graph.core import degrees, neighbors
+from hgn_spark.graph.core import _tagged_pairs2, degrees, neighbors
 from hgn_spark.graph.hgn import HGNParams, hgn_communities
-from hgn_spark.graph.rmetrics import _tagged_pairs2, r_metrics_edges_pairs
+from hgn_spark.graph.rmetrics import r_metrics_edges_pairs
 from hgn_spark.registry import register
 
 R1_THRES = 0.25

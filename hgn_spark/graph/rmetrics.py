@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from hgn_spark.graph.core import symmetrize
+from hgn_spark.graph.core import _tagged_pairs2
 
 
 def _ratio(common: Column, count: Column) -> Column:
@@ -69,43 +69,6 @@ def _endpoints(e: DataFrame) -> DataFrame:
         e.select(F.col("src").alias("id"))
         .unionByName(e.select(F.col("dst").alias("id")))
         .distinct()
-    )
-
-
-def _tagged_pairs2(
-    edges: DataFrame,
-    sources: DataFrame | None = None,
-    edges_canonical: bool = False,
-) -> DataFrame:
-    """Level-2 neighbor pairs carrying a level-1 membership tag —
-    (src, dst, is_l1) with is_l1 true iff dst is ADJACENT to src.
-
-    Because the level-2 neighborhood is defined as adjacent ∪ two-hop
-    (neighbor_pairs' contract), p1 ⊆ p2: one tagged frame supports
-    BOTH levels' counts and common-member sets, replacing the two
-    separate neighbor_pairs subtrees (and their downstream
-    aggregations/joins) the r14 shape executed per scoring pass
-    (guide §2.3/§2.4 — one shuffle where two ran). The `distinct` of
-    the untagged form becomes a groupBy+max over the same keys — the
-    identical exchange, now also carrying the 1-byte tag.
-    """
-    sym = symmetrize(edges, assume_canonical=edges_canonical)
-    base = (
-        sym.join(sources.select(F.col("id").alias("src")), "src", "left_semi")
-        if sources is not None
-        else sym
-    )
-    a = base.alias("a")
-    b = sym.alias("b")
-    two = a.join(b, F.col("a.dst") == F.col("b.src")).select(
-        F.col("a.src").alias("src"), F.col("b.dst").alias("dst")
-    )
-    return (
-        base.withColumn("is_l1", F.lit(True))
-        .unionByName(two.withColumn("is_l1", F.lit(False)))
-        .filter(F.col("src") != F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.max("is_l1").alias("is_l1"))
     )
 
 

@@ -927,20 +927,11 @@ def dedup_canonical_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final keep-set applies back to the corpus as a broadcast/semi
     join — this is how a 100 TB dedup actually ships.
     """
-    return canonical_groups(dedup_ngram_jaccard_pairs(spark, sf_dir))
-
-
-def canonical_groups(pairs: DataFrame) -> DataFrame:
-    """Resolve a ``(d1, d2, ...)`` near-dup pair frame into canonical
-    groups → ``(doc_id, group_id, group_size, is_canonical)`` via CC
-    over the duplicate graph (min-id member is canonical). Shared by
-    `dedup_canonical_groups` and the curation pipeline's df-capped
-    near-dup stage."""
-    from pyspark.sql import Window as W
-
     from hgn_spark.graph.components import connected_components
 
-    edges = pairs.select(F.col("d1").alias("src"), F.col("d2").alias("dst"))
+    edges = dedup_ngram_jaccard_pairs(spark, sf_dir).select(
+        F.col("d1").alias("src"), F.col("d2").alias("dst")
+    )
     comps = connected_components(edges)
     # r14 (guide §2.6/§3): group_size as a window count over the
     # component partition instead of groupBy + self-join — the former

@@ -70,8 +70,58 @@ def _sql_str_list(items: tuple[str, ...]) -> str:
 
 _SQL_STOPWORDS = _sql_str_list(STOPWORDS)
 
+
+def quality_gate(l: Column) -> Column:
+    """The corpus quality gate over a token-array column: 20-2000
+    tokens and a stopword share under 0.3. The one definition read by
+    `text_profile`, `corpus_source_report` and the curation pipeline;
+    `DUCK_QUALITY_GATE` is its DuckDB twin."""
+    n = F.size(l)
+    stop_hits = F.size(F.filter(l, lambda t: t.isin(*STOPWORDS)))
+    return n.between(20, 2000) & (stop_hits * 1.0 / F.greatest(n, F.lit(1)) < 0.3)
+
+
+DUCK_QUALITY_GATE = (
+    f"(len(l) BETWEEN 20 AND 2000 AND "
+    f"len(list_filter(l, t -> t IN {_SQL_STOPWORDS})) * 1.0 "
+    f"/ greatest(len(l), 1) < 0.3)"
+)
+
 CTX_LEN = 512   # tokens per packed training chunk
 N_SHARDS = 8    # parallel packing streams
+
+
+def pack_offsets(df: DataFrame) -> DataFrame:
+    """Concat-and-chunk sequence packing, the LLM-pretraining step that
+    lays tokenized documents head-to-tail and slices the stream into
+    CTX_LEN-token chunks. Appends to a (doc_id, n_tokens, ...) frame
+    each document's shard, stream offset (tok_start), owning chunk and
+    offset within it; a doc whose tokens straddle a boundary spans
+    chunks, as in real packing. The one packing rule, read by
+    `text_profile` and the curation pipeline.
+
+    Scale shape: documents split into N_SHARDS deterministic shards
+    (production: hash(doc_id) % shards) packed independently, so the
+    running-offset window is per shard, the only shuffle is the shard
+    partitioning and no global order exists anywhere. Chunk ids are
+    shard-local; (shard, chunk_id) is the global chunk key. The window
+    runs over ``df`` as given, so per-row work projected into it stays
+    on its spread partitions, not on the <= N_SHARDS window tasks."""
+    w = (
+        W.partitionBy("shard")
+        .orderBy("doc_id")
+        .rowsBetween(W.unboundedPreceding, -1)
+    )
+    return (
+        df.withColumn("shard", F.col("doc_id") % N_SHARDS)
+        .withColumn("tok_start", F.coalesce(F.sum("n_tokens").over(w), F.lit(0)))
+        .withColumns(
+            {
+                "chunk_id": F.floor(F.col("tok_start") / CTX_LEN).cast("long"),
+                "chunk_offset": F.col("tok_start") % CTX_LEN,
+            }
+        )
+    )
 
 
 def _duck_lang_score(markers: tuple[str, ...]) -> str:
@@ -80,12 +130,11 @@ def _duck_lang_score(markers: tuple[str, ...]) -> str:
 
 @register(
     "text_profile",
-    # Repetition-signal and packing columns absorbed from the former
-    # standalone `text_repetition_signals` / `pack_token_chunks` rows
-    # (r7 window consolidation, paying for the new streaming / heavy-
-    # hitter / curation-report oracle rows): all three are per-document
-    # frames over the same corpus scan, joined on doc_id into one
-    # hash-checked row. Repetition columns LEFT-join (defined for docs
+    # Repetition-signal and packing columns absorbed from two former
+    # standalone rows (r7 window consolidation, paying for the new
+    # streaming / heavy-hitter / curation-report oracle rows): all
+    # three are per-document frames over the same corpus scan, joined
+    # on doc_id into one hash-checked row. Repetition columns LEFT-join (defined for docs
     # with >= 2 tokens); packing covers every doc and inner-joins —
     # 0-token docs are excluded from the profile on both sides, and
     # since they contribute 0 tokens to the running offsets, dropping
@@ -109,9 +158,7 @@ def _duck_lang_score(markers: tuple[str, ...]) -> str:
              AS avg_token_len,
            round(len(list_filter(l, t -> t IN {_SQL_STOPWORDS})) * 1.0 / len(l), 4)
              AS stopword_ratio,
-           (len(l) BETWEEN 20 AND 2000
-            AND len(list_filter(l, t -> t IN {_SQL_STOPWORDS})) * 1.0 / len(l) < 0.3)
-             AS is_quality,
+           {DUCK_QUALITY_GATE} AS is_quality,
            best.lang AS pred_lang,
            best.score AS lang_score,
            len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 ]'))
@@ -230,7 +277,7 @@ def text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(F.array_distinct("l")).alias("n_distinct"),
         F.round(total_len * 1.0 / n, 4).alias("avg_token_len"),
         F.round(stop_hits * 1.0 / n, 4).alias("stopword_ratio"),
-        (n.between(20, 2000) & (stop_hits * 1.0 / n < 0.3)).alias("is_quality"),
+        quality_gate(F.col("l")).alias("is_quality"),
         best.getField("lang").alias("pred_lang"),
         best.getField("score").alias("lang_score"),
         F.size(
@@ -257,66 +304,8 @@ def text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Repetition signals inline (null structs for n==1 docs yield
         # the same nulls the former LEFT join produced).
         *_repetition_cols(F.col("_ws"), F.col("_gs"), n),
-        # Packing shard; the running-offset window runs OVER this
-        # projection so the heavy per-row work above stays on the
-        # spread partitions, not on the <= N_SHARDS post-window tasks.
-        (F.col("doc_id") % N_SHARDS).alias("shard"),
     )
-    w = (
-        W.partitionBy("shard")
-        .orderBy("doc_id")
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    return prof.withColumn(
-        "tok_start", F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
-    ).withColumns(
-        {
-            "chunk_id": F.floor(F.col("tok_start") / CTX_LEN).cast("long"),
-            "chunk_offset": F.col("tok_start") % CTX_LEN,
-        }
-    )
-
-
-def pack_token_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Concat-and-chunk sequence packing — the standard LLM-pretraining
-    step that lays tokenized documents head-to-tail and slices the
-    stream into fixed CTX_LEN (512)-token chunks. Hash-checked inside
-    the merged `text_profile` driver row (r7 window consolidation);
-    this standalone frame remains the composable operator. Per document: its shard,
-    token count, stream offset, owning chunk and offset within it (a
-    doc whose tokens straddle a boundary spans chunks, as in real
-    packing).
-
-    Scale shape: documents are split into N_SHARDS (8) deterministic
-    shards (production: hash(doc_id) % shards) packed independently —
-    the running-offset window is per-shard, so the only shuffle is the
-    shard partitioning and no global order exists anywhere. Chunk ids
-    are shard-local; (shard, chunk_id) is the global chunk key.
-    """
-    docs = load_table(spark, sf_dir, "documents")
-    t = docs.select(
-        "doc_id",
-        (F.col("doc_id") % N_SHARDS).alias("shard"),
-        F.size(tokens("text")).cast("long").alias("n_tokens"),
-    )
-    w = (
-        W.partitionBy("shard")
-        .orderBy("doc_id")
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    return t.select(
-        "shard",
-        "doc_id",
-        "n_tokens",
-        F.coalesce(F.sum("n_tokens").over(w), F.lit(0)).alias("tok_start"),
-    ).select(
-        "shard",
-        "doc_id",
-        "n_tokens",
-        "tok_start",
-        F.floor(F.col("tok_start") / CTX_LEN).cast("long").alias("chunk_id"),
-        (F.col("tok_start") % CTX_LEN).alias("chunk_offset"),
-    )
+    return pack_offsets(prof)
 
 
 CHUNK_SIZE = 64    # tokens per document chunk
@@ -352,7 +341,7 @@ CHUNK_STRIDE = 48  # chunk start step (overlap = 16 tokens)
 )
 def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document sliding-window chunking — the retrieval/embedding
-    twin of `pack_token_chunks` (which concatenates docs head-to-tail
+    twin of `pack_offsets` (which concatenates docs head-to-tail
     for pretraining): each document alone is sliced into
     CHUNK_SIZE-token windows stepping by CHUNK_STRIDE, so consecutive
     chunks overlap by size−stride tokens and no chunk crosses a
@@ -672,8 +661,7 @@ def redact_pii_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _positional_2grams(l):
     """Positional 2-grams of a token-array column (n-1 grams for n
-    tokens) — shared by the repetition block's two call sites so both
-    build byte-identical grams."""
+    tokens)."""
     return F.transform(
         F.sequence(F.lit(0), F.size(l) - 2),
         lambda i: F.concat_ws(
@@ -771,43 +759,6 @@ def _repetition_cols(ws, gs, n):
     ]
 
 
-def text_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style repetition filters (Rae et al. 2021, §A1.1):
-    corpora scraped at scale are full of boilerplate whose token /
-    n-gram frequency profiles are degenerate. Hash-checked inside the
-    merged `text_profile` driver row (r7 window consolidation); this
-    standalone frame remains the composable operator.
-
-    Signals per document: top-token
-    occurrence fraction, repeated-token occurrence fraction, positional
-    2-gram duplicate fraction and top-2-gram fraction, plus the
-    composite repetitiveness gate.
-
-    Execution shape (r14, guide §2.3/§2.4): every signal is a per-row
-    function of the document's own tokens, so the former tagged-explode
-    + two-level groupBy + rejoin (two exchanges carrying one row per
-    token/2-gram) was shuffle with no cross-row purpose. Now one
-    scan-side projection: sort a copy of the token (and positional
-    2-gram) array and fold its run structure once — O(n log n) per doc,
-    zero Exchange, whole plan in one stage. Values identical (pinned by
-    the text_profile oracle row)."""
-    docs = load_table(spark, sf_dir, "documents")
-    d = docs.select("doc_id", tokens("text").alias("l")).filter(F.size("l") >= 2)
-    l = F.col("l")
-    # Materialize the two fold structs as their own columns so each is
-    # evaluated once per row, not once per referencing signal column
-    # (CollapseProject inlines only cheap expressions, same discipline
-    # as _verified_jaccard's `common`).
-    d = d.withColumn("_ws", _sorted_run_stats(l)).withColumn(
-        "_gs", _sorted_run_stats(_positional_2grams(l))
-    )
-    return d.select(
-        "doc_id",
-        F.size("l").cast("long").alias("n_tokens"),
-        *_repetition_cols(F.col("_ws"), F.col("_gs"), F.size("l")),
-    )
-
-
 @register(
     "corpus_source_report",
     # The per-source/per-language "report card" every corpus-mixing
@@ -820,9 +771,7 @@ def text_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT source, lang,
              len(l) AS n_tok,
              md5(array_to_string(l, ' ')) AS fp,
-             (len(l) BETWEEN 20 AND 2000
-              AND len(list_filter(l, t -> t IN {_SQL_STOPWORDS})) * 1.0
-                  / greatest(len(l), 1) < 0.3) AS is_quality
+             {DUCK_QUALITY_GATE} AS is_quality
       FROM d)
     SELECT source, lang,
            count(*) AS n_docs,
@@ -848,22 +797,12 @@ def corpus_source_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     — low-cardinality keys, map-side partial agg; the distinct-
     fingerprint count shuffles (source, lang, fp) once. No joins."""
     docs = load_table(spark, sf_dir, "documents")
-    l = tokens("text")
-    n = F.size("l")
-    stop_hits = F.size(F.filter(F.col("l"), lambda t: t.isin(*STOPWORDS)))
-    per_doc = docs.select(
+    per_doc = docs.select("source", "lang", tokens("text").alias("l")).select(
         "source",
         "lang",
-        l.alias("l"),
-    ).select(
-        "source",
-        "lang",
-        n.alias("n_tok"),
+        F.size("l").alias("n_tok"),
         F.md5(F.array_join(F.col("l"), " ")).alias("fp"),
-        (
-            n.between(20, 2000)
-            & (stop_hits * 1.0 / F.greatest(n, F.lit(1)) < 0.3)
-        ).alias("is_quality"),
+        quality_gate(F.col("l")).alias("is_quality"),
     )
     return per_doc.groupBy("source", "lang").agg(
         F.count(F.lit(1)).alias("n_docs"),

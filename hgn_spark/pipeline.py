@@ -4,182 +4,128 @@ individual operators exist FOR, composed as one lazy DataFrame plan.
 Stages (each one an operator family already verified on its own):
 
 1. quality gate      — token-count window + stopword-ratio cap
-                       (operators/text.text_profile semantics)
+                       (operators/text.quality_gate)
 2. PII scrub         — chained JVM regexp_replace
                        (operators/text.redact_pii)
 3. exact dedup       — md5 fingerprint of the scrubbed text, keep the
-                       min doc_id per fingerprint (operators/dedup)
+                       min doc_id per fingerprint
 4. near-dup dedup    — drop non-canonical members of the jaccard
                        duplicate graph (dedup_canonical_groups)
 5. decontamination   — drop the held-out benchmark slice itself plus
                        any doc sharing 7-grams with it above a
                        threshold (text.decontaminate_ngram_overlap)
-6. mixture sampling  — deterministic md5-rate downsample per language
+6. mixture sampling  — deterministic md5-rate downsample
                        (operators/sampling semantics)
 7. packing           — concat-and-chunk offsets over the curated set
-                       (text.pack_token_chunks semantics)
+                       (text.pack_offsets)
 
-Everything stays lazy until the caller acts; no stage collects.
-Per-stage survivor counts come from ``curation_report`` as one unioned
-aggregation plan — the shape a 100 TB curation job actually ships
-(each stage is a projection/filter/join over the previous one, so
-Catalyst pipelines the whole thing into a handful of stages; the
-near-dup keep-set and benchmark gram set are the only shuffling
-inputs, both tiny relative to the corpus).
+Each stage rule is written once, in `_curation_stages`, which has two
+readers: `curate_corpus` applies the rules as filters, and
+`pipeline_curation_report` applies them as per-document flags, so
+every reported stage count is the count of the frame `curate_corpus`
+would have at that stage.
+
+Everything stays lazy until the caller acts; no stage collects. Each
+stage is a projection/filter/join over the previous one, so Catalyst
+pipelines the whole thing into a handful of stages; the near-dup
+keep-set and benchmark gram set are the only shuffling inputs besides
+the exact-dedup window, both tiny relative to the corpus.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from hgn_spark.catalog import load_table
-from hgn_spark.operators.dedup import (
-    _NGRAM_PAIR_CTES,
-    canonical_groups,
-    dedup_canonical_groups,
-    ngram_jaccard_pairs_capped,
-)
+from hgn_spark.operators.dedup import _NGRAM_PAIR_CTES, dedup_canonical_groups
+from hgn_spark.operators.sampling import DEFAULT_RATE_HEX, _u8
 from hgn_spark.operators.text import (
-    CTX_LEN,
     DECON_BENCH_MOD,
     DECON_N,
+    DUCK_QUALITY_GATE,
     DUCK_TOKENS,
-    N_SHARDS,
     PII_PATTERNS,
-    STOPWORDS,
-    _SQL_STOPWORDS,
     decontaminate_ngram_overlap,
+    pack_offsets,
+    quality_gate,
     redact_pii,
     tokens,
 )
 from hgn_spark.registry import register
 
 DECON_FRAC_THRES = 0.05  # drop docs sharing >5% of their 7-grams with eval
-SAMPLE_RATE_HEX = "c0000000"  # keep ~75% by first-32-bit md5 threshold
 
 
-def _gate_pred(l):  # noqa: ANN001 — Column in, Column out
-    """Stage-1 quality-gate predicate over a token-array column —
-    shared by the pipeline and the flag-based report so the rule
-    exists exactly once."""
-    n = F.size(l)
-    stop_hits = F.size(F.filter(l, lambda t: t.isin(*STOPWORDS)))
-    return n.between(20, 2000) & (stop_hits * 1.0 / F.greatest(n, F.lit(1)) < 0.3)
+def _curation_stages(spark: SparkSession, sf_dir: str, flags: bool) -> DataFrame:
+    """Stages 1-6 of the curation pipeline over `documents` → (doc_id,
+    lang, source, clean_text), each stage rule written once.
 
+    ``flags=False`` applies every rule as a filter (`curate_corpus`);
+    the gate runs before the PII scrub, so only gated docs are
+    scrubbed. ``flags=True`` keeps every document and adds one boolean
+    column per stage, f_gate, f_exact, f_neardup, f_decon and f_sample,
+    each the previous flag AND the stage's rule
+    (`pipeline_curation_report`), so the report is one pass and its
+    counts are monotone by construction. The exact-dedup rule keeps
+    the min surviving doc_id per fingerprint of the scrubbed text, a
+    window over the fingerprint: no second scan of `documents` to
+    build a keep-set."""
+    alive = F.lit(True)
 
-def _sample_pred(doc_id):  # noqa: ANN001
-    """Stage-6 deterministic-sample predicate (first 32 md5 bits under
-    a fixed threshold) — shared, single definition."""
-    return F.substring(F.md5(doc_id.cast("string")), 1, 8) < SAMPLE_RATE_HEX
+    def keep(df: DataFrame, flag: str, rule: Column) -> DataFrame:
+        nonlocal alive
+        if flags:
+            df = df.withColumn(flag, alive & rule)
+            alive = F.col(flag)
+            return df
+        return df.withColumn(flag, rule).filter(F.col(flag)).drop(flag)
 
-
-def curate_corpus_stages(
-    spark: SparkSession, sf_dir: str, df_cap: int | None = None
-) -> dict[str, DataFrame]:
-    """Every intermediate frame of the curation pipeline, keyed by
-    stage label (ordered: each stage is a strict filter/projection of
-    the previous, so doc counts are monotonically non-increasing).
-
-    ``df_cap``: when set, near-dup candidate generation routes through
-    `ngram_jaccard_pairs_capped` (document-frequency-capped shingle
-    buckets) — the hot-key guard an adversarial corpus needs (VERDICT
-    r5 #5); None keeps the uncapped exact-jaccard pairs.
-    """
-    docs = load_table(spark, sf_dir, "documents")
-
-    # 1. quality gate (scan-side, no shuffle)
-    gated = docs.select(
-        "doc_id", "lang", "source", "text", tokens("text").alias("l")
-    ).filter(_gate_pred(F.col("l")))
-
-    # 2. PII scrub (scan-side)
-    scrubbed = gated.select(
-        "doc_id", "lang", "source", redact_pii("text").alias("clean_text")
+    non_canonical = (
+        dedup_canonical_groups(spark, sf_dir)
+        .filter(F.col("is_canonical") == 0)
+        .select("doc_id", F.lit(1).alias("nc"))
     )
-
-    # 3. exact dedup on the scrubbed text: keep min doc_id per fingerprint
-    # (one shuffle on the fingerprint key, min_by keeps the plan agg-only)
-    fp = scrubbed.withColumn("fp", F.md5("clean_text"))
-    keep_ids = fp.groupBy("fp").agg(F.min("doc_id").alias("doc_id")).select("doc_id")
-    exact_kept = fp.join(keep_ids, "doc_id", "left_semi").drop("fp")
-
-    # 4. near-dup: drop everything the canonical-group resolution marks
-    # non-canonical (the duplicate graph is tiny → broadcastable anti
-    # join). With df_cap set, candidates come from the df-capped index
-    # (mega-bucket guard); verify is exact either way.
-    if df_cap is None:
-        groups = dedup_canonical_groups(spark, sf_dir)
-    else:
-        groups = canonical_groups(
-            ngram_jaccard_pairs_capped(spark, sf_dir, df_cap)
-        )
-    non_canonical = groups.filter(F.col("is_canonical") == 0).select("doc_id")
-    neardup_kept = exact_kept.join(
-        F.broadcast(non_canonical), "doc_id", "left_anti"
-    )
-
-    # 5. decontamination: the eval slice itself never trains, nor does any
-    # doc overlapping it beyond the threshold
     contaminated = (
         decontaminate_ngram_overlap(spark, sf_dir)
         .filter(F.col("overlap_frac") >= DECON_FRAC_THRES)
-        .select("doc_id")
+        .select("doc_id", F.lit(1).alias("ct"))
     )
-    decon_kept = neardup_kept.filter(
-        F.col("doc_id") % DECON_BENCH_MOD != 0
-    ).join(F.broadcast(contaminated), "doc_id", "left_anti")
-
-    # 6. deterministic sample: first 32 md5 bits under a fixed threshold
-    sampled = decon_kept.filter(_sample_pred(F.col("doc_id")))
-
-    # 7. pack: shard + running token offsets + owning chunk
-    from pyspark.sql import Window as W
-
-    t = sampled.withColumn("n_tokens", F.size(tokens("clean_text")).cast("long"))
-    t = t.withColumn("shard", F.col("doc_id") % N_SHARDS)
-    w = W.partitionBy("shard").orderBy("doc_id").rowsBetween(
-        W.unboundedPreceding, -1
+    doc_id = F.col("doc_id")
+    # 1. quality gate over a real token attribute (the gate reads it
+    # three times; inlined, the regex split would run per reference)
+    t = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "lang", "source", "text", tokens("text").alias("_l")
     )
-    packed = (
-        t.withColumn(
-            "tok_start", F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
-        )
-        .withColumn(
-            "chunk_id", F.floor(F.col("tok_start") / CTX_LEN).cast("long")
-        )
-        .withColumn("chunk_offset", F.col("tok_start") % CTX_LEN)
-        .select(
-            "doc_id",
-            "lang",
-            "source",
-            "clean_text",
-            "n_tokens",
-            "shard",
-            "tok_start",
-            "chunk_id",
-            "chunk_offset",
-        )
-    )
-    return {
-        "0_input": docs,
-        "1_quality_gated": gated,
-        "2_pii_scrubbed": scrubbed,
-        "3_exact_deduped": exact_kept,
-        "4_neardup_deduped": neardup_kept,
-        "5_decontaminated": decon_kept,
-        "6_sampled": sampled,
-        "7_curated_packed": packed,
-    }
+    t = keep(t, "f_gate", quality_gate(F.col("_l"))).drop("_l")
+    # 2. PII scrub (a projection); 3. exact dedup on the scrubbed text
+    t = t.withColumn("clean_text", redact_pii("text")).drop("text")
+    t = t.withColumn("_fp", F.md5("clean_text"))
+    first = F.min(F.when(alive, doc_id)).over(W.partitionBy("_fp"))
+    t = keep(t, "f_exact", doc_id == first).drop("_fp")
+    # 4. near-dup: the duplicate graph's non-canonical members (tiny,
+    # broadcast)
+    t = t.join(F.broadcast(non_canonical), "doc_id", "left")
+    t = keep(t, "f_neardup", F.col("nc").isNull()).drop("nc")
+    # 5. decontamination: the eval slice itself never trains, nor does
+    # any doc overlapping it beyond the threshold
+    t = t.join(F.broadcast(contaminated), "doc_id", "left")
+    t = keep(
+        t, "f_decon", (doc_id % DECON_BENCH_MOD != 0) & F.col("ct").isNull()
+    ).drop("ct")
+    # 6. deterministic sample: first 32 md5 bits under the sampling
+    # family's default rate
+    return keep(t, "f_sample", _u8(doc_id) < DEFAULT_RATE_HEX)
 
 
-def curate_corpus(
-    spark: SparkSession, sf_dir: str, df_cap: int | None = None
-) -> DataFrame:
+def curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """→ curated, packed corpus: one row per surviving document with
     (doc_id, lang, source, clean_text, n_tokens, shard, tok_start,
     chunk_id, chunk_offset)."""
-    return curate_corpus_stages(spark, sf_dir, df_cap)["7_curated_packed"]
+    kept = _curation_stages(spark, sf_dir, flags=False)
+    return pack_offsets(
+        kept.withColumn("n_tokens", F.size(tokens("clean_text")).cast("long"))
+    )
 
 
 # DuckDB scrub expression: the same ordered regexp_replace chain as
@@ -199,11 +145,6 @@ def _curation_report_oracle() -> str:
     (decontaminate_ngram_overlap), the PII scrub (redact_pii_docs),
     the quality gate and md5 sample predicates (text_profile /
     sample_stratified_hash technique)."""
-    gate = (
-        f"len(l) BETWEEN 20 AND 2000 AND "
-        f"len(list_filter(l, t -> t IN {_SQL_STOPWORDS})) * 1.0 "
-        f"/ greatest(len(l), 1) < 0.3"
-    )
     return f"""
     WITH RECURSIVE {_NGRAM_PAIR_CTES},
     e AS (SELECT d1 AS src, d2 AS dst FROM jpairs),
@@ -234,7 +175,7 @@ def _curation_report_oracle() -> str:
       SELECT h.doc_id FROM dhits h JOIN dsizes s USING (doc_id)
       WHERE round(h.n_overlap * 1.0 / s.n_grams, 4) >= {DECON_FRAC_THRES}),
     scrub AS (
-      SELECT doc_id, ({gate}) AS f_gate, {_DUCK_SCRUB} AS clean
+      SELECT doc_id, {DUCK_QUALITY_GATE} AS f_gate, {_DUCK_SCRUB} AS clean
       FROM (SELECT doc_id, text, {DUCK_TOKENS} AS l FROM documents)),
     fp1 AS (
       SELECT *, min(CASE WHEN f_gate THEN doc_id END)
@@ -251,7 +192,7 @@ def _curation_report_oracle() -> str:
              (f.f_gate AND f.doc_id = f.min_gated AND nc.doc_id IS NULL
               AND f.doc_id % {DECON_BENCH_MOD} <> 0 AND ct.doc_id IS NULL
               AND substring(md5(CAST(f.doc_id AS VARCHAR)), 1, 8)
-                  < '{SAMPLE_RATE_HEX}') AS f_sample
+                  < '{DEFAULT_RATE_HEX}') AS f_sample
       FROM fp1 f
       LEFT JOIN nc ON nc.doc_id = f.doc_id
       LEFT JOIN ct ON ct.doc_id = f.doc_id),
@@ -297,61 +238,14 @@ def pipeline_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     single aggregation — a union of per-stage count branches would
     re-execute the stage-prefix lineage once per branch (Catalyst does
     not share subplans across union arms). Monotonicity is therefore
-    structural: flag_{i+1} = flag_i AND pred_{i+1}. The stage
-    predicates are the same shared expressions `curate_corpus_stages`
-    uses (_gate_pred/_sample_pred; the exact-dedup keep rule is the
-    same min-doc_id-per-fingerprint, expressed as a window here vs
-    groupBy+semi-join there), and tests/test_llm_ops.py pins every
-    report count equal to the corresponding stage frame's count.
+    structural: flag_{i+1} = flag_i AND pred_{i+1}. The flags are
+    `_curation_stages`' rules, the ones `curate_corpus` filters on.
     Hash-checked since r7: the oracle replays all 8 stages as one
     WITH-chain composing the already-oracled fragments (jaccard-pair/
     CC chain, 7-gram decon overlap, PII scrub, gate + md5-sample
     predicates) — the e2e flagship of the LLM pipeline at the same
     evidence tier as `hgn_communities` (VERDICT r6 #2)."""
-    from pyspark.sql import Window as W
-
-    docs = load_table(spark, sf_dir, "documents")
-    non_canonical = (
-        dedup_canonical_groups(spark, sf_dir)
-        .filter(F.col("is_canonical") == 0)
-        .select("doc_id", F.lit(1).alias("nc"))
-    )
-    contaminated = (
-        decontaminate_ngram_overlap(spark, sf_dir)
-        .filter(F.col("overlap_frac") >= DECON_FRAC_THRES)
-        .select("doc_id", F.lit(1).alias("ct"))
-    )
-    flags = (
-        docs.select("doc_id", "text")
-        # Tokenize once into a real attribute: _gate_pred references
-        # its argument three times, and inlining `tokens("text")` would
-        # re-run the regex split per reference (guide §1.2 per-task
-        # work; same discipline as _doc_shingle_sets).
-        .withColumn("_l", tokens("text"))
-        .withColumn("f_gate", _gate_pred(F.col("_l")))
-        .drop("_l")
-        .withColumn("clean_text", redact_pii("text"))
-        .withColumn("fp", F.md5("clean_text"))
-        .withColumn(
-            "min_gated",
-            F.min(F.when(F.col("f_gate"), F.col("doc_id"))).over(
-                W.partitionBy("fp")
-            ),
-        )
-        .withColumn(
-            "f_exact", F.col("f_gate") & (F.col("doc_id") == F.col("min_gated"))
-        )
-        .join(F.broadcast(non_canonical), "doc_id", "left")
-        .withColumn("f_neardup", F.col("f_exact") & F.col("nc").isNull())
-        .join(F.broadcast(contaminated), "doc_id", "left")
-        .withColumn(
-            "f_decon",
-            F.col("f_neardup")
-            & (F.col("doc_id") % DECON_BENCH_MOD != 0)
-            & F.col("ct").isNull(),
-        )
-        .withColumn("f_sample", F.col("f_decon") & _sample_pred(F.col("doc_id")))
-    )
+    flags = _curation_stages(spark, sf_dir, flags=True)
 
     def cif(c: str):
         return F.count(F.when(F.col(c), 1))

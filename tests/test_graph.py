@@ -20,17 +20,18 @@ from hgn_spark.graph.betweenness import (
     edge_betweenness_sampled,
     shortest_paths,
 )
-from hgn_spark.graph.components import (
-    component_sizes,
-    connected_components,
-    filter_small_components,
+from hgn_spark.graph.components import component_sizes, connected_components
+from hgn_spark.graph.core import (
+    _tagged_pairs2,
+    degrees,
+    drop_isolated_vertices,
+    neighbors,
+    symmetrize,
 )
-from hgn_spark.graph.core import degrees, drop_isolated_vertices, neighbors, symmetrize
 from hgn_spark.graph.hgn import HGNParams, hgn_communities
 from hgn_spark.graph.rmetrics import (
     _common_member_rows,
     _endpoints,
-    _tagged_pairs2,
     candidate_common_members,
     r_metrics_edges_pairs,
 )
@@ -373,17 +374,13 @@ def test_connected_components(edges, vertices, spark):
     assert comps2 == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 4}
 
 
-def test_component_sizes_and_small_filter(spark, vertices):
+def test_component_sizes_and_small_filter(spark):
     cut = spark.createDataFrame(
         [e for e in EDGES if e != (3, 4)] + [(8, 9)], "src long, dst long"
     )
     comps = connected_components(cut)
     sizes = _as_dict(component_sizes(comps, min_size=3), "component", "n_members")
     assert sizes == {1: 3, 4: 3}  # the 2-node component {8,9} filtered out
-    v = vertices.union(spark.createDataFrame([(8, "d"), (9, "d")], "id long, attr string"))
-    fv, fe = filter_small_components(v, cut, min_size=3)
-    assert sorted(r["id"] for r in fv.collect()) == [1, 2, 3, 4, 5, 6]
-    assert fe.count() == 6
 
 
 def test_drop_isolated(edges, vertices):

@@ -510,10 +510,15 @@ def test_stratified_sample_rates_and_k(spark):
     )
 
 
-def test_pack_token_chunks_contiguous(spark):
-    from hgn_spark.operators.text import CTX_LEN, N_SHARDS, pack_token_chunks
+def test_text_profile_packing_contiguous(spark):
+    """text_profile's packing columns lay each shard's docs
+    head-to-tail: shard range, in-chunk offsets, contiguous offsets per
+    shard and chunk ids consistent with the stream offset."""
+    from hgn_spark.operators.text import CTX_LEN, N_SHARDS
 
-    out = pack_token_chunks(spark, SF_SMOKE).toPandas()
+    out = SPECS["text_profile"].fn(spark, SF_SMOKE).select(
+        "doc_id", "n_tokens", "shard", "tok_start", "chunk_id", "chunk_offset"
+    ).toPandas()
     assert set(out["shard"]) <= set(range(N_SHARDS))
     assert (out["chunk_offset"] < CTX_LEN).all()
     assert (out["chunk_offset"] >= 0).all()
@@ -1200,13 +1205,6 @@ def test_pipeline_curation_end_to_end(spark):
         assert report[a] >= report[b], (a, b, report)
     assert report["7_curated_packed"] > 0
     assert report["8_total_tokens"] > 0
-    # The flag-based one-pass report must agree with the actual stage
-    # frames (pins the shared-predicate refactor: a drift between the
-    # report's flags and the pipeline's filters fails here).
-    from hgn_spark.pipeline import curate_corpus_stages
-
-    for name, df in curate_corpus_stages(spark, SF_SMOKE).items():
-        assert report[name] == df.count(), name
 
     cur = curate_corpus(spark, SF_SMOKE)
     rows = cur.collect()
@@ -1227,19 +1225,24 @@ def test_pipeline_curation_end_to_end(spark):
     assert again == {r["doc_id"]: r["tok_start"] for r in rows}
 
 
-def test_pipeline_df_cap_keeps_recall(spark):
-    """The df-capped near-dup route (hot-key guard, VERDICT r5 #5)
-    survives the pipeline: with a sane cap the curated doc set is
-    identical to the uncapped run — near-dup pairs share many shingles,
-    so capping only mega-buckets loses no recall on this corpus."""
+def test_curate_corpus_scans_documents_as_often_as_its_report(spark):
+    """curate_corpus filters on the rules its one-pass report flags, so
+    its plan reads `documents` exactly as often as the report's: the
+    exact-dedup keep rule is a window over the fingerprint, not a
+    keep-set built from a second scan, tokenize and scrub."""
     from hgn_spark.pipeline import curate_corpus
 
-    uncapped = {r["doc_id"] for r in curate_corpus(spark, SF_SMOKE).collect()}
-    capped = {
-        r["doc_id"]
-        for r in curate_corpus(spark, SF_SMOKE, df_cap=50).collect()
-    }
-    assert capped == uncapped
+    def document_scans(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return sum(
+            1
+            for line in plan.splitlines()
+            if "FileScan" in line and "documents" in line
+        )
+
+    report = document_scans(SPECS["pipeline_curation_report"].fn(spark, SF_SMOKE))
+    assert report > 0
+    assert document_scans(curate_corpus(spark, SF_SMOKE)) == report
 
 
 def test_pipeline_writes_partitioned_corpus(spark, tmp_path):
